@@ -9,7 +9,9 @@ strategy those formats implement under the hood, minus the transaction
 log.
 
 Semantics / limits (documented, not hidden):
-- The rewrite is atomic per Spark's ``INSERT OVERWRITE`` job commit.
+- The rewrite stages the new state in a managed table and publishes it
+  by DROP + RENAME (or ``INSERT OVERWRITE`` where a rename cannot keep
+  the target's layout — see ``_rewrite``).
   Multi-statement transactions live in transactions.py (staged-swap
   buffer); snapshot history / time travel lives in timetravel.py
   (version-pointer commit log — history-enabled tables make every
@@ -191,13 +193,110 @@ def _n(metric) -> int:
     return int(metric) if metric is not None else 0
 
 
+def _describe_table(spark: SparkSession, table: str) -> dict:
+    """The ``# Detailed Table Information`` rows of ``DESCRIBE TABLE
+    EXTENDED`` as a dict (``Type``, ``Provider``, ``Database``,
+    ``Location``, ...), plus the partition columns under
+    ``"partition_columns"``. A DESCRIBE command computes its rows
+    eagerly on the driver, so reading them here launches no Spark job
+    (a DataFrame ``filter`` over them would)."""
+    out: dict = {"partition_columns": []}
+    section = None
+    for name, value, _ in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
+        if name.startswith("# "):
+            if name != "# col_name":
+                section = name
+        elif name and section == "# Partition Information":
+            out["partition_columns"].append(name)
+        elif name and section == "# Detailed Table Information":
+            out[name] = value
+    return out
+
+
+def _can_rename(spark: SparkSession, table: str) -> bool:
+    """True when a stage created ``LIKE`` ``table`` in the current
+    database (:func:`_write_stage`) can replace it by DROP + RENAME
+    (:func:`_swap_in`) with its layout — provider, partition columns,
+    options — unchanged. False when the table must be overwritten in
+    place: it is EXTERNAL (dropping it frees no location), bucketed,
+    carries table properties (``LIKE`` does not copy them), is
+    Hive-format, or lives in another database (a RENAME cannot move a
+    table across databases)."""
+    info = _describe_table(spark, table)
+    return (
+        info.get("Type") == "MANAGED"
+        and info.get("Provider", "").lower() != "hive"
+        and info.get("Database") == spark.catalog.currentDatabase()
+        and "Num Buckets" not in info
+        and "Table Properties" not in info
+    )
+
+
+def _write_stage(df, stage: str, like: str | None) -> None:
+    """Write ``df`` as the new managed table ``stage`` (removing any
+    leftover directory of that name).
+
+    With ``like``, the stage is created ``LIKE`` that table — its
+    provider, partition columns and options — and ``df`` is inserted
+    BY POSITION, so a rename can later put the stage in that table's
+    place without changing its layout. (A partitioned ``saveAsTable``
+    stage would not do: a rename leaves its catalog partitions pointing
+    at the old directory.) Without ``like``, ``df`` is saved in the
+    session's default format."""
+    from .ingest import _clean_stale_location
+
+    spark = df.sparkSession
+    _clean_stale_location(spark, stage, None)
+    if like is None:
+        df.write.mode("overwrite").saveAsTable(stage)
+        return
+    spark.sql(f"CREATE TABLE {stage} LIKE {like}")
+    df.write.insertInto(stage)
+
+
+def _swap_in(spark: SparkSession, table: str, stage: str, by_rename: bool) -> None:
+    """Publish the staged copy ``stage`` as ``table``.
+
+    ``by_rename``: DROP ``table`` and RENAME ``stage`` to it — catalog
+    metadata only, no Spark job; the stage must have been written
+    ``like`` the target (:func:`_write_stage`) when :func:`_can_rename`
+    held. The stage is consumed. No cleanup on failure: once the target is
+    dropped the stage holds the ONLY copy of the new state, so it must
+    survive any error for manual recovery. The drop→rename window is
+    metadata-only and no wider an atomicity hole than a
+    non-transactional INSERT OVERWRITE (which truncates the target
+    before the write commits).
+
+    Otherwise ``INSERT OVERWRITE`` copies the stage into the target
+    (one more read and write of every row) and the caller drops the
+    stage."""
+    if by_rename:
+        # no IF EXISTS: a target dropped since staging fails the publish
+        # (keeping the stage) instead of being resurrected by the rename
+        spark.sql(f"DROP TABLE {table}")
+        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+    else:
+        spark.sql(f"INSERT OVERWRITE TABLE {table} SELECT * FROM {stage}")
+
+
 def _rewrite(spark: SparkSession, table: str, df) -> None:
-    """Materialize ``df`` into a staging table, then overwrite ``table``.
+    """Materialize ``df`` into a staging table, then publish it as
+    ``table``.
 
     Spark (correctly) refuses ``INSERT OVERWRITE`` of a table the plan
     also reads (UNSUPPORTED_OVERWRITE), so the rewrite stages through a
     second managed table — the minimal copy-on-write commit without a
     table format's transaction log.
+
+    A managed target (:func:`_can_rename`) is replaced by DROP + RENAME
+    of a stage created ``LIKE`` it (:func:`_write_stage`,
+    :func:`_swap_in`), so the stage write is the only data pass (r16)
+    and the target keeps its provider and partition columns. ``df``
+    takes the target's column names and types BY POSITION first —
+    exactly the store assignment INSERT OVERWRITE would apply — unless
+    it already has them. External, bucketed, property-carrying or
+    other-database targets keep the ``INSERT OVERWRITE`` copy from a
+    default-format stage.
 
     The staging name is unique per call: concurrent DML statements in
     one warehouse (e.g. two sessions, or the streaming upsert sink's
@@ -217,7 +316,6 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
     new state isn't a per-file transform of the old.
     """
     from . import timetravel
-    from .ingest import _clean_stale_location
 
     if timetravel.is_history_table(spark, table):
         # df was derived from spark.table(table) — the CATALOG POINTER's
@@ -235,43 +333,24 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
         return
 
     stage = f"{_STAGE_PREFIX}_{uuid.uuid4().hex[:12]}"
-    _clean_stale_location(spark, stage, None)
-    # MANAGED targets swap the staged data in by catalog rename — the
-    # stage write is the ONLY data pass (r16). The former
-    # ``INSERT OVERWRITE TABLE target SELECT * FROM stage`` re-read and
-    # re-wrote every surviving byte a second time, doubling the I/O of
-    # every plain-table DELETE/UPDATE/MERGE. The stage is cast to the
-    # target's schema BY POSITION first, so the rename preserves
-    # exactly the column names/types the INSERT path would have
-    # coerced to. The drop→rename window is metadata-only and no wider
-    # an atomicity hole than a non-transactional INSERT OVERWRITE
-    # (which truncates the target before the write commits); on a
-    # rename failure the full state still exists in the stage table.
-    # EXTERNAL targets keep the overwrite path: dropping one wouldn't
-    # free its location, so a rename could not take its place.
-    try:
-        tgt_type = spark.catalog.getTable(table).tableType
-    except Exception:
-        tgt_type = None
     tgt_fields = spark.table(table).schema.fields
-    if tgt_type == "MANAGED" and len(df.columns) == len(tgt_fields):
-        staged = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, tgt_fields)
-            ]
-        )
-        staged.write.mode("overwrite").saveAsTable(stage)
-        # No cleanup on failure: once the target is dropped the stage
-        # holds the ONLY copy of the new state, so it must survive any
-        # error for manual recovery (dropping it would destroy data).
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+    if len(df.columns) == len(tgt_fields) and _can_rename(spark, table):
+        if [(f.name, f.dataType) for f in df.schema.fields] != [
+            (f.name, f.dataType) for f in tgt_fields
+        ]:
+            df = df.select(
+                *[
+                    F.col(c).cast(f.dataType).alias(f.name)
+                    for c, f in zip(df.columns, tgt_fields)
+                ]
+            )
+        _write_stage(df, stage, like=table)
+        _swap_in(spark, table, stage, by_rename=True)
         return
 
-    df.write.mode("overwrite").saveAsTable(stage)
+    _write_stage(df, stage, like=None)
     try:
-        spark.sql(f"INSERT OVERWRITE TABLE {table} SELECT * FROM {stage}")
+        _swap_in(spark, table, stage, by_rename=False)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
 
@@ -320,7 +399,7 @@ def _selective_rewrite(
     from . import timetravel
 
     per_file = (
-        spark.read.parquet(*paths)
+        timetravel._read_files(spark, table, paths)
         .filter(hit)
         .groupBy(F.col("_metadata.file_name").alias("f"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -343,7 +422,9 @@ def _selective_rewrite(
         return 0
     by_name = {os.path.basename(p): p for p in paths}
     rewritten = rebuild(
-        spark.read.parquet(*[by_name[t] for t in sorted(touched)])
+        timetravel._read_files(
+            spark, table, [by_name[t] for t in sorted(touched)]
+        )
     )
     timetravel.commit_replace(spark, table, touched, rewritten, op=op)
     return n
@@ -467,6 +548,7 @@ def update_from(
     the rest carry by hard link."""
     import os as _os
 
+    from . import timetravel
     from .transactions import resolve_active
 
     table = resolve_active(spark, table)  # txn-staged when one is open
@@ -475,7 +557,7 @@ def update_from(
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_target = (
-            spark.read.parquet(*paths) if prev is not None
+            timetravel._read_files(spark, table, paths) if prev is not None
             else spark.table(table)
         )
         missing = [s for _, s in pairs if s not in source.columns]
@@ -527,8 +609,6 @@ def update_from(
             if not touched:
                 # no file holds a key-matchable row: metadata-only
                 # commit reusing the tip's directory and manifest
-                from . import timetravel
-
                 timetravel.commit_version(
                     spark,
                     table,
@@ -539,8 +619,8 @@ def update_from(
                 )
                 return 0
             by_name = {_os.path.basename(p): p for p in paths}
-            target = spark.read.parquet(
-                *[by_name[f] for f in sorted(touched)]
+            target = timetravel._read_files(
+                spark, table, [by_name[f] for f in sorted(touched)]
             )
         else:
             target = full_target
@@ -575,8 +655,6 @@ def update_from(
             ]
         )
         if prev is not None:
-            from . import timetravel
-
             timetravel.commit_replace(
                 spark, table, touched, updated, op="update from"
             )
@@ -645,13 +723,14 @@ def merge_into(
     # the lock covers the target READ as well as the overwrite: the
     # lost-update race is read-pre-image → overwrite, so a reader that
     # snapshots before a concurrent writer commits must not write back
+    from . import timetravel
     from .transactions import resolve_active
 
     table = resolve_active(spark, table)  # txn-staged when one is open
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_target = (
-            spark.read.parquet(*paths) if prev is not None
+            timetravel._read_files(spark, table, paths) if prev is not None
             else spark.table(table)
         )
         missing_keys = [k for k in keys if k not in source.columns]
@@ -692,7 +771,9 @@ def merge_into(
             }
             by_name = {os.path.basename(p): p for p in paths}
             target = (
-                spark.read.parquet(*[by_name[t] for t in sorted(touched)])
+                timetravel._read_files(
+                    spark, table, [by_name[t] for t in sorted(touched)]
+                )
                 if touched
                 else full_target.filter(F.lit(False))
             )
@@ -808,8 +889,6 @@ def merge_into(
                 ]
             )
         if prev is not None:
-            from . import timetravel
-
             timetravel.commit_replace(
                 spark, table, touched, merged, op="merge"
             )
@@ -930,13 +1009,14 @@ def scd2_apply(
     detection scan).
     """
     obs = Observation()
+    from . import timetravel
     from .transactions import resolve_active
 
     table = resolve_active(spark, table)  # txn-staged when one is open
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_dim = (
-            spark.read.parquet(*paths) if prev is not None
+            timetravel._read_files(spark, table, paths) if prev is not None
             else spark.table(table)
         )
         dim = full_dim
@@ -982,7 +1062,9 @@ def scd2_apply(
             # only the opened rows)
             by_name = {os.path.basename(p): p for p in paths}
             dim = (
-                spark.read.parquet(*[by_name[t] for t in sorted(touched)])
+                timetravel._read_files(
+                    spark, table, [by_name[t] for t in sorted(touched)]
+                )
                 if touched
                 else full_dim.filter(F.lit(False))
             )
@@ -1036,8 +1118,6 @@ def scd2_apply(
             .select(*dim.columns)
         )
         if prev is not None:
-            from . import timetravel
-
             timetravel.commit_replace(
                 spark, table, touched, new_state, op="scd2 apply"
             )

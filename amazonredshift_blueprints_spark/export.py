@@ -30,7 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import translate_redshift_sql
-from .ingest import combine_folder_and_file_name, convert_to_boolean
+from .ingest import _observe_count, combine_folder_and_file_name, convert_to_boolean
 
 
 def store_query_results(
@@ -63,36 +63,17 @@ def write_csv(
     include_header: bool = True,
     single_file: bool = True,
 ) -> int:
-    """CSV sink for an arbitrary DataFrame (A8/A9).
+    """CSV sink for an arbitrary DataFrame (A8/A9); returns rows written.
 
-    The returned row count comes from ``df.count()`` on the input plan —
-    counting physical lines in the output would over-count quoted fields
-    with embedded newlines, and re-reading the written CSV would be a
-    second full scan purely for the return value.
+    The count rides the write itself (:func:`write_result`): counting
+    physical lines in the output would over-count quoted fields with
+    embedded newlines, and a separate ``df.count()`` or re-read of the
+    written CSV would run the query a second time just for the return
+    value.
     """
-    parent = os.path.dirname(os.path.abspath(destination_path))
-    os.makedirs(parent, exist_ok=True)  # A9, store_query_results.py:147-149
-    if not single_file:
-        df.write.option("header", include_header).mode("overwrite").csv(destination_path)
-        return df.count()
-
-    # One named file: single writer task into a temp dir, then move the
-    # part file to the requested path.
-    tmp_dir = tempfile.mkdtemp(prefix="bp_export_", dir=parent)
-    try:
-        (
-            df.coalesce(1)
-            .write.option("header", include_header)
-            .mode("overwrite")
-            .csv(tmp_dir)
-        )
-        parts = glob.glob(os.path.join(tmp_dir, "part-*"))
-        if len(parts) != 1:
-            raise RuntimeError(f"expected exactly one part file, found {parts}")
-        shutil.move(parts[0], destination_path)
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-    return df.count()
+    return write_result(
+        df, destination_path, include_header=include_header, single_file=single_file
+    )
 
 
 def write_result(
@@ -107,8 +88,15 @@ def write_result(
 ) -> int:
     """Format-generalized sink: the reference only emits CSV
     (store_query_results.py:98-118); JSON and parquet are the free Spark
-    upgrades a warehouse-export user reaches for next. Same single-file /
-    part-directory contract as :func:`write_csv`; returns rows written.
+    upgrades a warehouse-export user reaches for next. Returns rows
+    written, counted by an observer on the written frame
+    (``ingest._observe_count``), so the query executes exactly once.
+
+    ``single_file=True`` (the reference's one-named-file contract)
+    writes through one task into a temp dir and moves the part file to
+    ``destination_path``; ``False`` writes a part-file directory there.
+    ``options`` are extra writer options (UNLOAD's DELIMITER, ADDQUOTES,
+    NULL AS, ESCAPE and GZIP lower to these).
 
     ``partition_by`` mirrors Redshift ``UNLOAD ... PARTITION BY``:
     directory-mode output laid out as ``col=value/`` subdirectories, so
@@ -126,38 +114,27 @@ def write_result(
         missing = [c for c in partition_by if c not in df.columns]
         if missing:
             raise ValueError(f"partition_by column(s) not in result: {missing}")
-    if format == "csv" and not partition_by and not options:
-        return write_csv(
-            df, destination_path, include_header=include_header, single_file=single_file
-        )
     if format not in ("csv", "json", "parquet", "orc"):
         raise ValueError(f"format must be csv/json/parquet/orc, got {format!r}")
     parent = os.path.dirname(os.path.abspath(destination_path))
-    os.makedirs(parent, exist_ok=True)
-    n = df.count()
+    os.makedirs(parent, exist_ok=True)  # A9, store_query_results.py:147-149
+    df, obs = _observe_count(df)
+    if single_file:
+        df = df.coalesce(1)
+    w = df.write.mode("overwrite").format(format)
+    if format == "csv":
+        w = w.option("header", include_header)
+    if options:
+        w = w.options(**options)
     if partition_by:
-        w = df.write.mode("overwrite").format(format).partitionBy(*partition_by)
-        if format == "csv":
-            w = w.option("header", include_header)
-        if options:
-            w = w.options(**options)
-        w.save(destination_path)
-        return n
+        w = w.partitionBy(*partition_by)
     if not single_file:
-        w = df.write.mode("overwrite").format(format)
-        if format == "csv":
-            w = w.option("header", include_header)
-        if options:
-            w = w.options(**options)
         w.save(destination_path)
-        return n
+        return int(obs.get["n"])
+    # One named file: single writer task into a temp dir, then move the
+    # part file to the requested path.
     tmp_dir = tempfile.mkdtemp(prefix="bp_export_", dir=parent)
     try:
-        w = df.coalesce(1).write.mode("overwrite").format(format)
-        if format == "csv":
-            w = w.option("header", include_header)
-        if options:
-            w = w.options(**options)
         w.save(tmp_dir)
         parts = glob.glob(os.path.join(tmp_dir, "part-*"))
         if len(parts) != 1:
@@ -165,7 +142,7 @@ def write_result(
         shutil.move(parts[0], destination_path)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
-    return n
+    return int(obs.get["n"])
 
 
 def get_args(argv: list[str] | None = None) -> argparse.Namespace:

@@ -904,41 +904,6 @@ def execute_unload(spark, spec: UnloadSpec) -> int:
             csv_opts["escape"] = "\\"
     if spec.compression:
         csv_opts["compression"] = spec.compression
-    if spec.format == "csv" and csv_opts:
-        import glob
-        import os
-        import shutil
-        import tempfile
-
-        os.makedirs(os.path.dirname(os.path.abspath(spec.path)) or ".", exist_ok=True)
-        n = df.count()
-        if spec.single_file:
-            parent = os.path.dirname(os.path.abspath(spec.path))
-            tmp_dir = tempfile.mkdtemp(prefix="bp_unload_", dir=parent)
-            try:
-                (
-                    df.coalesce(1).write.mode("overwrite")
-                    .option("header", spec.header).options(**csv_opts)
-                    .csv(tmp_dir)
-                )
-                parts = glob.glob(os.path.join(tmp_dir, "part-*"))
-                if len(parts) != 1:
-                    raise RuntimeError(f"expected one part file, found {parts}")
-                shutil.move(parts[0], spec.path)
-            finally:
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-            if spec.manifest:
-                _write_unload_manifest(spec)
-            return n
-        w = df.write.mode("overwrite").option("header", spec.header).options(
-            **csv_opts
-        )
-        if spec.partition_by:
-            w = w.partitionBy(*spec.partition_by)
-        w.csv(spec.path)
-        if spec.manifest:
-            _write_unload_manifest(spec)
-        return n
     n = write_result(
         df,
         spec.path,
@@ -946,7 +911,7 @@ def execute_unload(spark, spec: UnloadSpec) -> int:
         include_header=spec.header,
         single_file=spec.single_file,
         partition_by=spec.partition_by or None,
-        options={"compression": spec.compression} if spec.compression else None,
+        options=csv_opts,
     )
     if spec.manifest:
         _write_unload_manifest(spec)

@@ -29,7 +29,7 @@ import glob
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -66,6 +66,16 @@ def find_all_file_matches(file_names: list[str], file_name_re: str) -> list[str]
 def convert_to_boolean(string: str) -> bool:
     """'True'/'true'/'TRUE' → True (store_query_results.py:76-85)."""
     return string.strip().lower() == "true"
+
+
+def _observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter riding its own execution, and the
+    counter: ``int(obs.get["n"])`` after the one action that runs the
+    returned frame (a write) is the number of rows it produced. The
+    same ``DataFrame.observe`` idiom as dml.py's DML counts — no second
+    job re-running the plan to count it."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def _clean_stale_location(
@@ -172,9 +182,12 @@ def ingest_csv(
 ) -> int:
     """Load CSV file(s) into a catalog table (upload_file.py:118-155).
 
-    Returns the number of rows written. One distributed read + one
-    distributed write replace the reference's 10 000-row chunk loop and
-    its mode-demotion bookkeeping (upload_file.py:131-132).
+    Returns the table's row count after the load: the rows written for
+    ``replace``/``fail`` or a new table, the table's total rows for an
+    ``append`` into an existing one (:func:`ingest_files`). One
+    distributed read + one distributed write replace the reference's
+    10 000-row chunk loop and its mode-demotion bookkeeping
+    (upload_file.py:131-132).
     """
     return ingest_files(
         spark,
@@ -298,7 +311,13 @@ def ingest_files(
     (Spark's CSV reader has no epoch-numeric timestamp parse) and cast
     back via timestamp_seconds/timestamp_millis after the parse —
     which needs the declared target schema to know WHICH columns are
-    timestamps, so it refuses on a first load into a missing table."""
+    timestamps, so it refuses on a first load into a missing table.
+
+    Returns the table's row count after the load. When the load creates
+    or replaces the table, that is the rows written, counted by an
+    observer riding the write itself (:func:`_observe_count`); an
+    ``append`` into an existing table counts the table afterwards, one
+    more job, since its contract is the table's total rows."""
     if insert_method not in INSERT_METHODS:
         raise ValueError(
             f"insert_method must be one of {sorted(INSERT_METHODS)}, got {insert_method!r}"
@@ -310,7 +329,8 @@ def ingest_files(
         qualified = f"{schema_name}.{table_name}"
     else:
         qualified = table_name
-    if schema is None and spark.catalog.tableExists(qualified):
+    existed = spark.catalog.tableExists(qualified)
+    if schema is None and existed:
         # Redshift COPY parses against the declared TABLE schema; when
         # the target exists, its types ARE the parse contract (this is
         # what makes DATEFORMAT/NULL-AS load typed columns instead of
@@ -373,6 +393,7 @@ def ingest_files(
         caster = F.timestamp_seconds if time_epoch == "secs" else F.timestamp_millis
         for c in epoch_cols:
             df = df.withColumn(c, caster(F.col(c)))
+    df, obs = _observe_count(df)
     try:
         df.write.mode(INSERT_METHODS[insert_method]).format("parquet").saveAsTable(
             qualified
@@ -386,7 +407,22 @@ def ingest_files(
         from .functions.system_tables import record_load_errors
 
         record_load_errors(spark, qualified, dropped)
-    return spark.table(qualified).count()
+    return _loaded_rows(spark, qualified, insert_method, existed, obs)
+
+
+def _loaded_rows(
+    spark: SparkSession,
+    qualified: str,
+    insert_method: str,
+    existed: bool,
+    obs: Observation,
+) -> int:
+    """The ingest contract's return value: the table's rows after the
+    load — the observed rows written, unless an append added them to
+    rows already there."""
+    if insert_method == "append" and existed:
+        return spark.table(qualified).count()
+    return int(obs.get["n"])
 
 
 def parse_fixedwidth_spec(spec: str) -> list[tuple[str, int]]:
@@ -493,8 +529,9 @@ def ingest_fixedwidth(
     trim_blanks: bool = False,
 ) -> int:
     """Fixed-width file(s) → catalog table: the COPY FIXEDWIDTH load
-    path, sharing the fail/replace/append vocabulary of ``ingest_files``.
-    All columns land as STRING (see ``read_fixedwidth``)."""
+    path, sharing the fail/replace/append vocabulary of ``ingest_files``
+    and its return value (the table's rows after the load). All columns
+    land as STRING (see ``read_fixedwidth``)."""
     if insert_method not in INSERT_METHODS:
         raise ValueError(
             f"insert_method must be one of {sorted(INSERT_METHODS)}, "
@@ -506,11 +543,14 @@ def ingest_fixedwidth(
         qualified = f"{schema_name}.{table_name}"
     else:
         qualified = table_name
-    df = read_fixedwidth(spark, source, spec, trim_blanks=trim_blanks)
+    existed = spark.catalog.tableExists(qualified)
+    df, obs = _observe_count(
+        read_fixedwidth(spark, source, spec, trim_blanks=trim_blanks)
+    )
     df.write.mode(INSERT_METHODS[insert_method]).format("parquet").saveAsTable(
         qualified
     )
-    return spark.table(qualified).count()
+    return _loaded_rows(spark, qualified, insert_method, existed, obs)
 
 
 def ingest_matching_files(

@@ -1374,9 +1374,13 @@ def train_bpe_merges(
                 flushed = words.select(
                     "word", "cnt", seq_expr.alias("seq")
                 ).persist(StorageLevel.MEMORY_AND_DISK)
-                flushed.count()  # materialize before releasing the old cache
-                words.unpersist()
-                words = flushed
+                # hand the new cache to the outer finally first, so a
+                # failing materialization cannot leak it
+                old, words = words, flushed
+                try:
+                    flushed.count()  # materialize before releasing the old cache
+                finally:
+                    old.unpersist()
                 seq_expr = F.col("seq")
     finally:
         words.unpersist()

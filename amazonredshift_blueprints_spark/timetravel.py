@@ -138,8 +138,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from .dml import _lock_dir, _lock_key, _table_lock
+from .dml import _describe_table, _lock_dir, _lock_key, _table_lock
 
 _HISTORY_DIRNAME = "_bp_history"
 
@@ -223,15 +224,9 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
     key = _lock_key(spark, table)
     if not spark.catalog.tableExists(key):
         return None
-    rows = (
-        spark.sql(f"DESCRIBE FORMATTED {_qualified(spark, table)}")
-        .filter(F.col("col_name") == "Location")
-        .select("data_type")
-        .collect()
-    )
-    if not rows:
+    loc = _describe_table(spark, _qualified(spark, table)).get("Location")
+    if loc is None:
         return None
-    loc = rows[0][0]
     if loc.startswith("file:"):
         loc = loc[len("file:"):]
     return os.path.normpath(loc)
@@ -240,16 +235,44 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
 def _cast_to_table(spark: SparkSession, table: str, df: DataFrame) -> DataFrame:
     """INSERT OVERWRITE's store assignment, replicated: cast every
     column to the catalog type so version files never diverge from the
-    table schema (e.g. decimal widened by an UPDATE)."""
+    table schema (e.g. decimal widened by an UPDATE). A frame that
+    already has the table's column names, order and types is returned
+    as is."""
     tgt = spark.table(_qualified(spark, table)).schema
     if sorted(df.columns) != sorted(f.name for f in tgt):
         raise ValueError(
             f"commit: columns {df.columns} do not match "
             f"table {table} schema {[f.name for f in tgt]}"
         )
+    if [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in tgt.fields
+    ]:
+        return df
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tgt]
     )
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable, at any depth."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_files(spark: SparkSession, table: str, paths: list[str]) -> DataFrame:
+    """Read data files of ``table``'s versions with the catalog table's
+    schema. Every version file is written in that schema
+    (:func:`_cast_to_table`), so passing it spares the parquet footer
+    inference, which is a Spark job per read."""
+    schema = spark.table(_qualified(spark, table)).schema
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def tip_entry(spark: SparkSession, table: str) -> dict:
@@ -341,9 +364,15 @@ def enable_history(spark: SparkSession, table: str) -> int:
         os.makedirs(root, exist_ok=True)
         vdir = _next_vdir(root, 0)
         qualified = _qualified(spark, table)
-        spark.table(qualified).write.parquet(vdir)
+        df = spark.table(qualified)
+        df.write.parquet(vdir)
         spark.sql(f"DROP TABLE {qualified}")
-        spark.sql(f"CREATE TABLE {qualified} USING parquet LOCATION '{vdir}'")
+        # the column DDL spares the CREATE a footer-inference job; a
+        # parquet table's inferred schema is all-nullable, so is this one
+        spark.sql(
+            f"CREATE TABLE {qualified} ({_nullable(df.schema).toDDL()}) "
+            f"USING parquet LOCATION '{vdir}'"
+        )
         _write_log(
             root,
             [

@@ -19,12 +19,18 @@ staged-swap buffer (VERDICT r8 #4):
   resolves single-part names to temp views first), so
   ``SELECT ... FROM t`` between BEGIN and COMMIT reads your writes.
   (Database-qualified references bypass the shadow — documented limit.)
-- COMMIT publishes each staged table back with ``INSERT OVERWRITE`` under
-  the still-held locks, then drops the stages. Each table's swap is
-  atomic (Spark's job commit); a multi-TABLE commit is sequential, so a
-  crash mid-commit can publish a prefix — single-statement scripts and
-  single-table transactions are fully atomic, multi-table atomicity
-  needs a table format's log (Delta/Iceberg), stated honestly.
+- A managed target's stage is created ``LIKE`` it (same provider,
+  partition columns and options, ``dml._write_stage``), and COMMIT
+  publishes it under the still-held locks by the same DROP + RENAME
+  swap as copy-on-write DML (``dml._swap_in``): catalog metadata only,
+  no Spark job. Targets a rename cannot replace losslessly
+  (``dml._can_rename``: external, bucketed, property-carrying,
+  other-database) are copied back with ``INSERT OVERWRITE`` and their
+  stages dropped; history-tracked targets publish one new version. A
+  multi-TABLE commit is sequential, so a crash mid-commit can publish
+  a prefix — single-table transactions publish all or nothing,
+  multi-table atomicity needs a table format's log (Delta/Iceberg),
+  stated honestly.
 - ROLLBACK drops the stages and releases the locks; the target tables
   were never touched.
 
@@ -79,6 +85,7 @@ class Transaction:
         self.database = spark.catalog.currentDatabase().lower()
         self._locks = contextlib.ExitStack()
         self._staged: dict[str, tuple[str, str]] = {}  # key -> (qualified, stage)
+        self._by_rename: set[str] = set()  # keys whose stage COMMIT renames in
         self._views: list[str] = []
         self._done = False
 
@@ -91,8 +98,7 @@ class Transaction:
     def resolve_write(self, table: str) -> str:
         """Map a write target to this transaction's staging table,
         snapshotting the table (and locking it) on first touch."""
-        from .dml import _table_lock
-        from .ingest import _clean_stale_location
+        from .dml import _can_rename, _table_lock, _write_stage
 
         if self._done:
             raise RuntimeError("transaction already finished")
@@ -102,9 +108,14 @@ class Transaction:
             # stable even if the session database changed after BEGIN
             self._locks.enter_context(_table_lock(self.spark, key))
             stage = f"{_TXN_PREFIX}_{self.txn_id}_{len(self._staged)}"
-            _clean_stale_location(self.spark, stage, None)
             qualified = _qualified(key)
-            self.spark.table(qualified).write.mode("overwrite").saveAsTable(stage)
+            if _can_rename(self.spark, qualified):
+                self._by_rename.add(key)
+            _write_stage(
+                self.spark.table(qualified),
+                stage,
+                like=qualified if key in self._by_rename else None,
+            )
             self._staged[key] = (qualified, stage)
             bare = key.rsplit(".", 1)[-1]
             self.spark.sql(
@@ -127,8 +138,10 @@ class Transaction:
         must not block the table forever)."""
         self._drop_views()
         from . import timetravel
+        from .dml import _swap_in
 
-        items = list(self._staged.values())
+        keys = list(self._staged)
+        items = [self._staged[k] for k in keys]
         for i, (qualified, stage) in enumerate(items):
             try:
                 if timetravel.is_history_table(self.spark, qualified):
@@ -151,8 +164,11 @@ class Transaction:
                         ),
                     )
                 else:
-                    self.spark.sql(
-                        f"INSERT OVERWRITE TABLE {qualified} SELECT * FROM {stage}"
+                    _swap_in(
+                        self.spark,
+                        qualified,
+                        stage,
+                        by_rename=keys[i] in self._by_rename,
                     )
             except Exception as exc:
                 kept = {q: s for q, s in items[i:]}
