@@ -40,6 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import pin, release
+
 _LEVEL_COL = "level"
 _PRIOR_KEY = "_bp_prior_key"
 
@@ -121,10 +123,10 @@ def connect_by_frame(
     """Expand the hierarchy: all base columns plus 1-based ``level``,
     one row per PATH from a START WITH root. See the module docstring
     for semantics and the scale notes."""
-    b = base.persist()
-    frontier = b.filter(F.expr(start_with)).withColumn(
-        _LEVEL_COL, F.lit(1).cast("long")
-    ).persist()
+    b = pin(base)
+    frontier = pin(
+        b.filter(F.expr(start_with)).withColumn(_LEVEL_COL, F.lit(1).cast("long"))
+    )
     acc = frontier
     spent = [frontier]
     n = frontier.count()
@@ -132,9 +134,7 @@ def connect_by_frame(
     while n > 0:
         lvl += 1
         if lvl > max_levels:
-            for c in spent:
-                c.unpersist()
-            b.unpersist()
+            release(*spent, b)
             raise ValueError(
                 f"CONNECT BY exceeded {max_levels} levels — hierarchy "
                 "loop (Redshift errors on cycles) or raise max_levels"
@@ -142,21 +142,18 @@ def connect_by_frame(
         parents = frontier.select(F.col(prior_col).alias(_PRIOR_KEY))
         if broadcast_frontier:
             parents = F.broadcast(parents)
-        nxt = (
+        nxt = pin(
             b.join(parents, on=b[child_col] == F.col(_PRIOR_KEY))
             .drop(_PRIOR_KEY)
             .withColumn(_LEVEL_COL, F.lit(lvl).cast("long"))
-        ).persist()
+        )
         n = nxt.count()
         spent.append(nxt)
         acc = acc.unionAll(nxt)
         frontier = nxt
-    out = acc.persist()
+    out = pin(acc)
     out.count()  # materialize before the per-level caches release
-    for c in spent:
-        c.unpersist()
-    b.unpersist()
-    out._bp_cache_owner = out
+    release(*spent, b)
     return out
 
 
@@ -190,6 +187,4 @@ def run_connect_by(
         parts.append(f"WHERE {spec.where}")
     if spec.order_by:
         parts.append(f"ORDER BY {spec.order_by}")
-    result = spark.sql(" ".join(parts))
-    result._bp_cache_owner = getattr(hier, "_bp_cache_owner", None)
-    return result
+    return spark.sql(" ".join(parts))

@@ -41,6 +41,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import checkpoint, pin, release
 from ..sessionstate import session_state
 
 
@@ -217,7 +218,7 @@ def _attach_contiguous_rank(df: DataFrame):
     staged = df.withColumn("_mid", F.monotonically_increasing_id()).withColumn(
         "_pid", F.spark_partition_id()
     )
-    staged = staged.persist()
+    staged = pin(staged)
     counts = {
         r["_pid"]: r["cnt"]
         for r in staged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
@@ -273,11 +274,11 @@ def fetch_cursor(spark: SparkSession, name: str, count: int | None) -> DataFrame
         raise ValueError(f"FETCH from unknown/closed cursor {name!r}")
     if cur["path"] is None:
         base = spark.sql(translate_redshift_sql(cur["sql"]))
-        ranked, owner, total = _attach_contiguous_rank(base)
+        ranked, staged, total = _attach_contiguous_rank(base)
         d = tempfile.mkdtemp(prefix="bp_cursor_")
         path = os.path.join(d, "snapshot")
         ranked.write.mode("overwrite").parquet(path)
-        owner.unpersist()
+        release(staged)
         cur["path"], cur["total"] = path, total
     off = cur["offset"]
     hi = cur["total"] if count is None else min(off + count, cur["total"])
@@ -293,7 +294,7 @@ def fetch_cursor(spark: SparkSession, name: str, count: int | None) -> DataFrame
     # valid after CLOSE removes the snapshot directory. Cost is one
     # page-sized materialization — the page was about to be consumed
     # anyway, and the rank-range parquet filter bounds what it reads.
-    return page.localCheckpoint(eager=True)
+    return checkpoint(page)
 
 
 def close_cursor(spark: SparkSession, name: str) -> None:

@@ -32,6 +32,9 @@ import re
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.storagelevel import StorageLevel
+
+from .operators import pin, release
 
 # Reference arg choices upload_file.py:44-52 → Spark writer modes.
 INSERT_METHODS = {
@@ -214,7 +217,7 @@ def read_files_tolerant(
     max_error: int,
     schema: StructType | None = None,
     csv_options: dict[str, str] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame, list[str]]:
     """Bad-row-tolerant scan for COPY MAXERROR: rows that fail parsing
     (type mismatch, column-count drift, malformed JSON) are dropped —
     raising if they exceed ``max_error`` — instead of failing the load.
@@ -228,10 +231,13 @@ def read_files_tolerant(
     stated here, not hidden. Pass 2 re-reads with the schema in
     PERMISSIVE mode and a corrupt-record capture column, counts the
     captured rows, and filters them out; count and load share one
-    cached scan (required, see the inline note) whose release is the
-    caller's job. Row-wise tolerance only makes sense for record
-    formats (csv/json); parquet/orc corruption is structural and keeps
-    fail-fast semantics.
+    pinned scan (required, see the inline note). Row-wise tolerance
+    only makes sense for record formats (csv/json); parquet/orc
+    corruption is structural and keeps fail-fast semantics.
+
+    Returns ``(clean, raw, load_errors)``: the parsed good rows, the
+    pinned raw scan (``release`` it once ``clean`` is consumed), and
+    the dropped raw lines for ``stl_load_errors``.
     """
     if format not in ("csv", "json"):
         raise ValueError(
@@ -258,32 +264,27 @@ def read_files_tolerant(
     # The cache is REQUIRED, not an optimization: Spark refuses queries
     # that reference only the corrupt-record column on an uncached raw
     # scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the bad-row count is
-    # exactly such a query. Ownership contract: the cached base rides
-    # on the returned DataFrame as ``_bp_cache_owner`` and the CALLER
-    # unpersists it after consuming the result (ingest_files does,
-    # after the table write) — otherwise the cache would stay pinned
-    # past the load with nobody left holding a handle.
-    df = reader.format(format).load(paths).cache()
+    # exactly such a query.
+    df = pin(reader.format(format).load(paths), StorageLevel.MEMORY_AND_DISK)
     n_bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).count()
     if n_bad > max_error:
-        df.unpersist()
+        release(df)
         raise ValueError(
             f"load found {n_bad} unparseable row(s), exceeding MAXERROR "
             f"{max_error} (the Redshift COPY error-tolerance contract)"
         )
     clean = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
-    clean._bp_cache_owner = df
     # the dropped raw lines, for stl_load_errors: <= max_error rows of
     # driver metadata BY THE GATE ABOVE (that bound is what makes this
     # collect legal); sorted for deterministic registration order
-    clean._bp_load_errors = [
+    load_errors = [
         r[0]
         for r in df.filter(F.col(_CORRUPT_COL).isNotNull())
         .select(_CORRUPT_COL)
         .orderBy(_CORRUPT_COL)
         .collect()
     ]
-    return clean
+    return clean, df, load_errors
 
 
 def ingest_files(
@@ -365,9 +366,10 @@ def ingest_files(
                 for f in schema.fields
             ]
         )
+    raw = load_errors = None
     if max_error > 0:
         target_schema = schema if isinstance(schema, StructType) else None
-        df = read_files_tolerant(
+        df, raw, load_errors = read_files_tolerant(
             spark, source, format=format, header=header,
             delimiter=delimiter, max_error=max_error, schema=target_schema,
             csv_options=csv_options,
@@ -384,12 +386,9 @@ def ingest_files(
             delimiter=delimiter, csv_options=csv_options,
             parse_mode="FAILFAST" if strict else "PERMISSIVE",
         )
-    cache_owner = getattr(df, "_bp_cache_owner", None)
-    load_errors = getattr(df, "_bp_load_errors", None)
     if epoch_cols:
         # the epoch integers parsed as BIGINT; cast to the declared
-        # timestamp type now (withColumn returns a NEW frame, hence
-        # the attribute capture above)
+        # timestamp type now
         caster = F.timestamp_seconds if time_epoch == "secs" else F.timestamp_millis
         for c in epoch_cols:
             df = df.withColumn(c, caster(F.col(c)))
@@ -399,14 +398,12 @@ def ingest_files(
             qualified
         )
     finally:
-        if cache_owner is not None:  # release the tolerant read's pinned scan
-            cache_owner.unpersist()
-    dropped = load_errors
-    if dropped:
+        release(raw)  # the tolerant read's pinned scan
+    if load_errors:
         # queryable afterwards as stl_load_errors (system_tables.py)
         from .functions.system_tables import record_load_errors
 
-        record_load_errors(spark, qualified, dropped)
+        record_load_errors(spark, qualified, load_errors)
     return _loaded_rows(spark, qualified, insert_method, existed, obs)
 
 

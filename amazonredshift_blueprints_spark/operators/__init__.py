@@ -22,16 +22,67 @@
 """
 
 
-class CacheOwner:
-    """Composite ``_bp_cache_owner``: the release convention hands the
-    caller ONE object whose ``unpersist()`` frees every frame the
-    operator pinned. Operators that persist more than one frame chain
-    them here instead of leaving the extras with no release path."""
+from __future__ import annotations
 
-    def __init__(self, *frames):
-        self._frames = [f for f in frames if f is not None]
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
-    def unpersist(self, blocking: bool = False):
-        for f in self._frames:
-            f.unpersist(blocking)
-        return self
+from ..sessionstate import session_state
+
+# Pin registry: the ONE module that touches Spark's cache APIs. Every
+# frame an operator (or catalog entry) persists or checkpoints is
+# recorded in a session-scoped dict, so whatever the caller does with
+# the result — select from it, drop it, let an exception unwind the
+# build — ``release_pins(spark)`` frees everything the session pinned.
+# Checkpoints need their own path: on Spark 4.1 ``DataFrame.unpersist``
+# and ``catalog.clearCache`` leave a ``localCheckpoint`` result's
+# blocks in place; unpersisting the checkpointed RDD under its
+# ``LogicalRDD`` frees them.
+
+
+def _pins(spark: SparkSession) -> dict:
+    return session_state(spark, "pins")
+
+
+def pin(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """Persist ``df`` at ``level`` (``DataFrame.persist``'s default
+    when omitted) and record it for :func:`release_pins`."""
+    df.persist(level)
+    _pins(df.sparkSession)[id(df)] = (df, False)
+    return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` — materialized AND
+    lineage-truncated — recorded for :func:`release_pins`."""
+    out = df.localCheckpoint(eager=True)
+    _pins(out.sparkSession)[id(out)] = (out, True)
+    return out
+
+
+def _free(df: DataFrame, checkpointed: bool) -> None:
+    if checkpointed:
+        df._jdf.logicalPlan().rdd().unpersist(False)
+    else:
+        df.unpersist()
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free these pinned frames now. Frames never pinned (or already
+    released) and ``None`` are ignored, so a release is idempotent."""
+    for df in dfs:
+        if df is not None:
+            entry = _pins(df.sparkSession).pop(id(df), None)
+            if entry is not None:
+                _free(*entry)
+
+
+def release_pins(spark: SparkSession) -> None:
+    """Free every frame pinned in this session. A checkpointed frame is
+    unreadable afterwards, so call this before the NEXT build, never
+    while a previous result may still be consumed."""
+    pins = _pins(spark)
+    while pins:
+        _free(*pins.popitem()[1])

@@ -41,6 +41,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import checkpoint, pin, release
+
 import random as _random
 
 # Carter-Wegman universal-hash family h_i(x) = (a_i * x31 + b_i) mod p
@@ -284,7 +286,7 @@ def minhash_near_duplicates(
     # Staged selects: every wide fan-out (64 minhash transforms, band
     # keys) references a materialized column, keeping the plan tree
     # linear in num_hashes rather than multiplicative.
-    staged = (
+    staged = pin(
         df.select(F.col(id_col), tokens(text_col).alias("_toks"))
         .select(
             id_col,
@@ -294,8 +296,8 @@ def minhash_near_duplicates(
             id_col,
             "_base",
             minhash_signature(F.col("_base"), num_hashes=num_hashes).alias("_sig"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     with_bands = staged.select(
         F.col(id_col),
@@ -412,9 +414,7 @@ def simhash_near_duplicates(
     # tokenize + 64-bit-vote subtree across them — unpersisted, the
     # 64-aggregate simhash ran 8× per query (guide §5 multi-consumer
     # subtrees). One compute, eight InMemoryTableScans.
-    sig_b = sig.select(id_col, "sig", *blocks).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sig_b = pin(sig.select(id_col, "sig", *blocks), StorageLevel.MEMORY_AND_DISK)
     pairs = None
     for i in range(n_blocks):
         l = sig_b.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), F.col(f"b{i}").alias("blk"))
@@ -600,9 +600,12 @@ def portable_minhash_pairs(
     # dominant cost and has three consumers (both self-join sides via
     # the band explode, and the verify stage via grams) — same pattern
     # as minhash_near_duplicates
-    sig = portable_signatures(
-        df, id_col, text_col, shingle_size=shingle_size, num_perms=num_perms
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = pin(
+        portable_signatures(
+            df, id_col, text_col, shingle_size=shingle_size, num_perms=num_perms
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
     banded = sig.select(
         id_col,
@@ -851,13 +854,12 @@ def dedup_against_minhash_store(
             )
 
     ref_sig = spark.read.parquet(path)
-    new_sig = (
+    new_sig = pin(
         portable_signatures(
             new_df, id_col, text_col,
             shingle_size=shingle_size, num_perms=num_perms,
-        )
-        .drop("grams")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).drop("grams"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     keys = _portable_band_keys(num_perms=num_perms, bands=bands)
 
@@ -947,9 +949,20 @@ def duplicate_groups(
     # groupBy-min per round absorbs them (min is idempotent); correctness
     # never depended on it. Dropping the distinct removes a full shuffle
     # of the edge table from the one-time setup cost.
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    edges = pin(
+        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    # init fuses the FIRST propagation round: label(v) = min(v, min
+    # neighbor) comes out of the same groupBy that enumerates the node
+    # set (edges are symmetrized, so every node appears as src) — one
+    # fewer join round than identity-init for every component, and the
+    # star-shaped components near-dup graphs produce typically converge
+    # in the very next round.
+    init = edges.groupBy("src").agg(F.min("dst").alias("_m")).select(
+        F.col("src").alias("id"),
+        F.least(F.col("src").cast("long"), F.col("_m").cast("long")).alias("label"),
+    )
     # Driver-side union-find gate (r17): when the PERSISTED edge set is
     # metadata-sized, the 3-5 distributed join+agg convergence rounds
     # are pure job/shuffle overhead — a local union-find over the
@@ -958,17 +971,21 @@ def duplicate_groups(
     # on the edge cache (default 200k directed edges ≈ ~3 MB of id
     # pairs — the broadcast-threshold class, same size discipline as
     # the k-means centroid collects), so at any real scale the
-    # distributed loop below runs exactly as before. The probe is a
-    # short-circuiting limit(gate+1).count(): below the gate it scans
-    # (and caches) everything the collect needs anyway; above it, it
-    # stops after ~one partition instead of paying a full extra pass.
-    # SPARK_GRAFT_CC_DRIVER_EDGES overrides (0 disables). Applied only
-    # to integral id types: the loop casts labels to long, and the
-    # local path must reproduce that exactly.
+    # distributed loop below runs exactly as before. The probe is ONE
+    # bounded collect of limit(gate+1) rows: below the gate it is the
+    # edge list itself; above it, it stops after ~one partition instead
+    # of paying a full extra pass. SPARK_GRAFT_CC_DRIVER_EDGES overrides
+    # (0 disables). Applied only to integral id types (the loop casts
+    # labels to long, and the local path must reproduce that exactly)
+    # and only without NULL ids (the union-find orders ids; the loop
+    # defines what a NULL endpoint does).
     gate = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000"))
     id_type = dict(edges.dtypes)["src"]  # union-coerced common id type
     if gate > 0 and id_type in ("tinyint", "smallint", "int", "bigint"):
-        if edges.limit(gate + 1).count() <= gate:
+        rows = edges.limit(gate + 1).collect()
+        if len(rows) <= gate and all(
+            s is not None and d is not None for s, d in rows
+        ):
             parent: dict = {}
 
             def find(x):
@@ -979,8 +996,7 @@ def duplicate_groups(
                     parent[x], x = root, parent[x]
                 return root
 
-            for r in edges.collect():  # bounded by the gate
-                s, d = r[0], r[1]
+            for s, d in rows:
                 parent.setdefault(s, s)
                 parent.setdefault(d, d)
                 rs, rd = find(s), find(d)
@@ -992,35 +1008,16 @@ def duplicate_groups(
                 cur = comp_min.get(root)
                 if cur is None or node < cur:
                     comp_min[root] = node
-            edges.unpersist()
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            out_schema = StructType(
-                [
-                    StructField("doc_id", edges.schema["src"].dataType),
-                    StructField("group_id", LongType()),
-                ]
-            )
+            release(edges)
+            # the loop's output schema, nullability included (no round
+            # changes it, so the init frame's analyzed schema is it)
+            out_schema = init.select(
+                F.col("id").alias("doc_id"), F.col("label").alias("group_id")
+            ).schema
             return pairs.sparkSession.createDataFrame(
                 [(n, int(comp_min[find(n)])) for n in parent], out_schema
             )
-    # init fuses the FIRST propagation round: label(v) = min(v, min
-    # neighbor) comes out of the same groupBy that enumerates the node
-    # set (edges are symmetrized, so every node appears as src) — one
-    # fewer join round than identity-init for every component, and the
-    # star-shaped components near-dup graphs produce typically converge
-    # in the very next round.
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("_m"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src").cast("long"), F.col("_m").cast("long")).alias(
-                "label"
-            ),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    labels = pin(init, StorageLevel.MEMORY_AND_DISK)
     prev_sum = labels.agg(F.sum("label")).first()[0]
     for rnd in range(max_iters):
         compress = rnd >= plain_rounds
@@ -1039,11 +1036,11 @@ def duplicate_groups(
             # pointer jumping: label' = min(label, label-of-label); the
             # parent lookup joins the half-updated table against itself
             # on the label value (always a node id).
-            half = new_labels.localCheckpoint(eager=True)
+            half = checkpoint(new_labels)
             parents = half.select(
                 F.col("id").alias("_pid"), F.col("label").alias("_plabel")
             )
-            new_labels = (
+            new_labels = checkpoint(
                 half.join(parents, half["label"] == parents["_pid"], "left")
                 .select(
                     half["id"],
@@ -1052,17 +1049,17 @@ def duplicate_groups(
                         F.coalesce(F.col("_plabel"), half["label"]),
                     ).alias("label"),
                 )
-                .localCheckpoint(eager=True)
             )
+            release(half)
         else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
+            new_labels = pin(new_labels, StorageLevel.MEMORY_AND_DISK)
         new_sum = new_labels.agg(F.sum("label")).first()[0]
-        labels.unpersist()
+        release(labels)
         labels = new_labels
         if new_sum == prev_sum:  # exact fixpoint: min-labels are monotone
             break
         prev_sum = new_sum
-    edges.unpersist()
+    release(edges)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("group_id")
     )
@@ -1101,9 +1098,12 @@ def minhash_recall_eval(
     # joins; the candidate set feeds its count AND the verify join.
     # Unpersisted, every consuming subtree re-ran the whole sketch
     # lineage (~4x the kernel; guide §5).
-    sig = portable_signatures(
-        df, id_col, text_col, shingle_size=shingle_size, num_perms=num_perms
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = pin(
+        portable_signatures(
+            df, id_col, text_col, shingle_size=shingle_size, num_perms=num_perms
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     banded = sig.select(
         id_col,
         F.posexplode(
@@ -1111,7 +1111,7 @@ def minhash_recall_eval(
         ).alias("band_idx", "band_key"),
     )
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    cand = pin(
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -1123,7 +1123,6 @@ def minhash_recall_eval(
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .distinct()
-        .persist()
     )
     predicted = jaccard_pairs_from_candidates(
         sig.select(id_col, "grams"), cand, id_col, "grams",
@@ -1137,10 +1136,8 @@ def minhash_recall_eval(
     # aggregates they run as independent subtrees of ONE job — the
     # banded/predicted legs materialize the shared sig/cand caches once
     # and the exact-truth leg (the expensive all-pairs baseline)
-    # overlaps them instead of waiting its turn. Caches are released by
-    # the caller via the _bp_cache_owner convention (or the bench's
-    # clearCache between runs).
-    out = (
+    # overlaps them instead of waiting its turn.
+    return (
         cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         .crossJoin(
             predicted.agg(F.count(F.lit(1)).cast("long").alias("n_predicted"))
@@ -1161,10 +1158,6 @@ def minhash_recall_eval(
             ).alias("candidate_precision"),
         )
     )
-    from . import CacheOwner
-
-    out._bp_cache_owner = CacheOwner(sig, cand)
-    return out
 
 
 def setsim_prefix_join(
@@ -1228,10 +1221,8 @@ def setsim_prefix_join(
         .filter(F.size("t") > 0)
     )
     # Persisted because three consumers read it (the explode feeding
-    # dfreq/prefix, and both verify-side array joins); callers that
-    # fully materialize the result release it via the `_bp_cache_owner`
-    # handle (same convention as ingest.read_files_tolerant).
-    toks = toks.persist()
+    # dfreq/prefix, and both verify-side array joins).
+    toks = pin(toks)
     exploded = toks.select("doc_id", F.size("t").alias("L"),
                            F.explode("t").alias("token"))
     dfreq = exploded.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -1240,7 +1231,7 @@ def setsim_prefix_join(
     # and unpersisted each side re-ran the dfreq join + per-doc window
     # (the plan showed the Window subtree twice); the cache holds only
     # the (doc_id, token) prefix rows — the rarest-token subset.
-    prefix = (
+    prefix = pin(
         exploded.join(dfreq, "token")
         .withColumn("rn", F.row_number().over(w))
         .filter(
@@ -1248,7 +1239,6 @@ def setsim_prefix_join(
             <= F.col("L") - F.expr(f"({p} * L + 99) div 100") + 1
         )
         .select("doc_id", "token")
-        .persist()
     )
     cands = (
         prefix.alias("a")
@@ -1291,7 +1281,6 @@ def setsim_prefix_join(
             (F.col("_sz") - F.col("n_inter")).alias("n_union"),
         )
     )
-    v._bp_cache_owner = toks
     return v
 
 
@@ -1346,7 +1335,7 @@ def containment_prefix_join(
         .select(F.col(id_col).alias("doc_id"), items.alias("t"))
         .filter(F.size("t") > 0)
     )
-    toks = toks.persist()  # 4 consumers; released via _bp_cache_owner
+    toks = pin(toks)  # 4 consumers
     exploded = toks.select(
         "doc_id", F.size("t").alias("L"), F.explode("t").alias("token")
     )
@@ -1390,7 +1379,6 @@ def containment_prefix_join(
         )
         .filter(F.lit(100) * F.col("n_inter") >= F.lit(p) * F.col("n_a"))
     )
-    v._bp_cache_owner = toks
     return v
 
 

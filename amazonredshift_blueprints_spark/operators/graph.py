@@ -30,7 +30,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import checkpoint, pin, release
+
 RANK_SCALE = 1_000_000  # micro-units per unit of rank
+
+
+def _long_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) cast to BIGINT — the directed edge input of the
+    frontier/score loops."""
+    return edges.select(
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+    )
+
+
+def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """One (lo, hi) row per undirected edge, self-loops dropped."""
+    return (
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -66,6 +87,12 @@ def pagerank(
 
     Returns (node, rank) with rank in micro-units after ``iterations``
     rounds — bit-exact replayable (module docstring).
+
+    Overflow bound (``'redistribute'``): the round's BIGINT share is
+    ``coalesce(_bp_m, 0) * damping DIV (100 * N)``, so the product must
+    fit — total dangling mass × damping < 2^63. Dangling mass is at most
+    the whole rank vector, N × RANK_SCALE, which caps N at about 1.08e11
+    nodes at damping 85.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -77,11 +104,10 @@ def pagerank(
     # re-executes the caller's full edge-build lineage (for c90 that is
     # a scan + JSON-parse + distinct per consumer — guide §5 persist
     # rule: reused AND expensive to recompute).
-    from pyspark.storagelevel import StorageLevel as _SL
-
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).persist(_SL.MEMORY_AND_DISK)
+    e_pinned = e = pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     # One cached pass enumerates both endpoint roles (explode, map-side)
     # instead of a union of two scans.
     nodes = (
@@ -104,9 +130,12 @@ def pagerank(
                 dangle.select(F.col("node").alias("src"), F.col("node").alias("dst"))
             )
     else:
-        dangling_nodes = nodes.join(
-            e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        dangling_nodes = pin(
+            nodes.join(
+                e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
         n_nodes = nodes.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e_deg = e.join(outdeg, "src")
@@ -116,8 +145,8 @@ def pagerank(
     # (exchange count grows geometrically; measured 30 exchanges for 3
     # rounds unpersisted vs 2 per round persisted). The previous round's
     # vector is released as soon as the next materializes.
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    e_deg = e_deg.persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = pin(nodes, StorageLevel.MEMORY_AND_DISK)
+    e_deg = pin(e_deg, StorageLevel.MEMORY_AND_DISK)
     teleport = RANK_SCALE * (100 - damping) // 100
     rank = nodes.select("node", F.lit(RANK_SCALE).cast("long").alias("rank"))
     prev = None
@@ -178,19 +207,13 @@ def pagerank(
         # rounds keep planning O(1) per round (guide §5: localCheckpoint
         # to cut lineage when that intermediate's fault tolerance is
         # not critical — it is re-derivable here).
-        rank = rank.localCheckpoint(eager=True)
-        if prev is not None:
-            prev.unpersist()
+        rank = checkpoint(rank)
+        release(prev)
         prev = rank
-    if dangling_nodes is not None:
-        dangling_nodes.unpersist()
     # The static graph side is only needed while iterating; the final
     # rank is already materialized (each round's eager checkpoint), so
     # consumers read the checkpointed blocks, never the lineage.
-    nodes.unpersist()
-    e_deg.unpersist()
-    e.unpersist()
-    rank._bp_cache_owner = rank
+    release(dangling_nodes, nodes, e_deg, e_pinned)
     return rank
 
 
@@ -229,17 +252,8 @@ def triangle_count(
     # The canonical edge set feeds FOUR consumers (both degree unions,
     # the orientation join, the wedge-closing semi-join); without a
     # persist each re-executes the full dedup lineage (measured 44
-    # exchanges at fixture scale vs 12 persisted). Released via the
-    # _bp_cache_owner handle once the count is consumed.
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # exchanges at fixture scale vs 12 persisted).
+    e = pin(_canonical_edges(edges, src_col, dst_col), StorageLevel.MEMORY_AND_DISK)
     deg, wedges = _oriented_wedges(e)
     # close the wedge: (v, w) must be an oriented edge in EITHER
     # direction of the (deg, id) order; since v < w only by ID here, try
@@ -256,9 +270,7 @@ def triangle_count(
         ["v", "w"],
         "semi",
     )
-    out = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    out._bp_cache_owner = e
-    return out
+    return closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
 def bfs_hops(
@@ -285,22 +297,16 @@ def bfs_hops(
     100 TB: each round is one equi-join (frontier x edges, frontier
     side broadcastable while small — the common case for k-hop
     queries) plus one distinct and one anti-join against the visited
-    set; visited and edges are persisted once and released by the
-    caller via ``_bp_cache_owner``. Frontier size is the real cost
+    set; visited and edges are persisted once. Frontier size is the real cost
     driver (neighborhood growth), not round count.
     """
     spark = edges.sparkSession
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).persist()
-    visited = spark.createDataFrame(
-        [(int(source), 0)], "node long, hops int"
-    ).persist()
+    e = pin(_long_edges(edges))
+    visited = pin(spark.createDataFrame([(int(source), 0)], "node long, hops int"))
     frontier = visited.select("node")
     spent = []  # per-round frontier caches, released once superseded
     for k in range(1, max_hops + 1):
-        nxt = (
+        nxt = pin(
             e.join(
                 F.broadcast(frontier.withColumnRenamed("node", "src")), "src"
             )
@@ -308,19 +314,15 @@ def bfs_hops(
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(k).alias("hops"))
-        ).persist()
-        new_visited = visited.unionAll(nxt).persist()
+        )
+        new_visited = pin(visited.unionAll(nxt))
         new_visited.count()  # materialize before parents are released
-        visited.unpersist()
+        release(visited)
         spent.append(nxt)
         visited = new_visited
         frontier = nxt.select("node")
-    for c in spent:  # visited is materialized; round caches can go
-        c.unpersist()
-    e.unpersist()
-    out = visited.select("node", F.col("hops").cast("long").alias("hops"))
-    out._bp_cache_owner = visited
-    return out
+    release(*spent, e)  # visited is materialized; round caches can go
+    return visited.select("node", F.col("hops").cast("long").alias("hops"))
 
 
 def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
@@ -347,10 +349,7 @@ def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
     shuffle-per-round shape (and persist hygiene duty) as pagerank;
     scores are node-sized, broadcastable for dimension-like graphs.
     """
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).persist()
+    e = pin(_long_edges(edges))
     # r16: score vectors carry only NONZERO entries while iterating —
     # a zero-score node contributes nothing to either half-round sum,
     # so the per-half-round right-join that re-attached every node
@@ -362,27 +361,27 @@ def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
     # lineage-truncated (the persist+count form nested every earlier
     # half-round under the next plan — 1,661 Exchange nodes of lineage
     # by round 2 at c126; guide §5).
-    nodes = (
+    nodes = pin(
         e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
-    ).persist()
+    )
     h = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1).cast("long").alias("s")
     )
     a = None
     for _ in range(iterations):
-        a = (
+        a = checkpoint(
             e.join(h.withColumnRenamed("node", "src")
                     .withColumnRenamed("s", "hs"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("hs").alias("s"))
-        ).localCheckpoint(eager=True)
-        h = (
+        )
+        h = checkpoint(
             e.join(a.withColumnRenamed("node", "dst")
                     .withColumnRenamed("s", "as_"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("as_").alias("s"))
-        ).localCheckpoint(eager=True)
-    out = (
+        )
+    out = pin(
         nodes.join(h.withColumnRenamed("s", "hub_q"), "node", "left")
         .join(a.withColumnRenamed("s", "auth_q"), "node", "left")
         .select(
@@ -390,11 +389,9 @@ def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
             F.coalesce("hub_q", F.lit(0)).cast("long").alias("hub_q"),
             F.coalesce("auth_q", F.lit(0)).cast("long").alias("auth_q"),
         )
-    ).persist()
+    )
     out.count()
-    e.unpersist()
-    nodes.unpersist()
-    out._bp_cache_owner = out
+    release(e, nodes)
     return out
 
 
@@ -410,16 +407,14 @@ def _oriented_wedges(e: DataFrame):
     ``keyed`` two (both wedge sides); unpersisted, each consumer
     re-ran the whole union+aggregate+two-join orientation lineage
     (the final c141 plan carried 70 Exchange nodes, ~5 copies of the
-    deg subtree). Released by clearCache/GC with the canonical edge
-    cache (the established global_rank convention)."""
-    deg = (
+    deg subtree)."""
+    deg = pin(
         e.select(F.explode(F.array("lo", "hi")).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist()
     )
     # orient by (deg, id): src = smaller endpoint under that order
-    keyed = (
+    keyed = pin(
         e.join(deg.select(F.col("v").alias("lo"), F.col("deg").alias("dlo")), "lo")
         .join(deg.select(F.col("v").alias("hi"), F.col("deg").alias("dhi")), "hi")
         .select(
@@ -435,7 +430,6 @@ def _oriented_wedges(e: DataFrame):
             F.col("dlo"), F.col("dhi"),
         )
         .select("o.src", "o.dst")
-        .persist()
     )
     w1 = keyed.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     w2 = keyed.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -473,15 +467,7 @@ def clustering_coefficients(
     """
     from pyspark.storagelevel import StorageLevel
 
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = pin(_canonical_edges(edges, src_col, dst_col), StorageLevel.MEMORY_AND_DISK)
     deg, wedges = _oriented_wedges(e)
     # shuffle_hash on the edge side: same rationale as triangle_count's
     # semi close — never sort the O(m^1.5) wedge stream to join it
@@ -499,7 +485,7 @@ def clustering_coefficients(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    out = (
+    return (
         deg.filter(F.col("deg") >= 2)
         .join(tri.withColumnRenamed("node", "v"), "v", "left")
         .select(
@@ -512,8 +498,6 @@ def clustering_coefficients(
             ).alias("lcc_micro"),
         )
     )
-    out._bp_cache_owner = e
-    return out
 
 
 def kcore(
@@ -565,16 +549,12 @@ def kcore(
         raise ValueError(f"k must be >= 1, got {k}")
     from pyspark.storagelevel import StorageLevel
 
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    e = pin(_long_edges(edges), StorageLevel.MEMORY_AND_DISK)
     # Full degree once: symmetrized input ⇒ every node appears as src.
-    deg = (
+    deg = checkpoint(
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         .select(F.col("src").alias("node"), "deg")
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         removed = deg.filter(F.col("deg") < k).select("node")
@@ -586,7 +566,7 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("_d"))
             .select(F.col("src").alias("node"), "_d")
         )
-        deg = (
+        deg = checkpoint(
             deg.filter(F.col("deg") >= k)
             .join(dec, "node", "left")
             .select(
@@ -595,15 +575,12 @@ def kcore(
                 .cast("long")
                 .alias("deg"),
             )
-            .localCheckpoint(eager=True)
         )
     # Survivors whose degree inside the surviving subgraph is zero have
     # no incident surviving edge; the naive groupBy form emitted no row
     # for them, so filter them out to match exactly.
-    out = deg.filter(F.col("deg") >= 1)
-    e.unpersist()
-    out._bp_cache_owner = deg
-    return out
+    release(e)
+    return deg.filter(F.col("deg") >= 1)
 
 
 def link_prediction(
@@ -642,24 +619,14 @@ def link_prediction(
     """
     from pyspark.storagelevel import StorageLevel
 
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = pin(_canonical_edges(edges, src_col, dst_col), StorageLevel.MEMORY_AND_DISK)
     adj = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
         e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
     )
     # persisted (r16): the degree table has three consumers (centers,
     # deg_a, deg_b) and is node-sized; unpersisted each re-ran the
     # adjacency aggregate over the cached edge set
-    deg = adj.groupBy("u").agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    ).persist()
+    deg = pin(adj.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg")))
     # per-center Adamic-Adar weight, attached once to the adjacency rows.
     # deg >= 2 is both semantics and safety: a degree-1 center forms no
     # wedge, and ln(1) = 0 would make its weight a division by zero
@@ -706,14 +673,12 @@ def link_prediction(
             "aa_micro",
         )
     )
-    out = scored.orderBy(
+    return scored.orderBy(
         F.col("jaccard_micro").desc(),
         F.col("aa_micro").desc(),
         "a",
         "b",
     ).limit(k)
-    out._bp_cache_owner = e
-    return out
 
 
 def label_propagation(
@@ -746,14 +711,13 @@ def label_propagation(
     c90 persist hygiene (materialize new state, then release old)
     keeps two label generations at most in cache.
     """
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).persist()
-    sd = seeds.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("label").cast("long").alias("label"),
-    ).persist()
+    e = pin(_long_edges(edges))
+    sd = pin(
+        seeds.select(
+            F.col("node").cast("long").alias("node"),
+            F.col("label").cast("long").alias("label"),
+        )
+    )
     labels = sd
     for _ in range(iterations):
         votes = (
@@ -783,12 +747,9 @@ def label_propagation(
         # round t's plan does not nest rounds 0..t-1 (guide §5; same
         # rationale as pagerank/kcore — the persist+count form grew the
         # final plan to ~90 Exchange nodes of lineage text by round 2).
-        new_labels = sd.unionAll(winners).localCheckpoint(eager=True)
+        new_labels = checkpoint(sd.unionAll(winners))
         if labels is not sd:
-            labels.unpersist()
+            release(labels)
         labels = new_labels
-    e.unpersist()
-    out = labels.select("node", "label")
-    out._bp_cache_owner = labels
-    sd.unpersist()
-    return out
+    release(e, sd)
+    return labels.select("node", "label")

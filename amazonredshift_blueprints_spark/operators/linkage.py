@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pin
+
 
 def blocked_fuzzy_match(
     df: DataFrame,
@@ -113,14 +115,14 @@ def survivorship_golden_record(
     # components), so without a persist every consumer re-executes
     # that whole lineage (measured on c136: 115 broadcast joins / 300
     # exchanges in the plan, one full pairs+CC replay per consumer).
-    # Cluster-membership-sized — safe to cache; released by the
-    # caller/bench via clearCache (``_bp_cache_owner`` convention).
-    j = groups.join(
-        df.select(
-            F.col(id_col).alias("doc_id"), F.col(quality_col), *fields
+    # Cluster-membership-sized — safe to cache.
+    j = pin(
+        groups.join(
+            df.select(F.col(id_col).alias("doc_id"), F.col(quality_col), *fields),
+            "doc_id",
         ),
-        "doc_id",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        StorageLevel.MEMORY_AND_DISK,
+    )
     base = j.groupBy("group_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min(
@@ -149,5 +151,4 @@ def survivorship_golden_record(
             .select("group_id", F.col(f"_m.{f}").alias(f"{f}_modal"))
         )
         out = out.join(F.broadcast(modal), "group_id")
-    out._bp_cache_owner = j
     return out

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pin
 from .dedup import tokens
 
 _MICRO = 1_000_000
@@ -1033,16 +1034,14 @@ def rfm_segments(
     # and the final join) and each one otherwise re-runs the
     # event-sized scan+aggregate (r16; guide §5 persist rule). The
     # cache is key-sized, not event-sized.
-    per0 = (
-        df.groupBy(F.col(key_col).alias("key"))
-        .agg(
+    per0 = pin(
+        df.groupBy(F.col(key_col).alias("key")).agg(
             F.max(F.col(date_col).cast("date")).alias("_last"),
             F.count(F.lit(1)).cast("long").alias("frequency"),
             F.sum(
                 F.round(F.col(amount_col).cast("double") * scale).cast("long")
             ).alias("monetary_q"),
         )
-        .persist()
     )
     asof = per0.agg(F.max("_last").alias("_asof"))
     per = (
@@ -2479,7 +2478,7 @@ def gini_concentration(
         [F.asc("w"), F.asc("_gid")],
         out_col="rnk",
     )
-    out = ranked.agg(
+    return ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("w").cast("long").alias("total_w"),
         F.expr(
@@ -2487,8 +2486,6 @@ def gini_concentration(
             " DIV (COUNT(*) * SUM(w)) AS BIGINT)"
         ).alias("gini_micro"),
     )
-    out._bp_cache_owner = getattr(ranked, "_bp_cache_owner", None)
-    return out
 
 
 def cohens_kappa(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pin
+
 _WIDTH = 6  # hex digits compared
 _SPACE = 16**_WIDTH
 
@@ -108,13 +110,11 @@ def stratified_sample(
         "_one", F.lit(1).cast("long")
     )
     ranked = grouped_cumsum(staged, list(strata_cols), ["_b", key], ["_one"])
-    out = (
+    return (
         ranked.withColumn("samp_rank", F.col("_one_cum"))
         .filter(F.col("samp_rank") <= n_per_stratum)
         .drop("_b", "_one", "_one_cum")
     )
-    out._bp_cache_owner = ranked._bp_cache_owner
-    return out
 
 
 def token_budget_sample(
@@ -459,10 +459,8 @@ def global_rank(
     )
     # Persist pins the (sampled, hence nondeterministic) range
     # partitioning so the offsets collected below describe the same
-    # partitioning the output is consumed from. Callers that fully
-    # materialize the result can release it via the `_bp_cache_owner`
-    # handle (same convention as ingest.read_files_tolerant).
-    part = part.persist()
+    # partitioning the output is consumed from.
+    part = pin(part)
     counts = {
         r["_pid"]: r["cnt"]
         for r in part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
@@ -482,7 +480,7 @@ def global_rank(
         )
     )
     w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
+    return (
         part.join(off_df, "_pid", "left")
         .withColumn(
             out_col,
@@ -492,8 +490,6 @@ def global_rank(
         )
         .drop("_pid", "_off")
     )
-    out._bp_cache_owner = part
-    return out
 
 
 def global_cumsum(
@@ -522,8 +518,7 @@ def global_cumsum(
     paired the cumulative window with a total ``Window.partitionBy()``
     (also single-partition!) should use these exact literals instead.
     ``order_cols`` must be a total order (callers pass distinct-value
-    tables or include a tiebreaker). Release the pinned input via
-    ``out._bp_cache_owner`` after materializing.
+    tables or include a tiebreaker).
     """
     from pyspark.sql.window import Window
 
@@ -532,7 +527,7 @@ def global_cumsum(
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
     )
-    part = part.persist()
+    part = pin(part)
     partials = {
         r["_pid"]: r
         for r in part.groupBy("_pid")
@@ -567,7 +562,6 @@ def global_cumsum(
             ).cast("long"),
         )
     out = out.drop("_pid", *[f"_off_{c}" for c in sum_cols])
-    out._bp_cache_owner = part
     out._bp_totals = acc
     return out
 
@@ -598,7 +592,7 @@ def grouped_cumsum(
     Scale bound: the broadcast offsets table is O(G + P) rows — the
     same order as the operator's own per-group OUTPUT, so any G whose
     result you can produce, you can broadcast. Adds ``<col><suffix>``
-    per sum column; release via ``out._bp_cache_owner``.
+    per sum column.
     """
     from pyspark.sql.window import Window
 
@@ -608,7 +602,7 @@ def grouped_cumsum(
         .sortWithinPartitions(*keys)
         .withColumn("_pid", F.spark_partition_id())
     )
-    part = part.persist()
+    part = pin(part)
     partials = part.groupBy("_pid", *group_cols).agg(
         *[F.sum(c).cast("long").alias(f"_ps_{c}") for c in sum_cols]
     )
@@ -641,9 +635,7 @@ def grouped_cumsum(
                 + F.sum(c).over(w_in)
             ).cast("long"),
         )
-    out = out.drop("_pid", *[f"_off_{c}" for c in sum_cols])
-    out._bp_cache_owner = part
-    return out
+    return out.drop("_pid", *[f"_off_{c}" for c in sum_cols])
 
 
 def token_balanced_shards(
@@ -1038,10 +1030,8 @@ def stratified_kfold(
         F.lit(1).cast("long").alias("_one"),
     )
     ranked = grouped_cumsum(staged, ["stratum"], ["_b", "id"], ["_one"])
-    out = ranked.select(
+    return ranked.select(
         "id",
         "stratum",
         ((F.col("_one_cum") - 1) % k).cast("long").alias("fold"),
     )
-    out._bp_cache_owner = ranked._bp_cache_owner
-    return out

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import checkpoint, pin, release
+
 QUANT_SCALE = 1_000_000  # 1e-6 component resolution
 
 
@@ -628,9 +630,9 @@ def _kmeans_rows(
     # kernel is then a pure int64 matmul over cached Arrow batches.
     from pyspark.storagelevel import StorageLevel
 
-    quant = (
-        corpus.select(quantize(F.col(vec_col)).alias("q"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    quant = pin(
+        corpus.select(quantize(F.col(vec_col)).alias("q")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     try:
         for _ in range(max(0, iters)):
@@ -690,7 +692,7 @@ def _kmeans_rows(
                 for i, (cid, q) in enumerate(cents)
             ]
     finally:
-        quant.unpersist()
+        release(quant)
     if n_cells * dim > MAX_LITERAL_CENTROID_CELLS:
         # same driver-metadata bound _collect_centroids enforces
         raise ValueError(
@@ -1112,13 +1114,12 @@ def embedding_near_duplicates(
         # persisted: the sketch feeds BOTH sides of the bucket self-join;
         # without the persist the Arrow kernel executes twice (no
         # ReuseExchange below a shuffle for map-only subtrees)
-        sk = (
+        sk = pin(
             portable_sketch_arrow(
                 df, id_col=id_col, vec_col=vec_col, prefix="s",
                 n_tables=n_tables, bits=bits, dim=dim,
-            )
-            .select("s_id", "tbl", "bucket")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            ).select("s_id", "tbl", "bucket"),
+            StorageLevel.MEMORY_AND_DISK,
         )
         cand = (
             sk.alias("l")
@@ -1342,10 +1343,10 @@ def semantic_dedup(
     ``eager`` (default): the survivors — (id, cell), 16 B/row — are
     materialized via localCheckpoint while the cell table is cached
     (every stage reads the cache, the pipeline runs once) and the
-    cache is released before returning, so long-lived sessions don't
-    accumulate cached embedding tables. ``eager=False`` returns the
-    lazy plan with the cell table still persisted — for plan audits,
-    or callers that compose further and manage the cache themselves.
+    cell cache is released before returning, so long-lived sessions
+    don't accumulate cached embedding tables. ``eager=False`` returns
+    the lazy plan with the cell table still pinned — for plan audits,
+    or callers that compose further; ``release_pins`` frees it.
 
     ``max_cell_rows`` is the 100 TB cell-SKEW guard (VERDICT r11 item
     3): "bounded by cell sizes" is corpus²/k only for BALANCED cells —
@@ -1376,8 +1377,9 @@ def semantic_dedup(
     # persisted: the Arrow cell pass feeds BOTH pair-join sides and the
     # final anti-join — without the persist the kernel executes three
     # times (the embedding_near_duplicates sketch-persist rationale)
-    cells = assign_cells(df, cent_rows, id_col=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    cells = pin(
+        assign_cells(df, cent_rows, id_col=id_col, vec_col=vec_col),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a = cells.select(
         F.col("neighbor_id").alias("a_id"),
@@ -1426,7 +1428,6 @@ def semantic_dedup(
         .filter(_cos_ok("a", "b"))
         .select(F.col("b_id").alias("_drop_id"))
     )
-    ranked_owner = None
     if over:
         from .sampling import grouped_cumsum
 
@@ -1452,7 +1453,6 @@ def semantic_dedup(
             .withColumn("one", F.lit(1).cast("long"))
         )
         cum = grouped_cumsum(big, ["cell"], ["dist", "neighbor_id"], ["one"])
-        ranked_owner = cum._bp_cache_owner
         ranked = cum.withColumnRenamed("one_cum", "rnk")
         drops_big = (
             _windowed_cell_pairs(ranked, pair_window)
@@ -1473,19 +1473,9 @@ def semantic_dedup(
         drops, cells["neighbor_id"] == drops["_drop_id"], "left_anti"
     ).select(F.col("neighbor_id").alias(id_col), "cell")
     if not eager:
-        # lazy mode keeps the full lineage visible (plan audits) and
-        # leaves the pinned frames to the caller to release — ONE
-        # composite handle covering the cell table AND the capped
-        # path's pinned rank input (r17: the rank owner used to ride a
-        # second attribute no release convention ever read)
-        from . import CacheOwner
-
-        survivors._bp_cache_owner = CacheOwner(cells, ranked_owner)
-        return survivors
-    out = survivors.localCheckpoint(eager=True)
-    cells.unpersist()
-    if ranked_owner is not None:
-        ranked_owner.unpersist()
+        return survivors  # full lineage visible, for plan audits
+    out = checkpoint(survivors)
+    release(cells)
     return out
 
 
@@ -1993,7 +1983,7 @@ def ivf_pq_residual_topk(
     # pq_iters+2 times. Released below once the (tiny, ≤ n_queries·k
     # rows) result is materialized, so repeated calls in a long session
     # do not accumulate cached corpus tables (the c61 pattern).
-    residuals = _residuals(cells, CENT).persist(StorageLevel.MEMORY_AND_DISK)
+    residuals = pin(_residuals(cells, CENT), StorageLevel.MEMORY_AND_DISK)
     # codebook training input: the SAME deterministic sample, filtered
     # from the already-persisted full residual table (no extra scan)
     train_res = (
@@ -2084,14 +2074,13 @@ def ivf_pq_residual_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist2"), F.asc("neighbor_id")
     )
-    out = (
+    # eager: the result is ≤ n_queries·k rows — materializing it here
+    # lets the corpus-sized residual cache be released immediately
+    out = checkpoint(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        # eager: the result is ≤ n_queries·k rows — materializing it here
-        # lets the corpus-sized residual cache be released immediately
-        .localCheckpoint(eager=True)
     )
-    residuals.unpersist()
+    release(residuals)
     return out
 
 
@@ -2730,27 +2719,25 @@ def ivf_probe_recall(
     # aggregate — unpersisted, the deliberately-quadratic brute-force
     # baseline (the most expensive subtree here) executed twice; the
     # cache holds only k·|Q| id pairs (guide §5).
-    from pyspark.storagelevel import StorageLevel as _SL
-
-    truth = (
+    truth = pin(
         brute_force_topk(corpus, queries, id_col=id_col, vec_col=vec_col, k=k)
-        .select("query_id", "neighbor_id")
-        .persist(_SL.MEMORY_AND_DISK)
+        .select("query_id", "neighbor_id"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     spark = corpus.sparkSession
     # one centroid collect + ONE corpus cell-assignment pass shared by
     # every sweep point (r16): each ivf_topk call re-derived the exact
     # same centroid rule and re-ran the |C|·n_cells Arrow assignment
     # over the whole corpus — len(probes)× identical map work. The cell
-    # table is persisted because every per-probe join consumes it;
-    # released via the _bp_cache_owner handle once the sweep is read.
+    # table is persisted because every per-probe join consumes it.
     cent_rows = _collect_centroids(
         _with_quant(
             corpus.filter(F.col(id_col) < n_cells), id_col, vec_col, "cent"
         )
     )
-    cells = assign_cells(corpus, cent_rows, id_col=id_col, vec_col=vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    cells = pin(
+        assign_cells(corpus, cent_rows, id_col=id_col, vec_col=vec_col),
+        StorageLevel.MEMORY_AND_DISK,
     )
     approx = None
     for p in probes:
@@ -2778,7 +2765,7 @@ def ivf_probe_recall(
     base = spark.createDataFrame(
         [(int(p),) for p in probes], "`nprobe` BIGINT"
     )
-    out = (
+    return (
         base.join(hits, "nprobe", "left")
         .withColumn("n_hits", F.coalesce("n_hits", F.lit(0)).cast("long"))
         .crossJoin(F.broadcast(n_truth))
@@ -2791,10 +2778,6 @@ def ivf_probe_recall(
             ),
         )
     )
-    from . import CacheOwner
-
-    out._bp_cache_owner = CacheOwner(cells, truth)
-    return out
 
 
 def semantic_decontaminate(

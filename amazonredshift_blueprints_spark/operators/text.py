@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pin, release
 from .dedup import rebalance_for_compute, tokens
 
 # Tiny per-language stopword lexicons. Deliberately small and fixed:
@@ -764,11 +765,14 @@ def dup_span_coverage(
     toks = tokens(text_col)
     # Persisted: tokenize + n-grams feed the gram explode AND the final
     # doc restore join; unpersisted each re-runs the projection (r16).
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        _ngrams_expr(toks, gram_len).alias("_grams"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.size(toks).cast("long").alias("n_tokens"),
+            _ngrams_expr(toks, gram_len).alias("_grams"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     pos_grams = base.select(
         "doc_id",
         "n_tokens",
@@ -819,7 +823,6 @@ def dup_span_coverage(
             ).alias("dup_fraction"),
         )
     )
-    out._bp_cache_owner = base
     return out
 
 
@@ -860,12 +863,15 @@ def dedup_span_removal(
     # map-side work here) feeds THREE consumers — the gram explode,
     # the word explode, and the final doc restore join — and without
     # the cache each consumer re-runs it from the scan (r16; guide §5).
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        toks.alias("_toks"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        _ngrams_expr(toks, gram_len).alias("_grams"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            toks.alias("_toks"),
+            F.size(toks).cast("long").alias("n_tokens"),
+            _ngrams_expr(toks, gram_len).alias("_grams"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     pos_grams = base.select(
         "doc_id", F.posexplode("_grams").alias("pos", "gram")
     )
@@ -931,7 +937,6 @@ def dedup_span_removal(
             ),
         )
     )
-    out._bp_cache_owner = base
     return out
 
 
@@ -1308,14 +1313,13 @@ def train_bpe_merges(
     # train + apply pipelines pay the corpus explode once (c100)
     from pyspark.storagelevel import StorageLevel
 
-    words = (
+    words = pin(
         (
             word_counts
             if word_counts is not None
             else word_count_vocab(df, text_col)
-        )
-        .withColumn("seq", F.array_join(F.split(F.col("word"), ""), " "))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).withColumn("seq", F.array_join(F.split(F.col("word"), ""), " ")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # Round r recomputes the replace chain 1..r-1 LAZILY over the one
     # persisted base vocabulary instead of persisting a rewritten copy
@@ -1371,19 +1375,20 @@ def train_bpe_merges(
             # the depth while keeping the per-round persist savings
             # (the flush never fires for the default 12 merges).
             if rank % _BPE_FLUSH_EVERY == 0 and rank < n_merges:
-                flushed = words.select(
-                    "word", "cnt", seq_expr.alias("seq")
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                flushed = pin(
+                    words.select("word", "cnt", seq_expr.alias("seq")),
+                    StorageLevel.MEMORY_AND_DISK,
+                )
                 # hand the new cache to the outer finally first, so a
                 # failing materialization cannot leak it
                 old, words = words, flushed
                 try:
                     flushed.count()  # materialize before releasing the old cache
                 finally:
-                    old.unpersist()
+                    release(old)
                 seq_expr = F.col("seq")
     finally:
-        words.unpersist()
+        release(words)
     return spark.createDataFrame(
         merges, "rank long, pair string, merged string, pair_count long"
     )
@@ -1774,14 +1779,14 @@ def ngram_novelty(
     # Per-doc DISTINCT gram arrays (word_ngrams dedups), persisted: both
     # branches below read it, and unpersisted the tokenize+md5-free but
     # still expensive split/transform pipeline ran twice (r16, guide §5).
-    grams_arr = (
+    grams_arr = pin(
         rebalance_for_compute(df)
         .select(
             F.col(id_col).alias("doc_id"),
             word_ngrams(tokens(text_col), ngram).alias("_g"),
         )
-        .filter(F.size("_g") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .filter(F.size("_g") > 0),
+        StorageLevel.MEMORY_AND_DISK,
     )
     per_doc = grams_arr.select("doc_id", F.size("_g").alias("n_grams"))
     # Because grams are distinct per doc, a gram whose corpus-min doc is
@@ -1899,11 +1904,11 @@ def greedy_coverage_select(
         if ngram <= 1
         else word_ngrams(_tokens(text_col), ngram)
     )
-    e = (
+    e = pin(
         df.select(F.col(id_col).alias("doc_id"), items.alias("t"))
         .filter(F.size("t") > 0)
         .select("doc_id", F.explode("t").alias("token"))
-    ).persist()
+    )
     spark = df.sparkSession
     chosen: list[tuple[int, int, int]] = []
     chosen_ids: list[int] = []
@@ -1935,7 +1940,7 @@ def greedy_coverage_select(
         doc_id, gain = int(top[0]["doc_id"]), int(top[0]["gain"])
         chosen.append((rnd, doc_id, gain))
         chosen_ids.append(doc_id)
-    e.unpersist()
+    release(e)
     return spark.createDataFrame(
         chosen, "round long, doc_id long, gain long"
     )
@@ -2068,11 +2073,11 @@ def tfidf_doc_pairs(
     # guide §5 multi-consumer subtrees). The cached projection is the
     # capped posting list — (doc_id, token, w) — far smaller than the
     # raw shingle stream.
-    w = (
+    w = pin(
         tf.join(F.broadcast(dfreq.filter(F.col("df") <= df_cap)), "token")
         .crossJoin(F.broadcast(n_docs))
-        .select("doc_id", "token", (F.col("tf") * idf_q).alias("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "token", (F.col("tf") * idf_q).alias("w")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     pairs = (
         w.alias("a")

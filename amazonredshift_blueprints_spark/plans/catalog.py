@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import translate_redshift_sql
+from ..operators import pin
 from ..session import configure_runtime, load_table
 
 
@@ -1719,10 +1720,12 @@ def c32_pipeline_neardup_stratified(spark: SparkSession, sf_dir: str) -> DataFra
     # pair generator (materialized inside the components loop) AND the
     # keep-side anti-join — unpersisted, the scan + text_stats + gate
     # join re-ran per consumer (guide §5)
-    surv = (
-        d.join(quality.filter(F.col("quality") >= 80), "doc_id")
-        .select("doc_id", "text", "lang")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    surv = pin(
+        d.join(quality.filter(F.col("quality") >= 80), "doc_id").select(
+            "doc_id", "text", "lang"
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     pairs = ngram_jaccard_pairs(surv, "doc_id", "text", n=3, threshold_pct=40)
     dupes = (
         duplicate_groups(pairs)
@@ -4937,17 +4940,21 @@ def c55_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang join — unpersisted, the repetition-filter + mix + tokenize
     # subtree executed four times (plan before: 10 SortMergeJoin /
     # 8 Window; guide §5 multi-consumer subtrees)
-    weighted = mixed.select(
-        "doc_id", "lang", "text",
-        F.size(tokens("text")).cast("long").alias("n_tokens"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    weighted = pin(
+        mixed.select(
+            "doc_id", "lang", "text",
+            F.size(tokens("text")).cast("long").alias("n_tokens"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     sel = token_budget_sample(
         weighted, strata_col="lang", id_col="doc_id",
         weight_col="n_tokens", budget=3000,
     )
-    picked = weighted.join(
-        sel.select(F.col("id").alias("doc_id")), "doc_id"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    picked = pin(
+        weighted.join(sel.select(F.col("id").alias("doc_id")), "doc_id"),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     chunks = chunk_documents(
         picked, "doc_id", "text", window_tokens=64, stride_tokens=48
     )
@@ -7988,14 +7995,12 @@ def c92_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate) feeds BOTH the bucket-count action and the global rank;
     # unpersisted it executed twice (guide §5). The cache holds one
     # narrow row per document.
-    lp = unigram_logprob(d, "doc_id", "text").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    lp = pin(unigram_logprob(d, "doc_id", "text"), StorageLevel.MEMORY_AND_DISK)
     ranked = global_rank(
         lp, [F.desc("avg_logprob"), F.asc("doc_id")], out_col="_rk"
     )
     n_docs = lp.count()
-    out = ranked.select(
+    return ranked.select(
         "doc_id",
         "n_tokens",
         "logprob_q_sum",
@@ -8004,8 +8009,6 @@ def c92_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor((F.col("_rk") - 1) * 3 / F.lit(n_docs)).cast("long") + 1
         ).alias("bucket"),
     )
-    out._bp_cache_owner = lp  # release path for the pinned LM scores
-    return out
 
 
 @query(
@@ -8944,7 +8947,7 @@ def c100_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one persisted (word, cnt) vocabulary feeds BOTH BPE halves —
     # training's word-count base and application's vocab — instead of
     # two corpus-sized explode+aggregate passes (guide §2.4)
-    wc = word_count_vocab(d, "text").persist(StorageLevel.MEMORY_AND_DISK)
+    wc = pin(word_count_vocab(d, "text"), StorageLevel.MEMORY_AND_DISK)
     merges = [
         tuple(r)
         for r in train_bpe_merges(
@@ -9047,9 +9050,12 @@ def c101_unimax_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (collected for the waterfilling), the band totals AND the cum join
     # — three executions unpersisted (guide §5); the cache is 3 narrow
     # columns per document.
-    staged = d.select(
-        "lang", "doc_id", F.size(tokens("text")).cast("long").alias("n_tokens")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    staged = pin(
+        d.select(
+            "lang", "doc_id", F.size(tokens("text")).cast("long").alias("n_tokens")
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     stats = staged.groupBy(F.col("lang").alias("stratum")).agg(
         F.sum("n_tokens").alias("avail")
     )
@@ -9061,16 +9067,9 @@ def c101_unimax_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         weight_col="n_tokens",
     )
-    from ..operators import CacheOwner
-
-    out = picked.join(
+    return picked.join(
         F.broadcast(budgets.select("stratum", "alloc")), "stratum"
     ).select("stratum", "id", "weight", "cum_weight", "alloc")
-    # release path for the pinned scan (+ anything picked pinned)
-    out._bp_cache_owner = CacheOwner(
-        staged, getattr(picked, "_bp_cache_owner", None)
-    )
-    return out
 
 
 @query(
@@ -9731,12 +9730,11 @@ def c111_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lp sits on BOTH sides of the edge-building self-join; without a
     # persist each side re-runs the lineitem scan + distinct shuffle
     # (the static plan shows the subtree twice and ReuseExchange does
-    # not fire across the aliased sides). Released with the rest of
-    # the operator's caches via the bench's clearCache between runs.
-    lp = (
+    # not fire across the aliased sides).
+    lp = pin(
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     edges = (
         lp.alias("a")
@@ -20780,13 +20778,12 @@ def c212_winnowing_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = views(spark, sf_dir, "documents")["documents"]
     # the winnowing subtree feeds FIVE consumers (cap counts, both
     # pair-join sides, both totals) — persist it once or the explode+
-    # window pipeline (the dominant cost) re-runs per consumer;
-    # released via the _bp_cache_owner convention (ingest.py:249)
-    fps = (
+    # window pipeline (the dominant cost) re-runs per consumer
+    fps = pin(
         winnow_fingerprints(d, "doc_id", "text", k=8, w=4)
         .select("doc_id", "fp")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
     rare = (
         fps.groupBy("fp")
@@ -20807,7 +20804,7 @@ def c212_winnowing_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ta = tot.select(F.col("doc_id").alias("doc_a"), F.col("t").alias("_ta"))
     tb = tot.select(F.col("doc_id").alias("doc_b"), F.col("t").alias("_tb"))
-    out = (
+    return (
         shared.join(ta, "doc_a")
         .join(tb, "doc_b")
         .select(
@@ -20821,8 +20818,6 @@ def c212_winnowing_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("overlap_pct"),
         )
     )
-    out._bp_cache_owner = fps
-    return out
 
 
 @query(

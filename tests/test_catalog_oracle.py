@@ -6,14 +6,25 @@ from __future__ import annotations
 
 import pytest
 
+from amazonredshift_blueprints_spark.operators import release_pins
 from amazonredshift_blueprints_spark.plans import QUERIES
 from tools.check_correctness import compare
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     spec = QUERIES[name]
+    release_pins(spark)
+    before = _persisted(spark)
     sdf = spec.build(spark, sf_dir).toPandas()
+    # nothing the entry cached — persisted or checkpointed — outlives
+    # the release of its pins
+    release_pins(spark)
+    assert _persisted(spark) == before, name
     if spec.oracle is None:
         # rows-only contract: must run and produce a stable schema
         assert sdf.columns.tolist(), name
