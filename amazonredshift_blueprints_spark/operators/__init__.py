@@ -24,10 +24,17 @@
 
 from __future__ import annotations
 
+import os
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..sessionstate import session_state
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Pin registry: the ONE module that touches Spark's cache APIs. Every
 # frame an operator (or catalog entry) persists or checkpoints is
@@ -86,3 +93,54 @@ def release_pins(spark: SparkSession) -> None:
     pins = _pins(spark)
     while pins:
         _free(*pins.popitem()[1])
+
+
+# Driver gate: below a hard row bound, an iterative graph loop's whole
+# input is metadata-sized (default 200k rows ≈ ~3 MB of id pairs — the
+# broadcast-threshold class), and its 3-5 distributed join+agg rounds
+# are pure job and shuffle overhead. One bounded collect plus a local
+# loop computes the identical output. At any real scale the distributed
+# loop runs exactly as before. SPARK_GRAFT_CC_DRIVER_EDGES sets the
+# bound (0 disables); connected components and PageRank share it.
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def driver_edges(edges: DataFrame) -> pa.Table | None:
+    """All of ``edges`` as one Arrow table when it is below the driver
+    gate, else ``None`` (the caller runs its distributed loop).
+
+    Pass the loop's PINNED edge frame and release it when a table comes
+    back. The probe is ONE bounded ``limit(gate + 1).collect()``, an
+    incremental take: below the gate it is the edge list itself; above
+    it, it stops after the first partitions that hold gate + 1 rows,
+    and those stay cached, so the loop does not run the edge lineage
+    again (``toArrow`` would run the limit on every partition and
+    gather up to gate + 1 rows from each). Only frames whose columns are all integral and hold no NULL
+    pass — the local loops order and index ids as integers, and the
+    distributed loop defines what a NULL endpoint does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    gate = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000"))
+    if gate <= 0 or any(t not in _INTEGRAL for _, t in edges.dtypes):
+        return None
+    rows = edges.limit(gate + 1).collect()
+    if len(rows) > gate or any(v is None for row in rows for v in row):
+        return None
+    schema = to_arrow_schema(edges.schema)
+    return pa.table(
+        [pa.array([row[i] for row in rows], f.type) for i, f in enumerate(schema)],
+        schema=schema,
+    )
+
+
+def local_frame(spark: SparkSession, columns: list, schema: StructType) -> DataFrame:
+    """A driver-computed result (one array per field of ``schema``) as
+    a DataFrame. Built from an Arrow table it plans as a
+    ``LocalRelation`` (below ``spark.sql.execution.arrow.
+    localRelationThreshold``), which needs no Python worker to execute —
+    a ``createDataFrame(list)`` result is a ``LogicalRDD`` that starts
+    one every time it runs."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns, names=schema.names), schema)

@@ -41,7 +41,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import checkpoint, pin, release
+from . import checkpoint, driver_edges, local_frame, pin, release
 
 import random as _random
 
@@ -928,9 +928,11 @@ def duplicate_groups(
     (+ one label-table self-join in compressed rounds) — all shuffle on
     node ids only; labels are (id, label) pairs, orders of magnitude
     smaller than the documents. When the edge set itself is
-    metadata-sized (see the gate below) the rounds are skipped entirely
-    for a driver-local union-find with identical output. Deterministic: min over ids, no floats,
-    no ordering dependence (a label value is always some node's id, so
+    metadata-sized (below the driver gate ``operators.driver_edges``,
+    shared with PageRank) the rounds are skipped entirely for a
+    driver-local union-find with identical output, returned as an
+    Arrow-built ``LocalRelation``. Deterministic: min over ids, no
+    floats, no ordering dependence (a label value is always some node's id, so
     the compression join always finds its target). Compressed rounds
     cut lineage with ``localCheckpoint`` — their self-join references
     the previous round's plan twice, so un-truncated lineage doubles
@@ -963,60 +965,44 @@ def duplicate_groups(
         F.col("src").alias("id"),
         F.least(F.col("src").cast("long"), F.col("_m").cast("long")).alias("label"),
     )
-    # Driver-side union-find gate (r17): when the PERSISTED edge set is
-    # metadata-sized, the 3-5 distributed join+agg convergence rounds
-    # are pure job/shuffle overhead — a local union-find over the
-    # collected edge list computes the identical (id, min id of
-    # component) mapping in microseconds. The gate is a hard row bound
-    # on the edge cache (default 200k directed edges ≈ ~3 MB of id
-    # pairs — the broadcast-threshold class, same size discipline as
-    # the k-means centroid collects), so at any real scale the
-    # distributed loop below runs exactly as before. The probe is ONE
-    # bounded collect of limit(gate+1) rows: below the gate it is the
-    # edge list itself; above it, it stops after ~one partition instead
-    # of paying a full extra pass. SPARK_GRAFT_CC_DRIVER_EDGES overrides
-    # (0 disables). Applied only to integral id types (the loop casts
-    # labels to long, and the local path must reproduce that exactly)
-    # and only without NULL ids (the union-find orders ids; the loop
-    # defines what a NULL endpoint does).
-    gate = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000"))
-    id_type = dict(edges.dtypes)["src"]  # union-coerced common id type
-    if gate > 0 and id_type in ("tinyint", "smallint", "int", "bigint"):
-        rows = edges.limit(gate + 1).collect()
-        if len(rows) <= gate and all(
-            s is not None and d is not None for s, d in rows
-        ):
-            parent: dict = {}
+    # Driver gate (r17, operators.driver_edges): a metadata-sized edge
+    # set skips the distributed rounds for a local union-find with the
+    # identical (id, min id of component) mapping. The loop casts labels
+    # to long; the local path reproduces that exactly.
+    local = driver_edges(edges)
+    if local is not None:
+        release(edges)
+        parent: dict = {}
 
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
 
-            for s, d in rows:
-                parent.setdefault(s, s)
-                parent.setdefault(d, d)
-                rs, rd = find(s), find(d)
-                if rs != rd:
-                    parent[rs] = rd
-            comp_min: dict = {}
-            for node in parent:
-                root = find(node)
-                cur = comp_min.get(root)
-                if cur is None or node < cur:
-                    comp_min[root] = node
-            release(edges)
-            # the loop's output schema, nullability included (no round
-            # changes it, so the init frame's analyzed schema is it)
-            out_schema = init.select(
-                F.col("id").alias("doc_id"), F.col("label").alias("group_id")
-            ).schema
-            return pairs.sparkSession.createDataFrame(
-                [(n, int(comp_min[find(n)])) for n in parent], out_schema
-            )
+        for s, d in zip(local.column(0).to_pylist(), local.column(1).to_pylist()):
+            parent.setdefault(s, s)
+            parent.setdefault(d, d)
+            rs, rd = find(s), find(d)
+            if rs != rd:
+                parent[rs] = rd
+        comp_min: dict = {}
+        for node in parent:
+            root = find(node)
+            cur = comp_min.get(root)
+            if cur is None or node < cur:
+                comp_min[root] = node
+        # the loop's output schema, nullability included (no round
+        # changes it, so the init frame's analyzed schema is it)
+        out_schema = init.select(
+            F.col("id").alias("doc_id"), F.col("label").alias("group_id")
+        ).schema
+        ids = list(parent)
+        return local_frame(
+            pairs.sparkSession, [ids, [comp_min[find(n)] for n in ids]], out_schema
+        )
     labels = pin(init, StorageLevel.MEMORY_AND_DISK)
     prev_sum = labels.agg(F.sum("label")).first()[0]
     for rnd in range(max_iters):

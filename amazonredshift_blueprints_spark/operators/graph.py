@@ -22,15 +22,21 @@ micro-unit per edge per iteration.)
 the same key partitioning every round; the rank vector is node-sized
 (broadcastable for dimension-like graphs, co-partitioned joins
 otherwise). Iteration count is fixed and small (power iteration
-converges geometrically at rate = damping).
+converges geometrically at rate = damping). Small graphs skip the
+rounds: below the driver gate (``operators.driver_edges``, a hard row
+bound shared by connected components and PageRank) the edge list is
+collected once and PageRank's rounds run in NumPy with the same
+integer arithmetic, so a few-hundred-edge graph costs one bounded
+collect instead of a job per round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from . import checkpoint, pin, release
+from . import checkpoint, driver_edges, local_frame, pin, release
 
 RANK_SCALE = 1_000_000  # micro-units per unit of rank
 
@@ -52,6 +58,46 @@ def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         .select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
         .distinct()
     )
+
+
+def _dangling_error(n_dangle: int) -> ValueError:
+    return ValueError(
+        f"{n_dangle} dangling node(s) (outdeg 0); pass "
+        "dangling='self' or 'redistribute', or symmetrize edges"
+    )
+
+
+def _pagerank_local(src, dst, *, iterations: int, damping: int, dangling: str):
+    """The distributed loop's integer arithmetic in NumPy, for an edge
+    list below the driver gate: returns (node ids, ranks). Per edge
+    ``floor(double(rank * damping) / double(outdeg * 100))``, summed
+    per dst in int64 (``np.add.at``, never float weights), so every
+    rank equals the distributed path's bit for bit."""
+    import numpy as np
+
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    s, d = idx[: len(src)], idx[len(src) :]
+    outdeg = np.bincount(s, minlength=n)
+    is_dangling = outdeg == 0
+    if dangling == "error" and is_dangling.any():
+        raise _dangling_error(int(is_dangling.sum()))
+    if dangling == "self":  # dangling nodes link to themselves
+        loops = np.flatnonzero(is_dangling)
+        s, d = np.concatenate([s, loops]), np.concatenate([d, loops])
+        outdeg[loops] = 1
+    denom = (outdeg[s] * 100).astype(np.float64)
+    teleport = RANK_SCALE * (100 - damping) // 100
+    rank = np.full(n, RANK_SCALE, dtype=np.int64)
+    for _ in range(iterations):
+        c = np.floor((rank[s] * damping).astype(np.float64) / denom).astype(np.int64)
+        received = np.zeros(n, dtype=np.int64)
+        np.add.at(received, d, c)
+        share = 0
+        if dangling == "redistribute" and n:
+            share = int(rank[is_dangling].sum()) * damping // (100 * n)
+        rank = teleport + share + received
+    return ids, rank
 
 
 def pagerank(
@@ -88,11 +134,19 @@ def pagerank(
     Returns (node, rank) with rank in micro-units after ``iterations``
     rounds — bit-exact replayable (module docstring).
 
+    Small graphs: an integral, NULL-free edge list below the driver
+    gate (``operators.driver_edges``, shared with connected components)
+    is collected once and all ``iterations`` run in NumPy with the same
+    integer arithmetic; the result is an Arrow-built ``LocalRelation``
+    with the distributed path's schema. Above the gate, or with
+    ``damping`` outside 0-100, the distributed loop below runs.
+
     Overflow bound (``'redistribute'``): the round's BIGINT share is
     ``coalesce(_bp_m, 0) * damping DIV (100 * N)``, so the product must
     fit — total dangling mass × damping < 2^63. Dangling mass is at most
     the whole rank vector, N × RANK_SCALE, which caps N at about 1.08e11
-    nodes at damping 85.
+    nodes at damping 85. Under the driver gate it cannot be reached: at
+    most 400k nodes × 1e6 × 100 ≪ 2^63.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -103,7 +157,8 @@ def pagerank(
     # two sides, outdeg, the e_deg join), and without the cache each one
     # re-executes the caller's full edge-build lineage (for c90 that is
     # a scan + JSON-parse + distinct per consumer — guide §5 persist
-    # rule: reused AND expensive to recompute).
+    # rule: reused AND expensive to recompute). The driver gate's probe
+    # reads it too.
     e_pinned = e = pin(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
         StorageLevel.MEMORY_AND_DISK,
@@ -113,6 +168,26 @@ def pagerank(
     nodes = (
         e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     )
+    local = driver_edges(e) if 0 <= damping <= 100 else None
+    if local is not None:
+        release(e_pinned)
+        ids, ranks = _pagerank_local(
+            local.column(0).to_numpy(),
+            local.column(1).to_numpy(),
+            iterations=iterations,
+            damping=damping,
+            dangling=dangling,
+        )
+        # The loop's output schema: ``node`` as the node set types it;
+        # ``rank`` is nullable only after a 'redistribute' round, whose
+        # share is a BIGINT DIV (Spark types DIV nullable).
+        schema = StructType([
+            nodes.schema["node"],
+            StructField(
+                "rank", LongType(), iterations > 0 and dangling == "redistribute"
+            ),
+        ])
+        return local_frame(edges.sparkSession, [ids, ranks], schema)
     dangling_nodes = None
     if dangling != "redistribute":
         dangle = nodes.join(
@@ -121,10 +196,7 @@ def pagerank(
         if dangling == "error":
             n_dangle = dangle.count()
             if n_dangle:
-                raise ValueError(
-                    f"{n_dangle} dangling node(s) (outdeg 0); pass "
-                    "dangling='self' or 'redistribute', or symmetrize edges"
-                )
+                raise _dangling_error(n_dangle)
         else:  # 'self': dangling nodes link to themselves
             e = e.union(
                 dangle.select(F.col("node").alias("src"), F.col("node").alias("dst"))
@@ -302,7 +374,8 @@ def bfs_hops(
     """
     spark = edges.sparkSession
     e = pin(_long_edges(edges))
-    visited = pin(spark.createDataFrame([(int(source), 0)], "node long, hops int"))
+    seed = StructType([StructField("node", LongType()), StructField("hops", IntegerType())])
+    visited = pin(local_frame(spark, [[int(source)], [0]], seed))
     frontier = visited.select("node")
     spent = []  # per-round frontier caches, released once superseded
     for k in range(1, max_hops + 1):

@@ -21301,86 +21301,73 @@ def c200_mase_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ever left un-rotated: >=40 window entries already rowed in the two
 # newest committed CORRECTNESS files means someone forgot this edit.
 #
-# R17 ROTATION PLAN (write it as round 17's FIRST commit): same pure
-# recency rule — the 50 oldest-rowed entries of the CORRECTNESS_r01-r16
-# union by (latest_round, catalog_index), co-windowing rows-only picks
-# with their oracle twins (q12<->q11, c02<->c24, c03<->c26, c07<->c38,
-# c68<->q11), and APPENDING any entry added during round 17 itself.
-# After the r16 window lands, the displaced fillers c80/c73/q56
-# (bumped for c225/c224/q113, so NOT re-rowed in r16) are the
-# oldest-rowed backlog and go first; then the r10 tier in catalog
-# order — q05/q06/q07/q13/q14/q17/q19/q20/q24/q25/q26/a01/a02/c01/
-# c02(+twin c24)/c03(+twin c26)/q49/c34/c33/c30/c31/c06/c08/c09/q33/
-# q34/c18/q36/q37/q38/q39/q40/c22/q43/q44/q45/c23/q46/c25/q47/q48/
-# q69/q70/q71/q72/c81/q68/c82/... (both rows-only picks' twins were
-# r16-rowed but co-window anyway, displacing the newest cut entries).
+# ROTATION RULE (r17, kept since): pure recency — the 50 oldest-rowed
+# entries of the CORRECTNESS_r* union by (latest_round, catalog_index),
+# where catalog_index is the entry's registration order, co-windowing
+# rows-only picks with their oracle twins (q12<->q11, c02<->c24,
+# c03<->c26, c07<->c38, c68<->q11) and APPENDING any entry added during
+# the round itself. Re-derive the list from the committed
+# CORRECTNESS_r*.json files whenever a new one lands.
 # --------------------------------------------------------------------------
 
 _DRIVER_WINDOW = [
-    # Round 17 window, per the written r17 plan (PLANS.md "Round 17
-    # candidates" + the R17 ROTATION PLAN comment above): pure recency
-    # rotation — the 50 oldest-rowed entries of the CORRECTNESS_r01-r16
-    # union by (latest_round, catalog_index). That is exactly the
-    # 33-deep displaced-filler backlog (all still latest-rowed r09,
-    # bumped from the r16 window by the r16 additions) followed by the
-    # oldest r10 tier in catalog order. Rows-only picks c02/c03 made
-    # the cut, so their oracle twins c24/c26 (last rowed r15) are
-    # co-windowed, displacing the two newest cut entries c30/c31.
-    # r17 is an optimization round: no new entries to append.
-    # --- the 29 entries last rowed r09, in catalog order ---
-    "q35_dml_delete_update",
-    "q42_dml_merge",
-    "c51_length_quantiles",
-    "c61_semantic_dedup",
-    "c64_image_decode_stats",
-    "c65_stream_stateful_topk",
-    "c70_minhash_signature_store",
-    "q53_merge_delete",
-    "q55_spatial_within_join",
-    "c71_ann_pq_topk",
-    "c72_ann_ivfpq_topk",
-    "c74_ann_ivfpq_residual_topk",
-    "q59_scd2_dimension",
-    "c75_ann_ivfpq_refine_topk",
-    "q60_materialized_view_sql",
-    "q61_system_tables",
-    "c77_weighted_sample",
-    "c76_zorder_keys",
-    "q62_tpch_q7_volume_shipping",
-    "q63_tpch_q8_market_share",
-    "q64_tpch_q13_order_distribution",
-    "q65_tpch_q18_large_volume",
-    "q66_tpch_q22_global_sales",
-    "q67_python_udf_ddl",
-    "c78_bigram_logprob",
-    "c79_bpe_train",
-    "c80_bpe_tokenize",
-    "c73_dup_span_coverage",
-    "q56_multi_exists_decorrelation",
-    # --- oldest r10-rowed entries, in catalog order ---
-    "q05_join_anti",
-    "q06_join_left_outer",
-    "q07_join_full_outer",
-    "q13_agg_rollup",
-    "q14_agg_cube",
-    "q17_topk",
-    "q19_scalar_dates",
-    "q20_scalar_math",
-    "q24_ddl_ctas_insert",
-    "q25_redshift_dialect",
-    "q26_shipping_priority",
-    "a01_ingest_csv_roundtrip",
-    "a02_export_csv_roundtrip",
-    "c01_dedup_exact",
-    "c02_dedup_minhash",
-    "c03_dedup_simhash",
-    "q49_window_dedup",
-    "c34_funnel_counts",
-    "c33_retention_cohorts",
-    # --- co-windowed oracle twins of the rows-only picks c02/c03
-    # (displacing the newest cut entries c30/c31) ---
-    "c24_dedup_minhash_portable",
-    "c26_dedup_simhash_portable",
+    # Rotation after CORRECTNESS_r17 (the r17 window is now rowed): the
+    # 50 oldest-rowed entries by the rule above — every entry still
+    # last rowed r10, then the oldest r11 tier, each in catalog order.
+    # No rows-only entry made the cut, so no twin is co-windowed; no
+    # entry was added since r17.
+    # --- the 29 entries last rowed r10, in catalog order ---
+    "c30_stratified_sample",
+    "c31_top_tokens",
+    "c06_ann_bruteforce_topk",
+    "c08_text_stats",
+    "c09_text_langid",
+    "q33_bucketed_colocated_join",
+    "q34_salted_skew_join",
+    "c18_text_tfidf",
+    "q36_json_typed_struct",
+    "q37_stats_aggregates",
+    "q38_correlated_scalar_subquery",
+    "q39_null_aware_anti_join",
+    "q40_pivot",
+    "c22_hash_split",
+    "q43_unpivot",
+    "q44_recursive_cte",
+    "q45_window_analytic_extra",
+    "c23_embedding_centroids",
+    "q46_setops_all",
+    "c25_pipeline_e2e",
+    "q47_lateral_topn",
+    "q48_regex_functions",
+    "q69_tpch_q2_min_cost_supplier",
+    "q70_tpch_q11_important_stock",
+    "q71_tpch_q15_top_supplier",
+    "q72_tpch_q20_potential_promotion",
+    "c81_png_decode_stats",
+    "q68_txn_commit_rollback",
+    "c82_ann_ivfpq_sample_trained",
+    # --- the 21 oldest r11-rowed entries, in catalog order ---
+    "a04_copy_maxerror",
+    "a05_schema_evolution_load",
+    "c05_dedup_embedding",
+    "c85_range_search_cosine",
+    "c94_ivf_range_search",
+    "c10_text_tokens",
+    "c11_text_fingerprint",
+    "c12_sessionize",
+    "c13_session_window",
+    "c15_event_window_rollup",
+    "q27_array_map",
+    "q28_grouping_sets",
+    "q29_dialect_functions",
+    "q30_listagg_ordered_agg",
+    "q31_pandas_udf_scalar",
+    "q32_grouped_applyinpandas",
+    "c95_stream_dedup_rollup",
+    "c19_asof_join",
+    "c20_range_join_bucketed",
+    "c21_gapfill_locf",
+    "c97_split_leakage_audit",
 ]
 
 

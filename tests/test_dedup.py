@@ -322,8 +322,10 @@ _NOT_NULL_IDS = "id_a long NOT NULL, id_b long NOT NULL"
         ([(1, 2), (2, None), (5, 7)], "id_a: long, id_b: long", None),
         # non-nullable ids: the local path keeps the loop's nullability
         (_CC_PAIRS, _NOT_NULL_IDS, _CC_GROUPS),
+        # no pairs at all: an empty frame with the loop's schema
+        ([], "id_a: int, id_b: int", set()),
     ],
-    ids=["long_pairs", "null_id", "non_nullable"],
+    ids=["long_pairs", "null_id", "non_nullable", "empty"],
 )
 def test_duplicate_groups_driver_gate_matches_distributed(
     spark, monkeypatch, rows, schema, expected

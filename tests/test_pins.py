@@ -60,11 +60,16 @@ def test_release_is_idempotent(spark, baseline):
     assert _persisted(spark) == baseline
 
 
-def test_pins_of_a_failed_build_are_freed_by_the_next_release(spark, baseline):
+def test_pins_of_a_failed_build_are_freed_by_the_next_release(
+    spark, baseline, monkeypatch
+):
     """An exception mid-build unwinds past every operator-local release;
-    whatever the operator pinned until then is still recorded."""
+    whatever the operator pinned until then is still recorded. (The
+    driver gate is off: below it PageRank frees its one pin before
+    iterating.)"""
     from amazonredshift_blueprints_spark.operators.graph import pagerank
 
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "0")
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     with pytest.raises(ValueError, match="dangling"):
         pagerank(edges, dangling="error")  # node 3 dangles
@@ -73,12 +78,16 @@ def test_pins_of_a_failed_build_are_freed_by_the_next_release(spark, baseline):
     assert _persisted(spark) == baseline
 
 
-def test_driver_path_releases_the_previous_entry(spark, sf_dir, baseline):
+def test_driver_path_releases_the_previous_entry(
+    spark, sf_dir, baseline, monkeypatch
+):
     """``queries()`` callables release the previous entry's pins before
     building: c98's checkpointed rank vectors (which no clearCache can
-    free) are gone once the next entry is requested."""
+    free) are gone once the next entry is requested. (The driver gate
+    is off, so c98 runs its distributed, checkpointing loop.)"""
     import __spark_entry__ as m
 
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "0")
     qs = m.queries()
     qs["c98_pagerank_dangling"](spark, sf_dir).toPandas()
     assert _persisted(spark) > baseline
