@@ -25,9 +25,9 @@
 from __future__ import annotations
 
 import os
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
@@ -95,6 +95,59 @@ def release_pins(spark: SparkSession) -> None:
         _free(*pins.popitem()[1])
 
 
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    rounds: int,
+    converged: Column | None = None,
+) -> DataFrame:
+    """Run up to ``rounds`` rounds of ``state = step(state, r)`` (``r``
+    counts from 0) — the one round driver of the iterative graph
+    operators. ``step`` only builds the next state's plan; the driver
+    owns its lifecycle:
+
+    - Each round's state is :func:`checkpoint`-ed: one job materializes
+      it and cuts its lineage. Persisting it instead would leave round
+      t's plan nesting every earlier round, so analysis and planning
+      would grow with t (and double per round where a step reads its
+      state twice); a checkpointed state plans in O(1) per round and is
+      re-derivable, so its fault tolerance is not needed.
+    - The superseded state is released once the next one has
+      materialized, so at most two generations are cached at a time.
+      The caller's own initial ``state`` is never released here: it may
+      be an input every round reads (e.g. clamped seeds).
+    - ``converged``, when given, is a boolean aggregate over a state,
+      true when the next round would change nothing. It is attached with
+      ``DataFrame.observe`` to the frame being checkpointed, so it rides
+      that round's job — no probe job of its own; the ``Observation`` is
+      only filled once the checkpoint has run. The initial state is then
+      checkpointed and probed too, so a fixpoint input runs no round.
+      Stopping at a fixpoint is output-identical to running the
+      remaining rounds as no-ops.
+
+    The returned state stays pinned until the session's next
+    ``release_pins``: it is (or feeds) the caller's result, so the
+    caller must not release it. With no round run and no ``converged``
+    it is the initial ``state`` itself.
+    """
+    start = state
+    # With a probe, round -1 checkpoints and probes the initial state.
+    for r in range(0 if converged is None else -1, rounds):
+        prev = state
+        if r >= 0:
+            state = step(state, r)
+        if converged is not None:
+            probe = Observation()
+            state = state.observe(probe, converged.alias("converged"))
+        state = checkpoint(state)
+        if prev is not start:
+            release(prev)
+        if converged is not None and probe.get["converged"]:
+            break
+    return state
+
+
 # Driver gate: below a hard row bound, an iterative graph loop's whole
 # input is metadata-sized (default 200k rows ≈ ~3 MB of id pairs — the
 # broadcast-threshold class), and its 3-5 distributed join+agg rounds
@@ -115,9 +168,10 @@ def driver_edges(edges: DataFrame) -> pa.Table | None:
     it, it stops after the first partitions that hold gate + 1 rows,
     and those stay cached, so the loop does not run the edge lineage
     again (``toArrow`` would run the limit on every partition and
-    gather up to gate + 1 rows from each). Only frames whose columns are all integral and hold no NULL
-    pass — the local loops order and index ids as integers, and the
-    distributed loop defines what a NULL endpoint does."""
+    gather up to gate + 1 rows from each). Only frames whose columns
+    are all integral and hold no NULL pass — the local loops order and
+    index ids as integers, and the distributed loop defines what a NULL
+    endpoint does."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

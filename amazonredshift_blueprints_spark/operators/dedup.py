@@ -40,8 +40,9 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from . import checkpoint, driver_edges, local_frame, pin, release
+from . import driver_edges, iterate, local_frame, pin, release
 
 import random as _random
 
@@ -277,8 +278,6 @@ def minhash_near_duplicates(
     docs), below the LSH miss rate — the exactness tests still match
     string-domain brute force on the fixtures.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rows_per_band = num_hashes // bands
@@ -407,8 +406,6 @@ def simhash_near_duplicates(
         ).alias(f"b{i}")
         for i in range(n_blocks)
     ]
-    from pyspark.storagelevel import StorageLevel
-
     # persisted (r16): the signature table feeds 2·n_blocks join inputs
     # (both sides of every per-block equi-join) and nothing dedupes the
     # tokenize + 64-bit-vote subtree across them — unpersisted, the
@@ -593,8 +590,6 @@ def portable_minhash_pairs(
     """
     if num_perms % bands:
         raise ValueError(f"num_perms {num_perms} not divisible by bands {bands}")
-
-    from pyspark.storagelevel import StorageLevel
 
     # persisted: the md5-per-(perm, shingle) signature pass is the
     # dominant cost and has three consumers (both self-join sides via
@@ -840,8 +835,6 @@ def dedup_against_minhash_store(
     import json
     import os
 
-    from pyspark.storagelevel import StorageLevel
-
     meta_path = os.path.join(path, "_minhash_meta.json")
     if os.path.exists(meta_path):  # absent on pre-sidecar stores
         with open(meta_path) as fh:
@@ -919,9 +912,10 @@ def duplicate_groups(
     label → label-of-label (path compression, the Shiloach-Vishkin
     step) so a diameter-d chain resolves in O(log d) further rounds
     instead of O(d) — templated spam series where doc k only matches
-    doc k±1 are exactly this adversarial shape. The loop stops when the
-    exact integer sum of labels stops decreasing — a driver-side
-    convergence probe on one aggregated BIGINT, not a data collect;
+    doc k±1 are exactly this adversarial shape. The loop stops after
+    the first round that moves no label — the exact integer sum of
+    labels stops decreasing — read from a probe riding the round's
+    checkpoint (``operators.iterate``), not a data collect;
     ``max_iters`` bounds the loop.
 
     100 TB: each round is one equi-join on src + one groupBy(dst) min
@@ -932,16 +926,9 @@ def duplicate_groups(
     shared with PageRank) the rounds are skipped entirely for a
     driver-local union-find with identical output, returned as an
     Arrow-built ``LocalRelation``. Deterministic: min over ids, no
-    floats, no ordering dependence (a label value is always some node's id, so
-    the compression join always finds its target). Compressed rounds
-    cut lineage with ``localCheckpoint`` — their self-join references
-    the previous round's plan twice, so un-truncated lineage doubles
-    per round and the planner blows up exponentially (the standard
-    iterative-graph checkpointing pattern; swap for ``checkpoint()`` on
-    a cluster where executor loss matters more than the extra I/O).
+    floats, no ordering dependence (a label value is always some node's
+    id, so the compression join always finds its target).
     """
-    from pyspark.storagelevel import StorageLevel
-
     plain_rounds = 4
 
     fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -1003,48 +990,45 @@ def duplicate_groups(
         return local_frame(
             pairs.sparkSession, [ids, [comp_min[find(n)] for n in ids]], out_schema
         )
-    labels = pin(init, StorageLevel.MEMORY_AND_DISK)
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for rnd in range(max_iters):
-        compress = rnd >= plain_rounds
+
+    def lower(labels: DataFrame, cand: DataFrame, on: Column) -> DataFrame:
+        # label' = min(label, candidate label ``_c``) over a left join
+        return labels.join(cand, on, "left").select(
+            labels["id"],
+            labels["_was"],
+            F.least(
+                labels["label"], F.coalesce(cand["_c"], labels["label"])
+            ).alias("label"),
+        )
+
+    def cc_round(labels: DataFrame, rnd: int) -> DataFrame:
+        labels = labels.withColumn("_was", F.col("label"))
         neigh = (
             edges.join(labels, edges["src"] == labels["id"])
             .groupBy("dst")
-            .agg(F.min("label").alias("nlabel"))
+            .agg(F.min("label").alias("_c"))
         )
-        new_labels = labels.join(neigh, labels["id"] == neigh["dst"], "left").select(
-            labels["id"],
-            F.least(
-                F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-            ).alias("label"),
-        )
-        if compress:
+        labels = lower(labels, neigh, labels["id"] == neigh["dst"])
+        if rnd >= plain_rounds:
             # pointer jumping: label' = min(label, label-of-label); the
             # parent lookup joins the half-updated table against itself
             # on the label value (always a node id).
-            half = checkpoint(new_labels)
-            parents = half.select(
-                F.col("id").alias("_pid"), F.col("label").alias("_plabel")
+            parents = labels.select(
+                F.col("id").alias("_pid"), F.col("label").alias("_c")
             )
-            new_labels = checkpoint(
-                half.join(parents, half["label"] == parents["_pid"], "left")
-                .select(
-                    half["id"],
-                    F.least(
-                        half["label"],
-                        F.coalesce(F.col("_plabel"), half["label"]),
-                    ).alias("label"),
-                )
-            )
-            release(half)
-        else:
-            new_labels = pin(new_labels, StorageLevel.MEMORY_AND_DISK)
-        new_sum = new_labels.agg(F.sum("label")).first()[0]
-        release(labels)
-        labels = new_labels
-        if new_sum == prev_sum:  # exact fixpoint: min-labels are monotone
-            break
-        prev_sum = new_sum
+            labels = lower(labels, parents, labels["label"] == parents["_pid"])
+        return labels.select(
+            "id", "label", (F.col("label") < F.col("_was")).alias("_moved")
+        )
+
+    # Labels only ever decrease, so a round that moves no label (the
+    # label sum stays equal) is the exact fixpoint.
+    labels = iterate(
+        init.withColumn("_moved", F.lit(True)),
+        cc_round,
+        rounds=max_iters,
+        converged=F.count_if("_moved") == 0,
+    )
     release(edges)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("group_id")
@@ -1076,8 +1060,6 @@ def minhash_recall_eval(
     engine should ship the evaluator — you measure recall on a sample,
     then trust the banded path at full scale.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # Persisted (r16): the signature table is the expensive map-side
     # kernel (num_perms md5-min transforms over every gram) and feeds
     # FOUR consumers — both band-join sides and both verify-side array

@@ -35,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
-from . import checkpoint, driver_edges, local_frame, pin, release
+from . import driver_edges, iterate, local_frame, pin, release
 
 RANK_SCALE = 1_000_000  # micro-units per unit of rank
 
@@ -148,8 +149,6 @@ def pagerank(
     nodes at damping 85. Under the driver gate it cannot be reached: at
     most 400k nodes × 1e6 × 100 ≪ 2^63.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if dangling not in ("error", "self", "redistribute"):
         raise ValueError(f"unknown dangling policy {dangling!r}")
     # Persist the edge projection FIRST: the setup phase alone reads it
@@ -212,17 +211,13 @@ def pagerank(
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e_deg = e.join(outdeg, "src")
     # Iterative-DataFrame hygiene: the static graph side (edges+degrees,
-    # node set) and each round's rank vector are persisted — without
-    # this, round t re-executes the FULL lineage of rounds 0..t-1
-    # (exchange count grows geometrically; measured 30 exchanges for 3
-    # rounds unpersisted vs 2 per round persisted). The previous round's
-    # vector is released as soon as the next materializes.
+    # node set) is persisted — every round reads it, and unpersisted,
+    # round t re-executes its full build lineage.
     nodes = pin(nodes, StorageLevel.MEMORY_AND_DISK)
     e_deg = pin(e_deg, StorageLevel.MEMORY_AND_DISK)
     teleport = RANK_SCALE * (100 - damping) // 100
-    rank = nodes.select("node", F.lit(RANK_SCALE).cast("long").alias("rank"))
-    prev = None
-    for _ in range(iterations):
+
+    def rank_round(rank: DataFrame, _) -> DataFrame:
         contrib = (
             e_deg.join(rank, e_deg["src"] == rank["node"])
             .select(
@@ -240,10 +235,10 @@ def pagerank(
             # ONE scalar per round: total rank sitting on dangling
             # nodes, split evenly (integer floor) across all N nodes.
             # Folded INTO the round's plan as a broadcast 1-row
-            # aggregate (r17): the eager checkpoint below already runs
-            # one job per round, and a driver collect of the mass here
-            # added a second — the crossJoin form computes mass and the
-            # new vector in the same job, zero driver round trips.
+            # aggregate (r17): the round's checkpoint already runs one
+            # job, and a driver collect of the mass here added a
+            # second — the crossJoin form computes mass and the new
+            # vector in the same job, zero driver round trips.
             # BIGINT DIV == Python // for these non-negative operands,
             # so the shares are bit-identical to the collected form.
             mass_df = F.broadcast(
@@ -255,7 +250,7 @@ def pagerank(
                 f"CAST(coalesce(_bp_m, 0) * {damping} "
                 f"DIV {100 * n_nodes} AS BIGINT)"
             )
-            rank = updated.crossJoin(mass_df).select(
+            return updated.crossJoin(mass_df).select(
                 "node",
                 (
                     F.lit(teleport).cast("long")
@@ -263,28 +258,22 @@ def pagerank(
                     + F.coalesce(F.col("received"), F.lit(0))
                 ).alias("rank"),
             )
-        else:
-            rank = updated.select(
-                "node",
-                (
-                    F.lit(teleport).cast("long")
-                    + F.coalesce(F.col("received"), F.lit(0))
-                ).alias("rank"),
-            )
-        # localCheckpoint (eager) both materializes the round AND
-        # truncates its lineage: with persist()+count() the round-t plan
-        # still nests every earlier round under its InMemoryTableScan,
-        # so analysis/planning time grows with t (the final c90 plan
-        # carried 260 Exchange nodes of pure lineage text); checkpointed
-        # rounds keep planning O(1) per round (guide §5: localCheckpoint
-        # to cut lineage when that intermediate's fault tolerance is
-        # not critical — it is re-derivable here).
-        rank = checkpoint(rank)
-        release(prev)
-        prev = rank
+        return updated.select(
+            "node",
+            (
+                F.lit(teleport).cast("long")
+                + F.coalesce(F.col("received"), F.lit(0))
+            ).alias("rank"),
+        )
+
+    rank = iterate(
+        nodes.select("node", F.lit(RANK_SCALE).cast("long").alias("rank")),
+        rank_round,
+        rounds=iterations,
+    )
     # The static graph side is only needed while iterating; the final
-    # rank is already materialized (each round's eager checkpoint), so
-    # consumers read the checkpointed blocks, never the lineage.
+    # rank is materialized, so consumers read its blocks, never the
+    # lineage.
     release(dangling_nodes, nodes, e_deg, e_pinned)
     return rank
 
@@ -319,8 +308,6 @@ def triangle_count(
     celebrity node explodes it. All three steps are equi-joins
     (shuffle by vertex key); nothing driver-side.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # The canonical edge set feeds FOUR consumers (both degree unions,
     # the orientation join, the wedge-closing semi-join); without a
     # persist each re-executes the full dedup lineage (measured 44
@@ -369,32 +356,31 @@ def bfs_hops(
     100 TB: each round is one equi-join (frontier x edges, frontier
     side broadcastable while small — the common case for k-hop
     queries) plus one distinct and one anti-join against the visited
-    set; visited and edges are persisted once. Frontier size is the real cost
-    driver (neighborhood growth), not round count.
+    set, whose last hop is the next frontier; edges are persisted once.
+    Frontier size is the real cost driver (neighborhood growth), not
+    round count.
     """
-    spark = edges.sparkSession
     e = pin(_long_edges(edges))
-    seed = StructType([StructField("node", LongType()), StructField("hops", IntegerType())])
-    visited = pin(local_frame(spark, [[int(source)], [0]], seed))
-    frontier = visited.select("node")
-    spent = []  # per-round frontier caches, released once superseded
-    for k in range(1, max_hops + 1):
-        nxt = pin(
-            e.join(
-                F.broadcast(frontier.withColumnRenamed("node", "src")), "src"
-            )
+
+    def hop(visited: DataFrame, k: int) -> DataFrame:
+        frontier = visited.filter(F.col("hops") == k).select(
+            F.col("node").alias("src")
+        )
+        reached = (
+            e.join(F.broadcast(frontier), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(k).alias("hops"))
         )
-        new_visited = pin(visited.unionAll(nxt))
-        new_visited.count()  # materialize before parents are released
-        release(visited)
-        spent.append(nxt)
-        visited = new_visited
-        frontier = nxt.select("node")
-    release(*spent, e)  # visited is materialized; round caches can go
+        return visited.unionAll(reached.select("node", F.lit(k + 1).alias("hops")))
+
+    seed = StructType([StructField("node", LongType()), StructField("hops", IntegerType())])
+    visited = iterate(
+        local_frame(edges.sparkSession, [[int(source)], [0]], seed),
+        hop,
+        rounds=max_hops,
+    )
+    release(e)
     return visited.select("node", F.col("hops").cast("long").alias("hops"))
 
 
@@ -419,8 +405,9 @@ def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
 
     100 TB: each half-iteration is one equi-join of the edge list with
     the node-sized score vector plus one hash aggregate — the same
-    shuffle-per-round shape (and persist hygiene duty) as pagerank;
-    scores are node-sized, broadcastable for dimension-like graphs.
+    shuffle-per-round shape as pagerank; both half-iterations form one
+    round of ``operators.iterate``. Scores are node-sized,
+    broadcastable for dimension-like graphs.
     """
     e = pin(_long_edges(edges))
     # r16: score vectors carry only NONZERO entries while iterating —
@@ -430,42 +417,48 @@ def hits(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
     # join at the end; intermediate vectors also shrink to the nodes
     # actually reachable. h_0 = 1 on nodes WITH out-edges (others can
     # never receive hub mass from themselves and contribute nothing).
-    # Rounds are eagerly localCheckpoint'ed: materialized and
-    # lineage-truncated (the persist+count form nested every earlier
-    # half-round under the next plan — 1,661 Exchange nodes of lineage
-    # by round 2 at c126; guide §5).
-    nodes = pin(
-        e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
-    )
-    h = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1).cast("long").alias("s")
-    )
-    a = None
-    for _ in range(iterations):
-        a = checkpoint(
-            e.join(h.withColumnRenamed("node", "src")
-                    .withColumnRenamed("s", "hs"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hs").alias("s"))
+    # One round's state is a tagged union (node, s, t) of the node set
+    # ("n"), the authority ("a") and the hub ("h") vector, so both
+    # half-rounds and the restore join read one checkpoint.
+    def tagged(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(
+            "node", F.col("s").cast("long").alias("s"), F.lit(tag).alias("t")
         )
-        h = checkpoint(
-            e.join(a.withColumnRenamed("node", "dst")
-                    .withColumnRenamed("s", "as_"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("as_").alias("s"))
+
+    def vector(state: DataFrame, tag: str, name: str = "s") -> DataFrame:
+        return state.filter(F.col("t") == tag).select("node", F.col("s").alias(name))
+
+    def half(vec: DataFrame, on: str, to: str, tag: str) -> DataFrame:
+        sums = e.join(vec.withColumnRenamed("node", on), on).groupBy(
+            F.col(to).alias("node")
         )
-    out = pin(
-        nodes.join(h.withColumnRenamed("s", "hub_q"), "node", "left")
-        .join(a.withColumnRenamed("s", "auth_q"), "node", "left")
+        return tagged(sums.agg(F.sum("s").alias("s")), tag)
+
+    def hits_round(state: DataFrame, _) -> DataFrame:
+        a = half(vector(state, "h"), "src", "dst", "a")
+        h = half(a, "dst", "src", "h")
+        return state.filter(F.col("t") == "n").unionAll(a).unionAll(h)
+
+    nodes = e.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
+    hubs = e.select(F.col("src").alias("node")).distinct()
+    state = iterate(
+        tagged(nodes.withColumn("s", F.lit(None)), "n").unionAll(
+            tagged(hubs.withColumn("s", F.lit(1)), "h")
+        ),
+        hits_round,
+        rounds=iterations,
+    )
+    release(e)
+    return (
+        vector(state, "n")
+        .join(vector(state, "h", "hub_q"), "node", "left")
+        .join(vector(state, "a", "auth_q"), "node", "left")
         .select(
             "node",
             F.coalesce("hub_q", F.lit(0)).cast("long").alias("hub_q"),
             F.coalesce("auth_q", F.lit(0)).cast("long").alias("auth_q"),
         )
     )
-    out.count()
-    release(e, nodes)
-    return out
 
 
 def _oriented_wedges(e: DataFrame):
@@ -538,8 +531,6 @@ def clustering_coefficients(
     1:1 with the semi-join) so the triple survives to the explode;
     per-node counts are one node-keyed hash aggregate.
     """
-    from pyspark.storagelevel import StorageLevel
-
     e = pin(_canonical_edges(edges, src_col, dst_col), StorageLevel.MEMORY_AND_DISK)
     deg, wedges = _oriented_wedges(e)
     # shuffle_hash on the edge side: same rationale as triangle_count's
@@ -610,36 +601,25 @@ def kcore(
     which is exactly the induced-subgraph degree by induction. Per
     round that is one equi-join of the cached edge set against the
     (shrinking, usually tiny) removed set plus one node-sized left
-    join — O(edges incident to removed), not O(edges). A round that
-    removes nothing proves the fixpoint (degrees can never drop
-    again), so remaining rounds are skipped — output-identical to
-    running them as no-ops. Round states are eagerly
-    ``localCheckpoint``ed: materialized AND lineage-truncated, so
-    round t's plan does not nest rounds 0..t-1 (the persist+count
-    form re-planned a 5,000-Exchange lineage text by round 4).
+    join — O(edges incident to removed), not O(edges). A state with no
+    node below ``k`` is the fixpoint (degrees can never drop again):
+    ``operators.iterate`` reads that from a probe riding each state's
+    checkpoint and skips the remaining rounds — output-identical to
+    running them as no-ops.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.storagelevel import StorageLevel
-
     e = pin(_long_edges(edges), StorageLevel.MEMORY_AND_DISK)
-    # Full degree once: symmetrized input ⇒ every node appears as src.
-    deg = checkpoint(
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .select(F.col("src").alias("node"), "deg")
-    )
-    for _ in range(rounds):
-        removed = deg.filter(F.col("deg") < k).select("node")
-        if removed.isEmpty():
-            break  # fixpoint: every later round is a no-op
+
+    def peel(deg: DataFrame, _) -> DataFrame:
+        removed = deg.filter(F.col("deg") < k).select(F.col("node").alias("dst"))
         dec = (
-            e.join(removed.withColumnRenamed("node", "dst"), "dst")
+            e.join(removed, "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("_d"))
             .select(F.col("src").alias("node"), "_d")
         )
-        deg = checkpoint(
+        return (
             deg.filter(F.col("deg") >= k)
             .join(dec, "node", "left")
             .select(
@@ -649,6 +629,16 @@ def kcore(
                 .alias("deg"),
             )
         )
+
+    # Full degree once: symmetrized input ⇒ every node appears as src.
+    deg = iterate(
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .select(F.col("src").alias("node"), "deg"),
+        peel,
+        rounds=rounds,
+        converged=F.count_if(F.col("deg") < k) == 0,
+    )
     # Survivors whose degree inside the surviving subgraph is zero have
     # no incident surviving edge; the naive groupBy form emitted no row
     # for them, so filter them out to match exactly.
@@ -690,8 +680,6 @@ def link_prediction(
     evidence anyway. Everything else is equi-joins and one hash
     aggregate; the result exits through TakeOrdered, no global sort.
     """
-    from pyspark.storagelevel import StorageLevel
-
     e = pin(_canonical_edges(edges, src_col, dst_col), StorageLevel.MEMORY_AND_DISK)
     adj = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
         e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
@@ -780,9 +768,9 @@ def label_propagation(
     100 TB: each round is ONE equi-join (edges × current labels on
     dst — label table grows toward node cardinality, stays far under
     edge cardinality) + ONE hash aggregate to (node, label) votes +
-    ONE max-struct aggregate to winners + an anti-join vs seeds; the
-    c90 persist hygiene (materialize new state, then release old)
-    keeps two label generations at most in cache.
+    ONE max-struct aggregate to winners + an anti-join vs seeds;
+    ``operators.iterate`` keeps two label generations at most in
+    cache.
     """
     e = pin(_long_edges(edges))
     sd = pin(
@@ -791,8 +779,8 @@ def label_propagation(
             F.col("label").cast("long").alias("label"),
         )
     )
-    labels = sd
-    for _ in range(iterations):
+
+    def vote(labels: DataFrame, _) -> DataFrame:
         votes = (
             e.join(
                 labels.select(
@@ -816,13 +804,8 @@ def label_propagation(
             .select("node", (-F.col("m.neg")).cast("long").alias("label"))
             .join(sd.select("node"), "node", "left_anti")
         )
-        # eager localCheckpoint: materialize AND truncate lineage so
-        # round t's plan does not nest rounds 0..t-1 (guide §5; same
-        # rationale as pagerank/kcore — the persist+count form grew the
-        # final plan to ~90 Exchange nodes of lineage text by round 2).
-        new_labels = checkpoint(sd.unionAll(winners))
-        if labels is not sd:
-            release(labels)
-        labels = new_labels
+        return sd.unionAll(winners)
+
+    labels = iterate(sd, vote, rounds=iterations)
     release(e, sd)
     return labels.select("node", "label")

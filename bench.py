@@ -6,10 +6,13 @@ Methodology:
   Spark 4's first collation-aware expression alone costs ~10 s), then
   ``N_RUNS`` (3) timed runs; the reported figure is the MEDIAN, so one
   sandbox-load spike can't masquerade as a regression (round 3's numbers
-  moved 1.5-2x with no code change on any benched path). Persisted
-  DataFrames are dropped before every timed run (``clearCache``) so
-  operators that cache a multi-consumer stage (e.g. the MinHash
-  signature table) are timed cold, not from the previous run's cache.
+  moved 1.5-2x with no code change on any benched path). Every frame
+  the previous run pinned is freed before each timed run
+  (``release_pins``, which also frees the checkpoint blocks
+  ``clearCache`` cannot; ``clearCache`` still drops SQL-level cached
+  tables), so operators that cache a multi-consumer stage (e.g. the
+  MinHash signature table) are timed cold, not from the previous run's
+  cache, and pins do not pile up across the sweep.
 - Execution is forced with the ``noop`` sink: full computation, no
   sink-side cost, no driver-side collect.
 - ``value`` is the sum of per-query medians (lower is better);
@@ -31,6 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from amazonredshift_blueprints_spark.operators import release_pins  # noqa: E402
 from amazonredshift_blueprints_spark.plans import QUERIES  # noqa: E402
 from amazonredshift_blueprints_spark.session import get_spark  # noqa: E402
 
@@ -54,6 +58,7 @@ def main() -> None:
         runs = []
         for _ in range(n_runs):
             spark.catalog.clearCache()  # time operator-level persists cold
+            release_pins(spark)
             t0 = time.time()
             _force(build(spark, sf_dir))
             runs.append(round(time.time() - t0, 3))
@@ -129,6 +134,7 @@ def main() -> None:
                 full_sweep[name] = timings[name]
                 continue
             spark.catalog.clearCache()
+            release_pins(spark)
             t0 = time.time()
             try:
                 _force(spec.build(spark, sf_dir))

@@ -292,20 +292,29 @@ def test_rebalance_guard_noop_on_well_split_input(spark):
         assert out is narrow
 
 
-def test_duplicate_groups_long_chain_logarithmic_rounds(spark, monkeypatch):
-    """A 64-node chain (diameter 63) must fully resolve to one group —
-    and with pointer jumping it must do so within the default
-    max_iters=20 (plain neighbor propagation would need 63 rounds;
-    O(log d) needs ~6). The driver union-find gate is disabled so this
-    pins the DISTRIBUTED loop."""
+@pytest.mark.parametrize(
+    "n, max_iters",
+    [(64, None), (64, 8), (1024, 12)],
+    ids=["64_default", "64_in_8", "1024_in_12"],
+)
+def test_duplicate_groups_long_chain_logarithmic_rounds(spark, monkeypatch, n, max_iters):
+    """An n-node chain (diameter n - 1) must fully resolve to one group —
+    with pointer jumping within O(log n) rounds (plain neighbor
+    propagation would need n - 1). The 64-node chain resolves within
+    the default max_iters=20; 8 rounds for 64 nodes and 12 for 1024 are
+    the exact minima of 4 plain rounds followed by pointer jumping, so
+    an extra round or a later start of pointer jumping fails here. The
+    driver union-find gate is disabled so this pins the DISTRIBUTED
+    loop."""
     from amazonredshift_blueprints_spark.operators.dedup import duplicate_groups
 
     monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "0")
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "id_a: long, id_b: long"
+        [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
     )
-    got = {(r["doc_id"], r["group_id"]) for r in duplicate_groups(pairs).collect()}
-    assert got == {(i, 0) for i in range(64)}
+    kw = {} if max_iters is None else {"max_iters": max_iters}
+    got = {(r["doc_id"], r["group_id"]) for r in duplicate_groups(pairs, **kw).collect()}
+    assert got == {(i, 0) for i in range(n)}
 
 
 _CC_PAIRS = [(1, 2), (2, 3), (3, 9), (5, 7), (20, 11), (11, 4)]
