@@ -143,7 +143,8 @@ def pagerank(
     ``damping`` outside 0-100, the distributed loop below runs.
 
     Overflow bound (``'redistribute'``): the round's BIGINT share is
-    ``coalesce(_bp_m, 0) * damping DIV (100 * N)``, so the product must
+    ``coalesce(_bp_m, 0) * damping DIV (100 * _bp_n)`` (``_bp_n`` = N,
+    counted by the same 1-row aggregate), so the product must
     fit — total dangling mass × damping < 2^63. Dangling mass is at most
     the whole rank vector, N × RANK_SCALE, which caps N at about 1.08e11
     nodes at damping 85. Under the driver gate it cannot be reached: at
@@ -204,10 +205,9 @@ def pagerank(
         dangling_nodes = pin(
             nodes.join(
                 e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-            ),
+            ).select("node", F.lit(True).alias("_bp_d")),
             StorageLevel.MEMORY_AND_DISK,
         )
-        n_nodes = nodes.count()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     e_deg = e.join(outdeg, "src")
     # Iterative-DataFrame hygiene: the static graph side (edges+degrees,
@@ -238,17 +238,20 @@ def pagerank(
             # aggregate (r17): the round's checkpoint already runs one
             # job, and a driver collect of the mass here added a
             # second — the crossJoin form computes mass and the new
-            # vector in the same job, zero driver round trips.
+            # vector in the same job, zero driver round trips. The
+            # rank vector has one row per node, so the same aggregate
+            # counts N — no count job before the rounds.
             # BIGINT DIV == Python // for these non-negative operands,
             # so the shares are bit-identical to the collected form.
             mass_df = F.broadcast(
-                rank.join(dangling_nodes, "node").agg(
-                    F.sum("rank").alias("_bp_m")
+                rank.join(dangling_nodes, "node", "left").agg(
+                    F.sum(F.when(F.col("_bp_d"), F.col("rank"))).alias("_bp_m"),
+                    F.count(F.lit(1)).alias("_bp_n"),
                 )
             )
             share_col = F.expr(
                 f"CAST(coalesce(_bp_m, 0) * {damping} "
-                f"DIV {100 * n_nodes} AS BIGINT)"
+                "DIV (100 * _bp_n) AS BIGINT)"
             )
             return updated.crossJoin(mass_df).select(
                 "node",

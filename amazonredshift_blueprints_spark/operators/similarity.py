@@ -395,12 +395,29 @@ def _np_quantize(mat) -> "object":
     return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
 
 
-def _cent_matrix(cents: list[tuple[int, list[int]]]):
-    """Validated centroid list → (k×dim int64 matrix, k norms)."""
-    import numpy as np
+def _pq_dist(X, CB):
+    """The one distance rule of every quantizer here (IVF cells, k-means,
+    PQ codes, ADC tables): the exact int64 (n, M, k) matrix of
+    per-subspace squared L2 distances ``‖x_s − c_s‖²`` between the rows
+    of ``X`` (n, M·d_sub) and the codebook ``CB`` (k, M, d_sub). A
+    full-vector quantizer is M = 1.
 
-    C = np.array([cq for _, cq in cents], dtype=np.int64)
-    return C, (C * C).sum(axis=1)
+    Exact: computed in int64 as ``‖x‖² − 2x·c + ‖c‖²`` — no float
+    accumulation, so it equals the diff-square form the DuckDB oracles
+    use, bit for bit. No term overflows while ``4·d_sub·B² < 2⁶³``, B
+    the largest |component| of X or CB (B = QUANT_SCALE for quantized
+    unit vectors and 2·QUANT_SCALE for their residuals: d_sub up to
+    ~576k). Ties go to the lowest id: callers take ``argmin`` (the first
+    minimum) or a stable ``argsort`` along the id-ordered last axis.
+    """
+    Xs = X.reshape(len(X), CB.shape[1], CB.shape[2]).transpose(1, 0, 2)
+    Ct = CB.transpose(1, 2, 0)  # (M, d_sub, k)
+    d = (
+        (Xs * Xs).sum(axis=2)[:, :, None]
+        - 2 * (Xs @ Ct)
+        + (Ct * Ct).sum(axis=1)[:, None, :]
+    )
+    return d.transpose(1, 0, 2)
 
 
 def assign_cells_arrow_schema(prefix: str) -> str:
@@ -431,16 +448,14 @@ def _arrow_cell_pass(
     arithmetic explodes the plan (5 MiB task binaries, past Janino's
     method limit, whole-stage codegen bails), and a crossJoin+window
     argmin shuffles an n_cells×-expanded corpus (~PBs at 100 TB). A
-    vectorized int64 matmul per Arrow batch is exact (no float
-    accumulation), deterministic (ties resolved to the lowest cell id:
-    ``argmin`` takes the first minimum, stable ``argsort`` keeps
-    id order), and keeps the map-only shape: no join, no shuffle, no
-    row expansion (plan asserted Exchange-free in tests/test_plans.py).
+    vectorized :func:`_pq_dist` (M = 1) per Arrow batch keeps the
+    map-only shape: no join, no shuffle, no row expansion (plan asserted
+    Exchange-free in tests/test_plans.py).
     """
     import numpy as np
     import pandas as pd
 
-    C, Cn = _cent_matrix(cents)
+    C = np.array([cq for _, cq in cents], dtype=np.int64)[:, None, :]
 
     def kernel(batches):
         for pdf in batches:
@@ -448,8 +463,7 @@ def _arrow_cell_pass(
                 continue
             M = _np_quantize(np.stack(pdf[vec_col].to_numpy()))
             norms = (M * M).sum(axis=1)
-            # exact int64: ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2
-            d = norms[:, None] - 2 * (M @ C.T) + Cn[None, :]
+            d = _pq_dist(M, C)[:, 0, :]
             ids = pdf[id_col].to_numpy()
             if nprobe is None:
                 yield pd.DataFrame(
@@ -461,7 +475,6 @@ def _arrow_cell_pass(
                     }
                 )
             else:
-                # stable sort: equal distances keep ascending cell id
                 near = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
                 n = near.shape[1]
                 yield pd.DataFrame(
@@ -530,6 +543,63 @@ def _div_round(s: int, n: int) -> int:
     return -((2 * (-s) + n) // (2 * n))
 
 
+def _lloyd(points: DataFrame, col: str, CB, iters: int):
+    """The one integer Lloyd loop of every trained quantizer here:
+    ``iters`` rounds over the ``array<long>`` column ``col`` of
+    ``points`` from the (k, M, d_sub) int64 codebook ``CB``; returns the
+    trained codebook. k-means is M = 1; a PQ codebook trains all M
+    subspaces in the same round.
+
+    A round is one map-only ``mapInPandas`` pass plus one metadata
+    collect. Each Arrow batch assigns every subvector to its
+    :func:`_pq_dist` argmin and emits only its partial (sum, count) per
+    (slot = subspace·k + code, position) — at most k·M·d_sub rows, never
+    the vectors. One ``groupBy(slot, pos)`` brings the k·dim totals to
+    the driver, and each entry becomes the integer mean rounded half
+    away from zero (:func:`_div_round`). A code no vector chose
+    keeps its previous entry. int64 sums are exact and order-free, so
+    the rule replays bit for bit in NumPy (tests/test_similarity.py)
+    and ANSI SQL (the c28/c74 DuckDB oracles).
+    """
+    import numpy as np
+    import pandas as pd
+
+    k, M, d_sub = CB.shape
+    for _ in range(max(0, iters)):
+
+        def assign(batches, CB=CB):
+            sub = np.arange(M) * k
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                X = np.stack(pdf[col].to_numpy()).astype(np.int64)
+                slot = (_pq_dist(X, CB).argmin(axis=2) + sub).ravel()
+                S = np.zeros((M * k, d_sub), dtype=np.int64)
+                np.add.at(S, slot, X.reshape(-1, d_sub))
+                cnt = np.bincount(slot, minlength=M * k).astype(np.int64)
+                nz = np.flatnonzero(cnt)
+                yield pd.DataFrame(
+                    {
+                        "slot": np.repeat(nz, d_sub),
+                        "pos": np.tile(np.arange(d_sub), len(nz)),
+                        "sm": S[nz].ravel(),
+                        "n": np.repeat(cnt[nz], d_sub),
+                    }
+                )
+
+        sums = (
+            points.select(col)
+            .mapInPandas(assign, "slot long, pos long, sm long, n long")
+            .groupBy("slot", "pos")
+            .agg(F.sum("sm").alias("sm"), F.sum("n").alias("n"))
+        )
+        CB = CB.copy()
+        for r in sums.collect():  # k·dim metadata rows, not data
+            s, code = divmod(r["slot"], k)
+            CB[code, s, r["pos"]] = _div_round(int(r["sm"]), int(r["n"]))
+    return CB
+
+
 def _kmeans_rows(
     corpus: DataFrame,
     *,
@@ -538,35 +608,16 @@ def _kmeans_rows(
     n_cells: int = 16,
     iters: int = 2,
 ) -> list[tuple[int, list[int]]]:
-    """Lloyd's k-means over quantized vectors as pure DataFrame ops:
-    the coarse-quantizer upgrade for :func:`ivf_topk`. Returns the
-    driver-side [(cent_id, cent_q)] list (ids 0..n_cells-1), i.e. the
-    :func:`_collect_centroids` shape without a round trip through a
-    DataFrame.
+    """Lloyd's k-means over quantized vectors: the coarse-quantizer
+    upgrade for :func:`ivf_topk`. Returns the driver-side [(cent_id,
+    cent_q)] list (ids 0..n_cells-1), i.e. the :func:`_collect_centroids`
+    shape without a round trip through a DataFrame.
 
-    Deterministic by construction — no random init, no float-order
-    dependence:
-    - **init**: the ``n_cells`` lowest-id corpus vectors — any id
-      domain works (TakeOrdered seed selection), and on a 0-based corpus
-      this coincides with the plain IVF entry's ``id < n_cells`` rule.
-    - **assign**: broadcast the k×dim centroid table, keep each vector's
-      argmin-L2 cell (exact BIGINT distances, ties → lowest cell id).
-    - **update**: per-cell elementwise mean = exact integer sum /
-      count, rounded back to the quantized grid with integer
-      round-half-away-from-zero (``_div_round``) — pure int arithmetic,
-      no float division, so the rule replays bit-identically in NumPy
-      (tests/test_similarity.py) and ANSI SQL (the c28 DuckDB oracle).
-      Empty cells keep their previous centroid.
-
-    Each iteration is one map-only assignment pass (row-local argmin
-    over the literal centroid array — zero joins, zero row expansion;
-    see :func:`assign_cells`) plus one posexplode + hash aggregate over
-    (cell, component) — dim-independent plan width, so dim=768 emits
-    the same two-column agg as dim=32. Only the k×dim centroid table
-    (metadata, not data) returns to the driver between iterations — the
-    same loop shape as MLlib's distributed k-means. Returns (cent_id,
-    cent_q, cent_norm) ready for :func:`ivf_topk`'s ``centroids``
-    parameter.
+    Deterministic by construction: the init is the ``n_cells``
+    lowest-id corpus vectors — any id domain works (TakeOrdered seed
+    selection), and on a 0-based corpus this coincides with the plain
+    IVF entry's ``id < n_cells`` rule — and the rounds are
+    :func:`_lloyd` with M = 1 over the corpus quantized once.
     """
     # init = the n_cells LOWEST-DISTINCT-id vectors present, each id
     # represented by the lexicographically smallest quantized vector for
@@ -623,78 +674,9 @@ def _kmeans_rows(
             f"({seed_ids[:8]}{'...' if len(seed_ids) > 8 else ''})"
         )
     dim = len(cents[0][1])
-    # Quantize ONCE and persist: every Lloyd iteration re-reading and
-    # re-quantizing the corpus pays the scan iters× over; the cached
-    # (quantized ints) projection is the same bytes as the input
-    # embeddings and is released when training ends. The per-iteration
-    # kernel is then a pure int64 matmul over cached Arrow batches.
-    from pyspark.storagelevel import StorageLevel
-
-    quant = pin(
-        corpus.select(quantize(F.col(vec_col)).alias("q")),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    try:
-        for _ in range(max(0, iters)):
-            import numpy as np
-            import pandas as pd
-
-            C, Cn = _cent_matrix([(i, q) for i, (_, q) in enumerate(cents)])
-
-            # The kernel combines map-side (guide §2.3 "aggregate before
-            # you shuffle", §4 "shuffle keys and metadata, not
-            # payloads"): each Arrow batch emits k×dim partial
-            # (sum, count) rows instead of shipping every assigned
-            # vector back through the Python boundary for a JVM
-            # posexplode + N×dim-row hash aggregate. int64 sums are
-            # exact and order-independent, so the update rule is
-            # bit-identical.
-            def assign(batches, C=C, Cn=Cn):
-                k_cells, d_dim = C.shape
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    M = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-                    d = (M * M).sum(axis=1)[:, None] - 2 * (M @ C.T) + Cn[None, :]
-                    cell = d.argmin(axis=1)
-                    S = np.zeros((k_cells, d_dim), dtype=np.int64)
-                    np.add.at(S, cell, M)
-                    cnt = np.bincount(cell, minlength=k_cells).astype(np.int64)
-                    nz = np.flatnonzero(cnt)
-                    yield pd.DataFrame(
-                        {
-                            "cent_id": np.repeat(nz, d_dim),
-                            "pos": np.tile(np.arange(d_dim), len(nz)),
-                            "s": S[nz].ravel(),
-                            "n": np.repeat(cnt[nz], d_dim),
-                        }
-                    )
-
-            sums = (
-                quant.mapInPandas(
-                    assign, "cent_id long, pos long, s long, n long"
-                )
-                .groupBy("cent_id", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            )
-            acc: dict[int, dict[int, tuple[int, int]]] = {}
-            for r in sums.collect():  # k×dim metadata rows, not data
-                acc.setdefault(int(r["cent_id"]), {})[int(r["pos"])] = (
-                    int(r["s"]), int(r["n"]),
-                )
-            cents = [
-                (
-                    cid,
-                    [_div_round(acc[i][p][0], acc[i][p][1]) for p in range(dim)]
-                    if i in acc
-                    else q,  # empty cell keeps its previous centroid
-                )
-                for i, (cid, q) in enumerate(cents)
-            ]
-    finally:
-        release(quant)
     if n_cells * dim > MAX_LITERAL_CENTROID_CELLS:
-        # same driver-metadata bound _collect_centroids enforces
+        # same driver-metadata bound _collect_centroids enforces, checked
+        # before the corpus is pinned and any round runs
         raise ValueError(
             f"n_cells*dim = {n_cells * dim} exceeds the collected-centroid "
             f"bound ({MAX_LITERAL_CENTROID_CELLS}); quantizers this large "
@@ -702,7 +684,23 @@ def _kmeans_rows(
             "via an equi-join on a precomputed coarse key, not a "
             "driver-collected matrix"
         )
-    return [(i, q) for i, (_, q) in enumerate(cents)]
+    # Quantize ONCE and persist: every Lloyd round re-reading and
+    # re-quantizing the corpus pays the scan iters× over; the cached
+    # (quantized ints) projection is the same bytes as the input
+    # embeddings and is released when training ends.
+    import numpy as np
+    from pyspark.storagelevel import StorageLevel
+
+    seeds = np.array([q for _, q in cents], dtype=np.int64)[:, None, :]
+    quant = pin(
+        corpus.select(quantize(F.col(vec_col)).alias("q")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    try:
+        C = _lloyd(quant, "q", seeds, iters)
+    finally:
+        release(quant)
+    return list(enumerate(C[:, 0, :].tolist()))
 
 
 def kmeans_centroids(
@@ -1502,20 +1500,19 @@ def _pq_codebook(
     dim = len(cb_rows[0][1])
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    d_sub = dim // n_subspaces
-    return (
-        np.array([cq for _, cq in cb_rows], dtype=np.int64).reshape(
-            n_codes, n_subspaces, d_sub
-        ),
-        d_sub,
+    return np.array([cq for _, cq in cb_rows], dtype=np.int64).reshape(
+        n_codes, n_subspaces, dim // n_subspaces
     )
 
 
 def _pq_query_tables(
-    queries: DataFrame, id_col: str, vec_col: str, CB, n_subspaces: int, d_sub: int
+    queries: DataFrame, id_col: str, vec_col: str, CB, cents=None
 ):
-    """Collected query batch → (qids, ADC tables): exact int64
-    (n_queries, M, n_codes) per-subspace distance lookup tables."""
+    """Collected, id-sorted query batch → (qids, ADC tables): the
+    :func:`_pq_dist` (n_queries, M, n_codes) lookup tables of the
+    queries, or — given the (n_cells, dim) coarse centroids ``cents`` —
+    the (n_queries, n_cells, M, n_codes) tables of each query's residual
+    against every cell."""
     import numpy as np
 
     q_rows = sorted(
@@ -1526,14 +1523,20 @@ def _pq_query_tables(
     )
     if not q_rows:
         raise ValueError("empty query batch")
-    Q = np.array([qv for _, qv in q_rows], dtype=np.int64).reshape(
-        len(q_rows), n_subspaces, d_sub
-    )
+    Q = np.array([qv for _, qv in q_rows], dtype=np.int64)
     qids = np.array([qid for qid, _ in q_rows], dtype=np.int64)
-    T = ((Q[:, :, None, :] - CB.transpose(1, 0, 2)[None, :, :, :]) ** 2).sum(
-        axis=3
-    )
-    return qids, T
+    if cents is None:
+        return qids, _pq_dist(Q, CB)
+    n_codes, n_subspaces, _ = CB.shape
+    n_tab = len(Q) * len(cents) * n_subspaces * n_codes
+    if n_tab > MAX_LITERAL_CENTROID_CELLS * 64:
+        raise ValueError(
+            f"per-(query, cell) ADC tables hold {n_tab} entries — beyond the "
+            "driver-metadata bound; batch the queries, or precompute tables "
+            "for the probed cells only (nprobe/n_cells of this size)"
+        )
+    QR = (Q[:, None, :] - cents[None, :, :]).reshape(-1, Q.shape[1])
+    return qids, _pq_dist(QR, CB).reshape(len(Q), len(cents), n_subspaces, n_codes)
 
 
 def pq_topk(
@@ -1577,20 +1580,14 @@ def pq_topk(
     import numpy as np
     import pandas as pd
 
-    CB, d_sub = _pq_codebook(corpus, id_col, vec_col, n_subspaces, n_codes)
+    CB = _pq_codebook(corpus, id_col, vec_col, n_subspaces, n_codes)
 
     def encode(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _np_quantize(np.stack(pdf[vec_col].to_numpy())).reshape(
-                -1, n_subspaces, d_sub
-            )
-            codes = np.empty((len(pdf), n_subspaces), dtype=np.int64)
-            for s in range(n_subspaces):
-                # (batch, n_codes) exact int64 sub-distances
-                d = ((X[:, None, s, :] - CB[None, :, s, :]) ** 2).sum(axis=2)
-                codes[:, s] = d.argmin(axis=1)  # first min → lowest code id
+            X = _np_quantize(np.stack(pdf[vec_col].to_numpy()))
+            codes = _pq_dist(X, CB).argmin(axis=2)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col].to_numpy(),
@@ -1602,7 +1599,7 @@ def pq_topk(
         encode, "neighbor_id long, codes array<long>"
     )
 
-    qids, T = _pq_query_tables(queries, id_col, vec_col, CB, n_subspaces, d_sub)
+    qids, T = _pq_query_tables(queries, id_col, vec_col, CB)
 
     def score(batches):
         m_idx = np.arange(n_subspaces)
@@ -1676,20 +1673,15 @@ def ivf_pq_topk(
         corpus.filter(F.col(id_col) < n_cells), id_col, vec_col, "cent"
     )
     cent_rows = _collect_centroids(cents)
-    CB, d_sub = _pq_codebook(corpus, id_col, vec_col, n_subspaces, n_codes)
+    CB = _pq_codebook(corpus, id_col, vec_col, n_subspaces, n_codes)
     cells = assign_cells(corpus, cent_rows, id_col=id_col, vec_col=vec_col)
 
     def encode(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf["neighbor_q"].to_numpy()).astype(np.int64).reshape(
-                -1, n_subspaces, d_sub
-            )
-            codes = np.empty((len(pdf), n_subspaces), dtype=np.int64)
-            for s in range(n_subspaces):
-                d = ((X[:, None, s, :] - CB[None, :, s, :]) ** 2).sum(axis=2)
-                codes[:, s] = d.argmin(axis=1)
+            X = np.stack(pdf["neighbor_q"].to_numpy()).astype(np.int64)
+            codes = _pq_dist(X, CB).argmin(axis=2)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["neighbor_id"].to_numpy(),
@@ -1704,7 +1696,7 @@ def ivf_pq_topk(
     probed = probe_cells(
         queries, cent_rows, nprobe, id_col=id_col, vec_col=vec_col
     ).select("query_id", "cell")
-    qids, T = _pq_query_tables(queries, id_col, vec_col, CB, n_subspaces, d_sub)
+    qids, T = _pq_query_tables(queries, id_col, vec_col, CB)
     qpos = {int(q): i for i, q in enumerate(qids)}
 
     def score(batches):
@@ -1772,26 +1764,12 @@ def train_pq_codebook(
     n_codes: int = 16,
     iters: int = 2,
 ):
-    """Per-subspace PQ codebook training: ``n_subspaces`` independent
-    integer Lloyd loops over the input subvectors, with EXACTLY the
-    deterministic rules of :func:`kmeans_centroids` so the whole
-    training replays bit-for-bit in NumPy and ANSI SQL — lowest-id
-    init (the subvectors of rows with ``id < n_codes``), argmin over
-    exact int64 L2² with ties to the lowest code id, per-(subspace,
-    code, position) integer mean with round-half-away-from-zero
-    (``_div_round``), empty codes keeping their previous entry.
-
-    Returns the (n_codes, M, d_sub) int64 codebook matrix + d_sub.
-
-    Scale: each iteration is one map-only Arrow assignment pass (the
-    (M, n_codes, d_sub) codebook rides the kernel closure) plus one
-    posexplode + hash aggregate on (s, code, pos) — M·n_codes·d_sub =
-    dim·n_codes aggregate rows of METADATA back to the driver per
-    iteration, the :func:`kmeans_centroids` loop shape with a subspace
-    axis. ``iters=0`` degenerates to the fixed-rule codebook.
+    """Per-subspace PQ codebook training: :func:`_lloyd` with M =
+    ``n_subspaces``, from the subvectors of the ``n_codes`` lowest-id
+    input rows. Returns the (n_codes, M, d_sub) int64 codebook matrix +
+    d_sub; ``iters=0`` degenerates to the fixed-rule codebook.
     """
     import numpy as np
-    import pandas as pd
 
     # init = the n_codes LOWEST-id residual rows present (ids are unique
     # per vector, so orderBy+limit is deterministic). On a dense 0-based
@@ -1816,66 +1794,7 @@ def train_pq_codebook(
     CB = np.array([q for _, q in init_rows], dtype=np.int64).reshape(
         n_codes, n_subspaces, d_sub
     )
-    for _ in range(max(0, iters)):
-        CB_it = CB.copy()
-
-        # Partial sums inside the kernel (guide §2.3/§4, the
-        # kmeans_centroids pattern): each batch emits at most
-        # n_subspaces×n_codes×d_sub (= dim×n_codes) partial rows
-        # instead of shipping every subvector back through Arrow for a
-        # JVM posexplode + hash aggregate over N×dim rows. Exact int64
-        # sums — bit-identical update rule.
-        def assign(batches, CB_it=CB_it):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Xr = np.stack(pdf[rv_col].to_numpy()).astype(np.int64).reshape(
-                    -1, n_subspaces, d_sub
-                )
-                cols_s, cols_code, cols_pos, cols_sm, cols_n = [], [], [], [], []
-                for s in range(n_subspaces):
-                    d = ((Xr[:, None, s, :] - CB_it[None, :, s, :]) ** 2).sum(
-                        axis=2
-                    )
-                    code = d.argmin(axis=1)
-                    S = np.zeros((n_codes, d_sub), dtype=np.int64)
-                    np.add.at(S, code, Xr[:, s, :])
-                    cnt = np.bincount(code, minlength=n_codes).astype(np.int64)
-                    nz = np.flatnonzero(cnt)
-                    cols_s.append(np.full(len(nz) * d_sub, s, dtype=np.int64))
-                    cols_code.append(np.repeat(nz, d_sub))
-                    cols_pos.append(np.tile(np.arange(d_sub), len(nz)))
-                    cols_sm.append(S[nz].ravel())
-                    cols_n.append(np.repeat(cnt[nz], d_sub))
-                yield pd.DataFrame(
-                    {
-                        "s": np.concatenate(cols_s),
-                        "code": np.concatenate(cols_code),
-                        "pos": np.concatenate(cols_pos),
-                        "sm": np.concatenate(cols_sm),
-                        "n": np.concatenate(cols_n),
-                    }
-                )
-
-        sums = (
-            residuals.select(rv_col)
-            .mapInPandas(assign, "s long, code long, pos long, sm long, n long")
-            .groupBy("s", "code", "pos")
-            .agg(F.sum("sm").alias("sm"), F.sum("n").alias("n"))
-        )
-        acc = {
-            (int(r["s"]), int(r["code"]), int(r["pos"])): (int(r["sm"]), int(r["n"]))
-            for r in sums.collect()  # dim×n_codes metadata rows
-        }
-        new_CB = CB.copy()
-        for s in range(n_subspaces):
-            for c in range(n_codes):
-                if (s, c, 0) in acc:
-                    new_CB[c, s, :] = [
-                        _div_round(*acc[(s, c, p)]) for p in range(d_sub)
-                    ]
-        CB = new_CB
-    return CB, d_sub
+    return _lloyd(residuals, rv_col, CB, iters), d_sub
 
 
 def ivf_pq_residual_topk(
@@ -1916,15 +1835,13 @@ def ivf_pq_residual_topk(
     Query-time ADC is per (query, PROBED cell): the query's residual
     against that cell's centroid is tabled against the codebook, so
     distance ≈ ||(q − cent) − code(x − cent)||² — both sides centered
-    on the same centroid. Every step is exact int64 with fixed tie
-    rules, so training AND search replay bit-for-bit in the DuckDB
-    oracle (c74).
+    on the same centroid. Every distance is :func:`_pq_dist` and both
+    trainings are :func:`_lloyd`, so training AND search replay
+    bit-for-bit in the DuckDB oracle (c74).
 
-    Scale: coarse training is kmeans_centroids' loop (one map-only
-    pass + one metadata agg per iteration); codebook training the
-    same with a subspace axis; the search plan is identical to
-    :func:`ivf_pq_topk` — assignment + residual + encoding are chained
-    Arrow kernels in one shuffle-free corpus pass, the probe join
+    Scale: the search plan is identical to :func:`ivf_pq_topk` —
+    assignment + residual + encoding are chained Arrow kernels in one
+    shuffle-free corpus pass, the probe join
     carries (id, cell, codes) rows, and the per-(query, cell) ADC
     tables are kernel-closure metadata, guarded below.
 
@@ -1972,7 +1889,6 @@ def ivf_pq_residual_topk(
     dim = CENT.shape[1]
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    d_sub = dim // n_subspaces
 
     from pyspark.storagelevel import StorageLevel
 
@@ -1999,13 +1915,8 @@ def ivf_pq_residual_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            res = np.stack(pdf["rv"].to_numpy()).astype(np.int64).reshape(
-                -1, n_subspaces, d_sub
-            )
-            codes = np.empty((len(pdf), n_subspaces), dtype=np.int64)
-            for s in range(n_subspaces):
-                d = ((res[:, None, s, :] - R[None, :, s, :]) ** 2).sum(axis=2)
-                codes[:, s] = d.argmin(axis=1)  # first min → lowest code id
+            res = np.stack(pdf["rv"].to_numpy()).astype(np.int64)
+            codes = _pq_dist(res, R).argmin(axis=2)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["vec_id"].to_numpy(),
@@ -2018,30 +1929,8 @@ def ivf_pq_residual_topk(
         encode, "neighbor_id long, cell long, codes array<long>"
     )
 
-    q_rows = sorted(
-        (int(r["query_id"]), [int(x) for x in r["query_q"]])
-        for r in _with_quant(queries, id_col, vec_col, "query")
-        .select("query_id", "query_q")
-        .collect()
-    )
-    if not q_rows:
-        raise ValueError("empty query batch")
-    n_tab = len(q_rows) * n_cells * n_subspaces * n_codes
-    if n_tab > MAX_LITERAL_CENTROID_CELLS * 64:
-        raise ValueError(
-            f"per-(query, cell) ADC tables hold {n_tab} entries — beyond the "
-            "driver-metadata bound; batch the queries, or precompute tables "
-            "for the probed cells only (nprobe/n_cells of this size)"
-        )
-    Q = np.array([qv for _, qv in q_rows], dtype=np.int64)
-    qids = np.array([qid for qid, _ in q_rows], dtype=np.int64)
-    QR = (Q[:, None, :] - CENT[None, :, :]).reshape(
-        len(q_rows), n_cells, n_subspaces, d_sub
-    )
     # T[qi, cell, s, c] = ||query-residual subvector − codebook entry||²
-    T = ((QR[:, :, :, None, :] - R.transpose(1, 0, 2)[None, None, :, :, :]) ** 2).sum(
-        axis=4
-    )
+    qids, T = _pq_query_tables(queries, id_col, vec_col, R, CENT)
     qpos = {int(q): i for i, q in enumerate(qids)}
 
     probed = probe_cells(

@@ -240,55 +240,70 @@ def test_ivf_index_build_query_and_partition_pruning(spark, sf_dir, tmp_path):
     ), "\n".join(scan_lines)
 
 
-def test_kmeans_centroids_bitwise_numpy_replay(spark, sf_dir, vecs):
-    """Hard correctness oracle for the k-means quantizer: the Lloyd loop
+@pytest.mark.parametrize("n_sub", [1, 8], ids=["kmeans", "pq"])
+def test_kmeans_centroids_bitwise_numpy_replay(spark, sf_dir, vecs, n_sub):
+    """Hard correctness oracle for the trained quantizers: the Lloyd loop
     is exact integer arithmetic (int64 L2 distances, int sums, integer
     round-half-away-from-zero means), so a NumPy replay must produce
-    BIT-IDENTICAL centroids and cell assignments — equality, not
+    BIT-IDENTICAL k-means centroids and cell assignments (one subspace)
+    and PQ codebooks (8 subspaces, one loop each) — equality, not
     tolerance."""
     from amazonredshift_blueprints_spark.operators.similarity import (
         assign_cells,
         kmeans_centroids,
+        quantize,
+        train_pq_codebook,
     )
 
     ids, q = vecs
     qi = q.astype(np.int64)  # exact: quantized values fit in int64
-    n_cells, iters = 16, 2
+    n_codes, iters = 16, 2
+    X = qi.reshape(len(qi), n_sub, -1)  # (n, M, d_sub)
 
     # -- NumPy replay of the documented rules ---------------------------
-    cents = qi[np.argsort(ids)][:0]  # placeholder; init = ids 0..15 rows
+    # init = the rows of ids 0..15
     id_pos = {int(v): i for i, v in enumerate(ids)}
-    cents = np.stack([qi[id_pos[c]] for c in range(n_cells)])
+    cb = np.stack([X[id_pos[c]] for c in range(n_codes)])  # (k, M, d_sub)
 
-    def np_assign(c):
-        # argmin over exact int64 L2^2; ties -> lowest cell id (argmin
-        # returns the first minimum, and cells are ordered by id)
-        d = ((qi[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        return d.argmin(axis=1)
+    def np_assign(cb):
+        # per-subspace argmin over exact int64 L2^2; ties -> lowest code
+        # id (argmin returns the first minimum, and codes are id-ordered)
+        d = ((X[:, None, :, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
+        return d.argmin(axis=1)  # (n, M)
 
     for _ in range(iters):
-        cell = np_assign(cents)
-        new = cents.copy()
-        for ci in range(n_cells):
-            members = qi[cell == ci]
-            if len(members) == 0:
-                continue  # empty cell keeps previous centroid
-            s, n = members.sum(axis=0), len(members)
-            # integer round-half-away-from-zero, same as _div_round
-            new[ci] = np.where(
-                s >= 0, (2 * s + n) // (2 * n), -((2 * -s + n) // (2 * n))
-            )
-        cents = new
-    want_cells = np_assign(cents)
+        code = np_assign(cb)
+        new = cb.copy()
+        for s in range(n_sub):
+            for c in range(n_codes):
+                members = X[code[:, s] == c, s]
+                if len(members) == 0:
+                    continue  # empty code keeps its previous entry
+                sm, n = members.sum(axis=0), len(members)
+                # integer round-half-away-from-zero, same as _div_round
+                new[c, s] = np.where(
+                    sm >= 0, (2 * sm + n) // (2 * n), -((2 * -sm + n) // (2 * n))
+                )
+        cb = new
 
     # -- Spark result ---------------------------------------------------
     e = load_table(spark, sf_dir, "embeddings")
-    got_c = kmeans_centroids(e, n_cells=n_cells, iters=iters).collect()
+    if n_sub > 1:
+        got_cb, d_sub = train_pq_codebook(
+            e.select("vec_id", quantize(F.col("embedding")).alias("rv")),
+            n_subspaces=n_sub, n_codes=n_codes, iters=iters,
+        )
+        assert d_sub == X.shape[2]
+        assert got_cb.shape == cb.shape
+        assert (got_cb == cb).all(), "codebook differs"
+        return
+    got_c = kmeans_centroids(e, n_cells=n_codes, iters=iters).collect()
     got = {int(r["cent_id"]): [int(x) for x in r["cent_q"]] for r in got_c}
-    assert len(got) == n_cells
-    for ci in range(n_cells):
-        assert got[ci] == [int(x) for x in cents[ci]], f"centroid {ci} differs"
+    assert len(got) == n_codes
+    for ci in range(n_codes):
+        assert got[ci] == [int(x) for x in cb[ci, 0]], f"centroid {ci} differs"
 
+    want_cells = np_assign(cb)[:, 0]
     assigned = assign_cells(
         e, sorted((c, v) for c, v in got.items())
     ).select("neighbor_id", "cell").collect()
@@ -360,9 +375,32 @@ def test_collected_centroid_size_guard(spark, monkeypatch):
 
     rows = [(i, [0.1, 0.2, 0.3, 0.4]) for i in range(4)]
     corpus = _tiny_corpus(spark, rows)
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # inside the bound and with no round, k-means runs its seed collect
+    seed_jobs = jobs_of(
+        "kmeans-seed-only",
+        lambda: similarity.kmeans_centroids(corpus, n_cells=4, iters=0),
+    )
     monkeypatch.setattr(similarity, "MAX_LITERAL_CENTROID_CELLS", 8)
     with pytest.raises(ValueError, match="collected-centroid bound"):
         similarity.ivf_topk(corpus, corpus.limit(2), k=2, n_cells=4, nprobe=2)
+
+    def over_bound_training():
+        with pytest.raises(ValueError, match="collected-centroid bound"):
+            similarity.kmeans_centroids(corpus, n_cells=4, iters=2)
+
+    # the bound is checked before any Lloyd round runs
+    assert jobs_of("kmeans-over-bound", over_bound_training) == seed_jobs
 
 
 def test_cross_corpus_near_duplicates_finds_planted_pair(spark):
@@ -1044,3 +1082,34 @@ def test_hard_negative_mining_excludes_same_label(spark):
     assert all(r.label == 0 and r.neg_label == 1 for r in out)
     assert [r.rank for r in out] == [1, 2]
     assert out[0].cosine > out[1].cosine
+
+
+def test_one_quantizer_core():
+    """Every quantizer distance is ``_pq_dist`` and every Lloyd update
+    runs in ``_lloyd``: no ``** 2`` outside ``_pq_dist``, ``_div_round``
+    called only by ``_lloyd``, and both trainers call ``_lloyd``."""
+    import ast
+    import inspect
+
+    from amazonredshift_blueprints_spark.operators import similarity
+
+    tree = ast.parse(inspect.getsource(similarity))
+    squares, div_round_callers, lloyd_callers = set(), set(), set()
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Pow)
+                and isinstance(node.right, ast.Constant)
+                and node.right.value == 2
+            ):
+                squares.add(owner)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                if node.func.id == "_div_round":
+                    div_round_callers.add(owner)
+                elif node.func.id == "_lloyd":
+                    lloyd_callers.add(owner)
+    assert squares <= {"_pq_dist"}, squares
+    assert div_round_callers == {"_lloyd"}, div_round_callers
+    assert {"_kmeans_rows", "train_pq_codebook"} <= lloyd_callers, lloyd_callers
