@@ -57,6 +57,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from . import sqllex
+
 
 @dataclass
 class CopySpec:
@@ -105,6 +107,8 @@ _COPY_HEAD_RE = re.compile(
     re.IGNORECASE,
 )
 _UNLOAD_HEAD_RE = re.compile(r"^\s*UNLOAD\s*\(\s*'", re.IGNORECASE)
+# the rest of the quoted query after its opening quote, '' escapes kept
+_QUERY_BODY_RE = re.compile(r"([^']*(?:''[^']*)*)'")
 
 # option tokens that carry a quoted-string argument and are ignored
 _IGNORED_STR_OPTS = {
@@ -116,8 +120,9 @@ _IGNORED_BARE_OPTS = {"GZIP", "BZIP2"}
 
 
 def _tokenize_options(rest: str) -> list[str]:
-    """Split an option tail into tokens, keeping quoted strings whole."""
-    return re.findall(r"'(?:[^']|'')*'|\(|\)|,|[^\s(),]+", rest)
+    """Split an option tail into tokens, keeping quoted strings and
+    flat parenthesized lists whole."""
+    return re.findall(r"'(?:[^']|'')*'|\([^()]*\)|[(),]|[^\s(),]+", rest)
 
 
 def _unquote(tok: str) -> str:
@@ -319,23 +324,11 @@ def parse_unload(sql: str) -> UnloadSpec | None:
     m = _UNLOAD_HEAD_RE.match(sql)
     if m is None:
         return None
-    # scan the quoted query body honoring '' escapes
-    i = m.end()
-    out = []
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            if i + 1 < len(sql) and sql[i + 1] == "'":
-                out.append("'")
-                i += 2
-                continue
-            break
-        out.append(ch)
-        i += 1
-    else:
+    body = _QUERY_BODY_RE.match(sql, m.end())
+    if body is None:
         raise ValueError("UNLOAD: unterminated query literal")
-    query = "".join(out)
-    tail = sql[i + 1:]
+    query = body.group(1).replace("''", "'")
+    tail = sql[body.end():]
     tm = re.match(r"\s*\)\s*TO\s+'([^']+)'", tail, re.IGNORECASE)
     if tm is None:
         raise ValueError("UNLOAD: expected ('query') TO 'path'")
@@ -384,16 +377,11 @@ def parse_unload(sql: str) -> UnloadSpec | None:
         elif t == "PARTITION":
             if i < len(tokens) and tokens[i].upper() == "BY":
                 i += 1
-            if i >= len(tokens) or tokens[i] != "(":
+            cols = tokens[i] if i < len(tokens) else ""
+            if not (cols.startswith("(") and cols.endswith(")")):
                 raise ValueError("PARTITION BY expects (col, ...)")
+            spec.partition_by = list(filter(None, sqllex.split(cols[1:-1])))
             i += 1
-            cols = []
-            while i < len(tokens) and tokens[i] != ")":
-                if tokens[i] != ",":
-                    cols.append(tokens[i])
-                i += 1
-            i += 1  # closing paren
-            spec.partition_by = cols
         elif t in ("ALLOWOVERWRITE", "CLEANPATH"):
             # Redshift's overwrite-permission flags: this lowering's
             # writers already run in overwrite mode (ALLOWOVERWRITE is
@@ -720,24 +708,9 @@ def parse_create_function(sql: str) -> PyFunctionSpec | None:
     m = _CREATE_FUNC_RE.match(sql)
     if m is None:
         return None
-    # split args on top-level commas only — decimal(10,2) carries one
-    args, depth, cur = [], 0, []
-    for ch in m.group(2):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            args.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    args.append("".join(cur))
     names, types = [], []
-    for raw in args:
-        raw = raw.strip()
-        if not raw:
-            continue
+    # decimal(10,2) carries a comma at depth 1
+    for raw in filter(None, sqllex.split(m.group(2))):
         parts = raw.split()
         if len(parts) < 2:
             raise ValueError(f"UDF argument needs 'name type': {raw!r}")

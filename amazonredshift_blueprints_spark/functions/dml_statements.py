@@ -15,8 +15,8 @@ Deliberately strict: only shapes whose semantics the dml layer
 faithfully implements are accepted; anything else raises ``ValueError``
 naming the unsupported construct (DELETE ... USING, UPDATE ... FROM,
 non-wholesale MERGE arms) rather than mis-executing it. The regexes are
-``^``-anchored and quote-aware at the split points, the same
-conservatism as redshift_compat.
+``^``-anchored, and every split point and rewrite goes through the
+:mod:`.sqllex` rule, the same conservatism as redshift_compat.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import re
 
 from pyspark.sql import SparkSession
 
-from .prepared import _split_args
+from . import sqllex
 
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+([`\w.]+)\s*(?:WHERE\s+(.+?))?\s*;?\s*$",
@@ -52,6 +52,8 @@ _MERGE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _WHEN_SPLIT_RE = re.compile(r"\bWHEN\s+", re.IGNORECASE)
+_AND_RE = re.compile(r"\bAND\b", re.IGNORECASE)
+_FROM_WORD_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
 _MATCHED_UPDATE_RE = re.compile(
     r"^MATCHED\s+THEN\s+UPDATE\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
@@ -73,103 +75,25 @@ def _strip_alias(col: str) -> str:
     return col.strip().strip("`")
 
 
-def _toplevel_from_idx(set_clause: str) -> int:
-    """Index of the first FROM keyword at parenthesis depth 0 outside
-    string literals — the UPDATE ... FROM join clause — or -1. FROM
-    inside a call (``extract(day FROM ts)``, ``substring(s FROM 2)``,
-    a scalar subquery) is a legitimate SET expression and must NOT
-    trigger."""
-    depth, i, n = 0, 0, len(set_clause)
-    while i < n:
-        ch = set_clause[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if set_clause[i] == "'":
-                    if i + 1 < n and set_clause[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and set_clause[i : i + 4].upper() == "FROM":
-            before_ok = i == 0 or not (
-                set_clause[i - 1].isalnum() or set_clause[i - 1] == "_"
-            )
-            after = set_clause[i + 4 : i + 5]
-            after_ok = after == "" or not (after.isalnum() or after == "_")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return -1
-
-
-def _has_toplevel_from(set_clause: str) -> bool:
-    return _toplevel_from_idx(set_clause) >= 0
-
-
-def _split_toplevel_and(text: str) -> list[str]:
-    """Split a predicate on AND keywords at parenthesis depth 0 outside
-    string literals — so ``(a OR b AND c)`` stays one clause and a
-    literal containing ``' and '`` survives intact."""
-    out, start, depth, i, n = [], 0, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and text[i : i + 3].upper() == "AND":
-            before_ok = i == 0 or not (
-                text[i - 1].isalnum() or text[i - 1] == "_"
-            )
-            after = text[i + 3 : i + 4]
-            after_ok = after == "" or not (after.isalnum() or after == "_")
-            if before_ok and after_ok:
-                out.append(text[start:i].strip())
-                i += 3
-                start = i
-                continue
-        i += 1
-    out.append(text[start:].strip())
-    return [c for c in out if c]
-
-
 def _dequalify(expr: str, alias: str) -> str:
-    """Rewrite ``alias.col`` → ``col`` outside string literals —
-    merge_into evaluates its delete_condition against the RAW source
-    row, where the statement's source alias does not exist (Spark would
-    parse ``s.col`` as struct-field extraction on a column ``s``)."""
-    parts = re.split(r"('(?:[^']|'')*')", expr)  # odd indices = quoted
+    """Rewrite ``alias.col`` → ``col`` — merge_into evaluates its
+    delete_condition against the RAW source row, where the statement's
+    source alias does not exist (Spark would parse ``s.col`` as
+    struct-field extraction on a column ``s``)."""
     pat = re.compile(rf"\b{re.escape(alias)}\.(\w+)", re.IGNORECASE)
-    return "".join(
-        p if i % 2 else pat.sub(r"\1", p) for i, p in enumerate(parts)
-    )
+    return sqllex.sub(pat, r"\1", expr)
 
 
 def _requalify_update(
     expr: str, src_alias: str, target: str, t_short: str, keys: list[str]
 ) -> str:
     """Rewrite a MERGE UPDATE-arm expression into merge_into's joined-
-    row namespace, outside string literals: ``<src_alias>.col`` →
+    row namespace: ``<src_alias>.col`` →
     ``_src_col`` (the aliased source columns — except the join keys,
     which ride the USING join under their own names; on a matched row
     the source key equals the target key, so ``s.k`` → ``k`` is exact)
     and ``<target>.col`` / ``<t_short>.col`` → ``col`` (target columns
     keep their own names after the join)."""
-    parts = re.split(r"('(?:[^']|'')*')", expr)  # odd indices = quoted
     key_set = {k.lower() for k in keys}
     src_pat = re.compile(rf"\b{re.escape(src_alias)}\.(\w+)", re.IGNORECASE)
     tgt_names = {t_short, target.strip("`"), target.split(".")[-1].strip("`")}
@@ -183,13 +107,10 @@ def _requalify_update(
         col = m.group(1)
         return col if col.lower() in key_set else f"_src_{col}"
 
-    def fix(p: str) -> str:
-        p = src_pat.sub(sub_src, p)
-        for tp in tgt_pats:
-            p = tp.sub(r"\1", p)
-        return p
-
-    return "".join(p if i % 2 else fix(p) for i, p in enumerate(parts))
+    expr = sqllex.sub(src_pat, sub_src, expr)
+    for tp in tgt_pats:
+        expr = sqllex.sub(tp, r"\1", expr)
+    return expr
 
 
 def _requalify_insert(
@@ -200,7 +121,6 @@ def _requalify_insert(
     → their own ridden-through names, as in the update arm). Target
     references REFUSE by name — every target column is NULL on an
     insert row, so ``t.col`` in VALUES can only be a mistake."""
-    parts = re.split(r"('(?:[^']|'')*')", expr)  # odd indices = quoted
     key_set = {k.lower() for k in keys}
     src_pat = re.compile(rf"\b{re.escape(src_alias)}\.(\w+)", re.IGNORECASE)
     tgt_names = {t_short, target.strip("`"), target.split(".")[-1].strip("`")}
@@ -214,20 +134,13 @@ def _requalify_insert(
         col = m.group(1)
         return col if col.lower() in key_set else f"_src_{col}"
 
-    out = []
-    for i, p in enumerate(parts):
-        if i % 2:
-            out.append(p)
-            continue
-        for tp in tgt_pats:
-            if tp.search(p):
-                raise ValueError(
-                    "MERGE INSERT VALUES cannot reference the target "
-                    "(all target columns are NULL on an insert row): "
-                    f"{expr.strip()!r}"
-                )
-        out.append(src_pat.sub(sub_src, p))
-    return "".join(out)
+    if any(sqllex.find(expr, tp, top=False) for tp in tgt_pats):
+        raise ValueError(
+            "MERGE INSERT VALUES cannot reference the target "
+            "(all target columns are NULL on an insert row): "
+            f"{expr.strip()!r}"
+        )
+    return sqllex.sub(src_pat, sub_src, expr)
 
 
 def _parse_on_keys(on: str, target: str, src_alias: str) -> list[str]:
@@ -236,7 +149,7 @@ def _parse_on_keys(on: str, target: str, src_alias: str) -> list[str]:
     shared column names); anything else is refused."""
     t_short = target.split(".")[-1].strip("`").lower()
     keys = []
-    for clause in re.split(r"\bAND\b", on, flags=re.IGNORECASE):
+    for clause in sqllex.split(on, _AND_RE):
         m = _ON_PAIR_RE.match(clause)
         if not m:
             raise ValueError(
@@ -307,16 +220,16 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
     m = _UPDATE_RE.match(query)
     if m:
         table, set_clause, cond = m.groups()
-        from_idx = _toplevel_from_idx(set_clause)
-        if from_idx >= 0:
+        from_m = sqllex.find(set_clause, _FROM_WORD_RE)
+        if from_m:
             # Redshift's joined update (r16; previously a named
             # refusal): UPDATE t SET ... FROM src [AS a] WHERE
             # t.k = a.k [AND extra...] — the key-equality conjunctions
             # become the join, everything else rides as an extra match
             # condition; SET expressions see target columns bare and
             # source columns as a.col
-            src_spec = set_clause[from_idx + 4 :]
-            sets_text = set_clause[:from_idx].strip()
+            src_spec = set_clause[from_m.end() :]
+            sets_text = set_clause[: from_m.start()]
             ms = _FROM_SRC_RE.match(src_spec)
             if not ms or cond is None:
                 raise ValueError(
@@ -329,7 +242,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
             src_alias = (src_alias or source.split(".")[-1]).strip("`")
             t_short = table.split(".")[-1].strip("`").lower()
             keys, extras = [], []
-            for clause in _split_toplevel_and(cond):
+            for clause in filter(None, sqllex.split(cond, _AND_RE)):
                 mp = _ON_PAIR_RE.match(clause)
                 if mp:
                     a_al, a_col, b_al, b_col = (
@@ -357,7 +270,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
             # ALL source columns (keys included) live as _src_<name>
             # in update_from's joined namespace → keys=[] here
             assignments = {}
-            for part in _split_args(sets_text):
+            for part in sqllex.split(sets_text):
                 k, eq, v = part.partition("=")
                 if not eq or not k.strip() or not v.strip():
                     raise ValueError(
@@ -386,7 +299,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
             )
             return True
         assignments = {}
-        for part in _split_args(set_clause):
+        for part in sqllex.split(set_clause):
             k, _, v = part.partition("=")
             if not _ or not k.strip() or not v.strip():
                 raise ValueError(f"unparseable SET assignment {part!r}")
@@ -414,7 +327,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
         update_exprs = None
         insert_exprs = None
         saw_update = saw_insert = False
-        arms = [a.strip() for a in _WHEN_SPLIT_RE.split(arms_text) if a.strip()]
+        arms = [a for a in sqllex.split(arms_text, _WHEN_SPLIT_RE) if a]
         t_short = target.split(".")[-1].strip("`").lower()
         for arm in arms:
             mu = _MATCHED_UPDATE_RE.match(arm)
@@ -430,7 +343,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
                 # permits; an actual key change would re-key the join).
                 exprs: dict[str, str] = {}
                 wholesale = True
-                for part in _split_args(mu.group(1)):
+                for part in sqllex.split(mu.group(1)):
                     k, eq, v = part.partition("=")
                     if not eq or not k.strip() or not v.strip():
                         raise ValueError(
@@ -476,7 +389,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
                 # joined row, with unlisted non-key columns inserting
                 # NULL (the no-column-default parquet reading of
                 # Redshift's DEFAULT)
-                vals = [v.strip() for v in _split_args(mi.group(2))]
+                vals = sqllex.split(mi.group(2))
                 src_cols = [c.lower() for c in spark.table(source).columns]
                 tgt_all = [c.lower() for c in spark.table(target).columns]
                 if mi.group(1):

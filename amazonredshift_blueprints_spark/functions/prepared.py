@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import checkpoint, pin, release
 from ..sessionstate import session_state
+from . import sqllex
 
 
 def _prepared(spark: SparkSession) -> dict:
@@ -113,47 +114,13 @@ def _spark_type(t: str) -> str:
     return _TYPE_MAP.get(base, base)
 
 
-def _split_args(arglist: str) -> list[str]:
-    """Split EXECUTE's argument list on top-level commas, honoring
-    single-quoted literals (with ``''`` doubling) and parentheses."""
-    out, buf, depth, i, n = [], [], 0, 0, len(arglist)
-    while i < n:
-        ch = arglist[i]
-        if ch == "'":
-            buf.append(ch)
-            i += 1
-            while i < n:
-                buf.append(arglist[i])
-                if arglist[i] == "'":
-                    if i + 1 < n and arglist[i + 1] == "'":
-                        buf.append(arglist[i + 1])
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
 def prepare_statement(
     spark: SparkSession, name: str, types: list[str], sql: str
 ) -> None:
     _prepared(spark)[name.lower()] = (types, sql)
+
+
+_PLACEHOLDER_RE = re.compile(r"\$(\d+)")
 
 
 def substitute_prepared(spark: SparkSession, name: str, args: list[str]) -> str:
@@ -171,8 +138,7 @@ def substitute_prepared(spark: SparkSession, name: str, args: list[str]) -> str:
     # exactly once and substituted argument text is never rescanned (the
     # old sequential str.replace let an argument containing '$1' be
     # re-substituted by a later pass — r10 advisor). Placeholders inside
-    # single-quoted literals are left untouched: the text is split into
-    # quoted/unquoted segments and only unquoted segments are rewritten.
+    # literals and comments are left untouched.
     def repl(m: re.Match) -> str:
         idx = int(m.group(1))
         if not 1 <= idx <= len(args):
@@ -180,11 +146,7 @@ def substitute_prepared(spark: SparkSession, name: str, args: list[str]) -> str:
         arg = args[idx - 1]
         return f"CAST({arg} AS {_spark_type(types[idx - 1])})" if types else arg
 
-    parts = re.split(r"('(?:[^']|'')*')", sql)  # odd indices = quoted
-    return "".join(
-        p if i % 2 else re.sub(r"\$(\d+)", repl, p)
-        for i, p in enumerate(parts)
-    )
+    return sqllex.sub(_PLACEHOLDER_RE, repl, sql)
 
 
 def execute_prepared(
@@ -325,7 +287,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
     m = _EXECUTE_RE.match(query)
     if m:
         name, arglist = m.groups()
-        args = _split_args(arglist) if arglist else []
+        args = sqllex.split(arglist or "")
         from ..sqlrun import execute_sql
 
         execute_sql(spark, substitute_prepared(spark, name, args))

@@ -14,7 +14,7 @@ transaction routing exactly as if submitted alone.
 Control flow — ``IF cond THEN ... [ELSIF cond THEN ...] [ELSE ...]
 END IF;`` and ``WHILE cond LOOP ... END LOOP;`` — IS supported
 (r12 verdict item 3): bodies are parsed into a statement tree at
-CREATE time (quote/comment-aware, CASE-aware condition scanning) and
+CREATE time (literal/comment-aware, CASE-aware condition scanning) and
 the tree is executed at CALL time, each leaf statement through the
 full dispatcher. Conditions are SQL boolean expressions over the
 substituted arguments (scalar subqueries allowed); they evaluate
@@ -35,8 +35,7 @@ captures the FIRST row positionally (no rows → NULLs, the non-STRICT
 plpgsql rule); ``FOR i IN [REVERSE] lo .. hi LOOP ... END LOOP;``
 iterates an integer range with ``i`` auto-declared for the loop's
 scope. Variable references substitute as ``CAST(<literal> AS <type>)``
-at each execution step — quote-aware, word-boundary, never inside
-string literals. ``SELECT ... INTO`` whose target is NOT a declared
+at each execution step — word-boundary, in code only. ``SELECT ... INTO`` whose target is NOT a declared
 variable stays plain SQL (the Redshift CTAS form, q94), exactly the
 plpgsql precedence. A variable may not shadow an argument name
 (arguments substitute once at CALL; the collision would be silent).
@@ -102,7 +101,7 @@ result sets. In-proc FETCH/CLOSE on a refcursor route to the registry
 by its value.
 
 ``name ALIAS FOR $n|target`` declarations (r14) resolve at CREATE by
-a quote-aware textual rewrite — a plpgsql alias is a true synonym,
+a textual rewrite of the code — a plpgsql alias is a true synonym,
 and an alias of an IN argument must collapse to the argument's
 one-shot CALL substitution; $n is 1-based over the full argument
 list. Aliases refuse in/with nested DECLARE blocks (the body-wide
@@ -124,11 +123,11 @@ by the call rolled back), the other levels PRINT the message — the
 notice channel is stdout, exactly where the reference CLI surfaces
 its own messages. A bare ``RETURN`` exits the procedure early.
 
-Argument substitution mirrors functions/prepared.py's quote-aware
-single-pass rule: identifiers matching an arg name are replaced by
-``CAST(<argtext> AS <type>)`` outside single-quoted literals only,
-each original occurrence rewritten exactly once (substituted text is
-never rescanned). Redshift's own pitfall — an argument named like a
+Argument substitution mirrors functions/prepared.py's single-pass
+rule: identifiers matching an arg name are replaced by
+``CAST(<argtext> AS <type>)`` in code only (never in a literal or
+comment, the :mod:`.sqllex` rule), each original occurrence rewritten
+exactly once (substituted text is never rescanned). Redshift's own pitfall — an argument named like a
 referenced column shadows it — carries over and is documented here.
 """
 
@@ -138,7 +137,8 @@ import re
 
 from pyspark.sql import SparkSession
 
-from .prepared import _spark_type, _split_args
+from . import sqllex
+from .prepared import _spark_type
 
 from ..sessionstate import session_state
 
@@ -161,7 +161,6 @@ _DROP_RE = re.compile(
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
-_DOLLAR_TAG_RE = re.compile(r"\$\w*\$")
 _BLOCK_RE = re.compile(
     # one outer plpgsql BEGIN...END wrapper; the lookahead keeps a
     # transaction-control `BEGIN;` body from matching as a block
@@ -184,6 +183,10 @@ _RAISE_RE = re.compile(
 _MAX_LOOP_ITERATIONS = 10_000
 
 _WORD_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+_RANGE_RE = re.compile(r"\.\.")
+# a depth-0 INTO that opens a variable list (not INSERT INTO's target)
+_INTO_RE = re.compile(r"(?:^|(?<=[\s)]))INTO\b", re.IGNORECASE)
+_DECLARE_WORD_RE = re.compile(r"\bDECLARE\b", re.IGNORECASE)
 
 
 def _parse_args(arglist: str) -> list[tuple[str, str, str]]:
@@ -195,9 +198,7 @@ def _parse_args(arglist: str) -> list[tuple[str, str, str]]:
     the Redshift channel (r14; OUT args are OMITTED from the CALL
     argument list, INOUT args are passed, exactly Redshift's rule)."""
     out: list[tuple[str, str, str]] = []
-    for item in _split_args(arglist):
-        if not item:
-            continue
+    for item in filter(None, sqllex.split(arglist)):
         parts = item.split()
         name = parts[0]
         rest = parts[1:]
@@ -217,75 +218,10 @@ def _norm_argspec(args) -> list[tuple[str, str, str]]:
     return [a if len(a) == 3 else (a[0], a[1], "IN") for a in args]
 
 
-def _skip_ws_comments(text: str, i: int) -> int:
-    """Advance past whitespace and ``--`` line comments."""
-    n = len(text)
-    while i < n:
-        if text[i].isspace():
-            i += 1
-        elif text[i : i + 2] == "--":
-            while i < n and text[i] != "\n":
-                i += 1
-        else:
-            break
-    return i
-
-
-def _blank_comments(text: str) -> str:
-    """Replace ``--`` and ``/* */`` comment spans with spaces, leaving
-    quoted literals intact — for scans that must not trip on keywords
-    inside comments (same length, so offsets stay valid)."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_quoted(text, i)
-            out.append(text[i:j])
-            i = j
-        elif text[i : i + 2] == "--":
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            out.append(" " * (j - i))
-            i = j
-        elif text[i : i + 2] == "/*":
-            # block comments NEST in PostgreSQL/plpgsql: track depth so
-            # the blanking consumes the whole outermost comment
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if text[j : j + 2] == "/*":
-                    depth, j = depth + 1, j + 2
-                elif text[j : j + 2] == "*/":
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-            out.append(" " * (j - i))
-            i = j
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _skip_quoted(text: str, i: int) -> int:
-    """``text[i]`` opens a ``'``/``"`` literal: return the index just
-    past its close (doubled-quote escape aware)."""
-    q, n = text[i], len(text)
-    i += 1
-    while i < n:
-        if text[i] == q:
-            if i + 1 < n and text[i + 1] == q:
-                i += 2
-                continue
-            return i + 1
-        i += 1
-    return n  # unterminated: consume to end; Spark will error on the text
-
-
 def _peek_word(text: str, i: int) -> tuple[str | None, int]:
     """Next word (uppercased) at/after ``i``, skipping whitespace and
     comments; (None, i) when the next token is not a word."""
-    i = _skip_ws_comments(text, i)
+    i = sqllex.skip_blank(text, i)
     m = _WORD_RE.match(text, i)
     if not m:
         return None, i
@@ -298,54 +234,19 @@ def _scan_expr_until(text: str, i: int, stops: frozenset[str]) -> tuple[str, str
     WHEN x THEN ...`` inside an IF condition must not end the
     condition at its own THEN/ELSE/END). Returns
     (expression text, stopword, index past the stopword)."""
-    n = len(text)
     depth = 0  # CASE ... END nesting
-    start = i
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_quoted(text, i)
-            continue
-        if text[i : i + 2] == "--":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        m = _WORD_RE.match(text, i)
-        if m:
-            w = m.group(0).upper()
-            if w == "CASE":
-                depth += 1
-            elif depth and w == "END":
-                depth -= 1
-            elif not depth and w in stops:
-                return text[start : i].strip(), w, m.end()
-            i = m.end()
-            continue
-        i += 1
+    for m in sqllex.finditer(text, _WORD_RE, i, top=False):
+        w = m.group(0).upper()
+        if w == "CASE":
+            depth += 1
+        elif depth and w == "END":
+            depth -= 1
+        elif not depth and w in stops:
+            return text[i : m.start()].strip(), w, m.end()
     raise ValueError(
-        f"expected one of {sorted(stops)} after {text[start:start + 60]!r} "
+        f"expected one of {sorted(stops)} after {text[i:i + 60]!r} "
         "in procedure body"
     )
-
-
-def _consume_statement(text: str, i: int) -> tuple[str, int]:
-    """Consume one plain SQL statement up to its top-level ``;``
-    (quote/comment-aware); the ``;`` is consumed but not included."""
-    n = len(text)
-    start = i
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_quoted(text, i)
-            continue
-        if text[i : i + 2] == "--":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        if ch == ";":
-            return text[start:i].strip(), i + 1
-        i += 1
-    return text[start:n].strip(), n  # final statement may omit its ';'
 
 
 _ASSIGN_RE = re.compile(r"^\s*([A-Za-z_]\w*)\s*:=\s*(.+)$", re.DOTALL)
@@ -353,22 +254,9 @@ _ASSIGN_RE = re.compile(r"^\s*([A-Za-z_]\w*)\s*:=\s*(.+)$", re.DOTALL)
 
 def _split_range(expr: str) -> tuple[str, str] | None:
     """Split a plpgsql FOR range ``lo .. hi`` at the first depth-0
-    ``..`` outside quotes; None when there is none (FOR-over-query)."""
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch in "'\"":
-            i = _skip_quoted(expr, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "." and not depth and expr[i : i + 2] == "..":
-            return expr[:i].strip(), expr[i + 2 :].strip()
-        i += 1
-    return None
+    ``..``; None when there is none (FOR-over-query)."""
+    m = sqllex.find(expr, _RANGE_RE)
+    return m and (expr[: m.start()].strip(), expr[m.end() :].strip())
 
 
 def _into_targets(stmt: str, variables: frozenset[str]) -> tuple[list[str], str] | None:
@@ -384,36 +272,20 @@ def _into_targets(stmt: str, variables: frozenset[str]) -> tuple[list[str], str]
     named v_total instead of assigning the variable."""
     if not re.match(r"\s*(SELECT|WITH)\b", stmt, re.IGNORECASE):
         return None
-    depth = 0
-    i, n = 0, len(stmt)
-    while i < n:
-        ch = stmt[i]
-        if ch in "'\"":
-            i = _skip_quoted(stmt, i)
+    for m in sqllex.finditer(stmt, _INTO_RE):
+        # WITH ... INSERT INTO tbl is a writable-CTE target, not a
+        # variable capture — skip INTO preceded by INSERT
+        if re.search(r"\bINSERT\s*$", stmt[: m.start()], re.IGNORECASE):
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif not depth:
-            m = re.match(r"\bINTO\b", stmt[i:], re.IGNORECASE)
-            # WITH ... INSERT INTO tbl is a writable-CTE target, not a
-            # variable capture — skip INTO preceded by INSERT
-            if m and re.search(r"\bINSERT\s*$", stmt[:i], re.IGNORECASE):
-                m = None
-            if m and i > 0 and re.search(r"[\s)]", stmt[i - 1]):
-                tail = stmt[i + m.end() - m.start() :]
-                tm = re.match(
-                    r"\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\b", tail
-                )
-                if not tm:
-                    return None
-                targets = [t.strip().lower() for t in tm.group(1).split(",")]
-                if not all(t in variables for t in targets):
-                    return None
-                rest = tail[tm.end() :]
-                return targets, stmt[:i] + " " + rest
-        i += 1
+        tm = re.match(
+            r"\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\b", stmt[m.end() :]
+        )
+        if not tm:
+            return None
+        targets = [t.strip().lower() for t in tm.group(1).split(",")]
+        if not all(t in variables for t in targets):
+            return None
+        return targets, stmt[: m.start()] + " " + stmt[m.end() + tm.end() :]
     return None
 
 
@@ -446,7 +318,7 @@ def _parse_block(
     items: list = []
     n = len(text)
     while True:
-        i = _skip_ws_comments(text, i)
+        i = sqllex.skip_blank(text, i)
         if i >= n:
             if stops:
                 raise ValueError(
@@ -499,7 +371,7 @@ def _parse_block(
                 text, k, frozenset({"END"}), variables | inner_names,
                 in_loop, allow_exception=True,
             )
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             inner = (
@@ -515,17 +387,17 @@ def _parse_block(
             # control (a plain SQL leaf); anything else opens a nested
             # plpgsql block, the only place an EXCEPTION section may
             # appear
-            k0 = _skip_ws_comments(text, j)
+            k0 = sqllex.skip_blank(text, j)
             w2, _ = _peek_word(text, j)
             if (k0 < n and text[k0] == ";") or w2 in ("WORK", "TRANSACTION"):
-                stmt, i = _consume_statement(text, i)
+                stmt, i = sqllex.statement(text, i)
                 items.append(("sql", stmt))
                 continue
             blk, _, k = _parse_block(
                 text, j, frozenset({"END"}), variables, in_loop,
                 allow_exception=True,
             )
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             if len(blk) == 1 and blk[0][0] == "block":
@@ -535,7 +407,7 @@ def _parse_block(
             i = k
             continue
         if word == "EXECUTE":
-            stmt, i = _consume_statement(text, j)
+            stmt, i = sqllex.statement(text, j)
             expr, targets = _split_execute_into(stmt, variables)
             items.append(("execute", expr, targets))
             continue
@@ -544,7 +416,7 @@ def _parse_block(
                 raise ValueError(
                     f"{word} outside a LOOP (labels are not supported)"
                 )
-            stmt, i = _consume_statement(text, j)
+            stmt, i = sqllex.statement(text, j)
             cond = None
             if stmt:
                 wm = re.match(r"\s*WHEN\b(.*)$", stmt,
@@ -558,7 +430,7 @@ def _parse_block(
             items.append((word.lower(), cond))
             continue
         if word == "RAISE":
-            stmt, i = _consume_statement(text, i)
+            stmt, i = sqllex.statement(text, i)
             rm = _RAISE_RE.match(stmt)
             if rm is None:
                 raise NotImplementedError(
@@ -570,7 +442,7 @@ def _parse_block(
             level = (rm.group(1) or "EXCEPTION").upper()
             fmt = rm.group(2)[1:-1].replace("''", "'")
             argtext = rm.group(3)
-            args = _split_args(argtext) if argtext and argtext.strip() else []
+            args = sqllex.split(argtext or "")
             if fmt.replace("%%", "").count("%") != len(args):
                 raise ValueError(
                     f"RAISE format {fmt!r} has "
@@ -580,7 +452,7 @@ def _parse_block(
             items.append(("raise", level, fmt, args))
             continue
         if word == "RETURN":
-            stmt, i = _consume_statement(text, j)
+            stmt, i = sqllex.statement(text, j)
             if stmt.strip():
                 raise NotImplementedError(
                     "procedures return nothing; only a bare RETURN "
@@ -614,7 +486,7 @@ def _parse_block(
             w2, k = _peek_word(text, k)
             if w2 != "IF":
                 raise ValueError("IF block must close with END IF")
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             items.append(("if", branches, else_items))
@@ -628,7 +500,7 @@ def _parse_block(
             w2, k = _peek_word(text, k)
             if w2 != "LOOP":
                 raise ValueError("WHILE block must close with END LOOP")
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             items.append(("while", cond, blk))
@@ -641,7 +513,7 @@ def _parse_block(
             w2, k = _peek_word(text, k)
             if w2 != "LOOP":
                 raise ValueError("LOOP block must close with END LOOP")
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             items.append(("while", "TRUE", blk))
@@ -676,7 +548,7 @@ def _parse_block(
                 w2, k = _peek_word(text, k)
                 if w2 != "LOOP":
                     raise ValueError("FOR block must close with END LOOP")
-                k = _skip_ws_comments(text, k)
+                k = sqllex.skip_blank(text, k)
                 if k < n and text[k] == ";":
                     k += 1
                 items.append(("forq", var.lower(), rng, blk))
@@ -689,13 +561,13 @@ def _parse_block(
             w2, k = _peek_word(text, k)
             if w2 != "LOOP":
                 raise ValueError("FOR block must close with END LOOP")
-            k = _skip_ws_comments(text, k)
+            k = sqllex.skip_blank(text, k)
             if k < n and text[k] == ";":
                 k += 1
             items.append(("for", var.lower(), parts[0], parts[1], reverse, blk))
             i = k
             continue
-        stmt, i = _consume_statement(text, i)
+        stmt, i = sqllex.statement(text, i)
         if not stmt:
             continue
         if word in ("OPEN", "FETCH", "CLOSE"):
@@ -776,42 +648,25 @@ def _parse_cursor_stmt(word: str, stmt: str, variables: frozenset[str]):
 def _split_execute_into(stmt: str, variables: frozenset[str]):
     """Split a dynamic ``EXECUTE <string expr> [INTO v1[, v2 ...]]``
     statement (the text AFTER the EXECUTE keyword) into
-    (command_expression, targets | None). The INTO keyword is scanned
-    depth-0 outside quotes, so INTO inside the command string itself
-    (e.g. ``'INSERT INTO t ...'``) never splits."""
-    depth = 0
-    i, n = 0, len(stmt)
-    while i < n:
-        ch = stmt[i]
-        if ch in "'\"":
-            i = _skip_quoted(stmt, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif not depth:
-            m = re.match(r"\bINTO\b", stmt[i:], re.IGNORECASE)
-            if m and (i == 0 or re.search(r"[\s)]", stmt[i - 1])):
-                tail = stmt[i + (m.end() - m.start()):]
-                tm = re.match(
-                    r"\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*$", tail
-                )
-                if not tm:
-                    raise ValueError(
-                        f"EXECUTE ... INTO takes a variable list; got "
-                        f"{tail[:40]!r}"
-                    )
-                targets = [t.strip().lower() for t in tm.group(1).split(",")]
-                bad = [t for t in targets if t not in variables]
-                if bad:
-                    raise ValueError(
-                        f"EXECUTE ... INTO target(s) {bad} are not "
-                        "declared variables"
-                    )
-                return stmt[:i].strip(), targets
-        i += 1
-    return stmt.strip(), None
+    (command_expression, targets | None). Only a depth-0 INTO in code
+    splits, so INTO inside the command string itself (e.g. ``'INSERT
+    INTO t ...'``) never does."""
+    m = sqllex.find(stmt, _INTO_RE)
+    if m is None:
+        return stmt.strip(), None
+    tail = stmt[m.end() :]
+    tm = re.match(r"\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*$", tail)
+    if not tm:
+        raise ValueError(
+            f"EXECUTE ... INTO takes a variable list; got {tail[:40]!r}"
+        )
+    targets = [t.strip().lower() for t in tm.group(1).split(",")]
+    bad = [t for t in targets if t not in variables]
+    if bad:
+        raise ValueError(
+            f"EXECUTE ... INTO target(s) {bad} are not declared variables"
+        )
+    return stmt[: m.start()].strip(), targets
 
 
 def _parse_body(text: str, variables: frozenset[str] = frozenset()) -> list:
@@ -946,8 +801,7 @@ def _literal(value, sparktype: str) -> str:
 
 def _substitute_vars(text: str, vars: dict[str, tuple[str, object]]) -> str:
     """Replace declared-variable references with their CURRENT value as
-    a typed literal — same quote-aware single-pass rule as argument
-    substitution (never inside string literals)."""
+    a typed literal — the single-pass rule of argument substitution."""
     by_name = {
         v: _literal(val, t)
         for v, (t, val) in vars.items()
@@ -955,25 +809,22 @@ def _substitute_vars(text: str, vars: dict[str, tuple[str, object]]) -> str:
         # namespaces (their r.field entries substitute), not values
         if t not in ("CURSOR", "RECORD")
     }
+    return _sub_names(text, by_name)
+
+
+def _sub_names(text: str, by_name: dict[str, str]) -> str:
+    """Replace each whole-word reference to a ``by_name`` key (lower
+    case) in the code of ``text`` with its value, in one pass: the
+    substituted text is never rescanned."""
     if not by_name:
         return text
     # longest name first: a record binding "r.total" must win over a
     # scalar "r" when both are in scope
+    names = sorted(by_name, key=len, reverse=True)
     pat = re.compile(
-        r"\b("
-        + "|".join(
-            re.escape(v) for v in sorted(by_name, key=len, reverse=True)
-        )
-        + r")\b",
-        re.IGNORECASE,
+        r"\b(" + "|".join(map(re.escape, names)) + r")\b", re.IGNORECASE
     )
-    parts = re.split(r"('(?:[^']|'')*')", text)
-    return "".join(
-        p
-        if i % 2
-        else pat.sub(lambda m: by_name[m.group(1).lower()], p)
-        for i, p in enumerate(parts)
-    )
+    return sqllex.sub(pat, lambda m: by_name[m.group(1).lower()], text)
 
 
 def _eval_scalar(spark: SparkSession, sql: str):
@@ -1531,18 +1382,6 @@ def _exec_items_inner(spark, items, vars) -> int:
         sig.count += n
         raise
     return n
-def _quote_aware_sub(text: str, mapping: dict[str, str]) -> str:
-    """Word-boundary name rewrite that never touches string literals
-    (the same odd-indices-are-quoted split _substitute_args uses)."""
-    pat = re.compile(
-        r"\b(" + "|".join(re.escape(k) for k in mapping) + r")\b",
-        re.IGNORECASE,
-    )
-    parts = re.split(r"('(?:[^']|'')*')", text)
-    return "".join(
-        p if i % 2 else pat.sub(lambda m: mapping[m.group(1).lower()], p)
-        for i, p in enumerate(parts)
-    )
 
 
 def _resolve_aliases(args, declares, aliases, body):
@@ -1582,15 +1421,9 @@ def _resolve_aliases(args, declares, aliases, body):
             )
         mapping[new] = tgt
     # top-level DECLARE was already split off, so any DECLARE keyword
-    # left in the body (outside quotes AND outside comments — r14
-    # advisor: a -- or /* */ comment merely mentioning DECLARE must
-    # not refuse) opens a nested block
-    parts = re.split(r"('(?:[^']|'')*')", _blank_comments(body))
-    if any(
-        re.search(r"\bDECLARE\b", p, re.IGNORECASE)
-        for i, p in enumerate(parts)
-        if i % 2 == 0
-    ):
+    # left in the body's code (a comment merely mentioning DECLARE
+    # must not refuse) opens a nested block
+    if sqllex.find(body, _DECLARE_WORD_RE, top=False):
         raise NotImplementedError(
             "ALIAS combined with nested DECLARE blocks is not "
             "supported: aliases resolve by a body-wide textual "
@@ -1598,9 +1431,9 @@ def _resolve_aliases(args, declares, aliases, body):
             "name would silently hollow — inline the alias or drop "
             "the nested block"
         )
-    body = _quote_aware_sub(body, mapping)
+    body = _sub_names(body, mapping)
     declares = [
-        (v, t, None if d is None else _quote_aware_sub(d, mapping))
+        (v, t, None if d is None else _sub_names(d, mapping))
         for v, t, d in declares
     ]
     return body, declares
@@ -1608,25 +1441,18 @@ def _resolve_aliases(args, declares, aliases, body):
 
 def _parse_create(query: str):
     """CREATE [OR REPLACE] PROCEDURE name(args) AS $tag$ body $tag$
-    [LANGUAGE plpgsql] — paren-depth arg scan (types like varchar(20)
-    contain parens), backreference-matched dollar tag."""
+    [LANGUAGE plpgsql] (argument types like varchar(20) contain
+    parens)."""
     m = _CREATE_HEAD_RE.match(query)
     if not m:
         return None
     replace = bool(m.group(1))
     name = m.group(2)
-    i, depth, n = m.end(), 1, len(query)
-    start = i
-    while i < n and depth:
-        if query[i] == "(":
-            depth += 1
-        elif query[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = sqllex.close_paren(query, m.end() - 1)
+    if close is None:
         raise ValueError(f"unbalanced parentheses in {query[:80]!r}")
-    arglist = query[start : i - 1]
-    rest = query[i:]
+    arglist = query[m.end() : close]
+    rest = query[close + 1 :]
     m2 = re.match(r"\s*AS\s+", rest, re.IGNORECASE)
     if not m2:
         raise ValueError(
@@ -1634,7 +1460,7 @@ def _parse_create(query: str):
             f"{rest[:60]!r}"
         )
     rest = rest[m2.end() :]
-    mt = _DOLLAR_TAG_RE.match(rest)
+    mt = sqllex.DOLLAR_TAG_RE.match(rest)
     if not mt:
         raise NotImplementedError(
             "only dollar-quoted procedure bodies ($$...$$ / $tag$...$tag$) "
@@ -1720,7 +1546,7 @@ def _parse_declare_items(sec: str) -> list[tuple[str, str, str | None]]:
     decls: list[tuple[str, str, str | None]] = []
     j = 0
     while j < len(sec):
-        item, j = _consume_statement(sec, j)
+        item, j = sqllex.statement(sec, j)
         if not item:
             continue
         cm = _DECLARE_CURSOR_RE.match(item)
@@ -1819,27 +1645,14 @@ def create_procedure(
 def _substitute_args(
     argspec: list[tuple[str, str]], argtexts: list[str], text: str
 ) -> str:
-    """Quote-aware single-pass argument substitution over any body
-    text (procedure body or a variable default expression).
-    ``argspec`` here is the IN-args-only (name, type) pairing —
-    OUT/INOUT arguments are runtime variables, never textual."""
-    if not argspec:
-        return text
-    by_name = {
+    """Single-pass argument substitution over any body text
+    (procedure body or a variable default expression). ``argspec``
+    here is the IN-args-only (name, type) pairing — OUT/INOUT
+    arguments are runtime variables, never textual."""
+    return _sub_names(text, {
         aname: f"CAST({atext} AS {atype})"
         for (aname, atype), atext in zip(argspec, argtexts)
-    }
-    pat = re.compile(
-        r"\b(" + "|".join(re.escape(a) for a in by_name) + r")\b",
-        re.IGNORECASE,
-    )
-    parts = re.split(r"('(?:[^']|'')*')", text)  # odd indices = quoted
-    return "".join(
-        p
-        if i % 2
-        else pat.sub(lambda m: by_name[m.group(1).lower()], p)
-        for i, p in enumerate(parts)
-    )
+    })
 
 
 def _call_parts(entry, name, argtexts):
@@ -1872,7 +1685,7 @@ def _call_parts(entry, name, argtexts):
 
 def substitute_call(spark: SparkSession, name: str, argtexts: list[str]) -> str:
     """Resolve CALL to the procedure body with named IN args
-    substituted — quote-aware, single pass, word-boundary identifier
+    substituted — in code only, single pass, word-boundary identifier
     match. OUT/INOUT args stay as identifiers (runtime variables)."""
     entry = _procs(spark).get(name.lower())
     if entry is None:
@@ -2016,7 +1829,7 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
     if m:
         name, arglist = m.groups()
         call_procedure(
-            spark, name, _split_args(arglist) if arglist.strip() else []
+            spark, name, sqllex.split(arglist)
         )
         return True
     m = _DROP_RE.match(query)

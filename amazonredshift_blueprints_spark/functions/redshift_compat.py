@@ -53,6 +53,8 @@ from __future__ import annotations
 
 import re
 
+from . import sqllex
+
 # Redshift DATEDIFF counts *boundary crossings* of the unit, not elapsed
 # intervals. For each unit, a Spark expression with identical semantics.
 _DATEDIFF_TEMPLATES = {
@@ -78,65 +80,14 @@ _UNIT_ALIASES = {
 }
 
 
-def _split_two_args(body: str) -> tuple[str, str] | None:
-    """Split ``a, b`` at the top-level comma (paren- and quote-aware)."""
-    depth = 0
-    in_str: str | None = None
-    for i, ch in enumerate(body):
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return body[:i].strip(), body[i + 1 :].strip()
-    return None
-
-
-def _inside_string(sql: str, pos: int) -> bool:
-    """True if ``pos`` falls inside a single- or double-quoted literal."""
-    in_str: str | None = None
-    for i in range(pos):
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-    return in_str is not None
-
-
 def _find_call(sql: str, func: str, start: int = 0) -> tuple[int, int, str] | None:
     """Locate ``func( ... )`` returning (start, end, inner) with balanced parens."""
     pat = re.compile(rf"\b{func}\s*\(", re.IGNORECASE)
-    m = pat.search(sql, start)
-    while m and _inside_string(sql, m.start()):
-        m = pat.search(sql, m.end())
-    if not m:
+    m = sqllex.find(sql, pat, start, top=False)
+    close = None if m is None else sqllex.close_paren(sql, m.end() - 1)
+    if close is None:
         return None
-    depth = 1
-    i = m.end()
-    in_str: str | None = None
-    while i < len(sql) and depth:
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return m.start(), i, sql[m.end() : i - 1]
+    return m.start(), close + 1, sql[m.end() : close]
 
 
 # Oracle-style TO_CHAR date patterns → java.time format letters. Ordered
@@ -188,37 +139,34 @@ def _translate_datetime_format(fmt: str) -> str | None:
     return "".join(out)
 
 
-def _split_args(body: str) -> list[str]:
-    """Split a call body at top-level commas (paren- and quote-aware)."""
-    args = []
-    rest = body
-    while True:
-        two = _split_two_args(rest)
-        if two is None:
-            args.append(rest.strip())
-            return args
-        args.append(two[0])
-        rest = two[1]
-
-
 def _rewrite_calls(sql: str, func: str, fn) -> str:
     """Rewrite every ``func(...)`` call site with ``fn(args) -> str|None``.
 
     ``fn`` returns the replacement expression, or None to leave the call
-    site untouched (unparseable / out-of-scope arity). String literals are
-    never rewritten (_find_call skips them)."""
+    site untouched (unparseable / out-of-scope arity). Literals and
+    comments are never rewritten (_find_call skips them)."""
     pos = 0
     while True:
         hit = _find_call(sql, func, pos)
         if hit is None:
             return sql
         s, e, inner = hit
-        repl = fn(_split_args(inner))
+        repl = fn(sqllex.split(inner))
         if repl is None:
             pos = e
             continue
         sql = sql[:s] + repl + sql[e:]
         pos = s + len(repl)
+
+
+def _datediff_call(args: list[str]) -> str | None:
+    """DATEDIFF(unit, start, end) → the unit's Spark expression; the
+    two-arg Spark datediff and unknown units pass through."""
+    if len(args) != 3:
+        return None
+    unit = args[0].strip("'\" ").lower()
+    template = _DATEDIFF_TEMPLATES.get(_UNIT_ALIASES.get(unit, unit))
+    return template and template.format(start=args[1], end=args[2])
 
 
 def _len_call(args: list[str]) -> str | None:
@@ -306,28 +254,6 @@ def _to_parse_call(spark_fn: str):
     return call
 
 
-def _find_top_level(sql: str, pattern: re.Pattern) -> re.Match | None:
-    """First match at paren depth 0 and outside string literals."""
-    depth = 0
-    in_str: str | None = None
-    depths = []  # depth before each position
-    for ch in sql:
-        depths.append(depth if in_str is None else -1)
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-    for m in pattern.finditer(sql):
-        if depths[m.start()] == 0:
-            return m
-    return None
-
-
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
 _TAIL_RE = re.compile(r"\bORDER\s+BY\b|\bLIMIT\b", re.IGNORECASE)
@@ -347,15 +273,15 @@ def _rewrite_qualify(sql: str) -> str:
     selects are skipped because adding the hidden column would change the
     dedup key.
     """
-    m = _find_top_level(sql, _QUALIFY_RE)
+    m = sqllex.find(sql, _QUALIFY_RE)
     if m is None or _DISTINCT_HEAD_RE.match(sql):
         return sql
     head = sql[: m.start()].rstrip()
     rest = sql[m.end():]
-    fm = _find_top_level(head, _FROM_RE)
+    fm = sqllex.find(head, _FROM_RE)
     if fm is None:
         return sql
-    tm = _find_top_level(rest, _TAIL_RE)
+    tm = sqllex.find(rest, _TAIL_RE)
     pred = (rest[: tm.start()] if tm else rest).strip()
     tail = " " + rest[tm.start():].strip() if tm else ""
     inner = f"{head[: fm.start()].rstrip()}, ({pred}) AS __qualify {head[fm.start():]}"
@@ -379,7 +305,7 @@ def _rewrite_create_like(sql: str) -> str:
     DEFAULTS])`` → Spark's unparenthesized ``CREATE TABLE t2 LIKE t1``.
     The DEFAULTS modifier is dropped: the session catalog has no column
     defaults to copy either way (same no-op class as DISTSTYLE)."""
-    return _CREATE_LIKE_RE.sub(r"\1LIKE \2", sql)
+    return sqllex.sub(_CREATE_LIKE_RE, r"\1LIKE \2", sql)
 
 
 def _rewrite_top(sql: str) -> str:
@@ -451,8 +377,6 @@ def _rewrite_similar_to(sql: str) -> str:
     string parser consumes one level of escaping."""
 
     def repl(m: re.Match) -> str:
-        if _inside_string(sql, m.start()):
-            return m.group(0)
         if re.match(r"\s+ESCAPE\b", sql[m.end():], re.IGNORECASE):
             return m.group(0)  # custom escape char: do not guess
         raw = m.group(2)[1:-1].replace("''", "'")
@@ -460,7 +384,7 @@ def _rewrite_similar_to(sql: str) -> str:
         lit = rx.replace("\\", "\\\\").replace("'", "''")
         return f"{'NOT ' if m.group(1) else ''}RLIKE '{lit}'"
 
-    return _SIMILAR_TO_RE.sub(repl, sql)
+    return sqllex.sub(_SIMILAR_TO_RE, repl, sql)
 
 
 _OVER_OPEN_RE = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
@@ -486,34 +410,17 @@ def _rewrite_ratio_to_report(sql: str) -> str:
             return sql
         s, e, inner = hit
         m = _OVER_OPEN_RE.match(sql, e)
-        if m is None:
+        close = None if m is None else sqllex.close_paren(sql, m.end() - 1)
+        if close is None:
             pos = e
             continue
-        depth = 1
-        i = m.end()
-        in_str: str | None = None
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            pos = e
-            continue
-        win = sql[m.end() : i - 1]
+        win = sql[m.end() : close]
         x = inner.strip()
         repl = (
             f"(CAST({x} AS DOUBLE) / "
             f"nullif(CAST(SUM({x}) OVER ({win}) AS DOUBLE), 0))"
         )
-        sql = sql[:s] + repl + sql[i:]
+        sql = sql[:s] + repl + sql[close + 1 :]
         pos = s + len(repl)
 
 
@@ -560,15 +467,18 @@ _SORTKEY_COLS_RE = re.compile(
 
 
 def _record_sortkey(sql: str) -> None:
-    m = _CREATE_TABLE_RE.search(sql)
-    if m is None or _inside_string(sql, m.start()):
-        return
-    sk = _SORTKEY_COLS_RE.search(sql)
-    if sk is None or _inside_string(sql, sk.start()):
+    m = sqllex.find(sql, _CREATE_TABLE_RE, top=False)
+    sk = m and sqllex.find(sql, _SORTKEY_COLS_RE, top=False)
+    if sk is None:
         return
     cols = [c.strip().strip('"').lower() for c in sk.group(1).split(",") if c.strip()]
     if cols:
         SORTKEY_REGISTRY[m.group(1).lower()] = cols
+
+
+_BLANKS_RE = re.compile(r"[ \t]{2,}")
+_BLANK_BEFORE_RE = re.compile(r"[ \t]+([,)])")
+_BLANK_EOL_RE = re.compile(r"[ \t]+(\n|$)")
 
 
 def _strip_layout_clauses(sql: str) -> str:
@@ -576,23 +486,14 @@ def _strip_layout_clauses(sql: str) -> str:
     SQL without such clauses passes through byte-identical; a stripped
     SORTKEY is recorded in :data:`SORTKEY_REGISTRY` for VACUUM."""
     _record_sortkey(sql)
-    stripped = False
+    out = sql
     for pat in _LAYOUT_CLAUSES:
-        out = []
-        pos = 0
-        for m in pat.finditer(sql):
-            if _inside_string(sql, m.start()):
-                continue
-            out.append(sql[pos : m.start()])
-            pos = m.end()
-            stripped = True
-        out.append(sql[pos:])
-        sql = "".join(out)
-    if not stripped:
+        out = sqllex.sub(pat, "", out)
+    if out == sql:
         return sql
-    sql = re.sub(r"[ \t]{2,}", " ", sql)
-    sql = re.sub(r"[ \t]+([,)])", r"\1", sql)  # "INT ," after a strip → "INT,"
-    return re.sub(r"[ \t]+(\n|$)", r"\1", sql)
+    out = sqllex.sub(_BLANKS_RE, " ", out)
+    out = sqllex.sub(_BLANK_BEFORE_RE, r"\1", out)  # "INT ," after a strip → "INT,"
+    return sqllex.sub(_BLANK_EOL_RE, r"\1", out)
 
 
 _EXTERNAL_TABLE_HEAD_RE = re.compile(
@@ -624,22 +525,15 @@ def _rewrite_external_table(sql: str) -> str:
     place table object, pointed at whatever filesystem Spark reaches.
     TEXTFILE maps to the CSV reader with the declared delimiter
     (Redshift's delimited-text default)."""
-    m = _EXTERNAL_TABLE_HEAD_RE.search(sql)
-    if m is None or _inside_string(sql, m.start()):
+    m = sqllex.find(sql, _EXTERNAL_TABLE_HEAD_RE, top=False)
+    if m is None:
         return sql
     name = m.group(1)
-    # balanced-paren walk for the column list: types carry (n) / (p,s)
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = sqllex.close_paren(sql, m.end() - 1)
+    if close is None:
         raise ValueError("CREATE EXTERNAL TABLE: unbalanced column list")
-    cols = "(" + sql[m.end():i]
-    tm = _EXTERNAL_TAIL_RE.match(sql[i:])
+    cols = sql[m.end() - 1 : close + 1]
+    tm = _EXTERNAL_TAIL_RE.match(sql[close + 1 :])
     if tm is None:
         raise ValueError("CREATE EXTERNAL TABLE requires LOCATION '<path>'")
     middle, location = tm.groups()
@@ -653,17 +547,7 @@ def _rewrite_external_table(sql: str) -> str:
     part_m = _PARTITIONED_BY_RE.search(middle)
     partitioned_by = ""
     if part_m:
-        # split on top-level commas only — DECIMAL(10,2) etc. nest one
-        pcols, depth, cur = [], 0, []
-        for ch in part_m.group(1):
-            if ch == "," and depth == 0:
-                pcols.append("".join(cur).strip())
-                cur = []
-            else:
-                depth += (ch == "(") - (ch == ")")
-                cur.append(ch)
-        pcols.append("".join(cur).strip())
-        pcols = [c for c in pcols if c]
+        pcols = [c for c in sqllex.split(part_m.group(1)) if c]
         pnames = [c.split()[0].strip('"') for c in pcols]
         cols = cols.rstrip()[:-1].rstrip() + ", " + ", ".join(pcols) + ")"
         partitioned_by = f" PARTITIONED BY ({', '.join(pnames)})"
@@ -706,12 +590,10 @@ def _strip_no_schema_binding(sql: str) -> str:
     session catalog anyway — late binding is the only binding there —
     so the clause is semantically a no-op, merely unparseable. Only the
     statement-final position is rewritten (the clause cannot appear
-    elsewhere), so text inside string literals is never touched."""
+    elsewhere), and never inside a literal or comment."""
     if not re.match(r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\b", sql, re.IGNORECASE):
         return sql
-    if _inside_string(sql, len(sql.rstrip()) - 1):
-        return sql
-    return _NO_SCHEMA_BINDING_RE.sub(r"\1", sql)
+    return sqllex.sub(_NO_SCHEMA_BINDING_RE, r"\1", sql)
 
 
 _SELECT_INTO_HEAD_RE = re.compile(r"^\s*SELECT\b", re.IGNORECASE)
@@ -736,10 +618,10 @@ def _rewrite_select_into(sql: str) -> str:
     rewrites — ``INSERT INTO`` and subquery text never match."""
     if _SELECT_INTO_HEAD_RE.match(sql) is None:
         return sql
-    m = _find_top_level(sql, _INTO_RE)
+    m = sqllex.find(sql, _INTO_RE)
     if m is None:
         return sql
-    f = _find_top_level(sql, _FROM_TOP_RE)
+    f = sqllex.find(sql, _FROM_TOP_RE)
     if f is not None and f.start() < m.start():
         return sql  # INTO belongs to something after FROM; not ours
     is_temp, target = bool(m.group(1)), m.group(2)
@@ -764,49 +646,16 @@ _FETCH_FIRST_RE = re.compile(
 _OFFSET_ROWS_RE = re.compile(r"\bOFFSET\s+(\d+)\s+ROWS?\b", re.IGNORECASE)
 
 
-def _sub_outside_strings(sql: str, pattern: re.Pattern, repl) -> str:
-    """re.sub, but matches starting inside string literals are left
-    verbatim (r11 advisor: the blind form corrupted a FETCH FIRST
-    pattern inside a literal — same hazard _rewrite_select_into's
-    _find_top_level scan already avoids)."""
-    depths = _depth_string_map(sql)
-    out, pos = [], 0
-    while True:
-        m = next(
-            (
-                mm
-                for mm in pattern.finditer(sql, pos)
-                if depths[mm.start()] != -1
-            ),
-            None,
-        )
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        out.append(sql[pos : m.start()])
-        out.append(repl(m))
-        pos = m.end()
-
-
 def _rewrite_fetch_first(sql: str) -> str:
     """ANSI row-limit spellings Redshift accepts but Spark doesn't:
     ``OFFSET k ROWS FETCH FIRST|NEXT n ROWS ONLY`` → ``LIMIT n OFFSET
     k`` (Spark's parser demands LIMIT before OFFSET, so the clause
     pair is REORDERED, not just substituted); bare ``FETCH FIRST n
     ROWS ONLY`` → ``LIMIT n``; bare ``OFFSET k ROWS`` drops the ROWS
-    keyword Spark's OFFSET does not take. String literals never
-    rewrite (the quote-aware scan shared with the PartiQL rewrite)."""
-    sql = _sub_outside_strings(
-        sql,
-        _OFFSET_FETCH_RE,
-        lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}",
-    )
-    sql = _sub_outside_strings(
-        sql, _FETCH_FIRST_RE, lambda m: f"LIMIT {m.group(1)}"
-    )
-    return _sub_outside_strings(
-        sql, _OFFSET_ROWS_RE, lambda m: f"OFFSET {m.group(1)}"
-    )
+    keyword Spark's OFFSET does not take."""
+    sql = sqllex.sub(_OFFSET_FETCH_RE, r"LIMIT \2 OFFSET \1", sql)
+    sql = sqllex.sub(_FETCH_FIRST_RE, r"LIMIT \1", sql)
+    return sqllex.sub(_OFFSET_ROWS_RE, r"OFFSET \1", sql)
 
 
 _FROM_CLAUSE_END_RE = re.compile(
@@ -823,22 +672,7 @@ _REL_ALIAS_RE = re.compile(
 )
 
 
-def _depth_string_map(sql: str) -> list[int]:
-    """Per-position paren depth, -1 inside string literals (the
-    _find_top_level scan, reusable for slicing)."""
-    depth, in_str, out = 0, None, []
-    for ch in sql:
-        out.append(depth if in_str is None else -1)
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-    return out
+_OPEN_PAREN_RE = re.compile(r"\(")
 
 
 def _rewrite_partiql_unnest(sql: str) -> str:
@@ -857,40 +691,26 @@ def _rewrite_partiql_unnest(sql: str) -> str:
     and parenthesized bodies — CTE definitions, derived tables, IN/
     EXISTS subqueries — are recursed into (r12 advisor: CTE-heavy SQL
     is the Redshift norm; 'first top-level FROM only' missed those).
-    Paren-depth + string-aware slicing throughout (literals never
-    match). Column TYPE is Spark's business at analysis time: a real
+    Column TYPE is Spark's business at analysis time: a real
     array explodes; a JSON-string SUPER needs an explicit cast/
     from_json first (the q51 VARIANT path), same as any engine that
     stores SUPER as text."""
     # recurse into each top-level parenthesized body first — a CTE
     # body or subquery is just a smaller statement with its own FROMs
-    depths = _depth_string_map(sql)
     pieces: list[str] = []
-    last = i = 0
-    n = len(sql)
-    while i < n:
-        if sql[i] == "(" and depths[i] == 0:
-            j = next(
-                (k for k in range(i + 1, n)
-                 if sql[k] == ")" and depths[k] == 1),
-                None,
-            )
-            if j is None:  # unbalanced: leave the tail untouched
-                break
-            pieces.append(sql[last : i + 1])
-            pieces.append(_rewrite_partiql_unnest(sql[i + 1 : j]))
-            last = i = j
-        i += 1
+    last = 0
+    for m in sqllex.finditer(sql, _OPEN_PAREN_RE):
+        j = sqllex.close_paren(sql, m.start())
+        if j is None:  # unbalanced: leave the tail untouched
+            break
+        pieces.append(sql[last : m.end()])
+        pieces.append(_rewrite_partiql_unnest(sql[m.end() : j]))
+        last = j
     pieces.append(sql[last:])
     sql = "".join(pieces)
     # then rewrite every depth-0 FROM at this level, right-to-left so
     # earlier match offsets stay valid after each splice
-    depths = _depth_string_map(sql)
-    starts = [
-        mm.end()
-        for mm in _FROM_TOP_RE.finditer(sql)
-        if depths[mm.start()] == 0
-    ]
+    starts = [mm.end() for mm in sqllex.finditer(sql, _FROM_TOP_RE)]
     for start in reversed(starts):
         sql = _rewrite_one_from_clause(sql, start)
     return sql
@@ -900,26 +720,9 @@ def _rewrite_one_from_clause(sql: str, start: int) -> str:
     """Rewrite the PartiQL unnest items of the FROM clause beginning at
     ``start`` (the index just past the FROM keyword); returns ``sql``
     unchanged when the clause has none."""
-    depths = _depth_string_map(sql)
-    end = next(
-        (
-            mm.start()
-            for mm in _FROM_CLAUSE_END_RE.finditer(sql, start)
-            if depths[mm.start()] == 0
-        ),
-        len(sql),
-    )
-    clause = sql[start:end]
-    # split on depth-0 commas relative to the clause
-    items, buf = [], []
-    cdepths = _depth_string_map(clause)
-    for i, ch in enumerate(clause):
-        if ch == "," and cdepths[i] == 0:
-            items.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    items.append("".join(buf))
+    m = sqllex.find(sql, _FROM_CLAUSE_END_RE, start)
+    end = len(sql) if m is None else m.start()
+    items = sqllex.split(sql[start:end])
     if len(items) < 2:
         return sql
     known: set[str] = set()
@@ -956,7 +759,7 @@ def _rewrite_one_from_clause(sql: str, start: int) -> str:
             kept.append(item)
     if not laterals:
         return sql
-    new_clause = ",".join(kept) + "".join(laterals) + " "
+    new_clause = " " + ", ".join(kept) + "".join(laterals) + " "
     return sql[:start] + new_clause + sql[end:]
 
 
@@ -966,7 +769,7 @@ def _rewrite_one_from_clause(sql: str, start: int) -> str:
 # rewrites ONLY after `::` or a cast's `AS` (bare TEXT/CHAR are too
 # collision-prone as words, and DDL VARCHAR(n) is native); the width
 # aliases (int2/int4/int8/float4/float8/bpchar) rewrite ANYWHERE
-# outside string literals — they are type reserved words in every PG
+# in code — they are type reserved words in every PG
 # dialect and also appear in DDL column lists (CREATE TABLE (id
 # INT8), ALTER ... ADD COLUMN x FLOAT8), where the cast-position scan
 # missed them (round-12 battery finding).
@@ -1009,19 +812,17 @@ def _cast_inner_string_types(fn_name: str):
 
 
 def _rewrite_pg_types(sql: str) -> str:
-    sql = _sub_outside_strings(
-        sql,
+    sql = sqllex.sub(
         _PG_COLON_CAST_RE,
         lambda m: m.group(1) + _PG_TYPE_MAP[m.group(2).lower()],
+        sql,
     )
     sql = _rewrite_calls(sql, "CAST", _cast_inner_string_types("CAST"))
     sql = _rewrite_calls(
         sql, "TRY_CAST", _cast_inner_string_types("TRY_CAST")
     )
-    return _sub_outside_strings(
-        sql,
-        _PG_WIDTH_RE,
-        lambda m: _PG_TYPE_MAP[m.group(1).lower()],
+    return sqllex.sub(
+        _PG_WIDTH_RE, lambda m: _PG_TYPE_MAP[m.group(1).lower()], sql
     )
 
 
@@ -1156,8 +957,30 @@ def _strip_drop_cascade(sql: str) -> str:
     return f"{m.group(1)}{m.group(2)}" if m else sql
 
 
+# GETDATE() / SYSDATE → current_timestamp()
+_NOW_RE = re.compile(r"\bGETDATE\s*\(\s*\)|\bSYSDATE\b", re.IGNORECASE)
+# APPROXIMATE COUNT(DISTINCT x) → approx_count_distinct(x)
+_APPROX_COUNT_RE = re.compile(
+    r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\s+(.*?)\)", re.IGNORECASE
+)
+# APPROXIMATE PERCENTILE_DISC(f) WITHIN GROUP (...) — Redshift's other
+# APPROXIMATE form — lowers onto Spark's EXACT percentile_disc:
+# APPROXIMATE is an allowance, not a requirement, so the exact
+# ordered-set aggregate is a conforming (and oracle-hashable)
+# implementation
+_APPROX_PERCENTILE_RE = re.compile(
+    r"\bAPPROXIMATE\s+PERCENTILE_DISC\b", re.IGNORECASE
+)
+
+
 def translate_redshift_sql(sql: str) -> str:
     """Rewrite Redshift-dialect call sites into Spark SQL equivalents."""
+    start, end = sqllex.code_span(sql)
+    if sql[:start].strip() or sql[end:].strip():
+        # leading/trailing comments stay verbatim around the rewritten
+        # code, so end-anchored rewrites (TOP's LIMIT, QUALIFY's
+        # wrapper, DROP ... CASCADE) land before them
+        return sql[:start] + translate_redshift_sql(sql[start:end]) + sql[end:]
     sql = _strip_drop_cascade(sql)
     sql = _rewrite_partiql_unnest(sql)
     sql = _rewrite_pg_types(sql)
@@ -1172,9 +995,7 @@ def translate_redshift_sql(sql: str) -> str:
     sql = _rewrite_similar_to(sql)
     sql = _rewrite_ratio_to_report(sql)
     sql = _rewrite_calls(sql, "NVL", _nvl_call)
-    # GETDATE() / SYSDATE → current_timestamp()
-    sql = re.sub(r"\bGETDATE\s*\(\s*\)", "current_timestamp()", sql, flags=re.IGNORECASE)
-    sql = re.sub(r"\bSYSDATE\b", "current_timestamp()", sql, flags=re.IGNORECASE)
+    sql = sqllex.sub(_NOW_RE, "current_timestamp()", sql)
     sql = _rewrite_calls(sql, "EXTRACT", _extract_epoch_call_list)
     sql = _rewrite_calls(sql, "TRUNC", _trunc_call)
     sql = _rewrite_calls(sql, "CONVERT", _convert_call)
@@ -1204,45 +1025,6 @@ def translate_redshift_sql(sql: str) -> str:
     sql = _rewrite_calls(sql, "TO_CHAR", _to_char_call)
     sql = _rewrite_calls(sql, "TO_DATE", _to_parse_call("to_date"))
     sql = _rewrite_calls(sql, "TO_TIMESTAMP", _to_parse_call("to_timestamp"))
-    # APPROXIMATE COUNT(DISTINCT x) → approx_count_distinct(x)
-    sql = re.sub(
-        r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\s+(.*?)\)",
-        r"approx_count_distinct(\1)",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    # APPROXIMATE PERCENTILE_DISC(f) WITHIN GROUP (...) — Redshift's
-    # other APPROXIMATE form — lowers onto Spark's EXACT
-    # percentile_disc: APPROXIMATE is an allowance, not a requirement,
-    # so the exact ordered-set aggregate is a conforming (and
-    # oracle-hashable) implementation
-    sql = re.sub(
-        r"\bAPPROXIMATE\s+PERCENTILE_DISC\b",
-        "percentile_disc",
-        sql,
-        flags=re.IGNORECASE,
-    )
-
-    # DATEDIFF(unit, start, end) → unit-specific Spark expression.
-    out = sql
-    pos = 0
-    while True:
-        hit = _find_call(out, "DATEDIFF", pos)
-        if hit is None:
-            break
-        s, e, inner = hit
-        first = _split_two_args(inner)
-        if first is None:
-            pos = e
-            continue
-        unit_raw, rest = first
-        unit = _UNIT_ALIASES.get(unit_raw.strip("'\" ").lower(), unit_raw.strip("'\" ").lower())
-        second = _split_two_args(rest)
-        if unit not in _DATEDIFF_TEMPLATES or second is None:
-            pos = e  # two-arg Spark datediff or unknown unit: leave as-is
-            continue
-        start_expr, end_expr = second
-        repl = _DATEDIFF_TEMPLATES[unit].format(start=start_expr, end=end_expr)
-        out = out[:s] + repl + out[e:]
-        pos = s + len(repl)
-    return out
+    sql = sqllex.sub(_APPROX_COUNT_RE, r"approx_count_distinct(\1)", sql)
+    sql = sqllex.sub(_APPROX_PERCENTILE_RE, "percentile_disc", sql)
+    return _rewrite_calls(sql, "DATEDIFF", _datediff_call)

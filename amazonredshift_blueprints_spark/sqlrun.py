@@ -17,7 +17,7 @@ import re
 
 from pyspark.sql import SparkSession
 
-from .functions import translate_redshift_sql
+from .functions import sqllex, translate_redshift_sql
 
 # Access-control statements Redshift scripts carry around their DML:
 # GRANT/REVOKE/COMMENT ON are accepted as no-ops because the session
@@ -101,6 +101,9 @@ def _execute_sql_inner(spark: SparkSession, query: str) -> None:
     """
     from . import transactions
 
+    # leading comments would hide the statement from every ^-anchored
+    # dispatch pattern below
+    query = query[sqllex.skip_blank(query, 0) :]
     if re.search(r"\bAS\s+OF\b", query, re.IGNORECASE) and not re.match(
         r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:PROCEDURE|FUNCTION)\b",
         query,
@@ -279,78 +282,16 @@ def _execute_sql_inner(spark: SparkSession, query: str) -> None:
     print("Your query has been successfully executed.")  # execute_sql.py:78-79 analog
 
 
-_DOLLAR_TAG_RE = re.compile(r"\$[A-Za-z_][A-Za-z0-9_]*\$|\$\$")
-
-
-def _strip_leading_comments(stmt: str) -> str:
-    """Drop leading ``--`` comment lines (and blank lines) so the
-    ^-anchored COPY/UNLOAD/VACUUM/MV parsers in :func:`execute_sql`
-    still match a statement written as ``-- load\\nCOPY t FROM ...``.
-    Comments *inside* the statement body are left alone — ``spark.sql``
-    parses those fine; only the leading position breaks dispatch."""
-    lines = stmt.split("\n")
-    k = 0
-    while k < len(lines) and (
-        not lines[k].strip() or lines[k].lstrip().startswith("--")
-    ):
-        k += 1
-    return "\n".join(lines[k:]).strip()
-
-
 def split_statements(text: str) -> list[str]:
-    """Split a SQL script into statements on top-level semicolons,
-    honoring single/double-quoted strings (with ``''`` doubling),
-    Postgres/Redshift dollar-quoted blocks (``$$...$$`` / ``$tag$...$tag$``
-    — the CREATE FUNCTION body form, which may contain ``;``), and
-    ``--`` line comments. Leading comment lines are stripped from each
-    statement; empty fragments are dropped."""
-    out, buf = [], []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "$":
-            m = _DOLLAR_TAG_RE.match(text, i)
-            if m:
-                tag = m.group(0)
-                end = text.find(tag, m.end())
-                # unterminated block: swallow to EOF (the downstream
-                # parser reports the malformed statement)
-                stop = (end + len(tag)) if end != -1 else n
-                buf.append(text[i:stop])
-                i = stop
-                continue
-        if ch in ("'", '"'):
-            q = ch
-            buf.append(ch)
-            i += 1
-            while i < n:
-                buf.append(text[i])
-                if text[i] == q:
-                    if i + 1 < n and text[i + 1] == q:  # doubled quote
-                        buf.append(text[i + 1])
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            continue
-        if ch == "-" and text[i : i + 2] == "--":
-            while i < n and text[i] != "\n":
-                buf.append(text[i])
-                i += 1
-            continue
-        if ch == ";":
-            stmt = _strip_leading_comments("".join(buf).strip())
-            if stmt:
-                out.append(stmt)
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = _strip_leading_comments("".join(buf).strip())
-    if tail:
-        out.append(tail)
+    """Split a SQL script into statements at each ``;`` in code
+    (:mod:`.functions.sqllex`). Leading blanks and comments are stripped
+    from each statement; empty statements are dropped."""
+    out, i = [], 0
+    while i < len(text):
+        stmt, i = sqllex.statement(text, i)
+        stmt = stmt[sqllex.skip_blank(stmt, 0) :]
+        if stmt:
+            out.append(stmt)
     return out
 
 

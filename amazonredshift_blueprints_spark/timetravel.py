@@ -141,6 +141,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from .dml import _describe_table, _lock_dir, _lock_key, _table_lock
+from .functions import sqllex
 
 _HISTORY_DIRNAME = "_bp_history"
 
@@ -724,7 +725,7 @@ def resolve_time_travel(spark: SparkSession, sql: str) -> str:
     dispatcher resolves it here before ``spark.sql``).
 
     Each ``t VERSION AS OF n`` / ``t [FOR] [SYSTEM_]TIMESTAMP AS OF
-    ts`` span (outside single-quoted string literals) registers the
+    ts`` span in code (never in a literal or comment) registers the
     snapshot DataFrame as a session temp view and is replaced by the
     view name, so aliases, joins between versions, and mixes with the
     live table all parse as ordinary SQL. Timestamps accept a unix
@@ -763,21 +764,9 @@ def resolve_time_travel(spark: SparkSession, sql: str) -> str:
         df.createOrReplaceTempView(view)
         return view
 
-    # a clause STARTING inside a quoted literal is never rewritten
-    # (the quoted timestamp the clause itself carries is fine — only
-    # the table-reference position must sit outside literals)
-    spans = [
-        (m.start(), m.end())
-        for m in re.finditer(r"'(?:[^']|'')*'", sql)
-    ]
-    return _TT_CLAUSE_RE.sub(
-        lambda m: (
-            m.group(0)
-            if any(a <= m.start() < b for a, b in spans)
-            else resolve_span(m)
-        ),
-        sql,
-    )
+    # only the table-reference position must sit in code: the quoted
+    # timestamp the clause itself carries is fine
+    return sqllex.sub(_TT_CLAUSE_RE, resolve_span, sql)
 
 
 def history(spark: SparkSession, table: str) -> DataFrame:

@@ -67,6 +67,15 @@ def test_idempotent_on_rewritten_output():
         assert translate_redshift_sql(once) == once, sql
 
 
+@given(st.one_of(plain_select(), st.sampled_from(_DIALECT_EXAMPLES)))
+@settings(max_examples=100, deadline=None)
+def test_trailing_comment_is_opaque(sql):
+    """A trailing comment — even one holding a quote and a paren —
+    changes no rewrite and comes back verbatim."""
+    tail = "\n-- it's ("
+    assert translate_redshift_sql(sql + tail) == translate_redshift_sql(sql) + tail
+
+
 # -- operator invariants (round 7) ----------------------------------------
 # Property subjects that need a SparkSession use module-scoped sampling of
 # the hypothesis-generated inputs through ONE job per example set — the

@@ -738,6 +738,15 @@ def test_scd2_apply_full_snapshot_and_null_transitions(spark):
 def test_split_statements_quotes_and_comments():
     from amazonredshift_blueprints_spark.sqlrun import split_statements
 
+    # a ';' inside a block comment does not split; a leading block
+    # comment is stripped like a leading '--' line
+    assert split_statements("SELECT 1 /* a; b */ FROM t") == [
+        "SELECT 1 /* a; b */ FROM t"
+    ]
+    assert split_statements(
+        "/* nightly load */ COPY t FROM '/p' CSV; SELECT 1"
+    ) == ["COPY t FROM '/p' CSV", "SELECT 1"]
+
     script = """
     -- setup; this semicolon is a comment
     CREATE TABLE t (s VARCHAR(20));
@@ -751,6 +760,17 @@ def test_split_statements_quotes_and_comments():
     assert "'a;b'" in got[1] and "it''s;fine" in got[1]
     assert got[2].endswith('";"')
     assert got[3] == "COMMIT"
+
+
+def test_execute_sql_dispatch_skips_leading_comments(spark):
+    """A statement handed to execute_sql directly, not through a
+    script, still dispatches past a leading comment."""
+    from amazonredshift_blueprints_spark import transactions
+
+    execute_sql(spark, "-- open one\nBEGIN")
+    assert transactions.active(spark) is not None
+    execute_sql(spark, "/* undo it */ ROLLBACK")
+    assert transactions.active(spark) is None
 
 
 def test_split_statements_dollar_quoted_bodies():

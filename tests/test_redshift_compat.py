@@ -40,6 +40,14 @@ def test_string_literal_not_rewritten():
     assert translate_redshift_sql(sql) == sql
 
 
+def test_keyword_rewrites_skip_literals_and_comments():
+    sql = (
+        "SELECT 'GETDATE() SYSDATE APPROXIMATE COUNT(DISTINCT x)' AS s, "
+        "\"SYSDATE\" AS q -- SYSDATE\nFROM t"
+    )
+    assert translate_redshift_sql(sql) == sql
+
+
 def test_len():
     assert translate_redshift_sql("SELECT LEN(x) FROM t") == "SELECT length(x) FROM t"
 
@@ -150,6 +158,37 @@ def test_top_not_in_subquery():
 def test_top_with_existing_limit_untouched():
     sql = "SELECT TOP 5 a FROM t LIMIT 3"
     assert translate_redshift_sql(sql) == sql
+
+
+def test_top_before_trailing_comment():
+    """The LIMIT lands before a trailing comment, not inside it (where
+    the statement would silently return every row)."""
+    out = translate_redshift_sql("SELECT TOP 5 a FROM t -- note")
+    assert out == "SELECT a FROM t LIMIT 5 -- note"
+
+
+def test_qualify_wrapper_before_trailing_comment():
+    out = translate_redshift_sql(
+        "SELECT a FROM t QUALIFY row_number() OVER (ORDER BY a) = 1 -- first"
+    )
+    assert out == (
+        "SELECT * EXCEPT (__qualify) FROM (SELECT a, (row_number() OVER "
+        "(ORDER BY a) = 1) AS __qualify FROM t) WHERE __qualify -- first"
+    )
+
+
+def test_drop_cascade_before_trailing_comment():
+    out = translate_redshift_sql("DROP TABLE t CASCADE -- cleanup")
+    assert out == "DROP TABLE t -- cleanup"
+
+
+def test_quote_in_comment_does_not_hide_later_rewrites():
+    """An apostrophe inside a comment opens no literal: the NVL after
+    it is still code and lowers to coalesce."""
+    out = translate_redshift_sql(
+        "SELECT 1 -- it's a note\n, NVL(NULL, a, 'x') FROM t"
+    )
+    assert out == "SELECT 1 -- it's a note\n, coalesce(NULL, a, 'x') FROM t"
 
 
 def test_to_date_format():
@@ -947,6 +986,24 @@ class TestPreparedAndCursors:
         row = execute_prepared(spark, "p3", ["'it''s, fine'", "41"]).first()
         assert row.s == "it's, fine" and row.n == 42
         execute_sql(spark, "DEALLOCATE p3")
+
+    def test_execute_double_quoted_arg_is_one_argument(self, spark):
+        """A comma inside "..." does not split EXECUTE's arguments."""
+        from amazonredshift_blueprints_spark.sqlrun import execute_sql
+
+        spark.sql("DROP TABLE IF EXISTS t_prep_dq")
+        spark.sql("CREATE TABLE t_prep_dq (a STRING, b STRING) USING parquet")
+        execute_sql(
+            spark,
+            "PREPARE p_dq (varchar, varchar) AS "
+            "INSERT INTO t_prep_dq VALUES ($1, $2)",
+        )
+        execute_sql(spark, "EXECUTE p_dq('a', \"b,c\")")
+        assert [tuple(r) for r in spark.table("t_prep_dq").collect()] == [
+            ("a", "b,c")
+        ]
+        execute_sql(spark, "DEALLOCATE p_dq")
+        spark.sql("DROP TABLE t_prep_dq")
 
     def test_cursor_pages_partition_result_deterministically(self, spark):
         import pytest
