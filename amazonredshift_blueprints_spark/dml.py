@@ -8,14 +8,25 @@ Spark-native equivalent is the copy-on-write rewrite below — the same
 strategy those formats implement under the hood, minus the transaction
 log.
 
+One statement shape: every op (DELETE, DELETE USING, UPDATE, UPDATE
+FROM, MERGE, SCD2) runs inside ``with _statement(spark, table, op) as
+st:``, which resolves the open transaction's stage, takes the table
+writer lock and reads the pre-image ``st.full``. The op adds only its
+own logic — validation, the frame of rows that decide which files it
+touches (``st.prune``), the new-state projection and its counters
+(``st.observe``) — and hands the new state to ``st.publish``. On a
+plain table ``prune`` is the whole table and ``publish`` is
+``_rewrite``; on a history table ``prune`` runs one collect of the
+touched file names and ``publish`` replaces only those files.
+
 Semantics / limits (documented, not hidden):
 - The rewrite stages the new state in a managed table and publishes it
   by DROP + RENAME (or ``INSERT OVERWRITE`` where a rename cannot keep
   the target's layout — see ``_rewrite``).
   Multi-statement transactions live in transactions.py (staged-swap
   buffer); snapshot history / time travel lives in timetravel.py
-  (version-pointer commit log — history-enabled tables make every
-  rewrite here a versioned commit instead of an overwrite).
+  (manifest-of-files commit log — on history-enabled tables every
+  statement here is a versioned commit instead of an overwrite).
 - Source must be a managed catalog table (not a temp view over
   read-only files).
 - ACID-format probe (r10 verdict item 5, checked 2026-08-14 in this
@@ -188,11 +199,6 @@ def clean_stale_locks(
     return removed
 
 
-def _n(metric) -> int:
-    """Observation sums are NULL over zero matching rows — report 0."""
-    return int(metric) if metric is not None else 0
-
-
 def _describe_table(spark: SparkSession, table: str) -> dict:
     """The ``# Detailed Table Information`` rows of ``DESCRIBE TABLE
     EXTENDED`` as a dict (``Type``, ``Provider``, ``Database``,
@@ -309,11 +315,13 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
     the new state writes ONCE to a fresh version directory and the
     catalog pointer swaps — cheaper than the staging path, and every
     prior version stays readable (the caller already holds the table
-    lock, which commit_version requires). DELETE/UPDATE/MERGE don't
-    reach this branch any more — they take the file-pruned selective
-    path (:func:`_history_pre_image` + timetravel.commit_replace);
-    this full-state branch remains for scd2_apply and any caller whose
-    new state isn't a per-file transform of the old.
+    lock, which commit_version requires). The five file-pruned
+    statements (DELETE, UPDATE, UPDATE FROM, MERGE, SCD2) never reach
+    this branch: :class:`_Statement` publishes them through
+    timetravel.commit_replace. Its callers are the full-state writers
+    whose new state is not a per-file transform of the old: DELETE
+    USING (:func:`delete_using`), the streaming upsert sinks, and
+    VACUUM / materialized-view refresh in ``functions/copy_unload.py``.
     """
     from . import timetravel
 
@@ -355,79 +363,158 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
 
 
-def _history_pre_image(spark: SparkSession, table: str):
-    """``(tip_entry, manifest_paths)`` when ``table`` is
-    history-tracked, else ``(None, None)``. Selective DML's pre-image
-    comes from the LOG TIP's manifest, not the catalog pointer, so a
-    post-crash lagging pointer can't make DML fork a dead branch
-    (timetravel.py module docstring)."""
-    from . import timetravel
+class _Statement:
+    """The table-facing half of one copy-on-write DML statement: its
+    pre-image, the touched-file probe, the observed counters and the
+    publish. Built by :func:`_statement` under the table writer lock.
 
-    if not timetravel.is_history_table(spark, table):
-        return None, None
-    prev = timetravel.tip_entry(spark, table)
-    return prev, timetravel.entry_paths(prev)
-
-
-def _selective_rewrite(
-    spark: SparkSession,
-    table: str,
-    prev: dict,
-    paths: list[str],
-    hit,
-    rebuild,
-    op: str,
-) -> int:
-    """File-pruned copy-on-write DML on a history table (r16).
-
-    ONE pushdown-pruned scan finds which manifest files contain rows
-    matching ``hit`` — projecting only the predicate columns plus
-    Spark's ``_metadata.file_name``, so parquet row-group stats prune
-    at the footer — and counts the matches per file (the collect is
-    O(#files), metadata-sized like the manifest itself). Only the
-    touched files' rows pass through ``rebuild`` and rewrite; every
-    untouched file carries into the new version by hard link
-    (timetravel.commit_replace). Touching B of T bytes costs O(B)
-    data, not the O(T) full-state rewrite. ``hit`` is evaluated twice
-    (detection scan + rewrite scan) over IMMUTABLE manifest files, so
-    the two scans agree for any deterministic predicate; Spark's
-    nondeterministic-marked exprs that are constant per row (the bare
-    DELETE's ``spark_partition_id() >= 0`` guard) are also safe.
-
-    Returns the matched-row count. CALLER HOLDS THE TABLE WRITER LOCK.
+    On a plain table (or with ``op=None``) :attr:`full` is the catalog
+    table, :meth:`prune` returns it whole and :meth:`publish` goes
+    through :func:`_rewrite`. On a history table :attr:`full` is the
+    LOG TIP's manifest files, not the catalog pointer, so a post-crash
+    lagging pointer cannot make DML fork a dead branch (timetravel.py
+    module docstring); :meth:`prune` narrows the rewrite to the files
+    that hold affected rows, and :meth:`publish` replaces only those
+    (timetravel.commit_replace) — every other file carries into the
+    new version by hard link.
     """
-    from . import timetravel
 
-    per_file = (
-        timetravel._read_files(spark, table, paths)
-        .filter(hit)
-        .groupBy(F.col("_metadata.file_name").alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {r["f"] for r in per_file}
-    n = sum(r["n"] for r in per_file)
-    if not touched:
-        # no file holds a matching row: metadata-only commit reusing
-        # the tip's directory and manifest — version-per-statement
-        # semantics at zero data bytes
-        timetravel.commit_version(
-            spark,
-            table,
-            None,
-            op=op,
-            _location=prev["location"],
-            _files=prev.get("files"),
+    def __init__(
+        self, spark: SparkSession, table: str, name: str, op: str | None, inserts: bool
+    ):
+        from . import timetravel
+
+        self.spark, self.table, self.op, self.inserts = spark, table, op, inserts
+        self._name = name.split(".")[-1].strip("`")
+        self.carried_rows = 0
+        self._touched: frozenset[str] = frozenset()
+        self._observed: list[tuple[Observation, list[str]]] = []
+        self._ran = False
+        self._tip = (
+            timetravel.tip_entry(spark, table)
+            if op is not None and timetravel.is_history_table(spark, table)
+            else None
         )
-        return 0
-    by_name = {os.path.basename(p): p for p in paths}
-    rewritten = rebuild(
-        timetravel._read_files(
-            spark, table, [by_name[t] for t in sorted(touched)]
+        if self._tip is not None:
+            self._paths = timetravel.entry_paths(self._tip)
+            self.full = self._read(self._paths)
+        elif table != name:  # a transaction's stage
+            self.full = spark.table(table).alias(self._name)
+        else:
+            self.full = spark.table(table)
+
+    def _read(self, paths: list[str]):
+        """The history table's files ``paths``. Like a transaction's
+        stage, they carry the statement's table name, so table-qualified
+        references (``t.col``, a correlated subquery's ``t.k``) resolve
+        as they do on the catalog table."""
+        from . import timetravel
+
+        return timetravel._read_files(self.spark, self.table, paths).alias(self._name)
+
+    def prune(self, hits, touch=None):
+        """The rows the statement rewrites.
+
+        Plain table: :attr:`full`, with no job. History table: ``hits``
+        maps :attr:`full`, with each row's file name in a ``_bp_file``
+        column, to the rows that decide which files rewrite. ONE
+        collect groups them by file (pushdown and column pruning reach
+        the parquet scan; the result is O(#files), metadata-sized). A
+        file is touched when it holds such a row — or, with ``touch``,
+        when that row-level condition holds for one of them; the other
+        files' ``hits`` rows are counted in :attr:`carried_rows`. Only
+        the touched files are read back; with none, the slice is empty.
+
+        The probe and the rewrite each evaluate the statement's
+        predicate over the same IMMUTABLE manifest files, so they agree
+        for any deterministic predicate; Spark's nondeterministic-marked
+        exprs that are constant per row (``spark_partition_id() >= 0``)
+        are also safe.
+        """
+        if self._tip is None:
+            return self.full
+        per_file = (
+            hits(self.full.withColumn("_bp_file", F.col("_metadata.file_name")))
+            .groupBy("_bp_file")
+            .agg(
+                F.bool_or(F.lit(True) if touch is None else touch).alias("t"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
         )
-    )
-    timetravel.commit_replace(spark, table, touched, rewritten, op=op)
-    return n
+        self._touched = frozenset(r["_bp_file"] for r in per_file if r["t"])
+        self.carried_rows = sum(r["n"] for r in per_file if not r["t"])
+        if not self._touched:
+            return self.full.filter(F.lit(False))
+        by_name = {os.path.basename(p): p for p in self._paths}
+        return self._read([by_name[f] for f in sorted(self._touched)])
+
+    def observe(self, df, **metrics):
+        """``df`` with the named aggregate ``metrics`` riding the job
+        that scans it (a CollectMetrics node — no separate count job);
+        :meth:`counts` reads them once the statement has published."""
+        obs = Observation()
+        self._observed.append((obs, list(metrics)))
+        return df.observe(obs, *[m.alias(k) for k, m in metrics.items()])
+
+    def publish(self, new_state) -> None:
+        """Commit ``new_state`` as the table's next state: the full
+        state through :func:`_rewrite` on a plain table, the touched
+        files' replacement through timetravel.commit_replace on a
+        history table. When no file is touched and the statement
+        inserts nothing, nothing runs: a metadata-only commit reuses
+        the tip's directory and manifest — version-per-statement
+        semantics at zero data bytes."""
+        from . import timetravel
+
+        if self._tip is None:
+            _rewrite(self.spark, self.table, new_state)
+        elif self._touched or self.inserts:
+            timetravel.commit_replace(
+                self.spark, self.table, self._touched, new_state, op=self.op
+            )
+        else:
+            timetravel.commit_version(
+                self.spark,
+                self.table,
+                None,
+                op=self.op,
+                _location=self._tip["location"],
+                _files=self._tip.get("files"),
+            )
+            return
+        self._ran = True
+
+    def counts(self) -> dict[str, int]:
+        """The observed metrics; all 0 when the publish ran no job."""
+        return {
+            k: int(obs.get[k]) if self._ran else 0
+            for obs, names in self._observed
+            for k in names
+        }
+
+
+@contextlib.contextmanager
+def _statement(
+    spark: SparkSession, table: str, op: str | None, *, inserts: bool = False
+):
+    """One copy-on-write DML statement on ``table``: resolve it to the
+    open transaction's stage, if any, take the table writer lock, and
+    yield its :class:`_Statement`. The lock covers the pre-image READ
+    as well as the publish: the lost-update race is read → overwrite,
+    so a reader that snapshots before a concurrent writer commits must
+    not write back.
+
+    ``op`` names the file-pruned commit in the version log; ``None``
+    publishes the full state through :func:`_rewrite` on every table
+    kind. ``inserts`` marks a statement that can add rows whose
+    pre-image files are untouched (MERGE, SCD2): it still runs when
+    :meth:`_Statement.prune` finds no touched file."""
+    from .transactions import resolve_active
+
+    target = resolve_active(spark, table)  # txn-staged when one is open
+    with _table_lock(spark, target):
+        yield _Statement(spark, target, table, op, inserts)
 
 
 def delete_from(spark: SparkSession, table: str, condition: str) -> int:
@@ -440,37 +527,23 @@ def delete_from(spark: SparkSession, table: str, condition: str) -> int:
     ``~expr(condition)`` would propagate NULL and drop those rows from
     the kept set, so the predicate is coalesced to FALSE first.
 
-    Plain tables: the deleted-row count rides the rewrite's own scan
-    via ``DataFrame.observe`` (a CollectMetrics node above the scan,
-    below the filter) — no separate COUNT job before or after. At
-    100 TB the scan is the dominant cost and it runs exactly once.
-    History tables: the file-pruned selective path
-    (:func:`_selective_rewrite`) — only files containing matched rows
-    rewrite, the rest carry by hard link, and the count rides the
-    detection scan.
+    The deleted-row count rides the rewrite's own scan via
+    ``DataFrame.observe`` (a CollectMetrics node above the scan, below
+    the filter) — no separate COUNT job before or after. At 100 TB the
+    scan is the dominant cost and it runs exactly once. History tables
+    rewrite only the files holding matched rows; the rest carry by hard
+    link (:meth:`_Statement.prune`).
     """
     hit = F.coalesce(F.expr(condition), F.lit(False))
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    with _table_lock(spark, table):
-        prev, paths = _history_pre_image(spark, table)
-        if prev is not None:
-            return _selective_rewrite(
-                spark,
-                table,
-                prev,
-                paths,
-                hit,
-                lambda df: df.filter(~hit),
-                op="delete",
-            )
-        obs = Observation()
-        observed = spark.table(table).observe(
-            obs, F.sum(F.when(hit, 1).otherwise(0)).alias("n_deleted")
-        )
-        _rewrite(spark, table, observed.filter(~hit))
-    return _n(obs.get["n_deleted"])
+    # a constant-true condition (WHERE 1=1) would fold the kept filter
+    # to FALSE, and the optimizer would replace it and the CollectMetrics
+    # node below it with an empty relation, leaving the count unset; the
+    # nondeterministic always-false disjunct keeps the filter unfolded
+    kept = ~hit | (F.spark_partition_id() < 0)
+    with _statement(spark, table, "delete") as st:
+        rows = st.prune(lambda rows: rows.filter(hit))
+        st.publish(st.observe(rows, n_deleted=F.count_if(hit)).filter(kept))
+    return st.counts()["n_deleted"]
 
 
 def delete_using(spark: SparkSession, table: str, source, condition: str) -> int:
@@ -494,22 +567,16 @@ def delete_using(spark: SparkSession, table: str, source, condition: str) -> int
     selective path needs a target-only predicate, which a join-delete
     by construction does not have (key-only conditions can use
     ``merge_into`` with a delete marker instead)."""
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    with _table_lock(spark, table):
-        t = spark.table(table)
+    with _statement(spark, table, None) as st:
         s = source.select(
             *[F.col(c).alias(f"_src_{c}") for c in source.columns]
         )
-        obs_total, obs_kept = Observation(), Observation()
-        kept = (
-            t.observe(obs_total, F.count(F.lit(1)).alias("n_total"))
-            .join(s, F.expr(condition), "left_anti")
-            .observe(obs_kept, F.count(F.lit(1)).alias("n_kept"))
+        kept = st.observe(st.full, n_total=F.count(F.lit(1))).join(
+            s, F.expr(condition), "left_anti"
         )
-        _rewrite(spark, table, kept)
-    return _n(obs_total.get["n_total"]) - _n(obs_kept.get["n_kept"])
+        st.publish(st.observe(kept, n_kept=F.count(F.lit(1))))
+    n = st.counts()
+    return n["n_total"] - n["n_kept"]
 
 
 def update_from(
@@ -543,38 +610,26 @@ def update_from(
 
     Plan shape: ONE left hash join on the keys + the rewrite, counter
     via ``observe`` on the joined stream. History tables take the same
-    file-pruned selective path as MERGE (r16): a key-projected semi
-    join finds the files holding matchable rows, only those rewrite,
-    the rest carry by hard link."""
-    import os as _os
-
-    from . import timetravel
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    obs = Observation()
+    file-pruned path as MERGE (r16): a key semi join finds the files
+    holding matchable rows, only those rewrite, the rest carry by hard
+    link."""
     pairs = [(k, k) if isinstance(k, str) else tuple(k) for k in keys]
-    with _table_lock(spark, table):
-        prev, paths = _history_pre_image(spark, table)
-        full_target = (
-            timetravel._read_files(spark, table, paths) if prev is not None
-            else spark.table(table)
-        )
-        missing = [s for _, s in pairs if s not in source.columns]
+    t_keys = [t for t, _ in pairs]
+    s_keys = [s for _, s in pairs]
+    with _statement(spark, table, "update from") as st:
+        columns = st.full.columns
+        missing = [s for s in s_keys if s not in source.columns]
         if missing:
             raise ValueError(f"UPDATE FROM source lacks join key(s): {missing}")
-        missing = [t for t, _ in pairs if t not in full_target.columns]
+        missing = [t for t in t_keys if t not in columns]
         if missing:
             raise ValueError(f"UPDATE FROM target lacks join key(s): {missing}")
-        t_keys = [t for t, _ in pairs]
-        non_keys = [c for c in full_target.columns if c not in t_keys]
-        bad = sorted(set(assignments) - set(non_keys))
+        bad = sorted(set(assignments) - (set(columns) - set(t_keys)))
         if bad:
             raise ValueError(
                 f"UPDATE FROM assigns non-updatable column(s): {bad} "
                 "(unknown, or a join key — keys cannot change)"
             )
-        s_keys = [s for _, s in pairs]
         dup = (
             source.groupBy(*s_keys)
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -587,43 +642,10 @@ def update_from(
                 f"{tuple(dup[0][k] for k in s_keys)}); the update would "
                 "be nondeterministic — deduplicate the source first"
             )
-        if prev is not None:
-            # file-pruned selective path (the merge_into r16 shape):
-            # only files containing key-matchable rows rewrite
-            touched = {
-                r["f"]
-                for r in full_target.select(
-                    *t_keys, F.col("_metadata.file_name").alias("f")
-                )
-                .join(
-                    source.select(
-                        *[F.col(s).alias(t) for t, s in pairs]
-                    ).distinct(),
-                    on=t_keys,
-                    how="left_semi",
-                )
-                .select("f")
-                .distinct()
-                .collect()  # O(#files), metadata-sized
-            }
-            if not touched:
-                # no file holds a key-matchable row: metadata-only
-                # commit reusing the tip's directory and manifest
-                timetravel.commit_version(
-                    spark,
-                    table,
-                    None,
-                    op="update from",
-                    _location=prev["location"],
-                    _files=prev.get("files"),
-                )
-                return 0
-            by_name = {_os.path.basename(p): p for p in paths}
-            target = timetravel._read_files(
-                spark, table, [by_name[f] for f in sorted(touched)]
-            )
-        else:
-            target = full_target
+        src_keys = source.select(*[F.col(s).alias(t) for t, s in pairs]).distinct()
+        target = st.prune(
+            lambda rows: rows.join(src_keys, on=t_keys, how="left_semi")
+        )
         s = source.select(
             *[F.col(c).alias(f"_src_{c}") for c in source.columns]
         ).withColumn("_s_present", F.lit(True))
@@ -636,31 +658,24 @@ def update_from(
             matched = matched & F.coalesce(
                 F.expr(extra_condition), F.lit(False)
             )
-        j = target.join(s, join_cond, "left").observe(
-            obs, F.sum(F.when(matched, 1).otherwise(0)).alias("n_updated")
+        j = st.observe(
+            target.join(s, join_cond, "left"), n_updated=F.count_if(matched)
         )
-        updated = j.select(
-            *[
-                (
-                    F.when(matched, F.expr(assignments[c])).otherwise(F.col(c))
-                    if c in assignments
-                    else F.col(c)
-                ).alias(c)
-                for c in full_target.columns
-            ]
-        ).select(
-            *[
-                F.col(c).cast(full_target.schema[c].dataType).alias(c)
-                for c in full_target.columns
-            ]
-        )
-        if prev is not None:
-            timetravel.commit_replace(
-                spark, table, touched, updated, op="update from"
+        st.publish(
+            j.select(
+                *[
+                    (
+                        F.when(matched, F.expr(assignments[c])).otherwise(F.col(c))
+                        if c in assignments
+                        else F.col(c)
+                    ).alias(c)
+                    for c in columns
+                ]
+            ).select(
+                *[F.col(c).cast(st.full.schema[c].dataType).alias(c) for c in columns]
             )
-        else:
-            _rewrite(spark, table, updated)
-    return _n(obs.get["n_updated"])
+        )
+    return st.counts()["n_updated"]
 
 
 def merge_into(
@@ -718,21 +733,14 @@ def merge_into(
     the rewrite's own job via ``DataFrame.observe`` (a CollectMetrics
     node over the joined rows), so the join executes exactly once — not
     the four times (write + three counts) of a naive implementation.
+    History tables (r16): a target row can only be updated or deleted
+    if its key matches a source key, so ONE key semi join finds the
+    touched files; untouched files carry by hard link and the merge
+    plan runs over the touched files' rows only — unmatched-source
+    INSERTs still surface from the full-outer join's source side.
     """
-    obs = Observation()
-    # the lock covers the target READ as well as the overwrite: the
-    # lost-update race is read-pre-image → overwrite, so a reader that
-    # snapshots before a concurrent writer commits must not write back
-    from . import timetravel
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    with _table_lock(spark, table):
-        prev, paths = _history_pre_image(spark, table)
-        full_target = (
-            timetravel._read_files(spark, table, paths) if prev is not None
-            else spark.table(table)
-        )
+    with _statement(spark, table, "merge", inserts=True) as st:
+        full_target = st.full
         missing_keys = [k for k in keys if k not in source.columns]
         if missing_keys:
             raise ValueError(f"MERGE source lacks join key(s): {missing_keys}")
@@ -748,37 +756,8 @@ def merge_into(
                 f"{sorted(full_target.columns)} (equality is required "
                 "unless both update_exprs and insert_exprs are given)"
             )
-        if prev is not None:
-            # file-pruned selective path (r16): a target row can only be
-            # updated/deleted if its key matches a source key, so ONE
-            # key-projected semi join (pushdown + column pruning reach
-            # the parquet scan; the collect is O(#files)) finds the
-            # touched files; untouched files carry by hard link and the
-            # merge plan below runs over the touched files' rows only —
-            # unmatched-source INSERTs still surface from the full-outer
-            # join's source side
-            touched = {
-                r["f"]
-                for r in full_target.select(
-                    *keys, F.col("_metadata.file_name").alias("f")
-                )  # hidden _metadata must resolve AT the scan, pre-join
-                .join(
-                    source.select(*keys).distinct(), on=keys, how="left_semi"
-                )
-                .select("f")
-                .distinct()
-                .collect()
-            }
-            by_name = {os.path.basename(p): p for p in paths}
-            target = (
-                timetravel._read_files(
-                    spark, table, [by_name[t] for t in sorted(touched)]
-                )
-                if touched
-                else full_target.filter(F.lit(False))
-            )
-        else:
-            target = full_target
+        src_keys = source.select(*keys).distinct()
+        target = st.prune(lambda rows: rows.join(src_keys, on=keys, how="left_semi"))
         non_keys = [c for c in target.columns if c not in keys]
         # evaluate the delete marker against the RAW source row, before the
         # _src_ aliasing, so the condition reads naturally (CDC flag columns)
@@ -811,11 +790,11 @@ def merge_into(
             if insert_unmatched_deletes
             else s_present & deleting
         )
-        j = t.join(s, on=keys, how="full_outer").observe(
-            obs,
-            F.sum(F.when(matched & ~deleting, 1).otherwise(0)).alias("n_updated"),
-            F.sum(F.when(inserting, 1).otherwise(0)).alias("n_inserted"),
-            F.sum(F.when(matched & deleting, 1).otherwise(0)).alias("n_deleted"),
+        j = st.observe(
+            t.join(s, on=keys, how="full_outer"),
+            n_updated=F.count_if(matched & ~deleting),
+            n_inserted=F.count_if(inserting),
+            n_deleted=F.count_if(matched & deleting),
         )
         if update_exprs is not None:
             bad = sorted(set(update_exprs) - set(non_keys))
@@ -888,14 +867,9 @@ def merge_into(
                     for c in target.columns
                 ]
             )
-        if prev is not None:
-            timetravel.commit_replace(
-                spark, table, touched, merged, op="merge"
-            )
-        else:
-            _rewrite(spark, table, merged)
-    m = obs.get
-    return _n(m["n_updated"]), _n(m["n_inserted"]), _n(m["n_deleted"])
+        st.publish(merged)
+    m = st.counts()
+    return m["n_updated"], m["n_inserted"], m["n_deleted"]
 
 
 def update_table(
@@ -906,54 +880,27 @@ def update_table(
     ``assignments`` maps column name → SQL expression (evaluated against
     the pre-update row, per standard UPDATE semantics). Returns the
     number of rows updated, observed during the rewrite's single scan
-    (no separate pre-count job).
+    (no separate pre-count job). History tables rewrite only the files
+    holding rows where ``condition`` holds; the rest carry by hard link.
     """
     cond = F.expr(condition)
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    with _table_lock(spark, table):
-        df = spark.table(table)
-        unknown = set(assignments) - set(df.columns)
+    hit = F.coalesce(cond, F.lit(False))
+    with _statement(spark, table, "update") as st:
+        unknown = set(assignments) - set(st.full.columns)
         if unknown:
             raise ValueError(f"UPDATE of unknown column(s): {sorted(unknown)}")
-
-        def apply_set(src):
-            return src.select(
+        rows = st.prune(lambda rows: rows.filter(hit))
+        st.publish(
+            st.observe(rows, n_updated=F.count_if(hit)).select(
                 *[
-                    F.when(cond, F.expr(assignments[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
+                    F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
                     if c in assignments
                     else F.col(c)
-                    for c in src.columns
+                    for c in rows.columns
                 ]
             )
-
-        prev, paths = _history_pre_image(spark, table)
-        if prev is not None:
-            # file-pruned selective path: only files containing rows
-            # where cond holds rewrite; the rest carry by hard link
-            return _selective_rewrite(
-                spark,
-                table,
-                prev,
-                paths,
-                F.coalesce(cond, F.lit(False)),
-                apply_set,
-                op="update",
-            )
-        obs = Observation()
-        updated = apply_set(
-            df.observe(
-                obs,
-                F.sum(
-                    F.when(F.coalesce(cond, F.lit(False)), 1).otherwise(0)
-                ).alias("n_updated"),
-            )
         )
-        _rewrite(spark, table, updated)
-    return _n(obs.get["n_updated"])
+    return st.counts()["n_updated"]
 
 
 def scd2_apply(
@@ -1005,69 +952,26 @@ def scd2_apply(
     current-bearing files under ``close_missing``) rewrite; every
     other file — history rows, the bulk — carries into the new
     version by hard link, and the counters still report whole-table
-    truth (carried untouched current rows come from the same
-    detection scan).
+    truth (the current rows of carried files are counted by the same
+    file probe, :attr:`_Statement.carried_rows`).
     """
-    obs = Observation()
-    from . import timetravel
-    from .transactions import resolve_active
-
-    table = resolve_active(spark, table)  # txn-staged when one is open
-    with _table_lock(spark, table):
-        prev, paths = _history_pre_image(spark, table)
-        full_dim = (
-            timetravel._read_files(spark, table, paths) if prev is not None
-            else spark.table(table)
-        )
-        dim = full_dim
+    with _statement(spark, table, "scd2 apply", inserts=True) as st:
         meta = [valid_from_col, valid_to_col, current_col]
-        attrs = [c for c in dim.columns if c not in keys + meta]
+        attrs = [c for c in st.full.columns if c not in keys + meta]
         missing = [c for c in tracked if c not in attrs]
         if missing:
             raise ValueError(f"tracked column(s) not in dimension: {missing}")
-        extra_untouched = 0
-        touched: set[str] = set()
-        if prev is not None:
-            # file-pruned selective path (r16): a dimension row can only
-            # change if it is CURRENT and (close_missing) or its key
-            # matches a source key — so one key+flag-projected scan with
-            # a left join on the source keys finds the touched files AND
-            # the current-row count the restricted plan won't see
-            # (untouched current rows in carried files still count in
-            # n_untouched). History rows in carried files never rewrite.
-            marker = source.select(*keys).distinct().withColumn(
-                "_m", F.lit(True)
-            )
-            per_file = (
-                full_dim.filter(F.col(current_col))
-                .select(*keys, F.col("_metadata.file_name").alias("_f"))
-                .join(marker, on=keys, how="left")
-                .groupBy("_f")
-                .agg(
-                    F.count(F.lit(1)).alias("n_cur"),
-                    F.sum(F.when(F.col("_m"), 1).otherwise(0)).alias(
-                        "n_match"
-                    ),
-                )
-                .collect()  # O(#files) — metadata-sized
-            )
-            for r in per_file:
-                if close_missing or (r["n_match"] or 0) > 0:
-                    touched.add(r["_f"])
-                else:
-                    extra_untouched += r["n_cur"]
-            # zero touched files is still a valid plan: the dim slice is
-            # empty, every matched-source row reads as is_new, and the
-            # commit degenerates to an append (carry all files + write
-            # only the opened rows)
-            by_name = {os.path.basename(p): p for p in paths}
-            dim = (
-                timetravel._read_files(
-                    spark, table, [by_name[t] for t in sorted(touched)]
-                )
-                if touched
-                else full_dim.filter(F.lit(False))
-            )
+        # a dimension row can only change if it is CURRENT and its key
+        # matches a source key (or close_missing); zero touched files is
+        # still a valid plan — every source row reads as is_new and the
+        # commit degenerates to an append of the opened rows
+        marker = source.select(*keys).distinct().withColumn("_m", F.lit(True))
+        dim = st.prune(
+            lambda rows: rows.filter(F.col(current_col)).join(
+                marker, on=keys, how="left"
+            ),
+            touch=F.col("_m").isNotNull() | F.lit(close_missing),
+        )
         cur = dim.filter(F.col(current_col))
         hist = dim.filter(~F.col(current_col))
         s = source.select(
@@ -1077,7 +981,6 @@ def scd2_apply(
         for c in tracked:
             d = F.expr(f"{c} IS DISTINCT FROM _src_{c}")
             changed = d if changed is None else (changed | d)
-        j = cur.join(s, on=keys, how="full_outer")
         s_present = F.coalesce(F.col("_s_present"), F.lit(False))
         t_present = F.coalesce(F.col(current_col), F.lit(False))
         is_change = t_present & s_present & changed
@@ -1089,11 +992,11 @@ def scd2_apply(
         is_kept = t_present & (
             (s_present & ~changed) | (~s_present & F.lit(not close_missing))
         )
-        obs_j = j.observe(
-            obs,
-            F.sum(F.when(is_change | is_gone, 1).otherwise(0)).alias("n_closed"),
-            F.sum(F.when(is_change | is_new, 1).otherwise(0)).alias("n_opened"),
-            F.sum(F.when(is_kept, 1).otherwise(0)).alias("n_untouched"),
+        obs_j = st.observe(
+            cur.join(s, on=keys, how="full_outer"),
+            n_closed=F.count_if(is_change | is_gone),
+            n_opened=F.count_if(is_change | is_new),
+            n_untouched=F.count_if(is_kept),
         )
         ts = F.lit(batch_ts).cast("timestamp")
         closed = obs_j.filter(is_change | is_gone).select(
@@ -1113,22 +1016,12 @@ def scd2_apply(
             *keys, *attrs, valid_from_col, valid_to_col, current_col
         )
         kept = hist.select(*keys, *attrs, valid_from_col, valid_to_col, current_col)
-        new_state = (
+        st.publish(
             kept.unionByName(untouched).unionByName(closed).unionByName(opened)
             .select(*dim.columns)
         )
-        if prev is not None:
-            timetravel.commit_replace(
-                spark, table, touched, new_state, op="scd2 apply"
-            )
-        else:
-            _rewrite(spark, table, new_state)
-    m = obs.get
-    return (
-        _n(m["n_closed"]),
-        _n(m["n_opened"]),
-        _n(m["n_untouched"]) + extra_untouched,
-    )
+    m = st.counts()
+    return m["n_closed"], m["n_opened"], m["n_untouched"] + st.carried_rows
 
 
 def snapshot_diff(

@@ -43,15 +43,19 @@ _FROM_SRC_RE = re.compile(
     r"^\s*([`\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s*$", re.IGNORECASE
 )
 _UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+([`\w.]+)\s+SET\s+(.+?)\s*(?:WHERE\s+(.+?))?\s*;?\s*$",
+    r"^\s*UPDATE\s+([`\w.]+)\s+SET\s+(.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_WHERE_RE = re.compile(r"\bWHERE\b", re.IGNORECASE)
 _MERGE_RE = re.compile(
     r"^\s*MERGE\s+INTO\s+([`\w.]+)\s+USING\s+([`\w.]+)"
-    r"(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+?)\s*;?\s*$",
+    r"(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+"
+    r"(WHEN\s+(?:NOT\s+)?MATCHED\b.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_WHEN_SPLIT_RE = re.compile(r"\bWHEN\s+", re.IGNORECASE)
+# an arm can only start at WHEN [NOT] MATCHED: a CASE WHEN inside an
+# arm's expression stays in that arm
+_WHEN_SPLIT_RE = re.compile(r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)", re.IGNORECASE)
 _AND_RE = re.compile(r"\bAND\b", re.IGNORECASE)
 _FROM_WORD_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
 _MATCHED_UPDATE_RE = re.compile(
@@ -209,17 +213,21 @@ def maybe_handle(spark: SparkSession, query: str) -> bool:
     if m:
         from ..dml import delete_from
 
-        # Bare DELETE (no WHERE) removes every row. A literal 'true'
-        # predicate would constant-fold filter(false) into an empty
-        # LocalRelation and prune delete_from's CollectMetrics node
-        # (Observation.get then asserts with no metrics); the
-        # spark_partition_id() guard is always-true but marked
-        # nondeterministic, so the scan — and the metric — survive.
-        delete_from(spark, m.group(1), m.group(2) or "spark_partition_id() >= 0")
+        # bare DELETE (no WHERE) removes every row
+        delete_from(spark, m.group(1), m.group(2) or "true")
         return True
     m = _UPDATE_RE.match(query)
     if m:
-        table, set_clause, cond = m.groups()
+        table, set_clause = m.groups()
+        cond = None
+        where = sqllex.find(set_clause, _WHERE_RE)
+        if where:
+            set_clause, cond = (
+                set_clause[: where.start()].strip(),
+                set_clause[where.end() :].strip(),
+            )
+            if not cond:
+                raise ValueError("UPDATE ... WHERE needs a condition")
         from_m = sqllex.find(set_clause, _FROM_WORD_RE)
         if from_m:
             # Redshift's joined update (r16; previously a named

@@ -228,6 +228,20 @@ def _peek_word(text: str, i: int) -> tuple[str | None, int]:
     return m.group(0).upper(), m.end()
 
 
+def _close_block(
+    text: str, k: int, closer: str | None = None, block: str = ""
+) -> int:
+    """Index past a block's tail, ``k`` being just past its ``END``:
+    the ``closer`` word of ``END IF`` / ``END LOOP`` (refused when
+    missing), then blanks, comments and an optional ``;``."""
+    if closer is not None:
+        w, k = _peek_word(text, k)
+        if w != closer:
+            raise ValueError(f"{block} block must close with END {closer}")
+    k = sqllex.skip_blank(text, k)
+    return k + 1 if text.startswith(";", k) else k
+
+
 def _scan_expr_until(text: str, i: int, stops: frozenset[str]) -> tuple[str, str, int]:
     """Consume an SQL expression from ``i`` until one of the ``stops``
     keywords appears OUTSIDE quotes/comments at CASE-depth 0 (``CASE
@@ -371,16 +385,13 @@ def _parse_block(
                 text, k, frozenset({"END"}), variables | inner_names,
                 in_loop, allow_exception=True,
             )
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k)
             inner = (
                 blk[0]
                 if len(blk) == 1 and blk[0][0] == "block"
                 else ("block", blk, None)
             )
             items.append(("declblock", decls, inner))
-            i = k
             continue
         if word == "BEGIN":
             # `BEGIN;` / `BEGIN WORK|TRANSACTION` is transaction
@@ -397,14 +408,11 @@ def _parse_block(
                 text, j, frozenset({"END"}), variables, in_loop,
                 allow_exception=True,
             )
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k)
             if len(blk) == 1 and blk[0][0] == "block":
                 items.append(blk[0])  # EXCEPTION wrapped it already
             else:
                 items.append(("block", blk, None))
-            i = k
             continue
         if word == "EXECUTE":
             stmt, i = sqllex.statement(text, j)
@@ -483,41 +491,23 @@ def _parse_block(
                 else_items, stop, k = _parse_block(
                     text, k, frozenset({"END"}), variables, in_loop
                 )
-            w2, k = _peek_word(text, k)
-            if w2 != "IF":
-                raise ValueError("IF block must close with END IF")
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k, "IF", "IF")
             items.append(("if", branches, else_items))
-            i = k
             continue
         if word == "WHILE":
             cond, _, k = _scan_expr_until(text, j, frozenset({"LOOP"}))
             blk, _, k = _parse_block(
                 text, k, frozenset({"END"}), variables, True
             )
-            w2, k = _peek_word(text, k)
-            if w2 != "LOOP":
-                raise ValueError("WHILE block must close with END LOOP")
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k, "LOOP", "WHILE")
             items.append(("while", cond, blk))
-            i = k
             continue
         if word == "LOOP":  # bare LOOP: terminate via EXIT [WHEN]
             blk, _, k = _parse_block(
                 text, j, frozenset({"END"}), variables, True
             )
-            w2, k = _peek_word(text, k)
-            if w2 != "LOOP":
-                raise ValueError("LOOP block must close with END LOOP")
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k, "LOOP", "LOOP")
             items.append(("while", "TRUE", blk))
-            i = k
             continue
         if word == "FOR":
             var, k = _peek_word(text, j)
@@ -545,27 +535,15 @@ def _parse_block(
                 blk, _, k = _parse_block(
                     text, k, frozenset({"END"}), variables, True
                 )
-                w2, k = _peek_word(text, k)
-                if w2 != "LOOP":
-                    raise ValueError("FOR block must close with END LOOP")
-                k = sqllex.skip_blank(text, k)
-                if k < n and text[k] == ";":
-                    k += 1
+                i = _close_block(text, k, "LOOP", "FOR")
                 items.append(("forq", var.lower(), rng, blk))
-                i = k
                 continue
             loop_vars = variables | {var.lower()}
             blk, _, k = _parse_block(
                 text, k, frozenset({"END"}), loop_vars, True
             )
-            w2, k = _peek_word(text, k)
-            if w2 != "LOOP":
-                raise ValueError("FOR block must close with END LOOP")
-            k = sqllex.skip_blank(text, k)
-            if k < n and text[k] == ";":
-                k += 1
+            i = _close_block(text, k, "LOOP", "FOR")
             items.append(("for", var.lower(), parts[0], parts[1], reverse, blk))
-            i = k
             continue
         stmt, i = sqllex.statement(text, i)
         if not stmt:

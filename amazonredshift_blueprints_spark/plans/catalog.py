@@ -19962,7 +19962,7 @@ def q111_time_travel_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM snaps ORDER BY version
     """,
     doc="FILE-PRUNED selective DML on history tables (timetravel."
-        "commit_replace + dml._selective_rewrite, r16 — the r15 "
+        "commit_replace + dml._Statement.prune, r16 — the r15 "
         "verdict's headline item: DELETE/UPDATE/MERGE previously "
         "published O(table) full-state rewrites): the statement finds "
         "exactly which manifest files contain affected rows via ONE "

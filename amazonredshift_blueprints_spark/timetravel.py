@@ -26,16 +26,18 @@ highest-leverage engineering item):
   and recreates ``t`` as an external parquet table at that location,
   plus the JSON commit log next to the version dirs.
 - Full-state commits (transaction COMMIT publishes, INSERT OVERWRITE,
-  and any dml.py ``_rewrite`` without a selective path) go through
+  and dml.py's ``_rewrite``: DELETE USING, the streaming upsert sinks,
+  VACUUM and materialized-view refresh) go through
   :func:`commit_version`: the new state writes ONCE to a fresh
   ``v<n>`` directory — the same bytes the non-history staging rewrite
   writes, i.e. zero added write amplification.
-- **Selective (file-pruned) DML commits** (DELETE / UPDATE / MERGE via
-  dml.py, r16) go through :func:`commit_replace`: the statement first
-  finds exactly which manifest files contain affected rows (one
-  pushdown-pruned scan projecting only the predicate columns plus
-  Spark's ``_metadata.file_name``), rewrites ONLY those files' rows,
-  and carries every untouched file into the new version by hard link —
+- **Selective (file-pruned) DML commits** (DELETE / UPDATE / UPDATE
+  FROM / MERGE / SCD2 apply via dml.py's one statement helper, r16) go
+  through :func:`commit_replace`: the statement first finds exactly
+  which manifest files contain affected rows (one pushdown-pruned scan
+  projecting only the predicate columns plus Spark's
+  ``_metadata.file_name``), rewrites ONLY those files' rows, and
+  carries every untouched file into the new version by hard link —
   O(affected files) data, like Delta/Iceberg copy-on-write DML, not
   the O(table) full-state rewrite of the r15 design.
 - **Append commits** (INSERT INTO, COPY, ALTER TABLE APPEND's in-moves)
@@ -73,8 +75,8 @@ plain reader still sees the pre-crash version until the next write;
 selective DML (r16) reads its pre-image from the LOG TIP's manifest,
 not the pointer, so it can no longer base on the lagging version —
 but a full-state commit whose pre-image came through the catalog
-pointer (transaction COMMIT, scd2) can still land with the lagging
-version as its parent, leaving the logged tip as a dead branch. That
+pointer (transaction COMMIT, ``dml._rewrite``) can still land with the
+lagging version as its parent, leaving the logged tip as a dead branch. That
 branch is now OBSERVABLE (r15 verdict item 6): every entry records
 ``parent`` — the version its state was derived from — and
 :func:`history` flags ``superseded=True`` for any entry some later

@@ -1605,6 +1605,76 @@ def test_update_set_from_inside_call_not_refused(spark):
     spark.sql("DROP TABLE t_upd_extract")
 
 
+def test_update_where_inside_scalar_subquery_is_not_the_split(spark):
+    """SET and WHERE split at the statement's own depth-0 WHERE: the
+    WHERE of a correlated scalar subquery in a SET expression stays in
+    that expression."""
+    from amazonredshift_blueprints_spark.ingest import _clean_stale_location
+    from amazonredshift_blueprints_spark.sqlrun import execute_sql
+
+    for t in ("ut", "us"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _clean_stale_location(spark, t, None)
+    spark.createDataFrame(
+        [(k, 0, 1 if k % 2 else 2) for k in range(1, 7)], "k int, a int, b int"
+    ).write.saveAsTable("ut")
+    spark.createDataFrame(
+        [(1, 19), (1, 4), (2, 99), (3, 15), (3, 2), (4, 98), (5, 17), (6, 97)],
+        "k int, x int",
+    ).write.saveAsTable("us")
+    try:
+        execute_sql(
+            spark,
+            "UPDATE ut SET a = (SELECT max(x) FROM us WHERE us.k = ut.k) "
+            "WHERE b = 1",
+        )
+        got = {r.k: r.a for r in spark.table("ut").collect()}
+        assert got == {1: 19, 2: 0, 3: 15, 4: 0, 5: 17, 6: 0}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ut")
+        spark.sql("DROP TABLE IF EXISTS us")
+
+
+def test_merge_case_when_in_update_arm(spark, monkeypatch):
+    """MERGE arms start only at WHEN [NOT] MATCHED, so a CASE WHEN in an
+    UPDATE SET expression stays inside its arm."""
+    from amazonredshift_blueprints_spark import dml
+    from amazonredshift_blueprints_spark.ingest import _clean_stale_location
+    from amazonredshift_blueprints_spark.sqlrun import execute_sql
+
+    counts = []
+    merge_into = dml.merge_into
+    monkeypatch.setattr(
+        dml, "merge_into", lambda *a, **kw: counts.append(merge_into(*a, **kw))
+    )
+
+    for t in ("t_mrgcase_tgt", "t_mrgcase_src"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _clean_stale_location(spark, t, None)
+    spark.createDataFrame(
+        [(1, 10, 0), (2, 20, 0), (3, 30, 0)], "k int, v int, x int"
+    ).write.saveAsTable("t_mrgcase_tgt")
+    spark.createDataFrame(
+        [(1, 0, 7), (2, 0, -5), (4, 40, 3)], "k int, v int, x int"
+    ).write.saveAsTable("t_mrgcase_src")
+    try:
+        execute_sql(
+            spark,
+            "MERGE INTO t_mrgcase_tgt USING t_mrgcase_src AS s "
+            "ON t_mrgcase_tgt.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = CASE WHEN s.x > 0 THEN s.x "
+            "ELSE 0 END "
+            "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v, s.x)",
+        )
+        got = sorted(tuple(r) for r in spark.table("t_mrgcase_tgt").collect())
+        # two updated (k=1 takes x, k=2 takes 0), one inserted, one kept
+        assert got == [(1, 7, 0), (2, 0, 0), (3, 30, 0), (4, 40, 3)]
+        assert counts == [(2, 1, 0)]
+    finally:
+        for t in ("t_mrgcase_tgt", "t_mrgcase_src"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_merge_insert_arm_order_semantics(spark):
     """Pre-r16 the INSERT arm only accepted the source columns
     verbatim in source order (anything else risked silently inserting

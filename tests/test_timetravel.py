@@ -673,17 +673,37 @@ def test_selective_update_from_carries_unmatched_files(spark):
 
 
 def test_no_match_dml_is_metadata_only_commit(spark):
-    """A DELETE matching nothing publishes a METADATA-ONLY commit: a
-    new version number whose entry reuses the tip's directory and
-    manifest — version-per-statement semantics at zero data bytes."""
+    """A DELETE, UPDATE or UPDATE FROM matching nothing publishes a
+    METADATA-ONLY commit: a new version number whose entry reuses the
+    tip's directory and manifest — version-per-statement semantics at
+    zero data bytes."""
+    from decimal import Decimal
+
+    from amazonredshift_blueprints_spark.dml import update_from
+
     tt, root = _multi_file_history_table(spark, "t_tt_nomatch")
-    prev = tt._read_log(root)[-1]
-    execute_sql(spark, "DELETE FROM t_tt_nomatch WHERE k = 999")
-    new = tt._read_log(root)[-1]
-    assert new["version"] == prev["version"] + 1
-    assert new["op"] == "delete"
-    assert new["location"] == prev["location"]
-    assert new["files"] == prev["files"]
+    src = spark.createDataFrame(
+        [(999, Decimal("1.00"))], "k INT, delta DECIMAL(12,2)"
+    )
+    statements = {
+        "delete": lambda: execute_sql(
+            spark, "DELETE FROM t_tt_nomatch WHERE k = 999"
+        ),
+        "update": lambda: execute_sql(
+            spark, "UPDATE t_tt_nomatch SET amt = amt + 1 WHERE k = 999"
+        ),
+        "update from": lambda: update_from(
+            spark, "t_tt_nomatch", src, ["k"], {"amt": "amt + _src_delta"}
+        ),
+    }
+    for op, run in statements.items():
+        prev = tt._read_log(root)[-1]
+        assert not run()  # None from execute_sql, 0 rows from update_from
+        new = tt._read_log(root)[-1]
+        assert new["version"] == prev["version"] + 1
+        assert new["op"] == op
+        assert new["location"] == prev["location"]
+        assert new["files"] == prev["files"]
     assert spark.table("t_tt_nomatch").count() == 15
 
 
