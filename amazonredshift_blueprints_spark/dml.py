@@ -54,7 +54,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -385,7 +385,7 @@ class _Statement:
         from . import timetravel
 
         self.spark, self.table, self.op, self.inserts = spark, table, op, inserts
-        self._name = name.split(".")[-1].strip("`")
+        self._name = name
         self.carried_rows = 0
         self._touched: frozenset[str] = frozenset()
         self._observed: list[tuple[Observation, list[str]]] = []
@@ -399,18 +399,38 @@ class _Statement:
             self._paths = timetravel.entry_paths(self._tip)
             self.full = self._read(self._paths)
         elif table != name:  # a transaction's stage
-            self.full = spark.table(table).alias(self._name)
+            self.full = self._as_table(spark.table(table))
         else:
             self.full = spark.table(table)
 
+    def _as_table(self, df):
+        """``df`` under the statement's table name with the catalog
+        table's full qualifier (``spark_catalog.db.t``), so qualified
+        references (``t.col``, ``db.t.col``, a correlated subquery's
+        ``t.k``) resolve on a history table's files and a transaction's
+        stage as they do on the catalog table. ``DataFrame.alias``
+        gives a one-part name only."""
+        spark, jvm = self.spark, self.spark._jvm
+        parts = [p.strip().strip("`") for p in self._name.split(".")]
+        home = [spark.catalog.currentCatalog(), spark.catalog.currentDatabase()]
+        parts = home[: max(0, 3 - len(parts))] + parts
+        ident = jvm.org.apache.spark.sql.catalyst.AliasIdentifier(
+            parts[-1], jvm.org.apache.spark.api.python.PythonUtils.toSeq(parts[:-1])
+        )
+        plan = jvm.org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
+            ident, df._jdf.queryExecution().logical()
+        )
+        return DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
+            spark,
+        )
+
     def _read(self, paths: list[str]):
-        """The history table's files ``paths``. Like a transaction's
-        stage, they carry the statement's table name, so table-qualified
-        references (``t.col``, a correlated subquery's ``t.k``) resolve
-        as they do on the catalog table."""
+        """The history table's files ``paths``, under the table's
+        qualified name (:meth:`_as_table`)."""
         from . import timetravel
 
-        return timetravel._read_files(self.spark, self.table, paths).alias(self._name)
+        return self._as_table(timetravel._read_files(self.spark, self.table, paths))
 
     def prune(self, hits, touch=None):
         """The rows the statement rewrites.

@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from ..functions import translate_redshift_sql
 from ..operators import pin
-from ..session import configure_runtime, load_table
+from ..session import configure_runtime, load_table, read_parquet
 
 
 @dataclass(frozen=True)
@@ -70,7 +70,11 @@ def query(
 
 
 def views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load the named fixture tables and register them as temp views."""
+    """Load the named fixture tables and register them as temp views.
+
+    Each read takes its schema from the session's memo
+    (session.read_parquet), so once ``register_tables`` or an earlier
+    build has read a fixture, this runs no Spark job."""
     out = {}
     for n in names:
         df = load_table(spark, sf_dir, n)
@@ -2652,7 +2656,7 @@ def c16_stateful_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     views(spark, sf_dir, "events")  # oracle side reads the same fixture
     src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     d = tempfile.mkdtemp(prefix="bp_stateful_stream_")
     t = pq.read_table(src)
     ts_i = pc.cast(t.column("ts"), "int64")
@@ -2710,7 +2714,7 @@ def c36_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     views(spark, sf_dir, "events")  # oracle side reads the same fixture
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     d = tempfile.mkdtemp(prefix="bp_stream_dedup_")
     for part in ("part-0.parquet", "part-1.parquet"):  # every event twice
         _sh.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(d, part))
@@ -2766,7 +2770,7 @@ def c95_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     views(spark, sf_dir, "events")  # oracle side reads the same fixture
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     d = tempfile.mkdtemp(prefix="bp_stream_rollup_")
     for part in ("part-0.parquet", "part-1.parquet"):  # every event twice
         _sh.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(d, part))
@@ -4095,7 +4099,7 @@ def c44_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seed.write.mode("overwrite").saveAsTable(tbl)
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     d = tempfile.mkdtemp(prefix="bp_stream_upsert_")
     _sh.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "part-0.parquet"))
     stream = read_events_stream(spark, d, raw_schema)
@@ -4135,7 +4139,7 @@ def c43_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     views(spark, sf_dir, "events")  # oracle side
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     d = tempfile.mkdtemp(prefix="bp_stream_attr_")
     _sh.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "part-0.parquet"))
     stream = read_events_stream(spark, d, raw_schema)
@@ -4178,7 +4182,7 @@ def c42_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     views(spark, sf_dir, "events", "customer")  # oracle side
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     d = tempfile.mkdtemp(prefix="bp_stream_enrich_")
     _sh.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(d, "part-0.parquet"))
     stream = read_events_stream(spark, d, raw_schema)
@@ -5028,7 +5032,7 @@ def c57_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     views(spark, sf_dir, "events")  # oracle side reads the same fixture
     src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     d = tempfile.mkdtemp(prefix="bp_stream_sessions_")
     t = pq.read_table(src)
     ts_i = pc.cast(t.column("ts"), "int64")
@@ -5447,7 +5451,7 @@ def c65_stream_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     views(spark, sf_dir, "events")  # oracle side reads the same fixture
     src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     d = tempfile.mkdtemp(prefix="bp_stream_topk_")
     t = pq.read_table(src)
     ts_i = pc.cast(t.column("ts"), "int64")

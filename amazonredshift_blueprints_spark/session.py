@@ -16,14 +16,36 @@ Scale notes (100 TB design):
   to read natively; we read it as long (``nanosAsLong``) and cast back to a
   microsecond timestamp — the exact value DuckDB produces for the same file
   (the fixture's nanos are all whole microseconds).
+
+Per-build driver cost (an entry's ``build()`` on a small fixture is
+bound by it, not by execution):
+- Schema inference on ``spark.read.parquet`` runs a Spark job to read
+  the footer. :func:`read_parquet` memoizes the raw (pre-
+  normalization) schema per session in
+  ``session_state(spark, "parquet_schemas")``, keyed on the absolute
+  path plus the file identity ``(st_ino, st_mtime_ns, st_size)``, so a
+  rewritten file is inferred again and a new session starts cold. A
+  hit reads with ``spark.read.schema(s)``, which runs no job;
+  ``register_tables`` fills the memo, so ``views()`` never infers.
+- PySpark's DataFrame debugging
+  (``spark.python.sql.dataFrameDebugging.enabled``, a static conf)
+  walks the Python stack and makes JVM origin calls on every Column
+  method to record its ``file:line``. :func:`get_spark` turns it off:
+  ANSI error messages keep their SQL context and jobs keep their call
+  site names; only the Python "DataFrame context" of an error is lost.
+  PySpark reads the conf once per process, from the first session that
+  builds a Column.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sessionstate import session_state
 
 TABLES = (
     "region",
@@ -88,6 +110,8 @@ def get_spark(app_name: str = "amazonredshift-blueprints-spark") -> SparkSession
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # per-Column call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # SPARK_GRAFT_WAREHOUSE isolates managed-table data per process so
     # concurrent gate runs (pytest + an oracle sweep) can't race each
@@ -140,15 +164,39 @@ def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema of a regular
+    file once per session: the memo keys on the absolute path and the
+    file's ``(st_ino, st_mtime_ns, st_size)``, so a rewritten file is
+    inferred again (module docstring). Directories and paths ``os.stat``
+    cannot see are inferred on every call."""
+    try:
+        st = os.stat(path)
+        ident = (st.st_ino, st.st_mtime_ns, st.st_size) if stat.S_ISREG(st.st_mode) else None
+    except OSError:
+        ident = None
+    memo, key = session_state(spark, "parquet_schemas"), os.path.abspath(path)
+    hit = memo.get(key)
+    if ident is not None and hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if ident is not None:
+        memo[key] = (ident, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalizing types to the logical schema.
 
-    ``events.ts`` is normalized to a microsecond TimestampType whatever
-    the parquet reader yields (see normalize_events_ts) — bit-identical
-    to DuckDB's read of the same file.
+    The file is read with :func:`read_parquet`: after the first read of
+    a file in a session, the read runs no Spark job.
+    ``events.ts`` is normalized on every read to a microsecond
+    TimestampType whatever the parquet reader yields (see
+    normalize_events_ts) — bit-identical to DuckDB's read of the same
+    file.
     """
     configure_runtime(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df)
     return df
@@ -184,6 +232,8 @@ def register_tables(
     Mirrors the reference's catalog resolution (a Redshift schema of named
     tables, upload_file.py:79-82) onto the Spark session catalog. Parquet
     scans get predicate pushdown + column pruning from Catalyst for free.
+    Fills the session's schema memo (:func:`read_parquet`), so later
+    reads of the same files run no inference job.
     """
     dfs = load_tables(spark, sf_dir, strict=strict)
     for name, df in dfs.items():

@@ -93,7 +93,9 @@ def _execute_sql_inner(spark: SparkSession, query: str) -> None:
     loads keeps working.
 
     Other DML/DDL statements execute eagerly inside ``spark.sql`` itself
-    (their analyzed plan is a ``CommandResult``); for plain SELECTs the
+    (the frame's logical plan is a ``CommandResult``; the analyzed
+    plan's class names no ``Command`` for v2 commands such as
+    ``DropTable``); for plain SELECTs the
     plan is forced through the no-op sink so the query *runs* (reference
     parity: side effects happen, errors surface) without materializing a
     single row on the driver — a ``.collect()`` here would OOM the
@@ -276,8 +278,7 @@ def _execute_sql_inner(spark: SparkSession, query: str) -> None:
 
     maybe_register_system_views(spark, query)
     df = spark.sql(translate_redshift_sql(query))
-    analyzed = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-    if "Command" not in analyzed:
+    if df._jdf.logicalPlan().getClass().getSimpleName() != "CommandResult":
         df.write.format("noop").mode("overwrite").save()
     print("Your query has been successfully executed.")  # execute_sql.py:78-79 analog
 

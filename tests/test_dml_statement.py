@@ -194,3 +194,34 @@ def test_table_qualified_references_resolve_on_every_pre_image(spark):
             tt.remove_history(spark, "dmls_qual")
         # sum(k % 7 for k < 2000) = 5995, plus one for each of 20 rows
         assert sum(r.v for r in rows) == 5995 + 20
+
+
+@pytest.mark.parametrize("kind", ["plain", "history", "transaction"])
+def test_database_qualified_references_resolve_on_every_pre_image(spark, kind):
+    """``db.t.col`` and ``catalog.db.t.col`` resolve on every pre-image,
+    as on the catalog table."""
+    from amazonredshift_blueprints_spark.sqlrun import execute_sql
+
+    _fresh(spark, "dmls_dbq", kind == "history")
+    try:
+        if kind == "transaction":
+            execute_sql(spark, "BEGIN")
+        try:
+            execute_sql(
+                spark,
+                "UPDATE default.dmls_dbq SET v = default.dmls_dbq.v + 1 "
+                "WHERE spark_catalog.default.dmls_dbq.k % 100 = 7",
+            )
+            n = dml.delete_from(spark, "default.dmls_dbq", "default.dmls_dbq.k < 10")
+        finally:
+            if kind == "transaction":
+                execute_sql(spark, "COMMIT")
+        rows = spark.table("dmls_dbq").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS dmls_dbq")
+        tt.remove_history(spark, "dmls_dbq")
+    assert n == 10
+    assert len(rows) == 1990
+    # sum(k % 7 for 10 <= k < 2000) = 5995 - 24, plus one for each of
+    # the 20 updated rows (k = 7 went with the delete)
+    assert sum(r.v for r in rows) == 5995 - 24 + 19

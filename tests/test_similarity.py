@@ -290,7 +290,7 @@ def test_kmeans_centroids_bitwise_numpy_replay(spark, sf_dir, vecs, n_sub):
     e = load_table(spark, sf_dir, "embeddings")
     if n_sub > 1:
         got_cb, d_sub = train_pq_codebook(
-            e.select("vec_id", quantize(F.col("embedding")).alias("rv")),
+            e.select("vec_id", quantize("embedding").alias("rv")),
             n_subspaces=n_sub, n_codes=n_codes, iters=iters,
         )
         assert d_sub == X.shape[2]

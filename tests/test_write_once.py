@@ -178,6 +178,18 @@ def test_commit_of_managed_target_runs_no_job(spark):
         spark.sql("DROP TABLE IF EXISTS wo_commit")
 
 
+def test_execute_sql_runs_no_job_after_a_command(spark):
+    """A command (v2 ``DropTable`` or ``ShowTables`` included) already ran
+    inside ``spark.sql``; only a query still needs its job."""
+    spark.sql("CREATE TABLE IF NOT EXISTS wo_drop (k INT) USING parquet")
+    for stmt in ("DROP TABLE IF EXISTS wo_drop", "DROP TABLE IF EXISTS wo_drop", "SHOW TABLES"):
+        _, jobs = _jobs(spark, lambda: execute_sql(spark, stmt))
+        assert jobs == 0, stmt
+    assert not spark.catalog.tableExists("wo_drop")
+    _, jobs = _jobs(spark, lambda: execute_sql(spark, "SELECT count(*) FROM range(100)"))
+    assert jobs >= 1
+
+
 LAYOUTS = {
     "wo_part": "USING parquet PARTITIONED BY (p)",
     "wo_orc": "USING orc",

@@ -15,6 +15,10 @@ Usage:
   shuffle bytes of every timed run are printed, read from Spark's status
   store with ``perfbench/spark_hooks.py``'s ``group_counts``; ``pinned``
   is the persisted-RDD count the build left above the count before it.
+- Build split: each timed ``build()`` wall time is split into the wall
+  time its eager jobs ran (the union of their submission-to-completion
+  intervals in the status store) and the driver-side rest (Python,
+  py4j, Catalyst analysis).
 - ``--plan-out plans/r16:before`` writes ``plans/r16/<name>_before.txt``
   with the formatted plan (the judge-facing artifact).
 - Plan summary: Exchange / BatchEvalPython / ArrowEvalPython / join node
@@ -39,6 +43,26 @@ from perfbench.spark_hooks import drain, group_counts, persistent_rdds  # noqa: 
 
 def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
+
+
+def eager_wall_s(sc, group: str) -> float:
+    """Wall time during which at least one job of ``group`` ran: the
+    union of the jobs' submission-to-completion intervals in the status
+    store (overlapping jobs count once). Call after ``drain``."""
+    store = sc._jsc.sc().statusStore()
+    spans = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        job = store.job(job_id)
+        start, end = job.submissionTime(), job.completionTime()
+        if start.isDefined() and end.isDefined():
+            spans.append((start.get().getTime(), end.get().getTime()))
+    total_ms, reach = 0, None
+    for a, b in sorted(spans):
+        if reach is None or a > reach:
+            total_ms, reach = total_ms + b - a, b
+        elif b > reach:
+            total_ms, reach = total_ms + b - reach, b
+    return total_ms / 1000.0
 
 
 def plan_text(df) -> str:
@@ -120,6 +144,7 @@ def main() -> None:
         _force(df)  # warmup
         sc = spark.sparkContext
         timed, counts, pinned = [], {"build": [], "exec": []}, []
+        builds, eager = [], []
         for i in range(runs):
             release_pins(spark)
             before = persistent_rdds(sc)
@@ -127,6 +152,7 @@ def main() -> None:
             t0 = time.time()
             df = build(spark, sf_dir)
             build_t = time.time() - t0
+            builds.append(build_t)
             pinned.append(persistent_rdds(sc) - before)
             sc.setJobGroup(f"profile:{full}:{i}:exec", f"{full} exec")
             t0 = time.time()
@@ -136,6 +162,7 @@ def main() -> None:
             drain(sc)
             for phase in counts:
                 counts[phase].append(group_counts(sc, f"profile:{full}:{i}:{phase}"))
+            eager.append(eager_wall_s(sc, f"profile:{full}:{i}:build"))
         med = statistics.median(timed)
         print(f"{full}: median={med:.3f}s runs={timed} build={build_s:.2f}s")
         for phase, cs in counts.items():
@@ -144,6 +171,11 @@ def main() -> None:
                 f"stages={[c.stages for c in cs]} "
                 f"shuffle_bytes={[c.shuffle_bytes for c in cs]}"
             )
+        print(
+            f"  build split: wall={[round(b, 3) for b in builds]} "
+            f"eager_jobs_s={[round(e, 3) for e in eager]} "
+            f"driver_s={[round(b - e, 3) for b, e in zip(builds, eager)]}"
+        )
         print(f"  pinned: {pinned}\n  plan: {plan_summary(text)}")
         spark.sparkContext.setJobDescription(None)
 
