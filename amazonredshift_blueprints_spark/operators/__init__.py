@@ -13,10 +13,23 @@
 - ``sessions``    — event sessionization (gap-and-islands).
 - ``timeseries``  — bucket grids, LOCF gap-fill, robust outliers.
 - ``sampling``    — deterministic splits, stratified samples, corpus mix.
-- ``multimodal``  — binary-column plumbing; real PPM decode, stubs for
-  codec formats absent from the container.
+- ``graph``       — connected components, PageRank and label
+  propagation over edge frames, on the ``iterate`` round driver below.
+- ``ml``          — counts-based ML: multinomial Naive Bayes, target
+  encoding, two-proportion z-tests.
+- ``multimodal``  — binary-column plumbing and native image/audio
+  codecs (netpbm, PNG/APNG, GIF, BMP, QOI, TGA, ICO, TIFF, JPEG incl.
+  progressive/CMYK/EXIF; PCM WAV, G.711, IMA ADPCM, AIFF, AU), every
+  codec stage one ``map_rows`` call.
+- ``warc``        — crawl containers: WARC/.warc.gz, WebDataset tar,
+  ZIP, CDXJ capture indexes.
 - ``maintenance`` — small-file compaction, column profiling, HLL
   sketch tables.
+- ``layout``      — partitioned writes with partition-pruned readers.
+- ``bloom``       — bloom-filter pruning of a join's big side.
+- ``skew``        — explicit key salting for hot keys.
+- ``linkage``     — blocked fuzzy record linkage by edit distance.
+- ``skyline``     — grid-pruned Pareto frontier.
 - ``geo``         — grid-bucketed spatial within-radius join.
 - ``asof`` / ``rangejoin`` — ordered joins Spark SQL lacks natively.
 """

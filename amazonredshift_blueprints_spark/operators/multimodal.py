@@ -3,53 +3,47 @@
 The pattern for image/audio/video at 100 TB (SURVEY.md §2 Part C):
 - payloads ride as ``BinaryType`` columns (or object-store URIs for the
   very large ones) next to a ``StructType`` metadata column;
-- decode / feature-extract runs in ``mapInPandas`` — Arrow-batched, one
-  Python worker per input partition, constant memory per batch;
+- every codec stage — decode-and-reduce stats, closed-form payload
+  synthesis, 1→n splits — is one call of :func:`map_rows`, the ONE
+  home of the Arrow-stage rules here and in ``warc.py``: it selects
+  the mapped columns, drops rows with a NULL in any of them, applies
+  the rebalance guard below and runs one ``mapInPandas`` (Arrow-batched,
+  one Python worker per input partition, constant memory per batch)
+  that calls a plain per-row function;
 - partitioning carries over from the scan, so the decode stage scales
   with partition count and never shuffles — EXCEPT when the scan itself
   arrives pathologically under-split (a single-row-group parquet file
   serializes every codec kernel into one task no matter the cluster
-  size). Every Arrow-stage input therefore passes through dedup.py's
+  size). :func:`map_rows` therefore passes every input through dedup.py's
   guarded ``rebalance_for_compute`` (r16): a round-robin repartition
   that FIRES only when scan parallelism is >4× below the cluster's and
   is a no-op on any well-split at-scale input, so the "no shuffle at
   100 TB" contract above still holds. Measured at sf0.1/local[32]: the
   JPEG decode-stats entries ran 1-task serial before the guard.
 
-Decode status, honestly: uncompressed binary PPM (P6) decodes FOR REAL
-(pure-numpy parser, ``decode_image``; end-to-end verified against a
-closed-form pixel oracle in c64), and PNG decodes FOR REAL via stdlib
-zlib + numpy unfiltering (``decode_png``; same closed-form oracle in
-c81/c83): RGB and grayscale at depths 8 AND 16, RGBA and gray+alpha
-(r15, c219), and PLTE-indexed color at depths 1/2/4/8, each
-sequential or Adam7-interlaced, all five filter types. Baseline TIFF
-(r15, c220) encodes and decodes in both byte orders, gray/RGB/RGBA at
-8/16 bits, multi-strip. Audio: PCM WAV, G.711 mu-law/A-law (r15,
-c217) and stateful IMA ADPCM (r15, c218), the latter two bit-exact
-against CPython's audioop reference.
-Baseline JPEG encodes AND decodes for real since r14 — grayscale
-(c211) and 3-component color (c213: JFIF YCbCr, dual Annex
-K.1/K.2 quantization tables, K.3.2 chroma Huffman tables,
-interleaved MCUs; r15 adds chroma-SUBSAMPLED 4:2:0/4:2:2 encode and
-decode with general sampling-factor MCU layout and replication
-upsampling, c214 — the layout nearly every camera/web JPEG uses —
-and RESTART INTERVALS, c215: DRI + RSTm markers emitted every N MCUs
-and consumed at the declared boundaries with DC predictors reset) —
-pure numpy DCT + canonical Huffman, cross-validated against the
-JVM's independent javax.imageio decoder; exactness contract for
-block-constant tiles documented at the JPEG section below.
-Progressive JPEG, non-integer sampling grids, CMYK, and video fall
-through to pillow when present and otherwise raise
-NotImplementedError. The
-hash-based featureizer remains for payloads that cannot decode here;
-every piece of real plumbing (binary Arrow transfer, batch iteration,
-schema contract) is shared between both paths, so swapping in a full
-decoder is a one-function change.
+Decode status: every rung decodes natively — pure numpy + stdlib
+zlib, no codec library. Images: the full netpbm family (P1-P6), PNG
+(RGB/gray at depths 8 and 16, RGBA and gray+alpha, PLTE-indexed at
+depths 1/2/4/8, sequential or Adam7, all five filters) and APNG,
+GIF87a/GIF89a animation, BMP, QOI, TGA, ICO, baseline TIFF
+(uncompressed, PackBits, LZW, Deflate) and JPEG (baseline gray and
+color with 4:2:0/4:2:2 subsampling and restart intervals, progressive,
+Adobe CMYK/YCCK, EXIF orientation), the JPEG path cross-validated
+against the JVM's independent javax.imageio decoder. Audio: PCM WAV
+at 8/16/24 bits, G.711 mu-law/A-law and IMA ADPCM (bit-exact against
+CPython's audioop), AIFF and Sun AU. Each entry decodes synthesized
+payloads whose pixels/samples have a closed form, so a SQL oracle
+checks the decode. Video and codecs beyond this ladder fall through
+to pillow when present and otherwise raise NotImplementedError; the
+hash-based featureizer remains for payloads that cannot decode here.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import itertools
+import operator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -63,6 +57,59 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+
+def map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+) -> DataFrame:
+    """The one Arrow stage of this module and of ``warc.py``: select
+    ``cols``, pass the rows through dedup.py's guarded
+    ``rebalance_for_compute`` and one ``mapInPandas`` that calls
+    ``fn(*row)`` once per input row, with plain Python values (``int``
+    for an integral column, ``bytes`` for a binary, ``str`` for a
+    string), and gathers every tuple ``fn`` yields, in ``schema``'s
+    field order, into the output. One call shape covers 1→1 stats,
+    1→1 synthesis and 1→n splits: ``fn`` yields one tuple per output
+    row — one, many or none.
+
+    NULL rule (``explode(NULL)``'s): a row with a NULL in any of
+    ``cols`` gives no output row. The rows are dropped on the Spark
+    side, before the map, so no codec sees ``None`` and no integral
+    column reaches pandas as float64 (ids above 2**53 stay exact). The
+    filter is row-local — pushed into a parquet scan as ``IsNotNull``,
+    folded away on non-nullable columns — and adds no ``Exchange``.
+
+    Output values pass to Arrow as Python objects, so a ``None`` in an
+    integral output column is a NULL, never a float NaN."""
+    out = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = out.fieldNames()
+    src = df.select(*cols)
+    src = src.where(
+        functools.reduce(operator.and_, [F.col(c).isNotNull() for c in src.columns])
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            values = zip(*(col.tolist() for _, col in pdf.items()))
+            rows = [r for row in values for r in fn(*row)]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return rebalance_for_compute(src).mapInPandas(run, out)
+
+
+def _synthesize(
+    df: DataFrame, id_col: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """``(doc_id, payload)`` rows with ``payload = encode(id)`` — the
+    shape every closed-form payload synthesizer here and in
+    ``warc.py`` shares."""
+    return map_rows(
+        df, [id_col], lambda i: [(i, encode(i))], "doc_id long, payload binary"
+    )
+
 
 FEATURE_SCHEMA = StructType(
     [
@@ -141,50 +188,50 @@ def encode_pnm(pixels, variant: str) -> bytes:
     raise ValueError(f"unknown PNM variant {variant!r} (P1-P5 here, P6 via encode_ppm)")
 
 
-def _pnm_header(payload: bytes, ntok: int):
-    """``(tokens, pos)`` after the magic: ``ntok`` whitespace-separated
-    integers with ``#`` comments allowed in any whitespace run — the
-    shared netpbm header grammar."""
-    end, pos, tokens = len(payload), 2, []
-    while len(tokens) < ntok:
+def _pnm_tokens(payload: bytes, pos: int):
+    """``(token, end)`` for each whitespace-separated token from
+    ``pos`` — the netpbm grammar, where any whitespace run may carry a
+    ``#`` comment to end of line. Stops at the end of the payload or at
+    an unterminated comment."""
+    end = len(payload)
+    while True:
         while pos < end and payload[pos : pos + 1].isspace():
             pos += 1
         if payload[pos : pos + 1] == b"#":
             nl = payload.find(b"\n", pos)
             if nl < 0:
-                raise ValueError("truncated PNM header: unterminated comment")
+                return
             pos = nl + 1
             continue
         start = pos
         while pos < end and not payload[pos : pos + 1].isspace():
             pos += 1
         if pos == start:
-            raise ValueError("truncated PNM header: missing token")
-        tokens.append(int(payload[start:pos]))
+            return
+        yield payload[start:pos], pos
+
+
+def _pnm_header(payload: bytes, ntok: int):
+    """``(tokens, pos)`` after the magic: ``ntok`` integers, ``pos``
+    at the whitespace byte that ends the last one."""
+    tokens, pos = [], 2
+    for tok, pos in itertools.islice(_pnm_tokens(payload, 2), ntok):
+        tokens.append(int(tok))
+    if len(tokens) < ntok:
+        raise ValueError(
+            f"truncated PNM header: need {ntok} tokens, have {len(tokens)}"
+        )
     return tokens, pos
 
 
 def _pnm_ascii_samples(payload: bytes, pos: int, n: int, maxval: int):
-    """``n`` ASCII integers from ``pos`` (whitespace-separated, ``#``
-    comments skipped), range-checked against ``maxval``."""
+    """``n`` ASCII integers from ``pos``, range-checked against
+    ``maxval``."""
     import numpy as np
 
-    out, end = [], len(payload)
-    while len(out) < n:
-        while pos < end and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            nl = payload.find(b"\n", pos)
-            if nl < 0:
-                break
-            pos = nl + 1
-            continue
-        start = pos
-        while pos < end and not payload[pos : pos + 1].isspace():
-            pos += 1
-        if pos == start:
-            break
-        v = int(payload[start:pos])
+    out = []
+    for tok, _ in itertools.islice(_pnm_tokens(payload, pos), n):
+        v = int(tok)
         if v < 0 or v > maxval:
             raise ValueError(f"PNM sample {v} outside 0..{maxval}")
         out.append(v)
@@ -263,29 +310,14 @@ def decode_image(payload: bytes):
     import numpy as np
 
     if payload[:2] == b"P6":
-        end, pos, tokens = len(payload), 2, []
-        while len(tokens) < 3:
-            while pos < end and payload[pos : pos + 1].isspace():
-                pos += 1
-            if payload[pos : pos + 1] == b"#":  # comment to end of line
-                nl = payload.find(b"\n", pos)
-                if nl < 0:
-                    raise ValueError("truncated PPM header: unterminated comment")
-                pos = nl + 1
-                continue
-            start = pos
-            while pos < end and not payload[pos : pos + 1].isspace():
-                pos += 1
-            if pos == start:
-                raise ValueError("truncated PPM header: missing dimension token")
-            tokens.append(int(payload[start:pos]))
-        w, h, maxval = tokens
+        (w, h, maxval), pos = _pnm_header(payload, 3)
         if maxval != 255:
             raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
         pos += 1  # the single whitespace byte after maxval
-        if end - pos < h * w * 3:
+        if len(payload) - pos < h * w * 3:
             raise ValueError(
-                f"truncated PPM payload: need {h * w * 3} bytes, have {end - pos}"
+                f"truncated PPM payload: need {h * w * 3} bytes, "
+                f"have {len(payload) - pos}"
             )
         data = np.frombuffer(payload, dtype=np.uint8, count=h * w * 3, offset=pos)
         return data.reshape(h, w, 3)
@@ -488,8 +520,6 @@ def encode_png_gray(
     0), optionally Adam7-interlaced; decodes back as replicated RGB."""
     import struct
     import zlib
-
-    import numpy as np
 
     arr, depth = _as_pixel_array(pixels, "encode_png_gray")
     if depth != 8:
@@ -834,26 +864,16 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "
     """
     import hashlib
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "payload_md5": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "head_hex": payloads.map(lambda b: bytes(b)[:8].hex()),
-                    "feature": payloads.map(lambda b: _fake_feature(bytes(b))),
-                }
-            )
+    def featurize(doc_id: int, payload: bytes):
+        yield (
+            doc_id,
+            len(payload),
+            hashlib.md5(payload).hexdigest(),
+            payload[:8].hex(),
+            _fake_feature(payload),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        featurize, FEATURE_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], featurize, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -888,32 +908,13 @@ def sample_frames(
     """
     import hashlib
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sizes, digests = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                n_frames = (len(b) + frame_size - 1) // frame_size
-                for i in range(0, n_frames, stride):
-                    frame = b[i * frame_size : (i + 1) * frame_size]
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    sizes.append(len(frame))
-                    digests.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "n_frame_bytes": pd.Series(sizes, dtype="int64"),
-                    "frame_md5": pd.Series(digests, dtype="object"),
-                }
-            )
+    def sample(doc_id: int, payload: bytes):
+        n_frames = (len(payload) + frame_size - 1) // frame_size
+        for i in range(0, n_frames, stride):
+            frame = payload[i * frame_size : (i + 1) * frame_size]
+            yield (doc_id, i, len(frame), hashlib.md5(frame).hexdigest())
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        sample, FRAME_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], sample, FRAME_SCHEMA)
 
 
 def synthesize_ppm_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataFrame:
@@ -927,21 +928,14 @@ def synthesize_ppm_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataF
     """
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_ppm(((int(i) * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8"))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    r = np.arange(side)[:, None, None]
+    c = np.arange(side)[None, :, None]
+    ch = np.arange(3)[None, None, :]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_ppm(((i * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8")),
+    )
 
 
 def synthesize_png_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataFrame:
@@ -952,21 +946,14 @@ def synthesize_png_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataF
     path and the c64 channel-sum oracle replays unchanged."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_png(((int(i) * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8"))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    r = np.arange(side)[:, None, None]
+    c = np.arange(side)[None, :, None]
+    ch = np.arange(3)[None, None, :]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_png(((i * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8")),
+    )
 
 
 def synthesize_png_variant_images(
@@ -984,31 +971,20 @@ def synthesize_png_variant_images(
     edge."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        i256 = np.arange(256)[:, None]
-        pal = ((i256 + np.arange(3)[None, :]) % 256).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                rgb = ((i * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8")
-                variant = i % 4
-                if variant < 2:
-                    payloads.append(encode_png(rgb, interlace=variant == 1))
-                else:
-                    idx = rgb[:, :, 0]  # base channel IS the palette index
-                    payloads.append(
-                        encode_png_palette(idx, pal, interlace=variant == 3)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    r = np.arange(side)[:, None, None]
+    c = np.arange(side)[None, :, None]
+    ch = np.arange(3)[None, None, :]
+    pal = ((np.arange(256)[:, None] + np.arange(3)[None, :]) % 256).astype(np.uint8)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    def encode(i: int) -> bytes:
+        rgb = ((i * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8")
+        variant = i % 4
+        if variant < 2:
+            return encode_png(rgb, interlace=variant == 1)
+        # the base channel IS the palette index
+        return encode_png_palette(rgb[:, :, 0], pal, interlace=variant == 3)
+
+    return _synthesize(df, id_col, encode)
 
 
 IMAGE_STATS_SCHEMA = (
@@ -1033,37 +1009,13 @@ def image_channel_stats(
     """
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, ns, sr, sg, sb = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = decode_image(bytes(payload))
-                h, w, _ = arr.shape
-                s = arr.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                ids.append(int(doc_id))
-                ws.append(w)
-                hs.append(h)
-                ns.append(h * w)
-                sr.append(int(s[0]))
-                sg.append(int(s[1]))
-                sb.append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "n_pixels": pd.Series(ns, dtype="int64"),
-                    "sum_r": pd.Series(sr, dtype="int64"),
-                    "sum_g": pd.Series(sg, dtype="int64"),
-                    "sum_b": pd.Series(sb, dtype="int64"),
-                }
-            )
+    def stats(doc_id: int, payload: bytes):
+        arr = decode_image(payload)
+        h, w, _ = arr.shape
+        s = arr.reshape(-1, 3).astype(np.int64).sum(axis=0)
+        yield (doc_id, w, h, h * w, int(s[0]), int(s[1]), int(s[2]))
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats, IMAGE_STATS_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], stats, IMAGE_STATS_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -1093,36 +1045,16 @@ def resize_payload(
     import hashlib
     import math
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_orig, out_n, out_md5, out_b = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                if len(b) > target_bytes:
-                    k = math.ceil(len(b) / target_bytes)
-                    b2 = b[::k]
-                else:
-                    b2 = b
-                out_ids.append(int(doc_id))
-                out_orig.append(len(b))
-                out_n.append(len(b2))
-                out_md5.append(hashlib.md5(b2).hexdigest())
-                out_b.append(b2)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_ids, dtype="int64"),
-                    "orig_bytes": pd.Series(out_orig, dtype="int64"),
-                    "resized_bytes": pd.Series(out_n, dtype="int64"),
-                    "resized_md5": pd.Series(out_md5, dtype="object"),
-                    "resized": pd.Series(out_b, dtype="object"),
-                }
-            )
+    def resize(doc_id: int, payload: bytes):
+        if len(payload) > target_bytes:
+            small = payload[:: math.ceil(len(payload) / target_bytes)]
+        else:
+            small = payload
+        yield (
+            doc_id, len(payload), len(small), hashlib.md5(small).hexdigest(), small,
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        resize, RESIZE_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], resize, RESIZE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1462,25 +1394,16 @@ def synthesize_wav_audio(
     (the :func:`synthesize_ppm_images` contract, for audio)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        s = np.arange(n_samples)[:, None]
-        ch = np.arange(channels)[None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_wav(
-                    ((int(i) * 37 + s * 11 + ch * 5) % 65536 - 32768).astype(
-                        "<i2"
-                    ),
-                    sample_rate=sample_rate,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    s = np.arange(n_samples)[:, None]
+    ch = np.arange(channels)[None, :]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_wav(
+            ((i * 37 + s * 11 + ch * 5) % 65536 - 32768).astype("<i2"),
+            sample_rate=sample_rate,
+        ),
+    )
 
 
 def synthesize_pcm_variant_wavs(df: DataFrame, id_col: str) -> DataFrame:
@@ -1494,39 +1417,19 @@ def synthesize_pcm_variant_wavs(df: DataFrame, id_col: str) -> DataFrame:
     ``(stored - 128) * 256``)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 40 + i % 17
-                j = np.arange(n)[:, None]
-                if i % 3 == 0:
-                    arr = ((i * 13 + j * 7) % 256).astype(np.uint8)
-                    payloads.append(
-                        encode_wav_pcm(arr, bits=8, sample_rate=8000)
-                    )
-                elif i % 3 == 1:
-                    ch = np.arange(2)[None, :]
-                    arr = ((i * 29 + j * 11 + ch * 3) % 60000) - 30000
-                    payloads.append(
-                        encode_wav_pcm(
-                            arr.astype(np.int64), bits=16, sample_rate=16000
-                        )
-                    )
-                else:
-                    arr = ((i * 37 + j * 17) % 1000000) - 500000
-                    payloads.append(
-                        encode_wav_pcm(arr, bits=24, sample_rate=44100)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        j = np.arange(40 + i % 17)[:, None]
+        if i % 3 == 0:
+            arr = ((i * 13 + j * 7) % 256).astype(np.uint8)
+            return encode_wav_pcm(arr, bits=8, sample_rate=8000)
+        if i % 3 == 1:
+            ch = np.arange(2)[None, :]
+            arr = ((i * 29 + j * 11 + ch * 3) % 60000) - 30000
+            return encode_wav_pcm(arr.astype(np.int64), bits=16, sample_rate=16000)
+        arr = ((i * 37 + j * 17) % 1000000) - 500000
+        return encode_wav_pcm(arr, bits=24, sample_rate=44100)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def wav_pcm_stats(
@@ -1539,32 +1442,17 @@ def wav_pcm_stats(
     scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_channels", "sample_rate", "n_samples",
-                    "sample_sum", "sample_min", "sample_max",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                v = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["n_channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sample_sum"].append(int(v.sum()))
-                rows["sample_min"].append(int(v.min()))
-                rows["sample_max"].append(int(v.max()))
-            yield pd.DataFrame(
-                {k: pd.Series(vv, dtype="int64") for k, vv in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        rate, ch, samples = decode_wav(payload)
+        v = samples.astype(np.int64)
+        yield (
+            doc_id, ch, rate, samples.shape[0],
+            int(v.sum()), int(v.min()), int(v.max()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, n_channels long, sample_rate long, n_samples long, "
         "sample_sum long, sample_min long, sample_max long",
@@ -1795,63 +1683,28 @@ def synthesize_bigendian_audio(df: DataFrame, id_col: str) -> DataFrame:
     ``30 + id % 15`` frames."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 30 + i % 15
-                j = np.arange(n)[:, None]
-                v = i % 5
-                if v == 0:
-                    arr = (((i * 11 + j * 5) % 256) - 128).astype(np.int8)
-                    payloads.append(
-                        encode_aiff(arr, bits=8, sample_rate=8000)
-                    )
-                elif v == 1:
-                    ch = np.arange(2)[None, :]
-                    arr = ((i * 29 + j * 13 + ch * 7) % 60000) - 30000
-                    payloads.append(
-                        encode_aiff(
-                            arr.astype(np.int64), bits=16, sample_rate=44100
-                        )
-                    )
-                elif v == 2:
-                    arr = ((i * 31 + j * 17) % 1000000) - 500000
-                    payloads.append(
-                        encode_aiff(arr, bits=24, sample_rate=48000)
-                    )
-                elif v == 3:
-                    ch = np.arange(2)[None, :]
-                    arr = (
-                        ((i * 23 + j * 19 + ch * 3) % 60000) - 30000
-                    ).astype(">i2")
-                    payloads.append(
-                        encode_au(
-                            arr.tobytes(),
-                            encoding=3,
-                            sample_rate=16000,
-                            channels=2,
-                        )
-                    )
-                else:
-                    codes = ((i * 7 + j[:, 0] * 13) % 256).astype(np.uint8)
-                    payloads.append(
-                        encode_au(
-                            codes.tobytes(),
-                            encoding=1,
-                            sample_rate=8000,
-                            channels=1,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def encode(i: int) -> bytes:
+        j = np.arange(30 + i % 15)[:, None]
+        ch = np.arange(2)[None, :]
+        v = i % 5
+        if v == 0:
+            arr = (((i * 11 + j * 5) % 256) - 128).astype(np.int8)
+            return encode_aiff(arr, bits=8, sample_rate=8000)
+        if v == 1:
+            arr = ((i * 29 + j * 13 + ch * 7) % 60000) - 30000
+            return encode_aiff(arr.astype(np.int64), bits=16, sample_rate=44100)
+        if v == 2:
+            arr = ((i * 31 + j * 17) % 1000000) - 500000
+            return encode_aiff(arr, bits=24, sample_rate=48000)
+        if v == 3:
+            arr = (((i * 23 + j * 19 + ch * 3) % 60000) - 30000).astype(">i2")
+            return encode_au(
+                arr.tobytes(), encoding=3, sample_rate=16000, channels=2
             )
+        codes = ((i * 7 + j[:, 0] * 13) % 256).astype(np.uint8)
+        return encode_au(codes.tobytes(), encoding=1, sample_rate=8000, channels=1)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def bigendian_audio_stats(
@@ -1863,44 +1716,25 @@ def bigendian_audio_stats(
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "container", "n_channels", "sample_rate",
-                    "n_samples", "sample_sum", "sample_min", "sample_max",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                if raw[:4] == b"FORM":
-                    container = "aiff"
-                    rate, ch, samples = decode_aiff(raw)
-                elif raw[:4] == b".snd":
-                    container = "au"
-                    rate, ch, samples = decode_au(raw)
-                else:
-                    raise ValueError("unknown audio container magic")
-                v = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["container"].append(container)
-                rows["n_channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sample_sum"].append(int(v.sum()))
-                rows["sample_min"].append(int(v.min()) if v.size else None)
-                rows["sample_max"].append(int(v.max()) if v.size else None)
-            out = {
-                k: pd.Series(vv, dtype="object" if k == "container"
-                             else "int64")
-                for k, vv in rows.items()
-            }
-            yield pd.DataFrame(out)
+    def stats(doc_id: int, payload: bytes):
+        if payload[:4] == b"FORM":
+            container = "aiff"
+            rate, ch, samples = decode_aiff(payload)
+        elif payload[:4] == b".snd":
+            container = "au"
+            rate, ch, samples = decode_au(payload)
+        else:
+            raise ValueError("unknown audio container magic")
+        v = samples.astype(np.int64)
+        yield (
+            doc_id, container, ch, rate, samples.shape[0], int(v.sum()),
+            int(v.min()) if v.size else None,
+            int(v.max()) if v.size else None,
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, container string, n_channels long, "
         "sample_rate long, n_samples long, sample_sum long, "
@@ -1920,45 +1754,21 @@ def synthesize_wav_telephony(df: DataFrame, id_col: str) -> DataFrame:
     formulas / the stateful block decode as a recursive CTE."""
     import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                variant = i % 3
-                if variant in (0, 1):
-                    n = 80 + i % 40
-                    data = bytes((i * 11 + k * 29) % 256 for k in range(n))
-                    payloads.append(
-                        encode_wav_telephony(data, 7 if variant == 0 else 6)
-                    )
-                else:
-                    n_nib = 60 + 2 * (i % 10)
-                    pred0 = (i * 37) % 1025 - 512
-                    idx0 = i % 89
-                    deltas = [
-                        (i * 13 + k * 7 + k * k) % 16 for k in range(n_nib)
-                    ]
-                    blob = struct.pack("<hBB", pred0, idx0, 0) + bytes(
-                        deltas[j] | (deltas[j + 1] << 4)  # LOW nibble first
-                        for j in range(0, n_nib, 2)
-                    )
-                    payloads.append(
-                        encode_wav_telephony(
-                            blob,
-                            0x11,
-                            samples_per_block=n_nib + 1,
-                            n_samples=n_nib + 1,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        if i % 3 in (0, 1):
+            data = bytes((i * 11 + k * 29) % 256 for k in range(80 + i % 40))
+            return encode_wav_telephony(data, 7 if i % 3 == 0 else 6)
+        n_nib = 60 + 2 * (i % 10)
+        deltas = [(i * 13 + k * 7 + k * k) % 16 for k in range(n_nib)]
+        blob = struct.pack("<hBB", (i * 37) % 1025 - 512, i % 89, 0) + bytes(
+            deltas[j] | (deltas[j + 1] << 4)  # LOW nibble first
+            for j in range(0, n_nib, 2)
+        )
+        return encode_wav_telephony(
+            blob, 0x11, samples_per_block=n_nib + 1, n_samples=n_nib + 1
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def wav_telephony_stats(audio: DataFrame) -> DataFrame:
@@ -1968,32 +1778,13 @@ def wav_telephony_stats(audio: DataFrame) -> DataFrame:
     Arrow-batched inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                pcm = samples[:, 0].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        rate,
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            )
+    def stats(doc_id: int, payload: bytes):
+        rate, _, samples = decode_wav(payload)
+        yield (doc_id, rate, *_pcm_stats(samples[:, 0].astype(np.int64)))
 
-    return rebalance_for_compute(audio).mapInPandas(
+    return map_rows(
+        audio,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, sample_rate long, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
@@ -2017,31 +1808,15 @@ def audio_channel_stats(
     inside the scan's partitions — no shuffle, constant memory."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_channels", "n_samples",
-                "sum_ch0", "sum_ch1", "sum_abs",
-            )}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                s64 = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(ch)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sum_ch0"].append(int(s64[:, 0].sum()))
-                rows["sum_ch1"].append(int(s64[:, 1].sum()) if ch > 1 else 0)
-                rows["sum_abs"].append(int(np.abs(s64).sum()))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        rate, ch, samples = decode_wav(payload)
+        s64 = samples.astype(np.int64)
+        yield (
+            doc_id, rate, ch, samples.shape[0], int(s64[:, 0].sum()),
+            int(s64[:, 1].sum()) if ch > 1 else 0, int(np.abs(s64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats, AUDIO_STATS_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], stats, AUDIO_STATS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2217,26 +1992,26 @@ def synthesize_adpcm_audio(df: DataFrame, id_col: str) -> DataFrame:
     lets the c218 oracle regenerate the codes in SQL and replay the
     whole STATEFUL decode as a recursive CTE."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 64 + 2 * (i % 16)
-                codes = [((i % 97) * (k + 1) + k * k) % 16 for k in range(n)]
-                payloads.append(
-                    bytes(
-                        (codes[j] << 4) | codes[j + 1]
-                        for j in range(0, n, 2)
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        n = 64 + 2 * (i % 16)
+        codes = [((i % 97) * (k + 1) + k * k) % 16 for k in range(n)]
+        return bytes((codes[j] << 4) | codes[j + 1] for j in range(0, n, 2))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
+    return _synthesize(df, id_col, encode)
+
+
+def _pcm_stats(pcm) -> tuple:
+    """``(n_samples, sum, sum_abs, min, max)`` of an int64 PCM array.
+    An empty frame (real ingest can carry one) gives an honest
+    zero-sample row with NULL stats instead of numpy's opaque
+    zero-size reduction error."""
+    import numpy as np
+
+    if pcm.size == 0:
+        return (0, None, None, None, None)
+    return (
+        pcm.size, int(pcm.sum()), int(np.abs(pcm).sum()),
+        int(pcm.min()), int(pcm.max()),
     )
 
 
@@ -2246,38 +2021,13 @@ def adpcm_audio_stats(df: DataFrame) -> DataFrame:
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm = decode_adpcm(bytes(payload)).astype(np.int64)
-                if pcm.size == 0:
-                    # real ingest can carry an empty frame; emit an
-                    # honest zero-sample row with NULL stats instead of
-                    # numpy's opaque zero-size reduction error
-                    rows.append((int(doc_id), 0, None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        int(doc_id),
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            ).astype(
-                {c: "Int64" for c in ("sum_pcm", "sum_abs", "min_pcm", "max_pcm")}
-            )
+    def stats(doc_id: int, payload: bytes):
+        pcm = decode_adpcm(payload).astype(np.int64)
+        yield (doc_id, *_pcm_stats(pcm))
 
-    return rebalance_for_compute(df).mapInPandas(
+    return map_rows(
+        df,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
@@ -2293,28 +2043,12 @@ def synthesize_g711_audio(df: DataFrame, id_col: str) -> DataFrame:
     formulas exactly."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            laws, payloads = [], []
-            for i in ids:
-                i = int(i)
-                k = np.arange(96 + i % 32, dtype=np.int64)
-                payloads.append(((i * 7 + k * 13) % 256).astype(
-                    np.uint8
-                ).tobytes())
-                laws.append("ulaw" if i % 2 == 0 else "alaw")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "law": pd.Series(laws, dtype=object),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def synth(i: int):
+        k = np.arange(96 + i % 32, dtype=np.int64)
+        payload = ((i * 7 + k * 13) % 256).astype(np.uint8).tobytes()
+        yield (i, "ulaw" if i % 2 == 0 else "alaw", payload)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, law string, payload binary"
-    )
+    return map_rows(df, [id_col], synth, "doc_id long, law string, payload binary")
 
 
 def g711_audio_stats(df: DataFrame) -> DataFrame:
@@ -2324,42 +2058,13 @@ def g711_audio_stats(df: DataFrame) -> DataFrame:
     ``mapInPandas`` inside the scan's partitions, no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, law, payload in zip(
-                pdf["doc_id"], pdf["law"], pdf["payload"]
-            ):
-                dec = decode_mulaw if law == "ulaw" else decode_alaw
-                pcm = dec(bytes(payload)).astype(np.int64)
-                if pcm.size == 0:
-                    # real ingest can carry an empty frame; emit an
-                    # honest zero-sample row with NULL stats instead of
-                    # numpy's opaque zero-size reduction error
-                    rows.append((int(doc_id), law, 0, None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        int(doc_id),
-                        law,
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "law", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            ).astype(
-                {c: "Int64" for c in ("sum_pcm", "sum_abs", "min_pcm", "max_pcm")}
-            )
+    def stats(doc_id: int, law: str, payload: bytes):
+        dec = decode_mulaw if law == "ulaw" else decode_alaw
+        yield (doc_id, law, *_pcm_stats(dec(payload).astype(np.int64)))
 
-    return rebalance_for_compute(df).mapInPandas(
+    return map_rows(
+        df,
+        ["doc_id", "law", "payload"],
         stats,
         "doc_id long, law string, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
@@ -2801,23 +2506,15 @@ def synthesize_gif_images(
     but here the payload really is LZW-compressed)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(side)[:, None]
-        x = np.arange(side)[None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_gif(
-                    ((int(i) * 7 + y * 5 + x * 3) % n_colors).astype("uint8"),
-                    n_colors=n_colors,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    y = np.arange(side)[:, None]
+    x = np.arange(side)[None, :]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_gif(
+            ((i * 7 + y * 5 + x * 3) % n_colors).astype("uint8"), n_colors=n_colors
+        ),
+    )
 
 
 def synthesize_gif_animations(df: DataFrame, id_col: str) -> DataFrame:
@@ -2831,38 +2528,24 @@ def synthesize_gif_animations(df: DataFrame, id_col: str) -> DataFrame:
     compositing (last opaque frame wins per pixel) in SQL."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nf = 2 + i % 3
-                h, w = 5 + i % 4, 6 + i % 3
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                frames = [
-                    ((i * 31 + r * 5 + c * 3 + f * 7) % 16).astype(np.uint8)
-                    for f in range(nf)
-                ]
-                payloads.append(
-                    encode_gif89a(
-                        frames,
-                        n_colors=16,
-                        delays=[(i + 3 * f) % 50 + 2 for f in range(nf)],
-                        transparents=[None]
-                        + [(i + f) % 16 for f in range(1, nf)],
-                        disposals=[1] * nf,
-                        loop=i % 4,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        nf = 2 + i % 3
+        r = np.arange(5 + i % 4)[:, None]
+        c = np.arange(6 + i % 3)[None, :]
+        frames = [
+            ((i * 31 + r * 5 + c * 3 + f * 7) % 16).astype(np.uint8)
+            for f in range(nf)
+        ]
+        return encode_gif89a(
+            frames,
+            n_colors=16,
+            delays=[(i + 3 * f) % 50 + 2 for f in range(nf)],
+            transparents=[None] + [(i + f) % 16 for f in range(1, nf)],
+            disposals=[1] * nf,
+            loop=i % 4,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def gif_animation_stats(images: DataFrame) -> DataFrame:
@@ -2875,36 +2558,23 @@ def gif_animation_stats(images: DataFrame) -> DataFrame:
     shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                canvases, meta, loop = decode_gif_animation(bytes(payload))
-                final = canvases[-1].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(canvases),
-                        final.shape[1],
-                        final.shape[0],
-                        sum(m["delay"] for m in meta),
-                        sum(m["n_transparent"] for m in meta),
-                        loop if loop is not None else -1,
-                        int(final[:, :, 0].sum()),
-                        int(final[:, :, 1].sum()),
-                        int(final[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "width", "height",
-                    "total_delay", "n_transparent", "n_loops",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def stats(doc_id: int, payload: bytes):
+        canvases, meta, loop = decode_gif_animation(payload)
+        final = canvases[-1].astype(np.int64)
+        yield (
+            doc_id,
+            len(canvases),
+            final.shape[1],
+            final.shape[0],
+            sum(m["delay"] for m in meta),
+            sum(m["n_transparent"] for m in meta),
+            loop if loop is not None else -1,
+            *(int(final[:, :, k].sum()) for k in range(3)),
+        )
 
-    return rebalance_for_compute(images).mapInPandas(
+    return map_rows(
+        images,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, n_frames long, width long, height long, "
         "total_delay long, n_transparent long, n_loops long, "
@@ -3028,29 +2698,20 @@ def synthesize_bmp_images(
     4-byte row padding (w=6: 18- and 6-byte rows both pad by 2)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(h)[:, None]
-        x = np.arange(w)[None, :]
-        c = np.arange(n_colors)
-        pal = np.stack(
-            [(c * 5) % 256, (c * 9) % 256, (c * 13) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                idx = ((int(i) * 13 + y * 3 + x * 7) % n_colors).astype(
-                    np.uint8
-                )
-                if int(i) % 2 == 0:
-                    payloads.append(encode_bmp_palette(idx, pal))
-                else:
-                    payloads.append(encode_bmp(pal[idx], topdown=True))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    y = np.arange(h)[:, None]
+    x = np.arange(w)[None, :]
+    c = np.arange(n_colors)
+    pal = np.stack(
+        [(c * 5) % 256, (c * 9) % 256, (c * 13) % 256], axis=1
+    ).astype(np.uint8)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    def encode(i: int) -> bytes:
+        idx = ((i * 13 + y * 3 + x * 7) % n_colors).astype(np.uint8)
+        if i % 2 == 0:
+            return encode_bmp_palette(idx, pal)
+        return encode_bmp(pal[idx], topdown=True)
+
+    return _synthesize(df, id_col, encode)
 
 
 # --------------------------------------------------------------------------
@@ -3198,30 +2859,23 @@ def synthesize_qoi_images(
     revisits → QOI_OP_INDEX, jumps → RGB/LUMA)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs = np.arange(w)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for y in range(h):
-                    if y % 2 == 0:
-                        img[y, :, 0] = (i * 7 + xs) % 256
-                        img[y, :, 1] = (i * 11 + xs) % 256
-                        img[y, :, 2] = (i * 13 + xs) % 256
-                    else:
-                        k = (i * 13 + y * 3 + (xs // 4) * 7) % 16
-                        img[y, :, 0] = (k * 5) % 256
-                        img[y, :, 1] = (k * 9) % 256
-                        img[y, :, 2] = (k * 13) % 256
-                payloads.append(encode_qoi(img))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    xs = np.arange(w)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    def encode(i: int) -> bytes:
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        for y in range(h):
+            if y % 2 == 0:
+                img[y, :, 0] = (i * 7 + xs) % 256
+                img[y, :, 1] = (i * 11 + xs) % 256
+                img[y, :, 2] = (i * 13 + xs) % 256
+            else:
+                k = (i * 13 + y * 3 + (xs // 4) * 7) % 16
+                img[y, :, 0] = (k * 5) % 256
+                img[y, :, 1] = (k * 9) % 256
+                img[y, :, 2] = (k * 13) % 256
+        return encode_qoi(img)
+
+    return _synthesize(df, id_col, encode)
 
 
 # --------------------------------------------------------------------------
@@ -3356,31 +3010,20 @@ def synthesize_tga_images(
     orders, and both packet kinds."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(h)[:, None]
-        x = np.arange(w)[None, :]
-        c = np.arange(n_colors)
-        pal = np.stack(
-            [(c * 7) % 256, (c * 11) % 256, (c * 3) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                idx = (
-                    (int(i) * 11 + y * 5 + (x // 4) * 3) % n_colors
-                ).astype(np.uint8)
-                if int(i) % 2 == 0:
-                    payloads.append(encode_tga(pal[idx]))
-                else:
-                    payloads.append(
-                        encode_tga(pal[idx], rle=True, topdown=True)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    y = np.arange(h)[:, None]
+    x = np.arange(w)[None, :]
+    c = np.arange(n_colors)
+    pal = np.stack(
+        [(c * 7) % 256, (c * 11) % 256, (c * 3) % 256], axis=1
+    ).astype(np.uint8)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    def encode(i: int) -> bytes:
+        idx = ((i * 11 + y * 5 + (x // 4) * 3) % n_colors).astype(np.uint8)
+        if i % 2 == 0:
+            return encode_tga(pal[idx])
+        return encode_tga(pal[idx], rle=True, topdown=True)
+
+    return _synthesize(df, id_col, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -3832,33 +3475,22 @@ def synthesize_tiff_images(df: DataFrame, id_col: str) -> DataFrame:
     closed form in SQL."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 4 + i % 5, 5 + i % 4
-                variant = i % 4
-                n_ch = (1, 3, 4, 3)[variant]
-                m = 65536 if variant == 3 else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                px = ((i * 151 + r * 13 + c * 11 + ch * 5) % m).astype(dt)
-                if n_ch == 1:
-                    px = px[:, :, 0]
-                payloads.append(
-                    encode_tiff(px, big_endian=variant in (1, 3))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        h, w = 4 + i % 5, 5 + i % 4
+        variant = i % 4
+        n_ch = (1, 3, 4, 3)[variant]
+        m = 65536 if variant == 3 else 256
+        r = np.arange(h)[:, None, None]
+        c = np.arange(w)[None, :, None]
+        ch = np.arange(n_ch)[None, None, :]
+        px = ((i * 151 + r * 13 + c * 11 + ch * 5) % m).astype(
+            np.uint16 if m == 65536 else np.uint8
+        )
+        if n_ch == 1:
+            px = px[:, :, 0]
+        return encode_tiff(px, big_endian=variant in (1, 3))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_tiff_compressed_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -3873,42 +3505,29 @@ def synthesize_tiff_compressed_images(df: DataFrame, id_col: str) -> DataFrame:
     SQL exactly as c220 does for the uncompressed baseline."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 6 + i % 6, 5 + i % 5
-                variant = i % 4
-                n_ch = (1, 3, 4, 3)[variant]
-                m = 65536 if variant == 3 else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                if variant == 0:
-                    px = ((i * 157 + r * 17 + (c // 3) * 21) % 256).astype(dt)
-                else:
-                    px = ((i * 157 + r * 17 + c * 7 + ch * 3) % m).astype(dt)
-                if n_ch == 1:
-                    px = px[:, :, 0]
-                comp = ("packbits", "lzw", "lzw", "deflate")[variant]
-                payloads.append(
-                    encode_tiff(
-                        px,
-                        big_endian=variant in (1, 3),
-                        compression=comp,
-                        predictor=variant == 2,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        h, w = 6 + i % 6, 5 + i % 5
+        variant = i % 4
+        n_ch = (1, 3, 4, 3)[variant]
+        m = 65536 if variant == 3 else 256
+        dt = np.uint16 if m == 65536 else np.uint8
+        r = np.arange(h)[:, None, None]
+        c = np.arange(w)[None, :, None]
+        ch = np.arange(n_ch)[None, None, :]
+        if variant == 0:
+            px = ((i * 157 + r * 17 + (c // 3) * 21) % 256).astype(dt)
+        else:
+            px = ((i * 157 + r * 17 + c * 7 + ch * 3) % m).astype(dt)
+        if n_ch == 1:
+            px = px[:, :, 0]
+        return encode_tiff(
+            px,
+            big_endian=variant in (1, 3),
+            compression=("packbits", "lzw", "lzw", "deflate")[variant],
+            predictor=variant == 2,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def tiff_image_stats(images: DataFrame) -> DataFrame:
@@ -3918,43 +3537,25 @@ def tiff_image_stats(images: DataFrame) -> DataFrame:
     decode inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_tiff(bytes(payload))
-                arr = px.astype(np.int64)
-                if arr.ndim == 2:
-                    s = int(arr.sum())
-                    sums = (s, s, s, 0)
-                    n_ch = 1
-                else:
-                    n_ch = arr.shape[2]
-                    sums = (
-                        int(arr[:, :, 0].sum()),
-                        int(arr[:, :, 1].sum()),
-                        int(arr[:, :, 2].sum()),
-                        int(arr[:, :, 3].sum()) if n_ch == 4 else 0,
-                    )
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        n_ch,
-                        *sums,
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "px_max",
-                ],
+    def stats(doc_id: int, payload: bytes):
+        px = decode_tiff(payload)
+        arr = px.astype(np.int64)
+        if arr.ndim == 2:
+            s = int(arr.sum())
+            n_ch, sums = 1, (s, s, s, 0)
+        else:
+            n_ch = arr.shape[2]
+            sums = (
+                int(arr[:, :, 0].sum()),
+                int(arr[:, :, 1].sum()),
+                int(arr[:, :, 2].sum()),
+                int(arr[:, :, 3].sum()) if n_ch == 4 else 0,
             )
+        yield (doc_id, px.shape[1], px.shape[0], n_ch, *sums, int(arr.max()))
 
-    return rebalance_for_compute(images).mapInPandas(
+    return map_rows(
+        images,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, width long, height long, n_channels long, "
         "sum_r long, sum_g long, sum_b long, sum_a long, px_max long",
@@ -5529,6 +5130,22 @@ def decode_jpeg_gray(payload: bytes):
     return px
 
 
+def _even_tiles(i: int, th: int, tw: int, coef, crop):
+    """The JPEG exactness class for image ``i``: a ``th x tw`` grid of
+    8x8 tiles, tile (tr, tc) the constant EVEN value ``2*((i*a + tr*b
+    + tc*c) % 128)`` for ``coef = (a, b, c)``, cropped by ``crop =
+    (rows, cols)`` pixels so the encoders' edge-replicate padding runs
+    (see the section header)."""
+    import numpy as np
+
+    a, b, c = coef
+    tr = np.arange(th)[:, None]
+    tc = np.arange(tw)[None, :]
+    tiles = (2 * ((i * a + tr * b + tc * c) % 128)).astype(np.uint8)
+    img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
+    return img[: th * 8 - crop[0], : tw * 8 - crop[1]]
+
+
 def synthesize_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic REAL baseline-JPEG payloads with an exactness
     contract: image ``id`` is a grid of (1 + id%3) x (2 + id%2) tiles
@@ -5539,30 +5156,12 @@ def synthesize_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     round-trip bit-exactly through the lossy codec (see the module
     section header), so an external engine can replay the decoded
     pixel statistics from the closed form without parsing a byte."""
-    import numpy as np
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 31 + tr * 7 + tc * 3) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(
-                    encode_jpeg_gray(img[: th * 8 - 1, : tw * 8 - 3])
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_jpeg_gray(
+            _even_tiles(i, 1 + i % 3, 2 + i % 2, (31, 7, 3), (1, 3))
+        ),
     )
 
 
@@ -5580,30 +5179,11 @@ def synthesize_color_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     stats replay from the closed tile form in SQL."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 37 + tr * 11 + tc * 5) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 2, : tw * 8 - 1]
-                payloads.append(
-                    encode_jpeg_color(np.stack([img, img, img], axis=-1))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        img = _even_tiles(i, 1 + i % 3, 2 + i % 2, (37, 11, 5), (2, 1))
+        return encode_jpeg_color(np.stack([img, img, img], axis=-1))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_subsampled_jpeg_images(
@@ -5624,33 +5204,14 @@ def synthesize_subsampled_jpeg_images(
     tile form in SQL (the c214 oracle)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 41 + tr * 13 + tc * 7) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 1, : tw * 8 - 2]
-                payloads.append(
-                    encode_jpeg_color(
-                        np.stack([img, img, img], axis=-1),
-                        sampling="420" if i % 2 == 0 else "422",
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        img = _even_tiles(i, 1 + i % 3, 2 + i % 2, (41, 13, 7), (1, 2))
+        return encode_jpeg_color(
+            np.stack([img, img, img], axis=-1),
+            sampling="420" if i % 2 == 0 else "422",
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_restart_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -5670,34 +5231,15 @@ def synthesize_restart_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     tile form in SQL (the c215 oracle)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 2 + i % 3, 3 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 43 + tr * 17 + tc * 9) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 1, : tw * 8 - 2]
-                payloads.append(
-                    encode_jpeg_color(
-                        np.stack([img, img, img], axis=-1),
-                        sampling=("444", "422", "420")[i % 3],
-                        restart_interval=1 + i % 2,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        img = _even_tiles(i, 2 + i % 3, 3 + i % 2, (43, 17, 9), (1, 2))
+        return encode_jpeg_color(
+            np.stack([img, img, img], axis=-1),
+            sampling=("444", "422", "420")[i % 3],
+            restart_interval=1 + i % 2,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_progressive_jpeg_images(
@@ -5717,33 +5259,14 @@ def synthesize_progressive_jpeg_images(
     oracle)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 4, 2 + i % 3
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (
-                    2 * ((i * 47 + tr * 19 + tc * 11) % 128)
-                ).astype(np.uint8)
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 3, : tw * 8 - 1]
-                payloads.append(
-                    encode_jpeg_progressive(
-                        np.stack([img, img, img], axis=-1),
-                        sampling=("444", "422", "420")[i % 3],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        img = _even_tiles(i, 1 + i % 4, 2 + i % 3, (47, 19, 11), (3, 1))
+        return encode_jpeg_progressive(
+            np.stack([img, img, img], axis=-1),
+            sampling=("444", "422", "420")[i % 3],
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def build_exif_app1(
@@ -5919,35 +5442,18 @@ def synthesize_exif_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     in: orientation ``1 + id % 8`` (all eight states), TIFF byte order
     ``II`` for even ids / ``MM`` for odd, and an out-of-line
     ImageDescription carrying ``doc <id>``."""
-    import numpy as np
+    def encode(i: int) -> bytes:
+        jp = encode_jpeg_gray(
+            _even_tiles(i, 1 + i % 3, 2 + i % 2, (31, 7, 3), (1, 3))
+        )
+        app1 = build_exif_app1(
+            1 + i % 8,
+            byte_order="II" if i % 2 == 0 else "MM",
+            description=f"doc {i}",
+        )
+        return inject_exif(jp, app1)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 31 + tr * 7 + tc * 3) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                jp = encode_jpeg_gray(img[: th * 8 - 1, : tw * 8 - 3])
-                app1 = build_exif_app1(
-                    1 + i % 8,
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    description=f"doc {i}",
-                )
-                payloads.append(inject_exif(jp, app1))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def exif_image_stats(
@@ -5960,34 +5466,17 @@ def exif_image_stats(
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "orientation", "width", "height",
-                    "topleft", "pixel_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                meta = parse_exif(raw)
-                px = apply_exif_orientation(
-                    decode_jpeg_gray(raw), meta["orientation"]
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["orientation"].append(meta["orientation"])
-                rows["width"].append(px.shape[1])
-                rows["height"].append(px.shape[0])
-                rows["topleft"].append(int(px[0, 0]))
-                rows["pixel_sum"].append(int(px.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {k: pd.Series(vv, dtype="int64") for k, vv in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        orientation = parse_exif(payload)["orientation"]
+        px = apply_exif_orientation(decode_jpeg_gray(payload), orientation)
+        yield (
+            doc_id, orientation, px.shape[1], px.shape[0], int(px[0, 0]),
+            int(px.astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, orientation long, width long, height long, "
         "topleft long, pixel_sum long",
@@ -6011,44 +5500,18 @@ def synthesize_cmyk_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     replay from the closed tile form in SQL (the c226 oracle)."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 2 + i % 2, 2 + i % 3
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                cmy = (
-                    2 * ((i * 47 + tr * 19 + tc * 11) % 128) + 1
-                ).astype(np.uint8)
-                kk = (
-                    2 * ((i * 53 + tr * 7 + tc * 3) % 128) + 1
-                ).astype(np.uint8)
-                ones = np.ones((8, 8), dtype=np.uint8)
-                cmy_img = np.kron(cmy, ones)
-                k_img = np.kron(kk, ones)
-                img = np.stack(
-                    [cmy_img, cmy_img, cmy_img, k_img], axis=-1
-                )[: th * 8 - 1, : tw * 8 - 2]
-                if i % 2 == 0:
-                    payloads.append(encode_jpeg_cmyk(img))
-                else:
-                    payloads.append(
-                        encode_jpeg_cmyk(
-                            img,
-                            ycck=True,
-                            sampling="420" if i % 4 == 1 else "422",
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        th, tw = 2 + i % 2, 2 + i % 3
+        cmy = _even_tiles(i, th, tw, (47, 19, 11), (1, 2)) + 1
+        k = _even_tiles(i, th, tw, (53, 7, 3), (1, 2)) + 1
+        img = np.stack([cmy, cmy, cmy, k], axis=-1)
+        if i % 2 == 0:
+            return encode_jpeg_cmyk(img)
+        return encode_jpeg_cmyk(
+            img, ycck=True, sampling="420" if i % 4 == 1 else "422"
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def image_cmyk_stats(
@@ -6062,37 +5525,20 @@ def image_cmyk_stats(
     memory per batch; at 100 TB decode is embarrassingly parallel."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_c", "sum_m", "sum_y", "sum_k",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = decode_jpeg(bytes(payload))
-                if arr.ndim != 3 or arr.shape[2] != 4:
-                    raise ValueError(
-                        f"doc {int(doc_id)}: expected a 4-component "
-                        f"CMYK decode, got shape {arr.shape}"
-                    )
-                h, w = arr.shape[:2]
-                s = arr.reshape(-1, 4).astype(np.int64).sum(axis=0)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(h * w)
-                for ci, col in enumerate(("sum_c", "sum_m", "sum_y", "sum_k")):
-                    rows[col].append(int(s[ci]))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
+    def stats(doc_id: int, payload: bytes):
+        arr = decode_jpeg(payload)
+        if arr.ndim != 3 or arr.shape[2] != 4:
+            raise ValueError(
+                f"doc {doc_id}: expected a 4-component "
+                f"CMYK decode, got shape {arr.shape}"
             )
+        h, w = arr.shape[:2]
+        s = arr.reshape(-1, 4).astype(np.int64).sum(axis=0)
+        yield (doc_id, w, h, h * w, *(int(v) for v in s))
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, width long, height long, n_pixels long, "
         "sum_c long, sum_m long, sum_y long, sum_k long",
@@ -6111,36 +5557,24 @@ def synthesize_pnm_images(df: DataFrame, id_col: str) -> DataFrame:
     the c229 oracle replays sample sums arithmetically."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 5 + i % 4, 6 + i % 5
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                base = i * 31 + r * 17 + c * 7
-                variant = ("P1", "P2", "P3", "P4", "P5")[i % 5]
-                if variant in ("P1", "P4"):
-                    img = (base % 2).astype(np.uint8)
-                elif variant == "P2":
-                    img = (base % 256).astype(np.uint8)
-                elif variant == "P5":
-                    img = (base % 60000).astype(np.uint16)
-                else:
-                    img = np.stack(
-                        [((base + ch * 5) % 256) for ch in range(3)],
-                        axis=-1,
-                    ).astype(np.uint8)
-                payloads.append(encode_pnm(img, variant))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        r = np.arange(5 + i % 4)[:, None]
+        c = np.arange(6 + i % 5)[None, :]
+        base = i * 31 + r * 17 + c * 7
+        variant = ("P1", "P2", "P3", "P4", "P5")[i % 5]
+        if variant in ("P1", "P4"):
+            img = (base % 2).astype(np.uint8)
+        elif variant == "P2":
+            img = (base % 256).astype(np.uint8)
+        elif variant == "P5":
+            img = (base % 60000).astype(np.uint16)
+        else:
+            img = np.stack(
+                [((base + ch * 5) % 256) for ch in range(3)], axis=-1
+            ).astype(np.uint8)
+        return encode_pnm(img, variant)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def pnm_image_stats(
@@ -6154,36 +5588,17 @@ def pnm_image_stats(
     100 TB."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "variant", "width", "height",
-                    "n_pixels", "sample_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                arr = decode_pnm(payload)
-                h, w = arr.shape[:2]
-                rows["doc_id"].append(int(doc_id))
-                rows["variant"].append(payload[:2].decode())
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(h * w)
-                rows["sample_sum"].append(int(arr.astype(np.int64).sum()))
-            out = pd.DataFrame(
-                {
-                    k: pd.Series(v, dtype="object" if k == "variant" else "int64")
-                    for k, v in rows.items()
-                }
-            )
-            yield out
+    def stats(doc_id: int, payload: bytes):
+        arr = decode_pnm(payload)
+        h, w = arr.shape[:2]
+        yield (
+            doc_id, payload[:2].decode(), w, h, h * w,
+            int(arr.astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, variant string, width long, height long, "
         "n_pixels long, sample_sum long",
@@ -6202,31 +5617,18 @@ def synthesize_deep_png_images(df: DataFrame, id_col: str) -> DataFrame:
     form per channel in SQL."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 5 + i % 4, 6 + i % 3
-                variant = i % 4
-                n_ch = 3 if variant == 0 else 4
-                m = 65536 if variant in (0, 2) else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                px = ((i * 131 + r * 17 + c * 7 + ch * 3) % m).astype(dt)
-                payloads.append(
-                    encode_png(px, interlace=variant in (2, 3))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        variant = i % 4
+        m = 65536 if variant in (0, 2) else 256
+        r = np.arange(5 + i % 4)[:, None, None]
+        c = np.arange(6 + i % 3)[None, :, None]
+        ch = np.arange(3 if variant == 0 else 4)[None, None, :]
+        px = ((i * 131 + r * 17 + c * 7 + ch * 3) % m).astype(
+            np.uint16 if m == 65536 else np.uint8
+        )
+        return encode_png(px, interlace=variant in (2, 3))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def image_deep_stats(images: DataFrame) -> DataFrame:
@@ -6236,39 +5638,28 @@ def image_deep_stats(images: DataFrame) -> DataFrame:
     inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                if px.ndim != 3 or px.shape[2] not in (3, 4):
-                    raise ValueError(
-                        f"doc {doc_id}: expected RGB/RGBA, got shape "
-                        f"{px.shape}"
-                    )
-                arr = px.astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        px.shape[2],
-                        int(arr[:, :, 0].sum()),
-                        int(arr[:, :, 1].sum()),
-                        int(arr[:, :, 2].sum()),
-                        int(arr[:, :, 3].sum()) if px.shape[2] == 4 else 0,
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "px_max",
-                ],
+    def stats(doc_id: int, payload: bytes):
+        px = decode_image(payload)
+        if px.ndim != 3 or px.shape[2] not in (3, 4):
+            raise ValueError(
+                f"doc {doc_id}: expected RGB/RGBA, got shape {px.shape}"
             )
+        arr = px.astype(np.int64)
+        yield (
+            doc_id,
+            px.shape[1],
+            px.shape[0],
+            px.shape[2],
+            int(arr[:, :, 0].sum()),
+            int(arr[:, :, 1].sum()),
+            int(arr[:, :, 2].sum()),
+            int(arr[:, :, 3].sum()) if px.shape[2] == 4 else 0,
+            int(arr.max()),
+        )
 
-    return rebalance_for_compute(images).mapInPandas(
+    return map_rows(
+        images,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, width long, height long, n_channels long, "
         "sum_r long, sum_g long, sum_b long, sum_a long, px_max long",
@@ -6283,37 +5674,21 @@ def image_gray_stats(images: DataFrame) -> DataFrame:
     per batch."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                if px.ndim != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected grayscale, got shape "
-                        f"{px.shape}"
-                    )
-                arr = px.astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        px.size,
-                        int(arr.sum()),
-                        int(arr.min()),
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "px_sum", "px_min", "px_max",
-                ],
+    def stats(doc_id: int, payload: bytes):
+        px = decode_image(payload)
+        if px.ndim != 2:
+            raise ValueError(
+                f"doc {doc_id}: expected grayscale, got shape {px.shape}"
             )
+        arr = px.astype(np.int64)
+        yield (
+            doc_id, px.shape[1], px.shape[0], px.size,
+            int(arr.sum()), int(arr.min()), int(arr.max()),
+        )
 
-    return rebalance_for_compute(images).mapInPandas(
+    return map_rows(
+        images,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, width long, height long, n_pixels long, "
         "px_sum long, px_min long, px_max long",
@@ -6484,38 +5859,24 @@ def synthesize_ico_files(df: DataFrame, id_col: str) -> DataFrame:
     and the 32-bit frames carry alpha ``(id + r + c) % 2 * 255``."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                frames = []
-                for f in range(1 + i % 3):
-                    n = 8 + 8 * ((i + f) % 2)
-                    r = np.arange(n)[:, None, None]
-                    c = np.arange(n)[None, :, None]
-                    ch = np.arange(3)[None, None, :]
-                    px = (
-                        (i * 7 + f * 13 + r * 5 + c * 3 + ch * 11) % 256
-                    ).astype(np.uint8)
-                    kind = ("png", "bmp", "bmp32")[(i + f) % 3]
-                    fr = {"pixels": px, "kind": kind}
-                    if kind == "bmp32":
-                        rr = np.arange(n)[:, None]
-                        cc = np.arange(n)[None, :]
-                        fr["alpha"] = (
-                            ((i + rr + cc) % 2) * 255
-                        ).astype(np.uint8)
-                    frames.append(fr)
-                payloads.append(encode_ico(frames))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        frames = []
+        for f in range(1 + i % 3):
+            n = 8 + 8 * ((i + f) % 2)
+            r = np.arange(n)[:, None, None]
+            c = np.arange(n)[None, :, None]
+            ch = np.arange(3)[None, None, :]
+            px = ((i * 7 + f * 13 + r * 5 + c * 3 + ch * 11) % 256).astype(np.uint8)
+            kind = ("png", "bmp", "bmp32")[(i + f) % 3]
+            fr = {"pixels": px, "kind": kind}
+            if kind == "bmp32":
+                fr["alpha"] = (((i + r[:, :, 0] + c[:, :, 0]) % 2) * 255).astype(
+                    np.uint8
+                )
+            frames.append(fr)
+        return encode_ico(frames)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def ico_stats(
@@ -6527,45 +5888,23 @@ def ico_stats(
     partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_frames", "n_png", "n_bmp", "n_bmp32",
-                    "n_pixels", "pixel_sum", "alpha_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = decode_ico(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(frames))
-                for kind in ("png", "bmp", "bmp32"):
-                    rows[f"n_{kind}"].append(
-                        sum(1 for fr in frames if fr["kind"] == kind)
-                    )
-                rows["n_pixels"].append(
-                    sum(fr["width"] * fr["height"] for fr in frames)
-                )
-                rows["pixel_sum"].append(
-                    sum(
-                        int(fr["pixels"].astype(np.int64).sum())
-                        for fr in frames
-                    )
-                )
-                rows["alpha_sum"].append(
-                    sum(
-                        int(fr["alpha"].astype(np.int64).sum())
-                        for fr in frames
-                    )
-                )
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        frames = decode_ico(payload)
+        yield (
+            doc_id,
+            len(frames),
+            *(
+                sum(1 for fr in frames if fr["kind"] == kind)
+                for kind in ("png", "bmp", "bmp32")
+            ),
+            sum(fr["width"] * fr["height"] for fr in frames),
+            sum(int(fr["pixels"].astype(np.int64).sum()) for fr in frames),
+            sum(int(fr["alpha"].astype(np.int64).sum()) for fr in frames),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, n_frames long, n_png long, n_bmp long, "
         "n_bmp32 long, n_pixels long, pixel_sum long, alpha_sum long",
@@ -6780,36 +6119,22 @@ def synthesize_apng_images(df: DataFrame, id_col: str) -> DataFrame:
     form the c244 oracle replays."""
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nf = 1 + i % 3
-                base = (
-                    (i * 3 + np.arange(16)[:, None]
-                     + np.arange(16)[None, :]) % 256
-                ).astype(np.uint8)
-                frames = [
-                    {"pixels": np.stack([base] * 3, -1), "delay_num": 1,
-                     "delay_den": 100}
-                ]
-                for f in range(1, nf + 1):
-                    v = (i * 5 + f * 7) % 256
-                    frames.append(
-                        {"pixels": np.full((6, 6, 3), v, np.uint8),
-                         "x": 2 * f, "y": 2 * f,
-                         "delay_num": f + 1, "delay_den": 100}
-                    )
-                payloads.append(encode_apng(frames, num_plays=i % 4))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    grid = np.arange(16)[:, None] + np.arange(16)[None, :]
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    def encode(i: int) -> bytes:
+        base = ((i * 3 + grid) % 256).astype(np.uint8)
+        frames = [
+            {"pixels": np.stack([base] * 3, -1), "delay_num": 1, "delay_den": 100}
+        ]
+        for f in range(1, 2 + i % 3):
+            frames.append(
+                {"pixels": np.full((6, 6, 3), (i * 5 + f * 7) % 256, np.uint8),
+                 "x": 2 * f, "y": 2 * f,
+                 "delay_num": f + 1, "delay_den": 100}
+            )
+        return encode_apng(frames, num_plays=i % 4)
+
+    return _synthesize(df, id_col, encode)
 
 
 def apng_stats(
@@ -6820,33 +6145,19 @@ def apng_stats(
     inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_frames", "num_plays", "delay_num_sum",
-                    "canvas_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out = decode_apng(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(out["frames"]))
-                rows["num_plays"].append(out["num_plays"])
-                rows["delay_num_sum"].append(
-                    sum(f["delay_num"] for f in out["frames"])
-                )
-                rows["canvas_sum"].append(
-                    int(out["canvas"][..., :3].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        out = decode_apng(payload)
+        yield (
+            doc_id,
+            len(out["frames"]),
+            out["num_plays"],
+            sum(f["delay_num"] for f in out["frames"]),
+            int(out["canvas"][..., :3].astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
+    return map_rows(
+        df,
+        [id_col, payload_col],
         stats,
         "doc_id long, n_frames long, num_plays long, "
         "delay_num_sum long, canvas_sum long",

@@ -2406,6 +2406,39 @@ def _robots_pattern_to_regex(path: str) -> str:
     return "^" + "".join(out) + ("$" if anchored else "")
 
 
+def _robots_groups(txt) -> tuple[list, list]:
+    """One pass over a robots.txt payload per RFC 9309:
+    ``(groups, sitemaps)``, where each group is ``(agents, records)``
+    — the lower-cased ``User-agent`` values and the group's other
+    ``(field, value)`` lines, field lower-cased, in file order. ``#``
+    comments are stripped and lines without a ``:`` skipped. Only an
+    Allow/Disallow rule closes the agent list: a ``User-agent`` after a
+    rule opens a new group, while a record outside the protocol
+    (``Crawl-delay``, §2.2.4) does not interfere with grouping.
+    Records before the first ``User-agent`` belong to no group;
+    ``Sitemap`` lines are group-independent."""
+    groups: list[tuple[list, list]] = []
+    sitemaps: list[str] = []
+    in_rules = False
+    for line in str(txt).splitlines():
+        field, sep, val = line.split("#", 1)[0].partition(":")
+        if not sep:
+            continue
+        field, val = field.strip().lower(), val.strip()
+        if field == "user-agent":
+            if in_rules or not groups:
+                groups.append(([], []))
+                in_rules = False
+            groups[-1][0].append(val.lower())
+        elif field == "sitemap":
+            if val:
+                sitemaps.append(val)
+        elif groups:
+            in_rules = in_rules or field in ("allow", "disallow")
+            groups[-1][1].append((field, val))
+    return groups, sitemaps
+
+
 def parse_robots_rules(
     robots: DataFrame, *, domain_col: str = "domain", txt_col: str = "robots_txt"
 ) -> DataFrame:
@@ -2425,34 +2458,23 @@ def parse_robots_rules(
 
     def parse(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for pdf in batches:
-            rows = {"domain": [], "agent": [], "rule": [], "path": [],
-                    "plen": [], "pattern": []}
+            rows = []
             for dom, txt in zip(pdf[domain_col], pdf[txt_col]):
-                agents, in_rules = [], False
-                for line in str(txt).splitlines():
-                    line = line.split("#", 1)[0].strip()
-                    if not line or ":" not in line:
-                        continue
-                    field, val = line.split(":", 1)
-                    field, val = field.strip().lower(), val.strip()
-                    if field == "user-agent":
-                        if in_rules:
-                            agents, in_rules = [], False
-                        agents.append(val.lower())
-                    elif field in ("allow", "disallow"):
-                        in_rules = True
-                        if not val or not agents:
-                            continue  # empty pattern matches nothing
-                        for a in agents:
-                            rows["domain"].append(dom)
-                            rows["agent"].append(a)
-                            rows["rule"].append(field)
-                            rows["path"].append(val)
-                            rows["plen"].append(len(val))
-                            rows["pattern"].append(
-                                _robots_pattern_to_regex(val)
-                            )
-            yield _pd.DataFrame(rows)
+                groups, _ = _robots_groups(txt)
+                for agents, records in groups:
+                    for field, val in records:
+                        # an empty pattern matches nothing
+                        if field in ("allow", "disallow") and val:
+                            pattern = _robots_pattern_to_regex(val)
+                            rows += [
+                                (dom, a, field, val, len(val), pattern)
+                                for a in agents
+                            ]
+            yield _pd.DataFrame(
+                rows,
+                columns=["domain", "agent", "rule", "path", "plen", "pattern"],
+                dtype=object,
+            )
 
     return robots.select(
         F.col(domain_col), F.col(txt_col)
@@ -2720,7 +2742,9 @@ def parse_robots_directives(
     """The NON-rule robots.txt directives crawl schedulers read:
     ``Sitemap:`` (group-independent per RFC 9309 — ``agent`` is NULL)
     and ``Crawl-delay:`` (the de-facto politeness extension, attached
-    to its user-agent group like Allow/Disallow). Returns
+    to every agent of its user-agent group — the same complete groups
+    :func:`parse_robots_rules` reads, so a Crawl-delay line between
+    two ``User-agent`` lines applies to both). Returns
     ``(domain, agent, directive, value)`` rows; malformed
     Crawl-delay values are skipped (the lenient reading real
     crawlers use). Same Arrow-batched shape as
@@ -2729,40 +2753,27 @@ def parse_robots_directives(
 
     import pandas as _pd
 
+    def is_number(val: str) -> bool:
+        try:
+            float(val)
+        except ValueError:
+            return False
+        return True
+
     def parse(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for pdf in batches:
-            rows = {"domain": [], "agent": [], "directive": [],
-                    "value": []}
+            rows = []
             for dom, txt in zip(pdf[domain_col], pdf[txt_col]):
-                agents, in_rules = [], False
-                for line in str(txt).splitlines():
-                    line = line.split("#", 1)[0].strip()
-                    if not line or ":" not in line:
-                        continue
-                    field, val = line.split(":", 1)
-                    field, val = field.strip().lower(), val.strip()
-                    if field == "user-agent":
-                        if in_rules:
-                            agents, in_rules = [], False
-                        agents.append(val.lower())
-                    elif field in ("allow", "disallow", "crawl-delay"):
-                        in_rules = True
-                        if field == "crawl-delay" and val:
-                            try:
-                                float(val)
-                            except ValueError:
-                                continue  # lenient: skip malformed
-                            for a in agents:
-                                rows["domain"].append(dom)
-                                rows["agent"].append(a)
-                                rows["directive"].append("crawl-delay")
-                                rows["value"].append(val)
-                    elif field == "sitemap" and val:
-                        rows["domain"].append(dom)
-                        rows["agent"].append(None)
-                        rows["directive"].append("sitemap")
-                        rows["value"].append(val)
-            yield _pd.DataFrame(rows)
+                groups, sitemaps = _robots_groups(txt)
+                for agents, records in groups:
+                    for field, val in records:
+                        # lenient: a malformed Crawl-delay is skipped
+                        if field == "crawl-delay" and is_number(val):
+                            rows += [(dom, a, "crawl-delay", val) for a in agents]
+                rows += [(dom, None, "sitemap", url) for url in sitemaps]
+            yield _pd.DataFrame(
+                rows, columns=["domain", "agent", "directive", "value"], dtype=object
+            )
 
     return robots.select(
         F.col(domain_col), F.col(txt_col)

@@ -11,22 +11,20 @@ so a reader can seek to a record without inflating the whole file),
 and HTTP-response payload splitting for ``response`` records.
 
 Scale shape: files arrive as opaque ``binary`` payloads in a
-DataFrame column; parsing is Arrow-batched ``mapInPandas`` inside the
-scan's partitions — no shuffle, many files per task. On a real
-cluster the same parser runs over ``spark.read.format("binaryFile")``
-output unchanged.
+DataFrame column; every container stage is one
+:func:`multimodal.map_rows` call (Arrow-batched, inside the scan's
+partitions — no shuffle, many files per task; a row with a NULL
+id or payload gives no output row). On a real cluster the same
+parser runs over ``spark.read.format("binaryFile")`` output
+unchanged.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import rebalance_for_compute
+from .multimodal import _synthesize, decode_png, encode_png_gray, map_rows
 
 _CRLF = b"\r\n"
 
@@ -150,8 +148,13 @@ def extract_warc_text(payload: bytes) -> list[tuple[str, str]]:
     ``(type, text)`` — ``conversion`` records are already text, and
     ``response`` records yield their HTTP body; ``warcinfo`` /
     ``metadata`` / other bookkeeping records are skipped."""
+    return _record_texts(parse_warc(payload))
+
+
+def _record_texts(records: list[dict]) -> list[tuple[str, str]]:
+    """:func:`extract_warc_text` over already-parsed records."""
     out = []
-    for rec in parse_warc(payload):
+    for rec in records:
         if rec["type"] == "conversion":
             out.append(("conversion", rec["content"].decode("utf-8")))
         elif rec["type"] == "response":
@@ -171,47 +174,30 @@ def synthesize_warc_files(df: DataFrame, id_col: str) -> DataFrame:
     gzip (.warc.gz), even ids as plain WARC. Every byte is
     closed-form, so the c224 oracle replays the extraction in SQL."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                records = [
-                    {
-                        "type": "warcinfo",
-                        "content": b"software: amazonredshift-blueprints-spark",
-                    }
-                ]
-                for r in range(2 + i % 3):
-                    n_tok = 10 + (i + r) % 7
-                    text = " ".join(
-                        f"t{(i * 7 + r * 3 + j) % 13}" for j in range(n_tok)
-                    ).encode()
-                    uri = f"http://example.com/{i}/{r}"
-                    if (i + r) % 2 == 0:
-                        records.append(
-                            {"type": "conversion", "uri": uri, "content": text}
-                        )
-                    else:
-                        http = (
-                            b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-                            b"Content-Length: " + str(len(text)).encode()
-                            + b"\r\n\r\n" + text
-                        )
-                        records.append(
-                            {"type": "response", "uri": uri, "content": http}
-                        )
-                payloads.append(
-                    encode_warc(records, gzip_members=bool(i % 2))
+    def encode(i: int) -> bytes:
+        records = [
+            {
+                "type": "warcinfo",
+                "content": b"software: amazonredshift-blueprints-spark",
+            }
+        ]
+        for r in range(2 + i % 3):
+            text = " ".join(
+                f"t{(i * 7 + r * 3 + j) % 13}" for j in range(10 + (i + r) % 7)
+            ).encode()
+            uri = f"http://example.com/{i}/{r}"
+            if (i + r) % 2 == 0:
+                records.append({"type": "conversion", "uri": uri, "content": text})
+            else:
+                http = (
+                    b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
+                    b"Content-Length: " + str(len(text)).encode()
+                    + b"\r\n\r\n" + text
                 )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+                records.append({"type": "response", "uri": uri, "content": http})
+        return encode_warc(records, gzip_members=bool(i % 2))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def encode_webdataset(samples) -> bytes:
@@ -287,42 +273,26 @@ def synthesize_webdataset_shards(df: DataFrame, id_col: str) -> DataFrame:
     SQL."""
     import numpy as np
 
-    from .multimodal import encode_png_gray
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                samples = []
-                for s in range(2 + i % 3):
-                    h = 3 + s % 2
-                    r = np.arange(h)[:, None]
-                    c = np.arange(4)[None, :]
-                    px = ((i * 29 + s * 13 + r * 7 + c * 3) % 256).astype(
-                        np.uint8
-                    )
-                    text = " ".join(
-                        f"w{(i * 5 + s * 7 + j) % 11}"
-                        for j in range(5 + (i + s) % 4)
-                    )
-                    samples.append(
-                        {
-                            "__key__": f"{i}-{s}",
-                            "cls": str((i + s) % 10).encode(),
-                            "txt": text.encode(),
-                            "png": encode_png_gray(px),
-                        }
-                    )
-                payloads.append(encode_webdataset(samples))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def encode(i: int) -> bytes:
+        samples = []
+        for s in range(2 + i % 3):
+            r = np.arange(3 + s % 2)[:, None]
+            c = np.arange(4)[None, :]
+            px = ((i * 29 + s * 13 + r * 7 + c * 3) % 256).astype(np.uint8)
+            text = " ".join(
+                f"w{(i * 5 + s * 7 + j) % 11}" for j in range(5 + (i + s) % 4)
             )
+            samples.append(
+                {
+                    "__key__": f"{i}-{s}",
+                    "cls": str((i + s) % 10).encode(),
+                    "txt": text.encode(),
+                    "png": encode_png_gray(px),
+                }
+            )
+        return encode_webdataset(samples)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def webdataset_stats(shards: DataFrame) -> DataFrame:
@@ -334,36 +304,20 @@ def webdataset_stats(shards: DataFrame) -> DataFrame:
     Arrow-batched inside the scan's partitions — no shuffle."""
     import numpy as np
 
-    from .multimodal import decode_png
+    def stats(doc_id: int, payload: bytes):
+        samples = parse_webdataset(payload)
+        label_sum = n_tokens = text_len = px_sum = 0
+        for smp in samples:
+            label_sum += int(smp["cls"])
+            text = smp["txt"].decode()
+            n_tokens += len(text.split())
+            text_len += len(text)
+            px_sum += int(decode_png(smp["png"]).astype(np.int64)[:, :, 0].sum())
+        yield (doc_id, len(samples), label_sum, n_tokens, text_len, px_sum)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples = parse_webdataset(bytes(payload))
-                label_sum = n_tokens = text_len = px_sum = 0
-                for smp in samples:
-                    label_sum += int(smp["cls"])
-                    text = smp["txt"].decode()
-                    n_tokens += len(text.split())
-                    text_len += len(text)
-                    px = decode_png(smp["png"]).astype(np.int64)
-                    px_sum += int(px[:, :, 0].sum())
-                rows.append(
-                    (
-                        int(doc_id), len(samples), label_sum,
-                        n_tokens, text_len, px_sum,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "label_sum",
-                    "n_tokens", "text_len", "px_sum",
-                ],
-            )
-
-    return rebalance_for_compute(shards).mapInPandas(
+    return map_rows(
+        shards,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, n_samples long, label_sum long, "
         "n_tokens long, text_len long, px_sum long",
@@ -378,31 +332,21 @@ def warc_extract_stats(files: DataFrame) -> DataFrame:
     shuffle; on a cluster the input column comes straight from
     ``spark.read.format('binaryFile')``."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                recs = parse_warc(bytes(payload))
-                texts = extract_warc_text(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(recs),
-                        sum(1 for k, _ in texts if k == "conversion"),
-                        sum(1 for k, _ in texts if k == "response"),
-                        sum(len(t) for _, t in texts),
-                        sum(len(t.split()) for _, t in texts),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_records", "n_conversion",
-                    "n_response", "sum_text_len", "n_tokens",
-                ],
-            )
+    def stats(doc_id: int, payload: bytes):
+        recs = parse_warc(payload)
+        texts = _record_texts(recs)
+        yield (
+            doc_id,
+            len(recs),
+            sum(1 for k, _ in texts if k == "conversion"),
+            sum(1 for k, _ in texts if k == "response"),
+            sum(len(t) for _, t in texts),
+            sum(len(t.split()) for _, t in texts),
+        )
 
-    return rebalance_for_compute(files).mapInPandas(
+    return map_rows(
+        files,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, n_records long, n_conversion long, "
         "n_response long, sum_text_len long, n_tokens long",
@@ -545,32 +489,16 @@ def synthesize_zip_archives(df: DataFrame, id_col: str) -> DataFrame:
     Every archive carries a comment (the EOCD tail scan runs on each
     payload)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                members = []
-                for k in range(2 + i % 3):
-                    nt = 8 + (i + k) % 9
-                    text = " ".join(
-                        f"w{(i * 7 + k * 5 + j * 3) % 97}"
-                        for j in range(nt)
-                    )
-                    members.append(
-                        (f"m{k}.txt", text.encode(), 0 if k % 2 == 0 else 8)
-                    )
-                payloads.append(
-                    encode_zip(members, comment=f"archive {i}".encode())
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def encode(i: int) -> bytes:
+        members = []
+        for k in range(2 + i % 3):
+            text = " ".join(
+                f"w{(i * 7 + k * 5 + j * 3) % 97}" for j in range(8 + (i + k) % 9)
             )
+            members.append((f"m{k}.txt", text.encode(), 0 if k % 2 == 0 else 8))
+        return encode_zip(members, comment=f"archive {i}".encode())
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def zip_extract_stats(files: DataFrame) -> DataFrame:
@@ -579,36 +507,20 @@ def zip_extract_stats(files: DataFrame) -> DataFrame:
     sum across all text members. Arrow-batched ``mapInPandas`` inside
     the scan's partitions — no shuffle."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_members", "n_stored", "n_deflated",
-                    "total_bytes", "token_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                members = parse_zip(bytes(payload))
-                tok = 0
-                for m in members:
-                    for w in m["data"].decode().split():
-                        tok += int(w[1:])
-                rows["doc_id"].append(int(doc_id))
-                rows["n_members"].append(len(members))
-                rows["n_stored"].append(
-                    sum(1 for m in members if m["method"] == 0)
-                )
-                rows["n_deflated"].append(
-                    sum(1 for m in members if m["method"] == 8)
-                )
-                rows["total_bytes"].append(sum(m["size"] for m in members))
-                rows["token_sum"].append(tok)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def stats(doc_id: int, payload: bytes):
+        members = parse_zip(payload)
+        yield (
+            doc_id,
+            len(members),
+            sum(1 for m in members if m["method"] == 0),
+            sum(1 for m in members if m["method"] == 8),
+            sum(m["size"] for m in members),
+            sum(int(w[1:]) for m in members for w in m["data"].decode().split()),
+        )
 
-    return rebalance_for_compute(files).mapInPandas(
+    return map_rows(
+        files,
+        ["doc_id", "payload"],
         stats,
         "doc_id long, n_members long, n_stored long, n_deflated long, "
         "total_bytes long, token_sum long",
@@ -627,47 +539,28 @@ def synthesize_web_warc_files(df: DataFrame, id_col: str) -> DataFrame:
     cafe = "café número"
     moji = cafe.encode("utf-8").decode("latin-1")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                links = "".join(
-                    f'<a href="/x{j}">l{j}</a> ' for j in range(1 + i % 4)
-                )
-                mid = moji if i % 4 == 0 else cafe
-                html = (
-                    f"<html><head><title>Doc {i}</title>"
-                    '<script>if (1<2) { var s = "</p>"; }</script>'
-                    f"</head><body><!-- nav -->{links}"
-                    f"<p>tok{i % 50} &amp; {mid} {(i + 1) % 50}</p>"
-                    "</body></html>"
-                )
-                body = html.encode("utf-8")
-                content = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                    b"Content-Length: " + str(len(body)).encode()
-                    + b"\r\n\r\n" + body
-                )
-                url = (
-                    f"https://www.site{i % 13}.com:443"
-                    f"/p{i % 7}/q{i % 5}?utm_source=x"
-                )
-                payloads.append(
-                    encode_warc(
-                        [{"type": "response", "uri": url,
-                          "content": content}],
-                        gzip_members=bool(i % 2),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def encode(i: int) -> bytes:
+        links = "".join(f'<a href="/x{j}">l{j}</a> ' for j in range(1 + i % 4))
+        mid = moji if i % 4 == 0 else cafe
+        body = (
+            f"<html><head><title>Doc {i}</title>"
+            '<script>if (1<2) { var s = "</p>"; }</script>'
+            f"</head><body><!-- nav -->{links}"
+            f"<p>tok{i % 50} &amp; {mid} {(i + 1) % 50}</p>"
+            "</body></html>"
+        ).encode("utf-8")
+        content = (
+            b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+            b"Content-Length: " + str(len(body)).encode()
+            + b"\r\n\r\n" + body
+        )
+        url = f"https://www.site{i % 13}.com:443/p{i % 7}/q{i % 5}?utm_source=x"
+        return encode_warc(
+            [{"type": "response", "uri": url, "content": content}],
+            gzip_members=bool(i % 2),
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, encode)
 
 
 def warc_pages(files: DataFrame) -> DataFrame:
@@ -676,21 +569,18 @@ def warc_pages(files: DataFrame) -> DataFrame:
     Python stage (container walking is inherently imperative); every
     downstream transform runs as JVM expressions."""
 
-    def pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "url": [], "html": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for rec in parse_warc(bytes(payload)):
-                    if rec["type"] != "response":
-                        continue
-                    rows["doc_id"].append(int(doc_id))
-                    rows["url"].append(rec["uri"])
-                    rows["html"].append(
-                        http_response_body(rec["content"]).decode("utf-8")
-                    )
-            yield pd.DataFrame(rows)
+    def pages(doc_id: int, payload: bytes):
+        for rec in parse_warc(payload):
+            if rec["type"] == "response":
+                yield (
+                    doc_id,
+                    rec["uri"],
+                    http_response_body(rec["content"]).decode("utf-8"),
+                )
 
-    return rebalance_for_compute(files).mapInPandas(pages, "doc_id long, url string, html string")
+    return map_rows(
+        files, ["doc_id", "payload"], pages, "doc_id long, url string, html string"
+    )
 
 
 def parse_cdxj(df: DataFrame, *, line_col: str = "line") -> DataFrame:

@@ -1263,3 +1263,29 @@ def test_parse_robots_directives(spark):
         ("a.com", "*", "crawl-delay", "2.5"),
         ("a.com", "slowbot", "crawl-delay", "10"),
     }
+
+
+def test_robots_parsers_read_the_same_groups(spark):
+    """A Crawl-delay line between two User-agent lines does not end the
+    group (RFC 9309 §2.2.4: records outside the protocol must not
+    interfere with group parsing): the rules parser and the directives
+    parser both read the one group {a, b}."""
+    from amazonredshift_blueprints_spark.operators.text import (
+        parse_robots_directives,
+        parse_robots_rules,
+    )
+
+    robots = spark.createDataFrame(
+        [("a.com", "User-agent: a\nCrawl-delay: 5\nUser-agent: b\nDisallow: /x\n")],
+        "domain string, robots_txt string",
+    )
+    rules = {
+        (r["agent"], r["rule"], r["path"])
+        for r in parse_robots_rules(robots).collect()
+    }
+    assert rules == {("a", "disallow", "/x"), ("b", "disallow", "/x")}
+    delays = {
+        (r["agent"], r["directive"], r["value"])
+        for r in parse_robots_directives(robots).collect()
+    }
+    assert delays == {("a", "crawl-delay", "5"), ("b", "crawl-delay", "5")}
